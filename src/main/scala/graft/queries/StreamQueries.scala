@@ -5,8 +5,8 @@ import graft.model.EngineConfig
 import graft.stream.EventPipeline
 
 /** Driver-contract query for the streaming path: the flagship decision
-  * computed through readStream → foreachBatch must equal the batch
-  * formulation — so it shares the batch oracle (stream/batch parity is
+  * computed through readStream → per-table stateful fold must equal the
+  * batch formulation — so it shares the batch oracle (stream/batch parity is
   * itself the property under test). */
 object StreamQueries {
   val pack: QueryPack = QueryPack(

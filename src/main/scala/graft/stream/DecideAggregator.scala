@@ -29,9 +29,9 @@ object DecideAggregator {
       should_optimize: Boolean)
 
   /** The four aggregation primitives, standalone so the streaming pipeline
-    * can merge executor-side partial buffers into long-lived per-table
-    * state on the driver (EventPipeline) with exactly the semantics the
-    * batch aggregate has. */
+    * can fold micro-batches into long-lived per-table state
+    * (EventPipeline.decideGroup) with exactly the semantics the batch
+    * aggregate has. */
   val zeroBuf: DecideBuf = DecideBuf(Long.MinValue, Nil)
 
   def reduceBuf(b: DecideBuf, s: SnapshotMeta): DecideBuf =
@@ -70,20 +70,5 @@ object DecideAggregator {
       override def finish(b: DecideBuf): Decision = finishBuf(b, cfg)
       override def bufferEncoder: Encoder[DecideBuf] = Encoders.product
       override def outputEncoder: Encoder[Decision] = Encoders.product
-    }
-
-  /** Partial form: emits the merge-able buffer instead of the finished
-    * decision, so a micro-batch can be reduced executor-side to one small
-    * buffer per table and merged into accumulated state elsewhere. */
-  val partial: Aggregator[SnapshotMeta, DecideBuf, DecideBuf] =
-    new Aggregator[SnapshotMeta, DecideBuf, DecideBuf] {
-      override def zero: DecideBuf = zeroBuf
-      override def reduce(b: DecideBuf, s: SnapshotMeta): DecideBuf =
-        reduceBuf(b, s)
-      override def merge(x: DecideBuf, y: DecideBuf): DecideBuf =
-        mergeBuf(x, y)
-      override def finish(b: DecideBuf): DecideBuf = b
-      override def bufferEncoder: Encoder[DecideBuf] = Encoders.product
-      override def outputEncoder: Encoder[DecideBuf] = Encoders.product
     }
 }

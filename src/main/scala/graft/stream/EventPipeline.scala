@@ -1,35 +1,30 @@
 package graft.stream
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.engine.{Executor, JobStateLog}
-import graft.model.{EngineConfig, Fixture, SnapshotMeta}
-import graft.ops.Decide
+import graft.engine.Executor
+import graft.model.{EngineConfig, SnapshotMeta}
 
 /** The event-driven maintenance pipeline (SURVEY.md §3.1), Spark-native:
   * the reference's push-based `MetricsReporter.report()` entry point
-  * becomes a Structured Streaming source; the per-commit decision + dispatch
-  * runs in `foreachBatch`, so each micro-batch filters commit events,
-  * evaluates `should_optimize` over the accumulated log, and submits
-  * maintenance jobs for triggered tables — the thread boundary moves from
-  * "inline in the table write commit" to the micro-batch thread
-  * (SURVEY.md §3.1), and the remote-engine network boundary becomes the
-  * executor SPI.
+  * becomes a Structured Streaming source, and each micro-batch filters
+  * commit events, updates the per-table decision, and submits maintenance
+  * jobs for newly triggered tables — the thread boundary moves from
+  * "inline in the table write commit" to the micro-batch thread, and the
+  * remote-engine network boundary becomes the executor SPI.
   *
-  * The decision is maintained INCREMENTALLY: each micro-batch is reduced
-  * executor-side to one small `DecideAggregator.DecideBuf` per touched
-  * table (distributed partial aggregation), then merged into accumulated
-  * per-table state on the driver — so per-batch work is O(batch rows +
-  * tables), never O(accumulated history). The reference instead rescans
-  * `currentAncestors` on every event
-  * (AwsTableManagementMetricsEvaluator.java:74); that rescan form is kept
-  * behind `incremental = false` as a cross-check (StreamSpec asserts the
-  * two paths agree and that only the rescan's per-batch input grows).
+  * There is one decision path: a `flatMapGroupsWithState` fold keyed by
+  * table. Its state — the table's `DecideAggregator.DecideBuf` plus one
+  * dispatch mark — lives in Spark's checkpointed state store, so per-batch
+  * work is O(batch rows), never O(accumulated history), and a restart on
+  * the same checkpoint resumes both the decision and the dispatch mark.
+  * The reference instead rescans `currentAncestors` on every event
+  * (AwsTableManagementMetricsEvaluator.java:74); that rescan survives only
+  * as the test oracle (`Decide.shouldOptimize` over all events so far).
   * State per table is (last replace ts, pending commit ts list), bounded
   * by `commitThreshold` in steady state — compaction fires before the
   * pending list grows past O(threshold).
@@ -66,291 +61,68 @@ object EventPipeline {
     // events.parquet is a single FILE in driver fixtures but a DIRECTORY
     // of parts in Spark-written ones (ReseedFixture) — a leaf-name glob
     // on the parent only sees the former; stream the directory directly
-    // in the latter case.
-    if (new java.io.File(s"$dir/events.parquet").isDirectory)
-      spark.readStream.schema(fileSchema).parquet(s"$dir/events.parquet")
+    // in the latter case. Hadoop answers for any scheme, `file:` included.
+    val events = new Path(s"$dir/events.parquet")
+    if (events.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(events).isDirectory)
+      spark.readStream.schema(fileSchema).parquet(events.toString)
     else
       spark.readStream.schema(fileSchema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
   }
 
-  /** Result of one pipeline run: final decisions + submitted job ids +
-    * per-batch decision-input row counts (how many log rows the decision
-    * computation consumed in each micro-batch — flat for the incremental
-    * path, cumulative for the rescan path; StreamSpec asserts this).
-    * (collection.Seq: runStreaming returns live buffers that fill as
-    * micro-batches complete; runOnce snapshots them after termination.) */
+  /** Result of one pipeline run: the last-value decision view (5-column
+    * rows, one per table seen) and the submitted job ids.
+    * (collection.Seq: runStatefulStreaming returns live buffers that fill
+    * as micro-batches complete; runStatefulOnce snapshots them after
+    * termination.) */
   final case class RunResult(
       decisions: scala.collection.Seq[Row],
-      submittedJobs: scala.collection.Seq[String],
-      decisionInputRows: scala.collection.Seq[Long] = Nil)
+      submittedJobs: scala.collection.Seq[String])
 
-  /** Durable submission log under the log store: one tiny
-    * `_submissions/batch=<id>.csv` per micro-batch that dispatched
-    * anything, each line `tableId,jobId`. Written atomically (temp +
-    * move) AFTER the batch's dispatches, read only on restart — the
-    * job-submission analog of the snapshot-log audit trail, sized by
-    * triggered tables, not data. */
-  private def writeSubmissions(logStoreDir: String, batchId: Long,
-      subs: Seq[(Long, String)]): Unit = {
-    val dir = java.nio.file.Paths.get(logStoreDir, "_submissions")
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(s".batch=$batchId.tmp")
-    java.nio.file.Files.writeString(tmp,
-      subs.map { case (t, j) => s"$t,$j" }.mkString("", "\n", "\n"))
-    java.nio.file.Files.move(tmp, dir.resolve(s"batch=$batchId.csv"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Latest submission batch per table from the durable submission log. */
-  private def lastSubmissionBatch(logStoreDir: String): Map[Long, Long] = {
-    val dir = java.nio.file.Paths.get(logStoreDir, "_submissions")
-    if (!java.nio.file.Files.isDirectory(dir)) return Map.empty
-    val stream = java.nio.file.Files.list(dir)
-    try stream.iterator().asScala
-      .filter(_.getFileName.toString.matches("batch=\\d+\\.csv"))
-      .flatMap { p =>
-        val bid = p.getFileName.toString
-          .stripPrefix("batch=").stripSuffix(".csv").toLong
-        java.nio.file.Files.readAllLines(p).asScala
-          .filter(_.nonEmpty)
-          .map(line => line.split(",")(0).toLong -> bid)
-      }.toSeq.groupMapReduce(_._1)(_._2)(math.max)
-    finally stream.close()
-  }
-
-  /** Batch subdirectories of a log store that finished writing (_SUCCESS
-    * marker present): (batchId, path), sorted by id. A dir without the
-    * marker is a write the dying run never completed — its replay
-    * overwrites it. */
-  private def committedBatchDirs(logStoreDir: String): Seq[(Long, String)] = {
-    val root = java.nio.file.Paths.get(logStoreDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val stream = java.nio.file.Files.list(root)
-    try stream.iterator().asScala
-      .flatMap { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("batch=") &&
-            java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-          Some(name.stripPrefix("batch=").toLong -> p.toString)
-        else None
-      }.toSeq.sortBy(_._1)
-    finally stream.close()
-  }
-
-  /** Run the pipeline over a streaming events frame until no more data is
-    * available: each micro-batch writes its derived snapshot-log rows to
-    * the parquet log store (the durable audit trail), reduces the batch
-    * executor-side to one `DecideBuf` per touched table, and merges those
-    * partials into accumulated per-table state — so per-table thresholds
-    * hold across micro-batch boundaries at O(batch) cost per batch. With
-    * `incremental = false` the decision instead re-reads the FULL
-    * accumulated log store each batch (the reference's per-event
-    * `currentAncestors` rescan — O(history) per batch; cross-check only).
-    * Tables whose decision flips to true in this batch (and weren't
-    * already dispatched) get one maintenance job; once a table's decision
-    * flips back to false (its compaction replace-commit landed in the
-    * log), its dispatched mark is cleared so a later re-trigger dispatches
-    * again — matching the reference, which re-evaluates on every commit
-    * event (AwsTableManagementMetricsEvaluator.java:60-80).
-    *
-    * Fault tolerance: every side effect is keyed on `batchId`. Each batch
-    * lands in `logStoreDir/batch=<id>/` with Overwrite semantics, so a
-    * retried micro-batch replaces its own partial output instead of
-    * appending duplicates; the state merge is skipped for a batch id that
-    * is already folded in. On restart, pass `checkpointDir` (the SAME dir
-    * as the original run): per-table state is rebuilt from the committed
-    * batch dirs in one bounded scan, and Spark's checkpoint replays only
-    * uncommitted batches — together the decisions continue exactly where
-    * the dead run left off. Opening a non-empty log store WITHOUT its
-    * checkpoint is rejected loudly: a fresh checkpoint would replay the
-    * whole source on top of the rebuilt state and double-count.
-    * Submissions are recorded in a durable per-batch log next to the
-    * snapshot log, and a restart seeds the dispatch-dedup set from it
-    * (a submission still "covers" its table unless a later batch holds
-    * the table's replace commit), so a still-triggered table whose job
-    * was already submitted is NOT re-submitted after a restart — the
-    * reference never had this (it re-fires per commit by design);
-    * compaction idempotence made the re-fire benign, this closes it.
-    * Dispatch remains at-least-once only across a crash INSIDE a batch
-    * (replay re-runs that batch's dispatches before its record lands). */
-  def runStreaming(events: DataFrame, cfg: EngineConfig,
-      executorFor: String => Executor,
-      logStoreDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      incremental: Boolean = true,
-      checkpointDir: Option[String] = None)
-      : (org.apache.spark.sql.streaming.StreamingQuery, RunResult) = {
-    val spark = events.sparkSession
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val dispatched = scala.collection.mutable.Set.empty[Long]
-    val inputRows = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // Accumulated per-table decision state (incremental path). Bounded:
-    // one entry per table, each O(commitThreshold) pending timestamps.
-    val state = scala.collection.mutable.Map.empty[Long, DecideAggregator.DecideBuf]
-    val prior = committedBatchDirs(logStoreDir)
-    require(prior.isEmpty || checkpointDir.isDefined,
-      s"log store $logStoreDir already holds batches ${prior.map(_._1)}; " +
-        "resume it with the original checkpointDir (a fresh checkpoint " +
-        "would replay the source over rebuilt state and double-count)")
-    // Highest batch id whose effects are already durable: merges for ids
-    // <= this are skipped (idempotent replay).
-    var lastBatchId = prior.lastOption.map(_._1).getOrElse(-1L)
-    if (prior.nonEmpty) {
-      val priorLog = spark.read.option("basePath", logStoreDir)
-        .parquet(prior.map(_._2): _*)
-      if (incremental) {
-        // Restart: rebuild per-table state from the committed log in ONE
-        // bounded scan (the log is ~1 row per commit, metadata-scale).
-        import spark.implicits._
-        priorLog
-          .select(
-            col("table_id").as("tableId"),
-            col("snapshot_id").as("snapshotId"),
-            col("ts_ms").as("tsMillis"),
-            col("operation"))
-          .as[graft.model.SnapshotMeta]
-          .groupByKey(_.tableId)
-          .agg(DecideAggregator.partial.toColumn.name("buf"))
-          .collect()
-          .foreach { case (tid, buf) => state(tid) = buf }
-      }
-      // Restart-scoped dispatch dedup: seed `dispatched` from the DURABLE
-      // submission log instead of an empty set, so a still-triggered
-      // table whose job was already submitted before the crash is not
-      // re-submitted. A submission covers the current trigger iff no
-      // replace commit for that table landed in a LATER batch (a later
-      // replace means the job finished and any current trigger is new
-      // pressure — eligible for dispatch again, same as the in-run
-      // quiesce rule). The `batch=<id>` dirs double as a partition
-      // column via basePath, so "latest replace batch per table" is one
-      // metadata-scale aggregate.
-      val lastSub = lastSubmissionBatch(logStoreDir)
-      if (lastSub.nonEmpty) {
-        val lastReplace = priorLog
-          .filter(col("operation") === "replace")
-          .groupBy(col("table_id"))
-          .agg(max(col("batch").cast("long")).as("b"))
-          .collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        lastSub.foreach { case (tid, sb) =>
-          if (sb >= lastReplace.getOrElse(tid, -1L)) dispatched += tid
-        }
-      }
-    }
-    val writer = events.writeStream
-      .trigger(trigger)
-      .outputMode("append")
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    val q = writer
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val batchLog = snapshotLogFrom(batch)
-        // The incremental path runs two actions over the micro-batch (log
-        // write + partial aggregation); persist so the source is scanned
-        // once per trigger (also keeps numInputRows accurate).
-        if (incremental) batchLog.persist()
-        // Idempotent log write: a retried batch overwrites its own dir.
-        batchLog.write.mode(SaveMode.Overwrite)
-          .parquet(s"$logStoreDir/batch=$batchId")
-        val isReplay = batchId <= lastBatchId
-        val rows: Array[Row] =
-          if (incremental) try {
-            import spark.implicits._
-            if (!isReplay) {
-              // Decision-input size = this batch's log rows; counted on the
-              // persisted frame (a task-retry-safe action), not via an
-              // accumulator in a transformation closure, which speculative
-              // execution would over-count.
-              inputRows += batchLog.count()
-              // Executor-side partial aggregation: the shuffle carries one
-              // small buffer per (partition, table), not the log rows.
-              val partials = batchLog.select(
-                  col("table_id").as("tableId"),
-                  col("snapshot_id").as("snapshotId"),
-                  col("ts_ms").as("tsMillis"),
-                  col("operation"))
-                .as[graft.model.SnapshotMeta]
-                .groupByKey(_.tableId)
-                .agg(DecideAggregator.partial.toColumn.name("buf"))
-                .collect()
-              partials.foreach { case (tid, buf) =>
-                state(tid) = DecideAggregator.mergeBuf(
-                  state.getOrElse(tid, DecideAggregator.zeroBuf), buf)
-              }
-              lastBatchId = batchId
-            } else inputRows += 0L // already folded in; nothing re-merged
-            state.toSeq.sortBy(_._1).map { case (tid, buf) =>
-              val d = DecideAggregator.finishBuf(buf, cfg)
-              Row(tid, d.n_commits_since_replace, d.oldest_pending_ts_ms,
-                d.time_triggered, d.should_optimize)
-            }.toArray
-          } finally batchLog.unpersist()
-          else {
-            val fullLog = spark.read.parquet(logStoreDir)
-            inputRows += fullLog.count()
-            Decide.shouldOptimize(fullLog, cfg).collect()
-          }
-        decisions.clear()
-        decisions ++= rows
-        val triggered = rows.filter(_.getBoolean(4)).map(_.getLong(0)).toSet
-        // Quiesce: a table whose decision is no longer true may trigger
-        // (and dispatch) again later in the same query.
-        dispatched.filterInPlace(triggered.contains)
-        val newSubs = triggered.filterNot(dispatched.contains).toSeq.sorted
-          .map { tableId =>
-            val table = s"db.tbl_$tableId"
-            val ex = executorFor(table)
-            ex.initialize(table, Map.empty)
-            val jobId = ex.execute()
-            submitted += jobId
-            dispatched += tableId
-            tableId -> jobId
-          }
-        // Durable record of this batch's submissions (after the
-        // dispatches: a crash mid-batch replays the batch and re-submits
-        // — at-least-once, unchanged — but a crash AFTER the record can
-        // no longer double-submit on restart).
-        if (newSubs.nonEmpty) writeSubmissions(logStoreDir, batchId, newSubs)
-        ()
-      }
-      .start()
-    (q, RunResult(decisions, submitted, inputRows))
-  }
-
-  // ---- stateful-streaming decision path (the primary form) ----
-
-  /** Per-table decision row emitted by the stateful path. */
+  /** Per-table decision row emitted each time a micro-batch touches the
+    * table. `newly_triggered` is true only in the batch where
+    * `should_optimize` turned true while the table was not yet dispatched:
+    * exactly the rows that get a maintenance job. */
   final case class TableDecision(
       table_id: Long,
       n_commits_since_replace: Long,
       oldest_pending_ts_ms: Long,
       time_triggered: Boolean,
-      should_optimize: Boolean)
+      should_optimize: Boolean,
+      newly_triggered: Boolean)
+
+  /** Group state of one table: its decision buffer plus the dispatch mark
+    * (a job was submitted for the current trigger). */
+  final case class TableState(buf: DecideAggregator.DecideBuf,
+      dispatched: Boolean)
 
   /** The `flatMapGroupsWithState` transition function (the JobTracker
     * pattern): fold the micro-batch's snapshot rows for one table into its
-    * `DecideBuf` — which lives in Spark's CHECKPOINTED STATE STORE, not in
+    * `TableState` — which lives in Spark's CHECKPOINTED STATE STORE, not in
     * driver memory — and emit the refreshed decision. `reduceBuf` is
     * order-insensitive at the fixpoint (a replace prunes exactly the
     * commits it supersedes regardless of arrival order), so no per-group
-    * sort is needed. State per table is O(commitThreshold) pending
-    * timestamps; with the state store the table-cardinality ceiling is the
-    * cluster's disk, not the driver heap — 10⁹ tables is just a bigger
-    * state store. */
+    * sort is needed. The dispatch mark follows the decision: set while
+    * the table stays triggered, cleared by a `false` decision (its
+    * compaction's replace commit landed), so a later re-trigger dispatches
+    * again — matching the reference, which re-evaluates on every commit
+    * event (AwsTableManagementMetricsEvaluator.java:60-80). State per table
+    * is O(commitThreshold) pending timestamps; with the state store the
+    * table-cardinality ceiling is the cluster's disk, not the driver heap
+    * — 10⁹ tables is just a bigger state store. */
   def decideGroup(cfg: EngineConfig)(tableId: Long,
       rows: Iterator[SnapshotMeta],
-      state: GroupState[DecideAggregator.DecideBuf])
-      : Iterator[TableDecision] = {
-    val buf = rows.foldLeft(
-      state.getOption.getOrElse(DecideAggregator.zeroBuf))(
-      DecideAggregator.reduceBuf)
-    state.update(buf)
+      state: GroupState[TableState]): Iterator[TableDecision] = {
+    val prev = state.getOption
+      .getOrElse(TableState(DecideAggregator.zeroBuf, dispatched = false))
+    val buf = rows.foldLeft(prev.buf)(DecideAggregator.reduceBuf)
     val d = DecideAggregator.finishBuf(buf, cfg)
+    state.update(TableState(buf, dispatched = d.should_optimize))
     Iterator.single(TableDecision(tableId, d.n_commits_since_replace,
-      d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize))
+      d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize,
+      newly_triggered = d.should_optimize && !prev.dispatched))
   }
 
   /** Streaming decision frame: events → snapshot-log rows → per-table
@@ -373,18 +145,21 @@ object EventPipeline {
         GroupStateTimeout.NoTimeout)(decideGroup(cfg))
   }
 
-  /** [[runStreaming]] with the per-table decision state in the state store
-    * instead of a driver-side map: restart recovery is Spark's checkpoint
-    * mechanism itself (no log-store rebuild scan, no
-    * reopen-without-checkpoint failure mode), and state capacity scales
-    * with the cluster, not the driver heap. The driver keeps only a
-    * LAST-VALUE VIEW of emitted decisions for reporting plus the dispatch
-    * dedup set — both bounded by (triggered) table count and neither
-    * load-bearing for correctness across restarts (dispatch stays
-    * at-least-once, exactly like the reference's re-evaluate-per-commit).
-    * The foreachBatch/driver-map form above remains as the cross-check
-    * (StreamSpec asserts the two paths agree through the restart
-    * scenario). */
+  /** Run the pipeline over a streaming events frame: each micro-batch
+    * folds into the per-table state ([[statefulDecisions]]) and
+    * `foreachBatch` submits one maintenance job per `newly_triggered` row.
+    * The driver keeps only a LAST-VALUE VIEW of emitted decisions for
+    * reporting, bounded by table count and not load-bearing for
+    * correctness.
+    *
+    * Restart: pass the SAME `checkpointDir`. Spark replays only the
+    * uncommitted batches from the replayable source against the last
+    * committed state version (Structured Streaming's exactly-once recipe),
+    * so the decisions continue where the dead run left off and a table
+    * that is still triggered is not dispatched again — its dispatch mark
+    * is in the checkpointed state, not in driver memory. Dispatch stays
+    * at-least-once only across a crash INSIDE a batch: the replay re-runs
+    * that batch from the previous state version, dispatches included. */
   def runStatefulStreaming(events: DataFrame, cfg: EngineConfig,
       executorFor: String => Executor,
       checkpointDir: String,
@@ -393,7 +168,6 @@ object EventPipeline {
     val decisions = scala.collection.mutable.ArrayBuffer.empty[Row]
     val byTable = scala.collection.mutable.Map.empty[Long, TableDecision]
     val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val dispatched = scala.collection.mutable.Set.empty[Long]
     val q = statefulDecisions(events, cfg).writeStream
       .trigger(trigger)
       .outputMode("update")
@@ -406,53 +180,36 @@ object EventPipeline {
           Row(d.table_id, d.n_commits_since_replace,
             d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize)
         }
-        // Quiesce: a table whose decision flipped back to false may
-        // trigger (and dispatch) again later.
-        rows.filter(!_.should_optimize).foreach(d => dispatched -= d.table_id)
-        rows.filter(_.should_optimize).map(_.table_id)
-          .filterNot(dispatched.contains).sorted.foreach { tableId =>
+        rows.filter(_.newly_triggered).map(_.table_id).sorted.foreach {
+          tableId =>
             val table = s"db.tbl_$tableId"
             val ex = executorFor(table)
             ex.initialize(table, Map.empty)
             submitted += ex.execute()
-            dispatched += tableId
-          }
+        }
         ()
       }
       .start()
     (q, RunResult(decisions, submitted))
   }
 
-  /** Run the stateful pipeline over all currently-available fixture
-    * events (fresh checkpoint). */
+  /** Run the pipeline over all currently-available fixture events on a
+    * fresh temporary checkpoint, removed when the run ends. */
   def runStatefulOnce(spark: SparkSession, dir: String, cfg: EngineConfig,
       executorFor: String => Executor): RunResult = {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-stateful-ckpt").toString
-    val (q, result) = runStatefulStreaming(readEventStream(spark, dir), cfg,
-      executorFor, ckpt)
-    q.awaitTermination()
-    RunResult(result.decisions.toSeq, result.submittedJobs.toSeq)
-  }
-
-  /** Run the full pipeline over all currently-available fixture events.
-    * Returns the final decisions and the submitted job ids. */
-  def runOnce(spark: SparkSession, dir: String, cfg: EngineConfig,
-      executorFor: String => Executor,
-      incremental: Boolean = true): RunResult = {
-    val logStore = java.nio.file.Files
-      .createTempDirectory("graft-logstore").toString
-    val (q, result) = runStreaming(readEventStream(spark, dir), cfg,
-      executorFor, logStore, incremental = incremental)
-    q.awaitTermination()
-    RunResult(result.decisions.toSeq, result.submittedJobs.toSeq,
-      result.decisionInputRows.toSeq)
+    try {
+      val (q, result) = runStatefulStreaming(readEventStream(spark, dir),
+        cfg, executorFor, ckpt)
+      q.awaitTermination()
+      RunResult(result.decisions.toSeq, result.submittedJobs.toSeq)
+    } finally LoopCore.deleteRecursively(ckpt)
   }
 
   /** Streaming decision query for the driver contract: same output (and
-    * oracle) as the batch should_optimize, produced through the PRIMARY
-    * stateful-streaming path (per-table state in the checkpointed state
-    * store; the foreachBatch/log-store form remains the cross-check). */
+    * oracle) as the batch should_optimize, produced through the stateful
+    * streaming path (per-table state in the checkpointed state store). */
   def decisionsViaStream(spark: SparkSession, dir: String,
       cfg: EngineConfig): DataFrame = {
     val result = runStatefulOnce(spark, dir, cfg, _ => NoopExecutor)

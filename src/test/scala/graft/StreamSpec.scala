@@ -2,6 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{DryRunExecutor, JobStateLog}
@@ -16,6 +22,49 @@ class StreamSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val cfg = EngineConfig()
 
+  /** A fresh `graft-<prefix>*` temp dir for `body`, removed afterwards. */
+  private def withTempDir[A](prefix: String)(body: String => A): A = {
+    val d = Files.createTempDirectory(s"graft-$prefix")
+    try body(d.toString) finally FileUtils.deleteDirectory(d.toFile)
+  }
+
+  /** One event row in `EventPipeline.eventSchema` order. */
+  private type Ev = (Long, Long, Long, String, Double, String)
+  private val eventCols = EventPipeline.eventSchema.fieldNames.toSeq
+
+  /** Commit `id` on `table`, `id` ms into the minute before `Decide.NowMs`
+    * (fresh: only the commit-count threshold can trigger). */
+  private def commit(table: Long, id: Long, op: String = "click"): Ev =
+    (id, (Decide.NowMs - 60000 + id) * 1000000L, table, op, 1.0, "{}")
+
+  /** Drop `rows` into `srcDir` as one single-file parquet wave named
+    * `name` (the file-stream source picks up new files across restarts). */
+  private def addWave(srcDir: String, name: String, rows: Seq[Ev]): Unit =
+    withTempDir("wave") { tmp =>
+      import spark.implicits._
+      rows.toDF(eventCols: _*).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val parts = Files.list(Paths.get(tmp)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+      assert(parts.size === 1)
+      Files.copy(parts.head, Paths.get(srcDir, name))
+    }
+
+  private def openWaves(srcDir: String) =
+    spark.readStream.schema(EventPipeline.eventSchema).parquet(srcDir)
+
+  /** Decision rows as comparable tuples, sorted by table. */
+  private def tuples(rows: Iterable[Row]) = rows.map(r => (r.getLong(0),
+    r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
+    .toSeq.sortBy(_._1)
+
+  /** The rescan oracle: the batch `Decide.shouldOptimize` (the
+    * DuckDB-gated `should_optimize` key) over every event in `events`. */
+  private def rescan(events: Seq[Ev]) = {
+    import spark.implicits._
+    tuples(Decide.shouldOptimize(EventPipeline.snapshotLogFrom(
+      events.toDF(eventCols: _*)), cfg).collect())
+  }
+
   test("streamed should_optimize equals the batch decision") {
     val batch = Decide.shouldOptimize(EventOps.snapshotLog(spark, dir), cfg)
       .collect().map(r => r.getLong(0) ->
@@ -29,7 +78,7 @@ class StreamSpec extends AnyFunSuite {
 
   test("pipeline dispatches one job per triggered table") {
     val log = new JobStateLog
-    val result = EventPipeline.runOnce(spark, dir, cfg,
+    val result = EventPipeline.runStatefulOnce(spark, dir, cfg,
       _ => new DryRunExecutor(log))
     val triggered = result.decisions.count(_.getBoolean(4))
     assert(result.submittedJobs.size === triggered)
@@ -42,251 +91,112 @@ class StreamSpec extends AnyFunSuite {
 
   test("decisions hold across micro-batch boundaries (accumulated log)") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     implicit val sql = spark.sqlContext
-    val now = graft.ops.Decide.NowMs
     // 12 fresh commits for table 9, split 6 + 6 across two micro-batches:
     // per-batch evaluation would never reach the 10-commit threshold.
-    def ev(id: Long): (Long, Long, Long, String, Double, String) =
-      (id, (now - 60000 + id) * 1000000L, 9L, "click", 1.0, "{}")
-    val input = MemoryStream[(Long, Long, Long, String, Double, String)]
-    val events = input.toDS().toDF(
-      "event_id", "ts", "user_id", "event_type", "value", "props")
-    val logStore = java.nio.file.Files
-      .createTempDirectory("graft-logstore-test").toString
-    val jobLog = new JobStateLog
-    val (q, result) = graft.stream.EventPipeline.runStreaming(
-      events, cfg, _ => new DryRunExecutor(jobLog), logStore,
-      Trigger.ProcessingTime(0))
-    input.addData((1L to 6L).map(ev): _*)
-    q.processAllAvailable()
-    assert(result.decisions.count(_.getBoolean(4)) === 0)
-    input.addData((7L to 12L).map(ev): _*)
-    q.processAllAvailable()
-    q.stop()
-    val triggered = result.decisions.filter(_.getBoolean(4)).map(_.getLong(0))
-    assert(triggered === Seq(9L)) // 12 cumulative commits >= threshold
-    assert(result.submittedJobs.size === 1) // dispatched exactly once
+    val input = MemoryStream[Ev]
+    withTempDir("ckpt") { ckpt =>
+      val (q, result) = EventPipeline.runStatefulStreaming(
+        input.toDS().toDF(eventCols: _*), cfg,
+        _ => new DryRunExecutor(new JobStateLog), ckpt,
+        Trigger.ProcessingTime(0))
+      try {
+        input.addData((1L to 6L).map(commit(9L, _)): _*)
+        q.processAllAvailable()
+        assert(result.decisions.count(_.getBoolean(4)) === 0)
+        input.addData((7L to 12L).map(commit(9L, _)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val triggered = result.decisions.filter(_.getBoolean(4)).map(_.getLong(0))
+      assert(triggered === Seq(9L)) // 12 cumulative commits >= threshold
+      assert(result.submittedJobs.size === 1) // dispatched exactly once
+    }
   }
 
   test("incremental decision path does O(batch) work; rescan cross-check agrees") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    val now = Decide.NowMs
+    implicit val sql = spark.sqlContext
     // 4 batches × 6 fresh commits, alternating tables 20 and 21 — each
     // table ends with 12 cumulative commits (>= the 10-commit threshold).
-    def ev(id: Long): (Long, Long, Long, String, Double, String) =
-      (id, (now - 60000 + id) * 1000000L, 20L + id % 2, "click", 1.0, "{}")
-    def run(incremental: Boolean) = {
-      implicit val sql = spark.sqlContext
-      val input = MemoryStream[(Long, Long, Long, String, Double, String)]
-      val events = input.toDS().toDF(
-        "event_id", "ts", "user_id", "event_type", "value", "props")
-      val logStore = java.nio.file.Files
-        .createTempDirectory("graft-logstore-inc").toString
-      val (q, result) = EventPipeline.runStreaming(
-        events, cfg, _ => new DryRunExecutor(new JobStateLog), logStore,
-        Trigger.ProcessingTime(0), incremental = incremental)
-      (0 until 4).foreach { b =>
-        input.addData((1L to 6L).map(i => ev(b * 6 + i)): _*)
+    val all = (1L to 24L).map(id => commit(20L + id % 2, id))
+    val input = MemoryStream[Ev]
+    withTempDir("ckpt") { ckpt =>
+      val (q, result) = EventPipeline.runStatefulStreaming(
+        input.toDS().toDF(eventCols: _*), cfg,
+        _ => new DryRunExecutor(new JobStateLog), ckpt,
+        Trigger.ProcessingTime(0))
+      try all.grouped(6).zipWithIndex.foreach { case (batch, b) =>
+        input.addData(batch: _*)
         q.processAllAvailable()
-      }
-      q.stop()
-      val decisions = result.decisions.map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getBoolean(3), r.getBoolean(4))).sortBy(_._1)
-      (decisions, result.decisionInputRows.toSeq, result.submittedJobs.size)
+        // the rescan oracle over every event fed so far agrees
+        assert(tuples(result.decisions) === rescan(all.take((b + 1) * 6)))
+        // O(batch): each trigger reads only its own 6 rows and the state
+        // holds one row per table, never the accumulated history
+        assert(q.lastProgress.numInputRows === 6L)
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum === 2L)
+        // both tables cross the threshold together, in the last batch
+        assert(result.submittedJobs.size === (if (b == 3) 2 else 0))
+      } finally q.stop()
     }
-    val (incDecisions, incRows, incJobs) = run(incremental = true)
-    val (rsDecisions, rsRows, rsJobs) = run(incremental = false)
-    assert(incDecisions === rsDecisions) // identical final decisions
-    assert(incJobs === rsJobs) // identical dispatch behavior
-    // incremental: per-batch decision input never exceeds one batch's rows
-    assert(incRows.max === 6L)
-    assert(incRows.count(_ > 0L) === 4)
-    // rescan: the last batch re-reads the whole accumulated history
-    assert(rsRows.max === 24L)
-  }
-
-  test("restart with checkpoint resumes decision state from the durable log") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val now = Decide.NowMs
-    def ev(id: Long): (Long, Long, Long, String, Double, String) =
-      (id, (now - 60000 + id) * 1000000L, 30L, "click", 1.0, "{}")
-    val srcDir = Files.createTempDirectory("graft-restart-src").toString
-    val logStore = Files.createTempDirectory("graft-restart-log").toString
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
-    // Drop one single-file parquet wave into the source dir per phase (the
-    // file-stream source picks up new files across restarts).
-    def addWave(name: String, ids: Seq[Long]): Unit = {
-      val tmp = Files.createTempDirectory("graft-wave").toString
-      ids.map(ev).toDF("event_id", "ts", "user_id", "event_type", "value",
-        "props").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(java.nio.file.Paths.get(tmp)).iterator()
-      var copied = false
-      while (part.hasNext) {
-        val p = part.next()
-        if (p.getFileName.toString.endsWith(".parquet")) {
-          Files.copy(p, java.nio.file.Paths.get(srcDir, name))
-          copied = true
-        }
-      }
-      assert(copied)
-    }
-    def openStream() = spark.readStream
-      .schema(EventPipeline.eventSchema).parquet(srcDir)
-    val jobLog = new JobStateLog
-    // run 1: 6 commits — below the 10-commit threshold, no dispatch
-    addWave("wave1.parquet", 1L to 6L)
-    val (q1, r1) = EventPipeline.runStreaming(openStream(), cfg,
-      _ => new DryRunExecutor(jobLog), logStore,
-      checkpointDir = Some(ckpt))
-    q1.awaitTermination()
-    assert(r1.decisions.count(_.getBoolean(4)) === 0)
-    assert(r1.submittedJobs.isEmpty)
-    // the dead run's state is GONE (fresh runStreaming = fresh driver);
-    // reopening the store without its checkpoint must fail loudly
-    // instead of silently double-counting
-    intercept[IllegalArgumentException] {
-      EventPipeline.runStreaming(openStream(), cfg,
-        _ => new DryRunExecutor(jobLog), logStore)
-    }
-    // run 2 = restart: same checkpoint + log store, 6 MORE commits. State
-    // is rebuilt from the committed batch dirs, so the cumulative count
-    // reaches 12 and table 30 triggers exactly once.
-    addWave("wave2.parquet", 7L to 12L)
-    val (q2, r2) = EventPipeline.runStreaming(openStream(), cfg,
-      _ => new DryRunExecutor(jobLog), logStore,
-      checkpointDir = Some(ckpt))
-    q2.awaitTermination()
-    val d30 = r2.decisions.find(_.getLong(0) === 30L).get
-    assert(d30.getLong(1) === 12L) // commits survived the restart
-    assert(d30.getBoolean(4))
-    assert(r2.submittedJobs.size === 1)
-    // run 2 merged only its own batch — O(new data), not a re-merge of
-    // run 1's rows
-    assert(r2.decisionInputRows.toSeq === Seq(6L))
-    // the durable log holds each commit exactly once across both runs
-    assert(spark.read.parquet(logStore).count() === 12L)
   }
 
   test("restart does not re-submit a still-triggered table (durable dispatch dedup)") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val now = Decide.NowMs
-    def ev(id: Long, op: String): (Long, Long, Long, String, Double, String) =
-      (id, (now - 60000 + id) * 1000000L, 50L, op, 1.0, "{}")
-    val srcDir = Files.createTempDirectory("graft-dd-src").toString
-    val logStore = Files.createTempDirectory("graft-dd-log").toString
-    val ckpt = Files.createTempDirectory("graft-dd-ckpt").toString
-    def addWave(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft-dd-wave").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value",
-        "props").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(java.nio.file.Paths.get(tmp)).iterator()
-      while (part.hasNext) {
-        val p = part.next()
-        if (p.getFileName.toString.endsWith(".parquet"))
-          Files.copy(p, java.nio.file.Paths.get(srcDir, name))
+    val jobLog = new JobStateLog
+    withTempDir("dd-src") { src =>
+      withTempDir("dd-ckpt") { ckpt =>
+        // one run on the shared checkpoint per wave: (table 50 triggered,
+        // jobs submitted by this run)
+        def run(wave: String, rows: Seq[Ev]): (Boolean, Int) = {
+          addWave(src, wave, rows)
+          val (q, r) = EventPipeline.runStatefulStreaming(openWaves(src),
+            cfg, _ => new DryRunExecutor(jobLog), ckpt)
+          q.awaitTermination()
+          (r.decisions.find(_.getLong(0) === 50L).get.getBoolean(4),
+            r.submittedJobs.size)
+        }
+        // run 1: 12 commits → triggered, submitted once
+        assert(run("w1.parquet", (1L to 12L).map(commit(50L, _))) === ((true, 1)))
+        // run 2 = restart with one MORE commit: still triggered, but the
+        // dispatch mark restored from the state store says its job is
+        // already out — it must NOT be submitted again
+        assert(run("w2.parquet", Seq(commit(50L, 13L))) === ((true, 0)))
+        // run 3: the compaction's replace commit lands → decision quiesces
+        assert(run("w3.parquet", Seq(commit(50L, 14L, Fixture.ReplaceOp))) ===
+          ((false, 0)))
+        // run 4: fresh pressure after the replace → a NEW submission is due
+        assert(run("w4.parquet", (15L to 26L).map(commit(50L, _))) === ((true, 1)))
       }
     }
-    def openStream() = spark.readStream
-      .schema(EventPipeline.eventSchema).parquet(srcDir)
-    val jobLog = new JobStateLog
-    def run() = {
-      val (q, r) = EventPipeline.runStreaming(openStream(), cfg,
-        _ => new DryRunExecutor(jobLog), logStore,
-        checkpointDir = Some(ckpt))
-      q.awaitTermination()
-      r
-    }
-    // run 1: 12 commits → triggered, submitted once, submission recorded
-    addWave("w1.parquet", (1L to 12L).map(ev(_, "click")))
-    val r1 = run()
-    assert(r1.decisions.find(_.getLong(0) === 50L).get.getBoolean(4))
-    assert(r1.submittedJobs.size === 1)
-    // run 2 = restart with one MORE commit: still triggered, but the
-    // durable submission log seeds the dedup set — the in-flight job
-    // must NOT be submitted again (the gap an in-memory set left open)
-    addWave("w2.parquet", Seq(ev(13L, "click")))
-    val r2 = run()
-    assert(r2.decisions.find(_.getLong(0) === 50L).get.getBoolean(4))
-    assert(r2.submittedJobs.isEmpty)
-    // run 3: the compaction's replace commit lands → decision quiesces
-    addWave("w3.parquet", Seq(ev(14L, Fixture.ReplaceOp)))
-    val r3 = run()
-    assert(!r3.decisions.find(_.getLong(0) === 50L).get.getBoolean(4))
-    assert(r3.submittedJobs.isEmpty)
-    // run 4: fresh pressure after the replace → a NEW submission is due
-    // (the recorded one is superseded by the later replace batch)
-    addWave("w4.parquet", (15L to 26L).map(ev(_, "click")))
-    val r4 = run()
-    assert(r4.decisions.find(_.getLong(0) === 50L).get.getBoolean(4))
-    assert(r4.submittedJobs.size === 1)
   }
 
-  test("stateful decision path equals the driver-map path through restart") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val now = Decide.NowMs
-    def ev(id: Long): (Long, Long, Long, String, Double, String) =
-      (id, (now - 60000 + id) * 1000000L, 40L, "click", 1.0, "{}")
-    def addWave(srcDir: String, name: String, ids: Seq[Long]): Unit = {
-      val tmp = Files.createTempDirectory("graft-swave").toString
-      ids.map(ev).toDF("event_id", "ts", "user_id", "event_type", "value",
-        "props").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(java.nio.file.Paths.get(tmp)).iterator()
-      while (part.hasNext) {
-        val p = part.next()
-        if (p.getFileName.toString.endsWith(".parquet"))
-          Files.copy(p, java.nio.file.Paths.get(srcDir, name))
+  test("stateful decision path equals the batch decision through restart") {
+    val wave1 = (1L to 6L).map(commit(40L, _))
+    val wave2 = (7L to 12L).map(commit(40L, _))
+    val jobLog = new JobStateLog
+    // two runs over the SAME checkpoint — state survives purely via the
+    // state store (no side log, no manual rebuild)
+    withTempDir("sf-src") { src =>
+      withTempDir("sf-ckpt") { ckpt =>
+        addWave(src, "wave1.parquet", wave1)
+        val (q1, r1) = EventPipeline.runStatefulStreaming(openWaves(src),
+          cfg, _ => new DryRunExecutor(jobLog), ckpt)
+        q1.awaitTermination()
+        assert(r1.decisions.count(_.getBoolean(4)) === 0)
+        assert(r1.submittedJobs.isEmpty)
+        addWave(src, "wave2.parquet", wave2)
+        val (q2, r2) = EventPipeline.runStatefulStreaming(openWaves(src),
+          cfg, _ => new DryRunExecutor(jobLog), ckpt)
+        q2.awaitTermination()
+        val d40 = r2.decisions.find(_.getLong(0) === 40L).get
+        assert(d40.getLong(1) === 12L) // pending commits survived the restart
+        assert(d40.getBoolean(4))
+        assert(r2.submittedJobs.size === 1) // dispatched exactly once
+        // the restart read only the new wave — O(new data), no replay
+        assert(q2.recentProgress.map(_.numInputRows).sum === 6L)
+        // the rescan oracle over both waves lands on the identical row
+        assert(tuples(r2.decisions) === rescan(wave1 ++ wave2))
       }
     }
-    def openStream(srcDir: String) = spark.readStream
-      .schema(EventPipeline.eventSchema).parquet(srcDir)
-
-    // stateful path: two runs over the SAME checkpoint — state survives
-    // purely via the state store (no log store, no manual rebuild)
-    val src = Files.createTempDirectory("graft-sf-src").toString
-    val ckpt = Files.createTempDirectory("graft-sf-ckpt").toString
-    val jobLog = new JobStateLog
-    addWave(src, "wave1.parquet", 1L to 6L)
-    val (q1, r1) = EventPipeline.runStatefulStreaming(openStream(src), cfg,
-      _ => new DryRunExecutor(jobLog), ckpt)
-    q1.awaitTermination()
-    assert(r1.decisions.count(_.getBoolean(4)) === 0)
-    assert(r1.submittedJobs.isEmpty)
-    addWave(src, "wave2.parquet", 7L to 12L)
-    val (q2, r2) = EventPipeline.runStatefulStreaming(openStream(src), cfg,
-      _ => new DryRunExecutor(jobLog), ckpt)
-    q2.awaitTermination()
-    val d40 = r2.decisions.find(_.getLong(0) === 40L).get
-    assert(d40.getLong(1) === 12L) // pending commits survived the restart
-    assert(d40.getBoolean(4))
-    assert(r2.submittedJobs.size === 1) // dispatched exactly once
-
-    // cross-check: the driver-map (foreachBatch + log store) form over the
-    // same two waves lands on the identical final decision row
-    val src2 = Files.createTempDirectory("graft-fm-src").toString
-    val log2 = Files.createTempDirectory("graft-fm-log").toString
-    val ckpt2 = Files.createTempDirectory("graft-fm-ckpt").toString
-    addWave(src2, "wave1.parquet", 1L to 6L)
-    val (p1, _) = EventPipeline.runStreaming(openStream(src2), cfg,
-      _ => new DryRunExecutor(new JobStateLog), log2,
-      checkpointDir = Some(ckpt2))
-    p1.awaitTermination()
-    addWave(src2, "wave2.parquet", 7L to 12L)
-    val (p2, rp) = EventPipeline.runStreaming(openStream(src2), cfg,
-      _ => new DryRunExecutor(new JobStateLog), log2,
-      checkpointDir = Some(ckpt2))
-    p2.awaitTermination()
-    val expected = rp.decisions.map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
-    val got = r2.decisions.map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
-    assert(got === expected)
   }
 
   test("stateful decision path equals the batch decision on the fixture") {
@@ -299,6 +209,28 @@ class StreamSpec extends AnyFunSuite {
       ((r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))).toMap
     assert(got === batch)
     assert(stateful.submittedJobs.size === got.values.count(_._4))
+  }
+
+  test("decisionsViaStream leaves no temporary checkpoint behind") {
+    def checkpoints(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .fold(Set.empty[String])(_.filter(_.startsWith("graft-stateful-ckpt")).toSet)
+    val before = checkpoints()
+    assert(EventPipeline.decisionsViaStream(spark, dir, cfg).count() > 0)
+    assert(checkpoints() === before)
+  }
+
+  test("readEventStream streams a Spark-written events directory given as a file: URI") {
+    import spark.implicits._
+    withTempDir("uri-src") { root =>
+      (1L to 50L).map(commit(7L, _)).toDF(eventCols: _*)
+        .repartition(2).write.parquet(s"$root/events.parquet")
+      val q = EventPipeline.readEventStream(spark, s"file:$root")
+        .writeStream.format("memory").queryName("uri_events")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      assert(spark.table("uri_events").count() === 50L)
+    }
   }
 
   test("watermarked tumbling windows finalize and drop late data") {
@@ -1687,7 +1619,8 @@ class StreamSpec extends AnyFunSuite {
     val listener = new graft.stream.CommitMetricsListener
     spark.streams.addListener(listener)
     try {
-      EventPipeline.runOnce(spark, dir, cfg, _ => new DryRunExecutor(new JobStateLog))
+      EventPipeline.runStatefulOnce(spark, dir, cfg,
+        _ => new DryRunExecutor(new JobStateLog))
       // listener callbacks are async; wait briefly for delivery
       val deadline = System.nanoTime() + 10000000000L
       while (listener.all.isEmpty && System.nanoTime() < deadline)
