@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,18 +47,37 @@ object Tables {
     * same path invalidates the memo instead of silently serving a stale
     * artifact — the snapshot-id role an Iceberg catalog would play,
     * derived here from the directory listing (one metadata-only pass;
-    * the same listing a scan's file index performs). */
+    * the same listing a scan's file index performs). A local path or
+    * `file:` URI is walked with `java.io` (the per-query cost of every
+    * [[load]]); any other scheme is listed through Hadoop against the
+    * active session's conf. */
   def version(dir: String, name: String): Long = {
-    val root = new java.io.File(s"$dir/$name.parquet")
-    def walk(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).iterator.flatMap(walk)
-      else Iterator.single(f)
-    if (!root.exists()) return 0L
-    walk(root).foldLeft(17L) { (h, f) =>
+    val root = new Path(s"$dir/$name.parquet")
+    // (name, length, mtime) per file in path order; None: no such table
+    val files: Option[Iterator[(String, Long, Long)]] =
+      root.toUri.getScheme match {
+        case null | "file" =>
+          def walk(f: java.io.File): Iterator[java.io.File] =
+            if (f.isDirectory)
+              f.listFiles().sortBy(_.getName).iterator.flatMap(walk)
+            else Iterator.single(f)
+          Some(new java.io.File(root.toUri.getPath)).filter(_.exists())
+            .map(walk(_).map(f => (f.getName, f.length(), f.lastModified())))
+        case _ =>
+          val fs = root.getFileSystem(
+            SparkSession.active.sessionState.newHadoopConf())
+          Some(root).filter(fs.exists).map { r =>
+            val it = fs.listFiles(r, true)
+            Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+              .toSeq.sortBy(_.getPath.toString)
+              .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+              .iterator
+          }
+      }
+    files.fold(0L)(_.foldLeft(17L) { case (h, (fileName, len, mtime)) =>
       var x = h
-      for (c <- f.getName) x = x * 31 + c
-      (x * 31 + f.length()) * 31 + f.lastModified()
-    }
+      for (c <- fileName) x = x * 31 + c
+      (x * 31 + len) * 31 + mtime
+    })
   }
 }

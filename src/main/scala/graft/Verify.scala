@@ -23,16 +23,32 @@ object Verify {
         sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = try run(spark, sfDir, outDir, keep) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} key(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Dump every kept key's result under `outDir`, then write
+    * oracle_sql.json for all kept keys. A key that throws is reported and
+    * skipped, so one broken key does not hide the others; the names of
+    * the failed keys are returned. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      keep: String => Boolean): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    val failed = SparkEntry.queries.toSeq.filter { case (name, _) => keep(name) }
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -49,6 +65,6 @@ object Verify {
       .filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -127,7 +127,7 @@ object CurationPipeline {
           .drop("k")
         fresh.unionByName(confirmed).drop("might")
     }
-    Sampling.shardPlan(
+    val w = Sampling.shardPlan(
         observed(
           Dedup.streamingDedup(
             observed(kept, "funnel_2_quality_kept"), watermarkDelay),
@@ -135,10 +135,9 @@ object CurationPipeline {
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
       .partitionBy("shard")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
-      .start()
+    LocalCheckpointFileManager.start(docs.sparkSession, w, Some(checkpointDir))
   }
 }

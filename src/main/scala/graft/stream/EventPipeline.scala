@@ -28,6 +28,18 @@ import graft.model.{EngineConfig, SnapshotMeta}
   * State per table is (last replace ts, pending commit ts list), bounded
   * by `commitThreshold` in steady state — compaction fires before the
   * pending list grows past O(threshold).
+  *
+  * Checkpoint I/O: each trigger makes its epoch durable before it
+  * dispatches — an offsets WAL entry, one state-store delta per state
+  * partition and a commit-log entry, each an atomic temp-file write plus
+  * rename. On a local checkpoint, Spark's default `FileContext` manager
+  * and Hadoop's local FS (without its native library) fork a `readlink`
+  * per renamed path and a `chmod` per created file, dozens of processes
+  * per micro-batch, which made the state commit the largest phase of a
+  * trigger. [[runStatefulStreaming]] therefore starts its query through
+  * [[LocalCheckpointFileManager.start]], which writes those files with
+  * `java.nio`, without a process; a manager class the caller has set is
+  * kept.
   */
 object EventPipeline {
 
@@ -168,10 +180,9 @@ object EventPipeline {
     val decisions = scala.collection.mutable.ArrayBuffer.empty[Row]
     val byTable = scala.collection.mutable.Map.empty[Long, TableDecision]
     val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = statefulDecisions(events, cfg).writeStream
+    val w = statefulDecisions(events, cfg).writeStream
       .trigger(trigger)
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[TableDecision], _: Long) =>
         val rows = batch.collect()
         rows.foreach(d => byTable(d.table_id) = d)
@@ -189,7 +200,8 @@ object EventPipeline {
         }
         ()
       }
-      .start()
+    val q = LocalCheckpointFileManager.start(events.sparkSession, w,
+      Some(checkpointDir))
     (q, RunResult(decisions, submitted))
   }
 

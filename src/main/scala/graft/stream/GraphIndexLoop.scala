@@ -479,7 +479,6 @@ object GraphIndexLoop {
     // first unprocessed batch with monotone ids; the commit markers
     // make any re-delivered tail batch a strict no-op (the
     // MediaIndexLoop durable-restart spec exercises the pattern)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
+    LocalCheckpointFileManager.start(spark, w, checkpoint)
   }
 }

@@ -297,8 +297,7 @@ object IndexLoop {
     // durable restart: loadIndex() (which carries the lastBatchId
     // replay guard) + the same checkpoint (the MediaIndexLoop
     // durable-restart spec exercises the pattern)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
+    LocalCheckpointFileManager.start(spark, w, checkpoint)
   }
 
   /** Apply one ingest batch (the [[start]] body, callable directly for

@@ -330,7 +330,6 @@ object LexIndexLoop {
       }
     // durable restart: reattach() + the same checkpoint (the
     // MediaIndexLoop durable-restart spec exercises the pattern)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
+    LocalCheckpointFileManager.start(spark, w, checkpoint)
   }
 }

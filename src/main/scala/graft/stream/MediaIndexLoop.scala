@@ -496,7 +496,6 @@ object MediaIndexLoop {
             onHealth), batchId)
         }
       }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
+    LocalCheckpointFileManager.start(spark, w, checkpoint)
   }
 }

@@ -5,7 +5,10 @@ import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths}
 
 import org.apache.commons.io.FileUtils
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -233,6 +236,94 @@ class StreamSpec extends AnyFunSuite {
     }
   }
 
+  private val managerClassKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val fileContextManager =
+    classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** Feed `batches` through `runStatefulStreaming` over a `MemoryStream`
+    * on checkpoint `ckpt`, one micro-batch each. */
+  private def runMemoryBatches(ckpt: String, batches: Seq[Seq[Ev]]): Unit = {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val input = MemoryStream[Ev]
+    val (q, _) = EventPipeline.runStatefulStreaming(
+      input.toDS().toDF(eventCols: _*), cfg,
+      _ => new DryRunExecutor(new JobStateLog), ckpt,
+      Trigger.ProcessingTime(0))
+    try batches.foreach { b =>
+      input.addData(b: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  test("checkpoint writes of the decision stream start no process") {
+    withTempDir("jfr") { tmp =>
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try runMemoryBatches(s"$tmp/ckpt",
+        (1L to 3L).map(b => (1L to 6L).map(i => commit(b, b * 10 + i))))
+      finally rec.stop()
+      val dump = Paths.get(tmp, "rec.jfr")
+      rec.dump(dump)
+      rec.close()
+      // every process started from a checkpoint manager's frames
+      val forks = RecordingFile.readAllEvents(dump).asScala.filter { e =>
+        Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.contains("CheckpointFileManager")))
+      }.map(_.getString("command"))
+      assert(forks.isEmpty, forks.take(5).mkString("; "))
+    }
+  }
+
+  test("the checkpoint manager class is scoped to the query; a caller's class is kept") {
+    // offsets/ entries of one micro-batch on a fresh checkpoint
+    def offsets(): Set[String] = withTempDir("scoped") { tmp =>
+      runMemoryBatches(s"$tmp/ckpt", Seq(Seq(commit(1L, 1L))))
+      new java.io.File(s"$tmp/ckpt/offsets").list().toSet
+    }
+    assert(spark.conf.getOption(managerClassKey).isEmpty)
+    val graftOffsets = offsets()
+    assert(graftOffsets.contains("0"))
+    assert(!graftOffsets.exists(_.endsWith(".crc"))) // no Hadoop checksum
+    assert(spark.conf.getOption(managerClassKey).isEmpty)
+    spark.conf.set(managerClassKey, fileContextManager)
+    try {
+      assert(offsets().contains(".0.crc")) // the caller's manager wrote it
+      assert(spark.conf.get(managerClassKey) === fileContextManager)
+    } finally spark.conf.unset(managerClassKey)
+  }
+
+  test("a checkpoint begun by Spark's FileContext manager resumes under graft's") {
+    val jobLog = new JobStateLog
+    // table 61 triggers in run 1 and stays triggered; table 60 crosses
+    // the threshold only in run 2
+    val wave1 = (1L to 6L).map(commit(60L, _)) ++
+      (101L to 112L).map(commit(61L, _))
+    val wave2 = (7L to 12L).map(commit(60L, _)) :+ commit(61L, 113L)
+    withTempDir("xm-src") { src =>
+      withTempDir("xm-ckpt") { ckpt =>
+        def run(wave: String, rows: Seq[Ev]) = {
+          addWave(src, wave, rows)
+          val (q, r) = EventPipeline.runStatefulStreaming(openWaves(src),
+            cfg, _ => new DryRunExecutor(jobLog), ckpt)
+          q.awaitTermination()
+          r
+        }
+        spark.conf.set(managerClassKey, fileContextManager)
+        val r1 = try run("w1.parquet", wave1)
+          finally spark.conf.unset(managerClassKey)
+        assert(r1.submittedJobs.size === 1) // table 61
+        val r2 = run("w2.parquet", wave2)
+        assert(r2.submittedJobs.size === 1) // table 60 only, 61 not again
+        assert(tuples(r2.decisions) === rescan(wave1 ++ wave2))
+        val offsets = new java.io.File(s"$ckpt/offsets").list().toSet
+        assert(offsets.contains(".0.crc")) // run 1: Spark's manager
+        assert(offsets.contains("1") && !offsets.contains(".1.crc")) // graft's
+      }
+    }
+  }
+
   test("watermarked tumbling windows finalize and drop late data") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -388,144 +479,144 @@ class StreamSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     import graft.exts.TextAnalysis
     import graft.stream.LexIndexLoop
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-lexloop").toString
-    val corpus = graft.Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val index = LexIndexLoop.buildIndex(spark, corpus, root)
-    val base = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
-    // threshold = 200‰ of 500 indexed docs = 100 pending docs
-    val b1 = base.take(40).map { case (id, t) => (id + 600000L, t) }.toSeq
-    val b2 = base.slice(40, 110)
-      .map { case (id, t) => (id + 700000L, t) }.toSeq
-    val queries = base.take(5)
-      .map { case (id, t) => (id + 900000L, t) }.toSeq
-    def inline(docs: org.apache.spark.sql.DataFrame)
-        : Set[(Long, Long, Int, Long)] = {
-      val q = queries.toDF("doc_id", "text")
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(split(trim(col("text")), "\\s+")))
-            .as("term"))
-      TextAnalysis.bm25ScoreAgainst(TextAnalysis.bm25Postings(docs),
-          TextAnalysis.bm25Stats(docs), q, 10, excludeSelf = false)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSet
+    withTempDir("lexloop") { root =>
+      val corpus = graft.Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      val index = LexIndexLoop.buildIndex(spark, corpus, root)
+      val base = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
+      // threshold = 200‰ of 500 indexed docs = 100 pending docs
+      val b1 = base.take(40).map { case (id, t) => (id + 600000L, t) }.toSeq
+      val b2 = base.slice(40, 110)
+        .map { case (id, t) => (id + 700000L, t) }.toSeq
+      val queries = base.take(5)
+        .map { case (id, t) => (id + 900000L, t) }.toSeq
+      def inline(docs: org.apache.spark.sql.DataFrame)
+          : Set[(Long, Long, Int, Long)] = {
+        val q = queries.toDF("doc_id", "text")
+          .select(col("doc_id").as("query_id"),
+            explode(array_distinct(split(trim(col("text")), "\\s+")))
+              .as("term"))
+        TextAnalysis.bm25ScoreAgainst(TextAnalysis.bm25Postings(docs),
+            TextAnalysis.bm25Stats(docs), q, 10, excludeSelf = false)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+          .toSet
+      }
+      def served(st: LexIndexLoop.State): Set[(Long, Long, Int, Long)] =
+        LexIndexLoop.scoreAgainst(spark, st, queries.toDF("doc_id", "text"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+          .toSet
+      val cycles = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Boolean, Long)]
+      val input = MemoryStream[(Long, String)]
+      val q = LexIndexLoop.start(spark, index, root,
+        input.toDS().toDF("doc_id", "text"),
+        (_, landed, merged, v) => cycles.synchronized {
+          cycles += ((landed, merged, v)) })
+      // arrival 1: below threshold — delta segment, no compaction, and
+      // the COMPOSITE serving result is bit-identical to a fresh index
+      // over corpus ∪ b1
+      input.addData(b1)
+      q.processAllAvailable()
+      assert(index.version === 0L)
+      assert(index.snapshot.nPending === 40L)
+      assert(index.snapshot.pending.length === 1)
+      assert(served(index.snapshot) ===
+        inline(corpus.unionByName(b1.toDF("doc_id", "text"))))
+      // arrival 2: crosses the threshold — compaction fires, version
+      // bumps, pending clears; post-merge serving equals a fresh index
+      // over corpus ∪ b1 ∪ b2 (the doc-disjoint merge exactness)
+      input.addData(b2)
+      q.processAllAvailable()
+      assert(index.version === 1L)
+      assert(index.snapshot.nPending === 0L)
+      assert(index.snapshot.pending.isEmpty)
+      assert(index.snapshot.nIndexed === 610L)
+      val full = corpus.unionByName(b1.toDF("doc_id", "text"))
+        .unionByName(b2.toDF("doc_id", "text"))
+      assert(served(index.snapshot) === inline(full))
+      // replayed arrival: every id already indexed — gated, nothing
+      // lands, no decision fires
+      input.addData(b1)
+      q.processAllAvailable()
+      assert(index.version === 1L)
+      assert(index.snapshot.nPending === 0L)
+      assert(cycles.toSeq === Seq((40L, false, 0L), (70L, true, 1L),
+        (0L, false, 1L)))
+      q.stop()
+      // online serving path reports the compacted version with the batch
+      val qIn = MemoryStream[(Long, String)]
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[((Long, Long, Int, Long), Long)]
+      val sq = LexIndexLoop.serveWith(spark, index,
+        qIn.toDS().toDF("doc_id", "text"),
+        (df, _, v) => out.synchronized {
+          out ++= df.collect().map(r =>
+            ((r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)), v))
+        })
+      qIn.addData(queries)
+      sq.processAllAvailable()
+      sq.stop()
+      assert(out.map(_._2).toSet === Set(1L))
+      assert(out.map(_._1).toSet === inline(full))
+      // within-batch duplicate: one trigger delivering a doc TWICE lands
+      // it once (the deterministic pre-gate id dedup) — fresh root: a
+      // NEW query's batch ids restart at 0, and the commit markers of
+      // the first query must not mistake them for replays
+      withTempDir("lexloop2") { root2 =>
+        val index2 = LexIndexLoop.buildIndex(spark, corpus, root2)
+        val input2 = MemoryStream[(Long, String)]
+        val q2 = LexIndexLoop.start(spark, index2, root2,
+          input2.toDS().toDF("doc_id", "text"),
+          (_, landed, merged, v) => cycles.synchronized {
+            cycles += ((landed, merged, v)) })
+        input2.addData(Seq((800000L, base.head._2), (800000L, base.head._2)))
+        q2.processAllAvailable()
+        q2.stop()
+        assert(cycles.last === ((1L, false, 0L)))
+        assert(index2.snapshot.nPending === 1L)
+        // replay no-op (the LoopCore marker discipline, new in r15): the
+        // SAME batch id re-delivered — a checkpointed restart — restores
+        // the recorded state and lands nothing twice
+        val beforeReplay = index2.snapshot
+        LexIndexLoop.applyBatch(spark, index2, root2,
+          Seq((800001L, base.head._2)).toDF("doc_id", "text"), 0L,
+          (_, landed, merged, v) => cycles.synchronized {
+            cycles += ((landed, merged, v)) })
+        assert(cycles.last === ((0L, false, 0L)))
+        assert(index2.snapshot === beforeReplay)
+        // reattach: a fresh handle from the markers serves the identical
+        // composite
+        val re = LexIndexLoop.reattach(spark, root2)
+        assert(re.snapshot === beforeReplay)
+        assert(LexIndexLoop.scoreAgainst(spark, re.snapshot,
+            queries.toDF("doc_id", "text")).collect()
+            .map(_.toString).toSet ===
+          LexIndexLoop.scoreAgainst(spark, index2.snapshot,
+            queries.toDF("doc_id", "text")).collect()
+            .map(_.toString).toSet)
+        // compaction retention: drive the FIRST loop's root through a
+        // second compaction — the deltas absorbed by compaction 1 die at
+        // compaction 2 (one-generation lag) and v0 leaves the retain
+        // window, while v1 (a just-superseded reader's main) survives
+        val absorbed1 = java.nio.file.Paths.get(s"$root/p0")
+        assert(java.nio.file.Files.isDirectory(absorbed1),
+          "compaction 1's absorbed delta must survive its own compaction")
+        val b3 = base.slice(110, 240)
+          .map { case (id, t) => (id + 750000L, t) }.toSeq
+        LexIndexLoop.applyBatch(spark, index, root,
+          b3.toDF("doc_id", "text"), 3L, (_, _, _, _) => ())
+        assert(index.version === 2L)
+        assert(!java.nio.file.Files.isDirectory(absorbed1),
+          "deltas absorbed by the previous compaction must be swept")
+        assert(!java.nio.file.Files.isDirectory(
+          java.nio.file.Paths.get(s"$root/v0")),
+          "main segments beyond the retain window must be swept")
+        assert(java.nio.file.Files.isDirectory(
+          java.nio.file.Paths.get(s"$root/v1")))
+      }
     }
-    def served(st: LexIndexLoop.State): Set[(Long, Long, Int, Long)] =
-      LexIndexLoop.scoreAgainst(spark, st, queries.toDF("doc_id", "text"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSet
-    val cycles = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Boolean, Long)]
-    val input = MemoryStream[(Long, String)]
-    val q = LexIndexLoop.start(spark, index, root,
-      input.toDS().toDF("doc_id", "text"),
-      (_, landed, merged, v) => cycles.synchronized {
-        cycles += ((landed, merged, v)) })
-    // arrival 1: below threshold — delta segment, no compaction, and
-    // the COMPOSITE serving result is bit-identical to a fresh index
-    // over corpus ∪ b1
-    input.addData(b1)
-    q.processAllAvailable()
-    assert(index.version === 0L)
-    assert(index.snapshot.nPending === 40L)
-    assert(index.snapshot.pending.length === 1)
-    assert(served(index.snapshot) ===
-      inline(corpus.unionByName(b1.toDF("doc_id", "text"))))
-    // arrival 2: crosses the threshold — compaction fires, version
-    // bumps, pending clears; post-merge serving equals a fresh index
-    // over corpus ∪ b1 ∪ b2 (the doc-disjoint merge exactness)
-    input.addData(b2)
-    q.processAllAvailable()
-    assert(index.version === 1L)
-    assert(index.snapshot.nPending === 0L)
-    assert(index.snapshot.pending.isEmpty)
-    assert(index.snapshot.nIndexed === 610L)
-    val full = corpus.unionByName(b1.toDF("doc_id", "text"))
-      .unionByName(b2.toDF("doc_id", "text"))
-    assert(served(index.snapshot) === inline(full))
-    // replayed arrival: every id already indexed — gated, nothing
-    // lands, no decision fires
-    input.addData(b1)
-    q.processAllAvailable()
-    assert(index.version === 1L)
-    assert(index.snapshot.nPending === 0L)
-    assert(cycles.toSeq === Seq((40L, false, 0L), (70L, true, 1L),
-      (0L, false, 1L)))
-    q.stop()
-    // online serving path reports the compacted version with the batch
-    val qIn = MemoryStream[(Long, String)]
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[((Long, Long, Int, Long), Long)]
-    val sq = LexIndexLoop.serveWith(spark, index,
-      qIn.toDS().toDF("doc_id", "text"),
-      (df, _, v) => out.synchronized {
-        out ++= df.collect().map(r =>
-          ((r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)), v))
-      })
-    qIn.addData(queries)
-    sq.processAllAvailable()
-    sq.stop()
-    assert(out.map(_._2).toSet === Set(1L))
-    assert(out.map(_._1).toSet === inline(full))
-    // within-batch duplicate: one trigger delivering a doc TWICE lands
-    // it once (the deterministic pre-gate id dedup) — fresh root: a
-    // NEW query's batch ids restart at 0, and the commit markers of
-    // the first query must not mistake them for replays
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft-lexloop2").toString
-    val index2 = LexIndexLoop.buildIndex(spark, corpus, root2)
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = LexIndexLoop.start(spark, index2, root2,
-      input2.toDS().toDF("doc_id", "text"),
-      (_, landed, merged, v) => cycles.synchronized {
-        cycles += ((landed, merged, v)) })
-    input2.addData(Seq((800000L, base.head._2), (800000L, base.head._2)))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(cycles.last === ((1L, false, 0L)))
-    assert(index2.snapshot.nPending === 1L)
-    // replay no-op (the LoopCore marker discipline, new in r15): the
-    // SAME batch id re-delivered — a checkpointed restart — restores
-    // the recorded state and lands nothing twice
-    val beforeReplay = index2.snapshot
-    LexIndexLoop.applyBatch(spark, index2, root2,
-      Seq((800001L, base.head._2)).toDF("doc_id", "text"), 0L,
-      (_, landed, merged, v) => cycles.synchronized {
-        cycles += ((landed, merged, v)) })
-    assert(cycles.last === ((0L, false, 0L)))
-    assert(index2.snapshot === beforeReplay)
-    // reattach: a fresh handle from the markers serves the identical
-    // composite
-    val re = LexIndexLoop.reattach(spark, root2)
-    assert(re.snapshot === beforeReplay)
-    assert(LexIndexLoop.scoreAgainst(spark, re.snapshot,
-        queries.toDF("doc_id", "text")).collect()
-        .map(_.toString).toSet ===
-      LexIndexLoop.scoreAgainst(spark, index2.snapshot,
-        queries.toDF("doc_id", "text")).collect()
-        .map(_.toString).toSet)
-    // compaction retention: drive the FIRST loop's root through a
-    // second compaction — the deltas absorbed by compaction 1 die at
-    // compaction 2 (one-generation lag) and v0 leaves the retain
-    // window, while v1 (a just-superseded reader's main) survives
-    val absorbed1 = java.nio.file.Paths.get(s"$root/p0")
-    assert(java.nio.file.Files.isDirectory(absorbed1),
-      "compaction 1's absorbed delta must survive its own compaction")
-    val b3 = base.slice(110, 240)
-      .map { case (id, t) => (id + 750000L, t) }.toSeq
-    LexIndexLoop.applyBatch(spark, index, root,
-      b3.toDF("doc_id", "text"), 3L, (_, _, _, _) => ())
-    assert(index.version === 2L)
-    assert(!java.nio.file.Files.isDirectory(absorbed1),
-      "deltas absorbed by the previous compaction must be swept")
-    assert(!java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(s"$root/v0")),
-      "main segments beyond the retain window must be swept")
-    assert(java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(s"$root/v1")))
   }
 
   test("hybrid serving: per-batch stream results equal the fused batch scorers") {
@@ -785,57 +876,57 @@ class StreamSpec extends AnyFunSuite {
     import graft.exts.Multimodal
     import graft.stream.MediaIndexLoop
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("media-durable").toString
-    val cp = java.nio.file.Files
-      .createTempDirectory("media-cp").toString
-    val inDir = java.nio.file.Files
-      .createTempDirectory("media-in").toString
-    val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
-    val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
-      root)
-    val n0 = serving.nAssets
-    def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
-    def src() = spark.readStream
-      .schema("doc_id LONG, modality STRING, media BINARY")
-      .parquet(inDir)
-    // arrival A (two novels) lands as files; the DURABLE query
-    // processes it and stops — a planned shutdown
-    Seq((7000001L, "img", png(11)), (7000002L, "img", png(12)))
-      .toDF("doc_id", "modality", "media")
-      .write.mode("append").parquet(inDir)
-    val q1 = MediaIndexLoop.start(spark, serving, src(),
-      rebuildAfter = 100L, (_, _) => (), checkpoint = Some(cp))
-    q1.processAllAvailable()
-    q1.stop()
-    assert(serving.nAssets === n0 + 2L)
-    val afterA = serving.snapshot
-    // arrival B lands WHILE THE PROCESS IS DOWN: a content dup of an
-    // A-admitted asset plus one novel
-    Seq((7000003L, "img", png(11)), (7000004L, "img", png(13)))
-      .toDF("doc_id", "modality", "media")
-      .write.mode("append").parquet(inDir)
-    // "process restart": a FRESH handle from the self-persisted
-    // markers + the same checkpoint — the streaming source resumes at
-    // the first unprocessed batch with monotone ids
-    val re = MediaIndexLoop.reattach(spark, root)
-    assert(re.snapshot === afterA)
-    val verdicts = scala.collection.mutable.Map.empty[Long, Long]
-    val q2 = MediaIndexLoop.start(spark, re, src(), rebuildAfter = 100L,
-      (df, _) => verdicts.synchronized {
-        df.collect().foreach(r => verdicts(r.getLong(0)) = r.getLong(5))
-      }, checkpoint = Some(cp))
-    q2.processAllAvailable()
-    q2.stop()
-    // only arrival B processed: A is not re-applied (no verdict rows,
-    // no double admission), the dup gates against the A-admitted
-    // pending set, the novel admits
-    assert(!verdicts.contains(7000001L) && !verdicts.contains(7000002L),
-      s"restart must not re-apply the committed batch, got $verdicts")
-    assert(verdicts(7000003L) === 0L,
-      "the admitted set must gate its re-upload across the restart")
-    assert(verdicts(7000004L) === 1L)
-    assert(re.nAssets === n0 + 3L)
+    withTempDir("media-durable") { root =>
+      withTempDir("media-cp") { cp =>
+        withTempDir("media-in") { inDir =>
+          val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
+          val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
+            root)
+          val n0 = serving.nAssets
+          def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
+          def src() = spark.readStream
+            .schema("doc_id LONG, modality STRING, media BINARY")
+            .parquet(inDir)
+          // arrival A (two novels) lands as files; the DURABLE query
+          // processes it and stops — a planned shutdown
+          Seq((7000001L, "img", png(11)), (7000002L, "img", png(12)))
+            .toDF("doc_id", "modality", "media")
+            .write.mode("append").parquet(inDir)
+          val q1 = MediaIndexLoop.start(spark, serving, src(),
+            rebuildAfter = 100L, (_, _) => (), checkpoint = Some(cp))
+          q1.processAllAvailable()
+          q1.stop()
+          assert(serving.nAssets === n0 + 2L)
+          val afterA = serving.snapshot
+          // arrival B lands WHILE THE PROCESS IS DOWN: a content dup of an
+          // A-admitted asset plus one novel
+          Seq((7000003L, "img", png(11)), (7000004L, "img", png(13)))
+            .toDF("doc_id", "modality", "media")
+            .write.mode("append").parquet(inDir)
+          // "process restart": a FRESH handle from the self-persisted
+          // markers + the same checkpoint — the streaming source resumes at
+          // the first unprocessed batch with monotone ids
+          val re = MediaIndexLoop.reattach(spark, root)
+          assert(re.snapshot === afterA)
+          val verdicts = scala.collection.mutable.Map.empty[Long, Long]
+          val q2 = MediaIndexLoop.start(spark, re, src(), rebuildAfter = 100L,
+            (df, _) => verdicts.synchronized {
+              df.collect().foreach(r => verdicts(r.getLong(0)) = r.getLong(5))
+            }, checkpoint = Some(cp))
+          q2.processAllAvailable()
+          q2.stop()
+          // only arrival B processed: A is not re-applied (no verdict rows,
+          // no double admission), the dup gates against the A-admitted
+          // pending set, the novel admits
+          assert(!verdicts.contains(7000001L) && !verdicts.contains(7000002L),
+            s"restart must not re-apply the committed batch, got $verdicts")
+          assert(verdicts(7000003L) === 0L,
+            "the admitted set must gate its re-upload across the restart")
+          assert(verdicts(7000004L) === 1L)
+          assert(re.nAssets === n0 + 3L)
+        }
+      }
+    }
   }
 
   test("media index loop: all three modalities gate at ingest; threshold rebuild + health; replay no-op; reattach") {
@@ -846,136 +937,136 @@ class StreamSpec extends AnyFunSuite {
     import graft.exts.Multimodal
     import graft.stream.MediaIndexLoop
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("media-loop").toString
-    val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
-    val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
-      root)
-    assert(serving.version === 0L)
-    val n0 = serving.nAssets
-    // image plants (the r14 cases): fake groups 2000001+ verified
-    // collision-free; video/audio plants from the incoming fixtures —
-    // a TRIMMED re-upload of corpus content and a novel stream each
-    def novel(id: Long, g: Long) =
-      (id, "img", Multimodal.encodeNearPng((g + 2000000L) * 4))
-    def novelUp(id: Long, g: Long) =
-      (id, "img", Multimodal.encodeNearPng((g + 2000000L) * 4 + 1))
-    def corpusUp(id: Long, g: Long) =
-      (id, "img", Multimodal.encodeNearPng(g * 4 + 1))
-    val off = Multimodal.IncomingIdOffset
-    val vidPool = Multimodal.gifClipAssetsIncoming(spark, dir).collect()
-      .map(a => (a.doc_id, a.gif)).toMap
-    val audPool = Multimodal.wavClipAssetsIncoming(spark, dir).collect()
-      .map(a => (a.doc_id, a.wav)).toMap
-    // d%8=6, d%16≠6 → trimmed VIDEO re-upload of group d/8's stream;
-    // d%16=6 → novel stream; audio mirrors at residue 5
-    val vidReupId = vidPool.keys.filter(id => (id - off) % 16 == 14).min
-    val vidNovelId = vidPool.keys.filter(id => (id - off) % 16 == 6).min
-    val audReupId = audPool.keys.filter(id => (id - off) % 16 == 13).min
-    val audNovelId = audPool.keys.filter(id => (id - off) % 16 == 5).min
-    val input = MemoryStream[(Long, String, Array[Byte])]
-    val verdicts = scala.collection.mutable
-      .Map.empty[(Long, String), (Long, Long, Long, Long)]
-    val healths = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Seq[Long])]
-    val q = MediaIndexLoop.start(spark, serving,
-      input.toDS().toDF("doc_id", "modality", "media"),
-      rebuildAfter = 6L,
-      (df, _) => verdicts.synchronized {
-        df.collect().foreach(r =>
-          verdicts((r.getLong(0), r.getString(1))) =
-            ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-      },
-      (v, h) => healths.synchronized {
-        healths += ((v, h.collect().head.toSeq.map(_.toString.toLong)))
-      })
-    // batch 1 (images, the r14 cases): three novels + one corpus
-    // re-upload → 3 admitted (< 6: no rebuild); the re-upload resolves
-    // to corpus group 6's canonical
-    input.addData(Seq(novel(5000001L, 1), novel(5000002L, 2),
-      novel(5000003L, 3), corpusUp(5000004L, 6)))
-    q.processAllAvailable()
-    assert(serving.version === 0L)
-    assert(serving.snapshot.nPending === 3L)
-    assert(verdicts((5000001L, "img"))._4 === 1L) // is_new
-    assert(verdicts((5000004L, "img")) === ((4L, 24L, 0L, 0L)),
-      "corpus re-upload must resolve to group 6's canonical 24")
-    // batch 2 — THE r15 cases: a trimmed-clip video re-upload and a
-    // trimmed audio re-upload are GATED AT INGEST (r14 only caught
-    // them at the next full pairs rebuild), while novel video/audio
-    // streams admit; plus an upscale of PENDING image novel 1 (dup
-    // via the marker-recorded pending set, before any rebuild)
-    input.addData(Seq(
-      (vidReupId, "vid", vidPool(vidReupId)),
-      (vidNovelId, "vid", vidPool(vidNovelId)),
-      (audReupId, "aud", audPool(audReupId)),
-      (audNovelId, "aud", audPool(audNovelId)),
-      novelUp(5000005L, 1), novel(5000006L, 4)))
-    q.processAllAvailable()
-    val vidVerdict = verdicts((vidReupId, "vid"))
-    assert(vidVerdict._4 === 0L,
-      s"trimmed-clip video re-upload must be gated, got $vidVerdict")
-    assert(vidVerdict._2 / Multimodal.ClipGroup ===
-      (vidReupId - off) / Multimodal.ClipGroup,
-      "video re-upload must resolve to its own clip group")
-    assert(vidVerdict._3 >= Multimodal.MinSharedRun,
-      "gate evidence is a shared RUN, not a single frame")
-    val audVerdict = verdicts((audReupId, "aud"))
-    assert(audVerdict._4 === 0L,
-      s"trimmed audio re-upload must be gated, got $audVerdict")
-    assert(audVerdict._2 / Multimodal.ClipGroup ===
-      (audReupId - off) / Multimodal.ClipGroup,
-      "audio re-upload must resolve to its own clip group")
-    assert(verdicts((vidNovelId, "vid"))._4 === 1L)
-    assert(verdicts((audNovelId, "aud"))._4 === 1L)
-    assert(verdicts((5000005L, "img")) === ((1L, 5000001L, 0L, 0L)),
-      "pending-admitted asset must gate its own re-upload")
-    // pending grew by img novel 5000006 + vid novel + aud novel = 3
-    // → 6 ≥ 6 → rebuild
-    assert(serving.version === 1L)
-    assert(serving.snapshot.nPending === 0L)
-    assert(serving.nAssets === n0 + 6L)
-    assert(healths.map(_._1) === Seq(1L),
-      s"exactly the rebuild must emit health, got ${healths.map(_._1)}")
-    // batch 3: re-uploads of batch-2 novels → dups via the REBUILT v1
-    // layout, across two modalities
-    input.addData(Seq(novelUp(5000008L, 2),
-      (vidNovelId + 70000L, "vid", vidPool(vidNovelId))))
-    q.processAllAvailable()
-    q.stop()
-    assert(verdicts((5000008L, "img")) === ((1L, 5000002L, 0L, 0L)),
-      "rebuilt layout must serve the admitted image")
-    val vidReplayVerdict = verdicts((vidNovelId + 70000L, "vid"))
-    assert(vidReplayVerdict._4 === 0L &&
-      vidReplayVerdict._2 === vidNovelId,
-      "rebuilt layout must serve the admitted clip")
-    assert(serving.nAssets === n0 + 6L) // batch 3 admitted nothing
-    // the emitted health row equals the same formulas computed
-    // directly over the serving signature frames
-    val pairs = MediaIndexLoop.taggedPairs(serving.sigs(spark, "img"),
-      serving.sigs(spark, "vid"), serving.sigs(spark, "aud"))
-    val comp = graft.exts.Dedup.dupComponents(
-      pairs.select(col("a_id"), col("b_id")).distinct())
-    val direct = MediaIndexLoop.healthOver(spark, serving.nAssets,
-      pairs, comp).collect().head.toSeq.map(_.toString.toLong)
-    assert(healths.head._2 === direct)
-    assert(direct.head === n0 + 6L) // n_assets covers the admitted set
-    // replay no-op: re-applying an already-recorded batch id changes
-    // nothing and emits nothing
-    val before = serving.snapshot
-    val replay = MediaIndexLoop.applyBatch(spark, serving,
-      Seq(novel(5000009L, 7)).toDF("doc_id", "modality", "media"),
-      before.lastBatchId, 6L,
-      (_, _) => fail("replay must not re-emit health"))
-    assert(replay.count() === 0L)
-    assert(serving.snapshot === before)
-    // reattach: a fresh handle restores the recorded state and serves
-    // the identical signature set in every modality
-    val re = MediaIndexLoop.reattach(spark, root)
-    assert(re.snapshot === before)
-    for (m <- MediaIndexLoop.Modalities)
-      assert(re.sigs(spark, m).collect().map(_.toString).toSet ===
-        serving.sigs(spark, m).collect().map(_.toString).toSet)
+    withTempDir("media-loop") { root =>
+      val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
+      val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
+        root)
+      assert(serving.version === 0L)
+      val n0 = serving.nAssets
+      // image plants (the r14 cases): fake groups 2000001+ verified
+      // collision-free; video/audio plants from the incoming fixtures —
+      // a TRIMMED re-upload of corpus content and a novel stream each
+      def novel(id: Long, g: Long) =
+        (id, "img", Multimodal.encodeNearPng((g + 2000000L) * 4))
+      def novelUp(id: Long, g: Long) =
+        (id, "img", Multimodal.encodeNearPng((g + 2000000L) * 4 + 1))
+      def corpusUp(id: Long, g: Long) =
+        (id, "img", Multimodal.encodeNearPng(g * 4 + 1))
+      val off = Multimodal.IncomingIdOffset
+      val vidPool = Multimodal.gifClipAssetsIncoming(spark, dir).collect()
+        .map(a => (a.doc_id, a.gif)).toMap
+      val audPool = Multimodal.wavClipAssetsIncoming(spark, dir).collect()
+        .map(a => (a.doc_id, a.wav)).toMap
+      // d%8=6, d%16≠6 → trimmed VIDEO re-upload of group d/8's stream;
+      // d%16=6 → novel stream; audio mirrors at residue 5
+      val vidReupId = vidPool.keys.filter(id => (id - off) % 16 == 14).min
+      val vidNovelId = vidPool.keys.filter(id => (id - off) % 16 == 6).min
+      val audReupId = audPool.keys.filter(id => (id - off) % 16 == 13).min
+      val audNovelId = audPool.keys.filter(id => (id - off) % 16 == 5).min
+      val input = MemoryStream[(Long, String, Array[Byte])]
+      val verdicts = scala.collection.mutable
+        .Map.empty[(Long, String), (Long, Long, Long, Long)]
+      val healths = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Seq[Long])]
+      val q = MediaIndexLoop.start(spark, serving,
+        input.toDS().toDF("doc_id", "modality", "media"),
+        rebuildAfter = 6L,
+        (df, _) => verdicts.synchronized {
+          df.collect().foreach(r =>
+            verdicts((r.getLong(0), r.getString(1))) =
+              ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+        },
+        (v, h) => healths.synchronized {
+          healths += ((v, h.collect().head.toSeq.map(_.toString.toLong)))
+        })
+      // batch 1 (images, the r14 cases): three novels + one corpus
+      // re-upload → 3 admitted (< 6: no rebuild); the re-upload resolves
+      // to corpus group 6's canonical
+      input.addData(Seq(novel(5000001L, 1), novel(5000002L, 2),
+        novel(5000003L, 3), corpusUp(5000004L, 6)))
+      q.processAllAvailable()
+      assert(serving.version === 0L)
+      assert(serving.snapshot.nPending === 3L)
+      assert(verdicts((5000001L, "img"))._4 === 1L) // is_new
+      assert(verdicts((5000004L, "img")) === ((4L, 24L, 0L, 0L)),
+        "corpus re-upload must resolve to group 6's canonical 24")
+      // batch 2 — THE r15 cases: a trimmed-clip video re-upload and a
+      // trimmed audio re-upload are GATED AT INGEST (r14 only caught
+      // them at the next full pairs rebuild), while novel video/audio
+      // streams admit; plus an upscale of PENDING image novel 1 (dup
+      // via the marker-recorded pending set, before any rebuild)
+      input.addData(Seq(
+        (vidReupId, "vid", vidPool(vidReupId)),
+        (vidNovelId, "vid", vidPool(vidNovelId)),
+        (audReupId, "aud", audPool(audReupId)),
+        (audNovelId, "aud", audPool(audNovelId)),
+        novelUp(5000005L, 1), novel(5000006L, 4)))
+      q.processAllAvailable()
+      val vidVerdict = verdicts((vidReupId, "vid"))
+      assert(vidVerdict._4 === 0L,
+        s"trimmed-clip video re-upload must be gated, got $vidVerdict")
+      assert(vidVerdict._2 / Multimodal.ClipGroup ===
+        (vidReupId - off) / Multimodal.ClipGroup,
+        "video re-upload must resolve to its own clip group")
+      assert(vidVerdict._3 >= Multimodal.MinSharedRun,
+        "gate evidence is a shared RUN, not a single frame")
+      val audVerdict = verdicts((audReupId, "aud"))
+      assert(audVerdict._4 === 0L,
+        s"trimmed audio re-upload must be gated, got $audVerdict")
+      assert(audVerdict._2 / Multimodal.ClipGroup ===
+        (audReupId - off) / Multimodal.ClipGroup,
+        "audio re-upload must resolve to its own clip group")
+      assert(verdicts((vidNovelId, "vid"))._4 === 1L)
+      assert(verdicts((audNovelId, "aud"))._4 === 1L)
+      assert(verdicts((5000005L, "img")) === ((1L, 5000001L, 0L, 0L)),
+        "pending-admitted asset must gate its own re-upload")
+      // pending grew by img novel 5000006 + vid novel + aud novel = 3
+      // → 6 ≥ 6 → rebuild
+      assert(serving.version === 1L)
+      assert(serving.snapshot.nPending === 0L)
+      assert(serving.nAssets === n0 + 6L)
+      assert(healths.map(_._1) === Seq(1L),
+        s"exactly the rebuild must emit health, got ${healths.map(_._1)}")
+      // batch 3: re-uploads of batch-2 novels → dups via the REBUILT v1
+      // layout, across two modalities
+      input.addData(Seq(novelUp(5000008L, 2),
+        (vidNovelId + 70000L, "vid", vidPool(vidNovelId))))
+      q.processAllAvailable()
+      q.stop()
+      assert(verdicts((5000008L, "img")) === ((1L, 5000002L, 0L, 0L)),
+        "rebuilt layout must serve the admitted image")
+      val vidReplayVerdict = verdicts((vidNovelId + 70000L, "vid"))
+      assert(vidReplayVerdict._4 === 0L &&
+        vidReplayVerdict._2 === vidNovelId,
+        "rebuilt layout must serve the admitted clip")
+      assert(serving.nAssets === n0 + 6L) // batch 3 admitted nothing
+      // the emitted health row equals the same formulas computed
+      // directly over the serving signature frames
+      val pairs = MediaIndexLoop.taggedPairs(serving.sigs(spark, "img"),
+        serving.sigs(spark, "vid"), serving.sigs(spark, "aud"))
+      val comp = graft.exts.Dedup.dupComponents(
+        pairs.select(col("a_id"), col("b_id")).distinct())
+      val direct = MediaIndexLoop.healthOver(spark, serving.nAssets,
+        pairs, comp).collect().head.toSeq.map(_.toString.toLong)
+      assert(healths.head._2 === direct)
+      assert(direct.head === n0 + 6L) // n_assets covers the admitted set
+      // replay no-op: re-applying an already-recorded batch id changes
+      // nothing and emits nothing
+      val before = serving.snapshot
+      val replay = MediaIndexLoop.applyBatch(spark, serving,
+        Seq(novel(5000009L, 7)).toDF("doc_id", "modality", "media"),
+        before.lastBatchId, 6L,
+        (_, _) => fail("replay must not re-emit health"))
+      assert(replay.count() === 0L)
+      assert(serving.snapshot === before)
+      // reattach: a fresh handle restores the recorded state and serves
+      // the identical signature set in every modality
+      val re = MediaIndexLoop.reattach(spark, root)
+      assert(re.snapshot === before)
+      for (m <- MediaIndexLoop.Modalities)
+        assert(re.sigs(spark, m).collect().map(_.toString).toSet ===
+          serving.sigs(spark, m).collect().map(_.toString).toSet)
+    }
   }
 
   test("media index loop: torn batch (pending landed, marker missing) replays identically; within-batch twins gated") {
@@ -984,58 +1075,58 @@ class StreamSpec extends AnyFunSuite {
     import graft.exts.Multimodal
     import graft.stream.MediaIndexLoop
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("media-torn").toString
-    val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
-    val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
-      root)
-    def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
-    // batch 0 applies cleanly: one novel admitted
-    MediaIndexLoop.applyBatch(spark, serving,
-      Seq((6000001L, "img", png(11))).toDF("doc_id", "modality", "media"),
-      0L, 100L, (_, _) => ())
-    val committed = serving.snapshot
-    assert(committed.nPending === 1L)
-    val servedBefore = serving.sigs(spark, "img").count()
-    // ADVERSARIAL REPLAY (the GraphIndexLoop missing-marker case):
-    // batch 1's pending dir LANDS but the crash hits before the
-    // marker write — simulated by writing the exact signature rows
-    // batch 1 would land, with no state-b1 marker
-    val batch1 = Seq((6000002L, "img", png(12)))
-      .toDF("doc_id", "modality", "media")
-    Multimodal.canonicalSignatures(
-        batch1.select(col("doc_id"), col("media").as("png"))
-          .as[Multimodal.PngAsset]).toDF()
-      .write.parquet(s"$root/v${committed.version}/pending/batch-1-img")
-    // the torn dir is INVISIBLE to the serving read (ordinal 1 >
-    // lastBatchId 0) — without the ordinal filter the replay below
-    // would self-match asset 6000002 against its own torn signatures
-    // and silently drop it from the index
-    assert(serving.sigs(spark, "img").count() === servedBefore)
-    // the replayed batch re-gates against the pre-crash serving set
-    // and re-lands via overwrite: novel admitted exactly once
-    val v = MediaIndexLoop.applyBatch(spark, serving, batch1, 1L, 100L,
-      (_, _) => ()).collect()
-      .map(r => r.getLong(0) -> r.getLong(5)).toMap
-    assert(v(6000002L) === 1L,
-      "replayed novel must not self-match its torn pending dir")
-    assert(serving.snapshot.nPending === 2L)
-    assert(serving.sigs(spark, "img").count() === servedBefore + 1L)
-    // WITHIN-BATCH twins (the LexIndexLoop rule, extended to content):
-    // the same asset id delivered twice lands ONCE; a content twin
-    // under a later id is gated to the earlier id in the same trigger
-    val twins = Seq(
-      (6000010L, "img", png(13)), (6000010L, "img", png(13)),
-      (6000011L, "img", png(13)))
-      .toDF("doc_id", "modality", "media")
-    val tv = MediaIndexLoop.applyBatch(spark, serving, twins, 2L, 100L,
-      (_, _) => ()).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(5)))).toMap
-    assert(tv.size === 2, "id-duplicate must collapse to one verdict")
-    assert(tv(6000010L)._2 === 1L, "first copy admits")
-    assert(tv(6000011L) === ((6000010L, 0L)),
-      "same-trigger content twin must gate to the earlier id")
-    assert(serving.snapshot.nPending === 3L)
+    withTempDir("media-torn") { root =>
+      val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
+      val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
+        root)
+      def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
+      // batch 0 applies cleanly: one novel admitted
+      MediaIndexLoop.applyBatch(spark, serving,
+        Seq((6000001L, "img", png(11))).toDF("doc_id", "modality", "media"),
+        0L, 100L, (_, _) => ())
+      val committed = serving.snapshot
+      assert(committed.nPending === 1L)
+      val servedBefore = serving.sigs(spark, "img").count()
+      // ADVERSARIAL REPLAY (the GraphIndexLoop missing-marker case):
+      // batch 1's pending dir LANDS but the crash hits before the
+      // marker write — simulated by writing the exact signature rows
+      // batch 1 would land, with no state-b1 marker
+      val batch1 = Seq((6000002L, "img", png(12)))
+        .toDF("doc_id", "modality", "media")
+      Multimodal.canonicalSignatures(
+          batch1.select(col("doc_id"), col("media").as("png"))
+            .as[Multimodal.PngAsset]).toDF()
+        .write.parquet(s"$root/v${committed.version}/pending/batch-1-img")
+      // the torn dir is INVISIBLE to the serving read (ordinal 1 >
+      // lastBatchId 0) — without the ordinal filter the replay below
+      // would self-match asset 6000002 against its own torn signatures
+      // and silently drop it from the index
+      assert(serving.sigs(spark, "img").count() === servedBefore)
+      // the replayed batch re-gates against the pre-crash serving set
+      // and re-lands via overwrite: novel admitted exactly once
+      val v = MediaIndexLoop.applyBatch(spark, serving, batch1, 1L, 100L,
+        (_, _) => ()).collect()
+        .map(r => r.getLong(0) -> r.getLong(5)).toMap
+      assert(v(6000002L) === 1L,
+        "replayed novel must not self-match its torn pending dir")
+      assert(serving.snapshot.nPending === 2L)
+      assert(serving.sigs(spark, "img").count() === servedBefore + 1L)
+      // WITHIN-BATCH twins (the LexIndexLoop rule, extended to content):
+      // the same asset id delivered twice lands ONCE; a content twin
+      // under a later id is gated to the earlier id in the same trigger
+      val twins = Seq(
+        (6000010L, "img", png(13)), (6000010L, "img", png(13)),
+        (6000011L, "img", png(13)))
+        .toDF("doc_id", "modality", "media")
+      val tv = MediaIndexLoop.applyBatch(spark, serving, twins, 2L, 100L,
+        (_, _) => ()).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(5)))).toMap
+      assert(tv.size === 2, "id-duplicate must collapse to one verdict")
+      assert(tv(6000010L)._2 === 1L, "first copy admits")
+      assert(tv(6000011L) === ((6000010L, 0L)),
+        "same-trigger content twin must gate to the earlier id")
+      assert(serving.snapshot.nPending === 3L)
+    }
   }
 
   test("media index loop: retention sweep keeps the serving window, in-flight reader on v<k-1> survives") {
@@ -1043,35 +1134,35 @@ class StreamSpec extends AnyFunSuite {
     import graft.exts.Multimodal
     import graft.stream.MediaIndexLoop
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("media-sweep").toString
-    val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
-    val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
-      root)
-    def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
-    // every batch admits one novel and trips the threshold → one
-    // version bump per batch; retain-last-2 must sweep v0 once v3
-    // publishes while v2 (the in-flight reader's snapshot) survives
-    for (b <- 0L until 3L) {
-      val prev = serving.snapshot
-      MediaIndexLoop.applyBatch(spark, serving,
-        Seq((6100000L + b, "img", png(100L + b)))
-          .toDF("doc_id", "modality", "media"),
-        b, 1L, (_, _) => ())
-      assert(serving.version === prev.version + 1L)
+    withTempDir("media-sweep") { root =>
+      val (imgSigs, vidSigs, audSigs) = mediaLoopCorpus(dir)
+      val serving = MediaIndexLoop.build(spark, imgSigs, vidSigs, audSigs,
+        root)
+      def png(g: Long) = Multimodal.encodeNearPng((g + 2000000L) * 4)
+      // every batch admits one novel and trips the threshold → one
+      // version bump per batch; retain-last-2 must sweep v0 once v3
+      // publishes while v2 (the in-flight reader's snapshot) survives
+      for (b <- 0L until 3L) {
+        val prev = serving.snapshot
+        MediaIndexLoop.applyBatch(spark, serving,
+          Seq((6100000L + b, "img", png(100L + b)))
+            .toDF("doc_id", "modality", "media"),
+          b, 1L, (_, _) => ())
+        assert(serving.version === prev.version + 1L)
+      }
+      val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      val names = try {
+        import scala.jdk.CollectionConverters._
+        dirs.iterator().asScala.map(_.getFileName.toString).toSet
+      } finally dirs.close()
+      assert(!names.contains("v0") && !names.contains("v1"),
+        s"superseded generations must be swept, kept $names")
+      assert(names.contains("v2") && names.contains("v3"))
+      // an in-flight reader that snapshotted v2 just before the v3 swap
+      // still reads a complete retained layout in every modality
+      for (m <- MediaIndexLoop.Modalities)
+        assert(spark.read.parquet(s"$root/v2/sigs-$m").count() > 0L)
     }
-    val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(root))
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      dirs.iterator().asScala.map(_.getFileName.toString).toSet
-    } finally dirs.close()
-    assert(!names.contains("v0") && !names.contains("v1"),
-      s"superseded generations must be swept, kept $names")
-    assert(names.contains("v2") && names.contains("v3"))
-    // an in-flight reader that snapshotted v2 just before the v3 swap
-    // still reads a complete retained layout in every modality
-    for (m <- MediaIndexLoop.Modalities)
-      assert(spark.read.parquet(s"$root/v2/sigs-$m").count() > 0L)
   }
 
   test("streaming near-dedup suppresses tail-edited rewrites, keeps novel docs") {
@@ -1208,167 +1299,167 @@ class StreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
-    val tmpRoot = java.nio.file.Files.createTempDirectory("index-loop")
-      .toString
-    val corpusPath = tmpRoot + "/corpus"
-    val codesPath = tmpRoot + "/codes"
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).write.parquet(corpusPath)
-    val gatePath = tmpRoot + "/gate"
-    val cb = graft.exts.PqIndex.codebook(spark, dir)
-    // gateTarget 4 → bucket width 7 for the 500-vector base, and the
-    // hot batch pushes the corpus past 4<<7 = 512, so the width-drift
-    // rebuild fires inside the test
-    val index = graft.stream.IndexLoop.buildIndex(spark, corpusPath,
-      Some(codesPath), Some(cb), Some(gatePath), gateTarget = 4L)
-    val bits0 = index.snapshot.gateBits
-    assert(new java.io.File(s"$gatePath/b$bits0").isDirectory)
-    val cycles = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Map[String, Long], Long)]
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = graft.stream.IndexLoop.start(spark, index, corpusPath,
-      input.toDS().toDF("vec_id", "embedding"),
-      codesPath = Some(codesPath), codebook = Some(cb),
-      gatePath = Some(gatePath), gateTarget = 4L,
-      onCycle = (b, a, v) => cycles.synchronized { cycles += ((b, a, v)) })
-    val base = spark.read.parquet(s"$dir/embeddings.parquet").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    def flip(v: Seq[Float]): Seq[Float] = v.map(x => -x)
-    // batch 1: two novel directions — the loop settles whatever drift
-    // the base fixture carries, then must be all-keep
-    input.addData((2000001L, flip(base(1L))), (2000002L, flip(base(2L))))
-    q.processAllAvailable()
-    val v1 = index.version
-    assert(cycles.nonEmpty)
-    assert(cycles.synchronized(cycles.last)._2
-      .getOrElse("split", 0L) === 0L,
-      s"no split verdict may remain after batch 1: ${cycles.last._2}")
-    // batch 2: a quiescent stream NEVER triggers maintenance
-    input.addData((2000003L, flip(base(3L))))
-    q.processAllAvailable()
-    assert(index.version === v1,
-      "a quiescent ingest batch must not bump the index version")
-    // gate: a scaled copy of a corpus vector (cosine exactly 1) is a
-    // near-dup — it must be dropped BEFORE the index, corpus unchanged
-    val n1 = index.nCorpus
-    input.addData((2000004L, base(6L).map(x => x * 2.0f)))
-    q.processAllAvailable()
-    assert(index.nCorpus === n1, "a gated near-dup must never land")
-    assert(index.version === v1)
-    // within-batch twins: two near-dup vectors in the SAME micro-batch
-    // (neither in the corpus) — exactly one (the min id) may land
-    input.addData(
-      (2000005L, flip(base(8L))),
-      (2000006L, flip(base(8L)).map(x => x * 3.0f)))
-    q.processAllAvailable()
-    assert(index.nCorpus === n1 + 1,
-      "same-batch near-dup twins must land exactly one copy")
-    // batch 3: a 90-vector hot mass around one novel direction — the
-    // drift signal crosses the split threshold, maintenance fires and
-    // runs to quiescence, the version bumps. The mass is TWO tight
-    // lobes ~±0.35·‖v‖ apart on different dims (the PipelineSpec skew
-    // fixture's shape): close enough to crowd one cell, separable by
-    // the cell-local 2-means so the split quiesces at two keep-sized
-    // sub-cells instead of shaving off re-flagged slivers.
-    val hotBase = flip(base(7L))
-    val norm = math.sqrt(hotBase.map(x => x.toDouble * x).sum).toFloat
-    val hot = (0 until 90).map { i =>
-      val lobe =
-        if (i % 2 == 0) hotBase.updated(0, hotBase(0) + 0.35f * norm)
-        else hotBase.updated(1, hotBase(1) - 0.35f * norm)
-      // one DISTINCT jitter dim per vector (~0.998 pairwise cosine):
-      // crowded enough to share a cell, but below the 0.999 dup bar so
-      // the within-batch twin filter rightly keeps them all
-      val d = 3 + i / 2
-      (2100000L + i, lobe.updated(d, lobe(d) + 0.06f * norm))
+    withTempDir("index-loop") { tmpRoot =>
+      val corpusPath = tmpRoot + "/corpus"
+      val codesPath = tmpRoot + "/codes"
+      spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")).write.parquet(corpusPath)
+      val gatePath = tmpRoot + "/gate"
+      val cb = graft.exts.PqIndex.codebook(spark, dir)
+      // gateTarget 4 → bucket width 7 for the 500-vector base, and the
+      // hot batch pushes the corpus past 4<<7 = 512, so the width-drift
+      // rebuild fires inside the test
+      val index = graft.stream.IndexLoop.buildIndex(spark, corpusPath,
+        Some(codesPath), Some(cb), Some(gatePath), gateTarget = 4L)
+      val bits0 = index.snapshot.gateBits
+      assert(new java.io.File(s"$gatePath/b$bits0").isDirectory)
+      val cycles = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Map[String, Long], Long)]
+      val input = MemoryStream[(Long, Seq[Float])]
+      val q = graft.stream.IndexLoop.start(spark, index, corpusPath,
+        input.toDS().toDF("vec_id", "embedding"),
+        codesPath = Some(codesPath), codebook = Some(cb),
+        gatePath = Some(gatePath), gateTarget = 4L,
+        onCycle = (b, a, v) => cycles.synchronized { cycles += ((b, a, v)) })
+      val base = spark.read.parquet(s"$dir/embeddings.parquet").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+      def flip(v: Seq[Float]): Seq[Float] = v.map(x => -x)
+      // batch 1: two novel directions — the loop settles whatever drift
+      // the base fixture carries, then must be all-keep
+      input.addData((2000001L, flip(base(1L))), (2000002L, flip(base(2L))))
+      q.processAllAvailable()
+      val v1 = index.version
+      assert(cycles.nonEmpty)
+      assert(cycles.synchronized(cycles.last)._2
+        .getOrElse("split", 0L) === 0L,
+        s"no split verdict may remain after batch 1: ${cycles.last._2}")
+      // batch 2: a quiescent stream NEVER triggers maintenance
+      input.addData((2000003L, flip(base(3L))))
+      q.processAllAvailable()
+      assert(index.version === v1,
+        "a quiescent ingest batch must not bump the index version")
+      // gate: a scaled copy of a corpus vector (cosine exactly 1) is a
+      // near-dup — it must be dropped BEFORE the index, corpus unchanged
+      val n1 = index.nCorpus
+      input.addData((2000004L, base(6L).map(x => x * 2.0f)))
+      q.processAllAvailable()
+      assert(index.nCorpus === n1, "a gated near-dup must never land")
+      assert(index.version === v1)
+      // within-batch twins: two near-dup vectors in the SAME micro-batch
+      // (neither in the corpus) — exactly one (the min id) may land
+      input.addData(
+        (2000005L, flip(base(8L))),
+        (2000006L, flip(base(8L)).map(x => x * 3.0f)))
+      q.processAllAvailable()
+      assert(index.nCorpus === n1 + 1,
+        "same-batch near-dup twins must land exactly one copy")
+      // batch 3: a 90-vector hot mass around one novel direction — the
+      // drift signal crosses the split threshold, maintenance fires and
+      // runs to quiescence, the version bumps. The mass is TWO tight
+      // lobes ~±0.35·‖v‖ apart on different dims (the PipelineSpec skew
+      // fixture's shape): close enough to crowd one cell, separable by
+      // the cell-local 2-means so the split quiesces at two keep-sized
+      // sub-cells instead of shaving off re-flagged slivers.
+      val hotBase = flip(base(7L))
+      val norm = math.sqrt(hotBase.map(x => x.toDouble * x).sum).toFloat
+      val hot = (0 until 90).map { i =>
+        val lobe =
+          if (i % 2 == 0) hotBase.updated(0, hotBase(0) + 0.35f * norm)
+          else hotBase.updated(1, hotBase(1) - 0.35f * norm)
+        // one DISTINCT jitter dim per vector (~0.998 pairwise cosine):
+        // crowded enough to share a cell, but below the 0.999 dup bar so
+        // the within-batch twin filter rightly keeps them all
+        val d = 3 + i / 2
+        (2100000L + i, lobe.updated(d, lobe(d) + 0.06f * norm))
+      }
+      input.addData(hot: _*)
+      q.processAllAvailable()
+      q.stop()
+      assert(index.version > v1,
+        s"the hot batch must trigger maintenance: version ${index.version}")
+      assert(cycles.synchronized(cycles.last)._2
+        .getOrElse("split", 0L) === 0L,
+        s"acted loop must quiesce all SPLITS: ${cycles.last._2}")
+      // the bumped version's clustered CODES layout was rewritten before
+      // the version flipped — serving readers never see a half-built dir
+      assert(new java.io.File(s"$codesPath/v${index.version}").isDirectory,
+        s"layout for v${index.version} must exist")
+      // the corpus grew past the gate width's threshold — the bucket
+      // layout rebuilt at the new width and the snapshot carries it
+      val bits1 = index.snapshot.gateBits
+      assert(bits1 === bits0 + 1,
+        s"gate width must drift $bits0 → ${bits0 + 1}, got $bits1")
+      assert(new java.io.File(s"$gatePath/b$bits1").isDirectory)
+      // serving picks up the bumped version at its next query batch, reads
+      // ONLY probed cells from the clustered layout, and equals the batch
+      // composed search over the rebuilt index
+      val qvecs = (0L until 4L).map(i => (i, base(i)))
+      val results = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Int, Long, Long)]
+      val qinput = MemoryStream[(Long, Seq[Float])]
+      val sq = graft.stream.AnnServing.serveWith(spark, corpusPath, index, cb,
+        qinput.toDS().toDF("query_id", "embedding"),
+        (df, _, v) => results.synchronized {
+          results ++= df.collect().map(r =>
+            (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), v))
+        }, codesPath = Some(codesPath))
+      qinput.addData(qvecs: _*)
+      sq.processAllAvailable()
+      sq.stop()
+      val emb = spark.read.parquet(corpusPath)
+        .select(col("vec_id"), col("embedding"))
+      val expected = graft.exts.PqIndex.ivfPqSearchOver(emb,
+          index.centroids(spark), cb, qvecs.toDF("query_id", "embedding"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+        .toSet
+      assert(results.synchronized(results.toSeq)
+        .map(t => (t._1, t._2, t._3, t._4)).toSet === expected)
+      assert(results.synchronized(results.toSeq).forall(_._5 === index.version),
+        "serving must observe the bumped index version")
+      // the corpus-derived serving branch (no layout) returns the same
+      // results — the layout is a plan upgrade, never a semantics change
+      val results2 = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Int, Long)]
+      val qinput2 = MemoryStream[(Long, Seq[Float])]
+      val sq2 = graft.stream.AnnServing.serveWith(spark, corpusPath, index, cb,
+        qinput2.toDS().toDF("query_id", "embedding"),
+        (df, _, _) => results2.synchronized {
+          results2 ++= df.collect().map(r =>
+            (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+        })
+      qinput2.addData(qvecs: _*)
+      sq2.processAllAvailable()
+      sq2.stop()
+      assert(results2.synchronized(results2.toSet) === expected,
+        "layout-backed and corpus-derived serving must agree")
+      // restart durability: the saved index round-trips bit-for-bit, so a
+      // fresh serving node loads instead of retraining — combined with the
+      // codebook artifact and the on-disk layouts, every loop piece is
+      // durable
+      graft.stream.IndexLoop.saveIndex(spark, index, s"$tmpRoot/index")
+      val reloaded = graft.stream.IndexLoop.loadIndex(spark, s"$tmpRoot/index")
+      assert(reloaded.snapshot.version === index.snapshot.version)
+      assert(reloaded.snapshot.gateBits === index.snapshot.gateBits)
+      assert(reloaded.snapshot.nCorpus === index.snapshot.nCorpus)
+      assert(reloaded.snapshot.cellStats === index.snapshot.cellStats)
+      assert(reloaded.snapshot.cents.toSet === index.snapshot.cents.toSet)
+      assert(reloaded.snapshot.lastBatchId === index.snapshot.lastBatchId,
+        "the replay guard must survive the save/load round-trip")
+      // replay no-op (the LoopCore discipline, new in r15): a batch id ≤
+      // the carried lastBatchId — a checkpointed restart re-delivering an
+      // applied batch — changes nothing, not even the landed corpus
+      val beforeReplay = index.snapshot
+      val nFiles = new java.io.File(corpusPath).list().length
+      graft.stream.IndexLoop.applyBatch(spark, index, corpusPath,
+        Seq((2200001L, flip(base(9L)))).toDF("vec_id", "embedding"),
+        beforeReplay.lastBatchId, 0.999, 4, Some(codesPath), Some(cb),
+        Some(gatePath), 4L,
+        (b, a, v) => cycles.synchronized { cycles += ((b, a, v)) })
+      assert(index.snapshot === beforeReplay)
+      assert(new java.io.File(corpusPath).list().length === nFiles,
+        "a replayed batch must not append corpus files")
     }
-    input.addData(hot: _*)
-    q.processAllAvailable()
-    q.stop()
-    assert(index.version > v1,
-      s"the hot batch must trigger maintenance: version ${index.version}")
-    assert(cycles.synchronized(cycles.last)._2
-      .getOrElse("split", 0L) === 0L,
-      s"acted loop must quiesce all SPLITS: ${cycles.last._2}")
-    // the bumped version's clustered CODES layout was rewritten before
-    // the version flipped — serving readers never see a half-built dir
-    assert(new java.io.File(s"$codesPath/v${index.version}").isDirectory,
-      s"layout for v${index.version} must exist")
-    // the corpus grew past the gate width's threshold — the bucket
-    // layout rebuilt at the new width and the snapshot carries it
-    val bits1 = index.snapshot.gateBits
-    assert(bits1 === bits0 + 1,
-      s"gate width must drift $bits0 → ${bits0 + 1}, got $bits1")
-    assert(new java.io.File(s"$gatePath/b$bits1").isDirectory)
-    // serving picks up the bumped version at its next query batch, reads
-    // ONLY probed cells from the clustered layout, and equals the batch
-    // composed search over the rebuilt index
-    val qvecs = (0L until 4L).map(i => (i, base(i)))
-    val results = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Long, Long)]
-    val qinput = MemoryStream[(Long, Seq[Float])]
-    val sq = graft.stream.AnnServing.serveWith(spark, corpusPath, index, cb,
-      qinput.toDS().toDF("query_id", "embedding"),
-      (df, _, v) => results.synchronized {
-        results ++= df.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), v))
-      }, codesPath = Some(codesPath))
-    qinput.addData(qvecs: _*)
-    sq.processAllAvailable()
-    sq.stop()
-    val emb = spark.read.parquet(corpusPath)
-      .select(col("vec_id"), col("embedding"))
-    val expected = graft.exts.PqIndex.ivfPqSearchOver(emb,
-        index.centroids(spark), cb, qvecs.toDF("query_id", "embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .toSet
-    assert(results.synchronized(results.toSeq)
-      .map(t => (t._1, t._2, t._3, t._4)).toSet === expected)
-    assert(results.synchronized(results.toSeq).forall(_._5 === index.version),
-      "serving must observe the bumped index version")
-    // the corpus-derived serving branch (no layout) returns the same
-    // results — the layout is a plan upgrade, never a semantics change
-    val results2 = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Long)]
-    val qinput2 = MemoryStream[(Long, Seq[Float])]
-    val sq2 = graft.stream.AnnServing.serveWith(spark, corpusPath, index, cb,
-      qinput2.toDS().toDF("query_id", "embedding"),
-      (df, _, _) => results2.synchronized {
-        results2 ++= df.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      })
-    qinput2.addData(qvecs: _*)
-    sq2.processAllAvailable()
-    sq2.stop()
-    assert(results2.synchronized(results2.toSet) === expected,
-      "layout-backed and corpus-derived serving must agree")
-    // restart durability: the saved index round-trips bit-for-bit, so a
-    // fresh serving node loads instead of retraining — combined with the
-    // codebook artifact and the on-disk layouts, every loop piece is
-    // durable
-    graft.stream.IndexLoop.saveIndex(spark, index, s"$tmpRoot/index")
-    val reloaded = graft.stream.IndexLoop.loadIndex(spark, s"$tmpRoot/index")
-    assert(reloaded.snapshot.version === index.snapshot.version)
-    assert(reloaded.snapshot.gateBits === index.snapshot.gateBits)
-    assert(reloaded.snapshot.nCorpus === index.snapshot.nCorpus)
-    assert(reloaded.snapshot.cellStats === index.snapshot.cellStats)
-    assert(reloaded.snapshot.cents.toSet === index.snapshot.cents.toSet)
-    assert(reloaded.snapshot.lastBatchId === index.snapshot.lastBatchId,
-      "the replay guard must survive the save/load round-trip")
-    // replay no-op (the LoopCore discipline, new in r15): a batch id ≤
-    // the carried lastBatchId — a checkpointed restart re-delivering an
-    // applied batch — changes nothing, not even the landed corpus
-    val beforeReplay = index.snapshot
-    val nFiles = new java.io.File(corpusPath).list().length
-    graft.stream.IndexLoop.applyBatch(spark, index, corpusPath,
-      Seq((2200001L, flip(base(9L)))).toDF("vec_id", "embedding"),
-      beforeReplay.lastBatchId, 0.999, 4, Some(codesPath), Some(cb),
-      Some(gatePath), 4L,
-      (b, a, v) => cycles.synchronized { cycles += ((b, a, v)) })
-    assert(index.snapshot === beforeReplay)
-    assert(new java.io.File(corpusPath).list().length === nFiles,
-      "a replayed batch must not append corpus files")
   }
 
   test("graph loop: ingest gate → bucket-local merge → width-drift rebuild → serving") {
@@ -1376,195 +1467,196 @@ class StreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graph-loop")
-      .toString
-    val corpusPath = tmpRoot + "/corpus"
-    val graphPath = tmpRoot + "/graph"
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).write.parquet(corpusPath)
-    // target 4 → width 7 for the 500-vector base; pushing the corpus
-    // past 4<<7 = 512 fires the width-drift rebuild inside the test
-    val graph = graft.stream.GraphIndexLoop.buildGraph(spark, corpusPath,
-      graphPath, target = 4L)
-    val bits0 = graph.snapshot.bits
-    assert(new java.io.File(graph.layoutPath).isDirectory)
-    def served(): Set[(Long, Long, Int, Long)] = graph.edges(spark)
-      .collect().map(r => (r.getAs[Long]("src_id"),
-        r.getAs[Long]("dst_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("mutual"))).toSet
-    def rebuilt(bits: Int): Set[(Long, Long, Int, Long)] =
-      graft.exts.Similarity.knnGraphOver(
-        spark.read.parquet(corpusPath)
-          .select(col("vec_id"), col("embedding")),
-        bits, graft.exts.Similarity.KnnGraphK)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-          r.getLong(3))).toSet
-    // the built layout equals a direct rebuild
-    assert(served() === rebuilt(bits0))
-    val cycles = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long)]
-    val healths = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Seq[(Long, Long, Long, Long, Long, Long)])]
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = graft.stream.GraphIndexLoop.start(spark, graph, corpusPath,
-      input.toDS().toDF("vec_id", "embedding"), target = 4L,
-      onCycle = (b, n, v) => cycles.synchronized { cycles += ((b, n, v)) },
-      onHealth = (v, h) => healths.synchronized {
-        healths += ((v, h.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq))
-      })
-    val base = spark.read.parquet(s"$dir/embeddings.parquet").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    def flip(v: Seq[Float]): Seq[Float] = v.map(x => -x)
-    // batch 1: two novel vectors — the per-batch LAW: the layout after
-    // the bucket-local merge equals a FULL rebuild over the landed
-    // corpus at the pinned width
-    input.addData((2000001L, flip(base(1L))), (2000002L, flip(base(2L))))
-    q.processAllAvailable()
-    assert(graph.nCorpus === 502L)
-    assert(graph.version === 0L,
-      "a non-drifting batch must not bump the version")
-    assert(served() === rebuilt(bits0))
-    // gate: a scaled corpus copy (cosine 1) never lands, layout untouched
-    input.addData((2000003L, base(6L).map(x => x * 2.0f)))
-    q.processAllAvailable()
-    assert(graph.nCorpus === 502L, "a gated near-dup must never land")
-    assert(served() === rebuilt(bits0))
-    // hot batch: 20 novel directions push the corpus past 4<<7 = 512 —
-    // the width-drift rebuild fires, the version bumps, and the served
-    // layout equals a rebuild at the NEW width
-    val novel = (0 until 20).map { i =>
-      val v = flip(base((20 + i).toLong))
-      val d = 2 + i % 6
-      (2100000L + i, v.updated(d, v(d) + 0.4f * math.abs(v(d)) + 0.1f))
+    withTempDir("graph-loop") { tmpRoot =>
+      val corpusPath = tmpRoot + "/corpus"
+      val graphPath = tmpRoot + "/graph"
+      spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")).write.parquet(corpusPath)
+      // target 4 → width 7 for the 500-vector base; pushing the corpus
+      // past 4<<7 = 512 fires the width-drift rebuild inside the test
+      val graph = graft.stream.GraphIndexLoop.buildGraph(spark, corpusPath,
+        graphPath, target = 4L)
+      val bits0 = graph.snapshot.bits
+      assert(new java.io.File(graph.layoutPath).isDirectory)
+      def served(): Set[(Long, Long, Int, Long)] = graph.edges(spark)
+        .collect().map(r => (r.getAs[Long]("src_id"),
+          r.getAs[Long]("dst_id"), r.getAs[Int]("rank"),
+          r.getAs[Long]("mutual"))).toSet
+      def rebuilt(bits: Int): Set[(Long, Long, Int, Long)] =
+        graft.exts.Similarity.knnGraphOver(
+          spark.read.parquet(corpusPath)
+            .select(col("vec_id"), col("embedding")),
+          bits, graft.exts.Similarity.KnnGraphK)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+            r.getLong(3))).toSet
+      // the built layout equals a direct rebuild
+      assert(served() === rebuilt(bits0))
+      val cycles = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long)]
+      val healths = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Seq[(Long, Long, Long, Long, Long, Long)])]
+      val input = MemoryStream[(Long, Seq[Float])]
+      val q = graft.stream.GraphIndexLoop.start(spark, graph, corpusPath,
+        input.toDS().toDF("vec_id", "embedding"), target = 4L,
+        onCycle = (b, n, v) => cycles.synchronized { cycles += ((b, n, v)) },
+        onHealth = (v, h) => healths.synchronized {
+          healths += ((v, h.collect().map(r => (r.getLong(0), r.getLong(1),
+            r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq))
+        })
+      val base = spark.read.parquet(s"$dir/embeddings.parquet").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+      def flip(v: Seq[Float]): Seq[Float] = v.map(x => -x)
+      // batch 1: two novel vectors — the per-batch LAW: the layout after
+      // the bucket-local merge equals a FULL rebuild over the landed
+      // corpus at the pinned width
+      input.addData((2000001L, flip(base(1L))), (2000002L, flip(base(2L))))
+      q.processAllAvailable()
+      assert(graph.nCorpus === 502L)
+      assert(graph.version === 0L,
+        "a non-drifting batch must not bump the version")
+      assert(served() === rebuilt(bits0))
+      // gate: a scaled corpus copy (cosine 1) never lands, layout untouched
+      input.addData((2000003L, base(6L).map(x => x * 2.0f)))
+      q.processAllAvailable()
+      assert(graph.nCorpus === 502L, "a gated near-dup must never land")
+      assert(served() === rebuilt(bits0))
+      // hot batch: 20 novel directions push the corpus past 4<<7 = 512 —
+      // the width-drift rebuild fires, the version bumps, and the served
+      // layout equals a rebuild at the NEW width
+      val novel = (0 until 20).map { i =>
+        val v = flip(base((20 + i).toLong))
+        val d = 2 + i % 6
+        (2100000L + i, v.updated(d, v(d) + 0.4f * math.abs(v(d)) + 0.1f))
+      }
+      input.addData(novel: _*)
+      q.processAllAvailable()
+      q.stop()
+      assert(graph.nCorpus > 512L, s"corpus stuck at ${graph.nCorpus}")
+      assert(graph.version === 1L,
+        s"width drift must bump the version, got ${graph.version}")
+      val bits1 = graph.snapshot.bits
+      assert(bits1 === bits0 + 1,
+        s"width must drift $bits0 → ${bits0 + 1}, got $bits1")
+      assert(new java.io.File(graph.layoutPath).isDirectory)
+      assert(served() === rebuilt(bits1))
+      // the version bump emitted its health row ON the loop (the
+      // reference's evaluator pattern): same numbers as the batch
+      // graphHealthOver on the served layout + landed corpus
+      val hb = healths.synchronized(healths.toSeq)
+      assert(hb.map(_._1) === Seq(1L),
+        s"exactly the drift bump must emit health, got ${hb.map(_._1)}")
+      val batchHealth = graft.exts.Similarity.graphHealthOver(
+        graph.edges(spark),
+        spark.read.parquet(corpusPath).select(col("vec_id")))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
+      assert(hb.head._2 === batchHealth)
+      // every graph consumer runs against the served frame unchanged
+      assert(graft.exts.Similarity
+        .knnComponentsFromEdges(graph.edges(spark)).count() > 0L)
+      // restart durability: meta round-trips, the reloaded handle serves
+      // the same layout with zero graph work
+      graft.stream.GraphIndexLoop.saveMeta(spark, graph, s"$tmpRoot/meta")
+      val reloaded = graft.stream.GraphIndexLoop.loadMeta(spark, graphPath,
+        s"$tmpRoot/meta")
+      assert(reloaded.snapshot === graph.snapshot)
+      assert(reloaded.edges(spark).count() === graph.edges(spark).count())
+      // the loop SELF-persists state per acted batch: reattach needs no
+      // export and must agree with the live handle
+      val reattached = graft.stream.GraphIndexLoop.reattach(spark, graphPath)
+      assert(reattached.snapshot === graph.snapshot)
+      // a stale export naming a layout that is not on disk fails LOUDLY
+      Seq((9L, 30, 999L, 1L, 5L))
+        .toDF("version", "bits", "epoch", "n_corpus", "last_batch_id")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmpRoot/meta_stale")
+      val staleErr = intercept[IllegalArgumentException] {
+        graft.stream.GraphIndexLoop.loadMeta(spark, graphPath,
+          s"$tmpRoot/meta_stale")
+      }
+      assert(staleErr.getMessage.contains("does not exist"))
+      // REPLAY IDEMPOTENCY: re-applying the last committed batchId is a
+      // strict no-op — state restored from the marker, corpus and layout
+      // untouched (foreachBatch replays after failure land here)
+      val lastBatch = cycles.synchronized(cycles.map(_._1).max)
+      val corpusBefore = spark.read.parquet(corpusPath).count()
+      val layoutBefore = served()
+      val stateBefore = graph.snapshot
+      val replay = graft.stream.GraphIndexLoop.applyBatch(spark, graph,
+        corpusPath, novel.toDF("vec_id", "embedding"), lastBatch,
+        0.999, 4L, (_, _) => fail("replay must not re-emit health"))
+      assert(replay._2 === stateBefore.version)
+      assert(graph.snapshot === stateBefore)
+      assert(spark.read.parquet(corpusPath).count() === corpusBefore,
+        "replay duplicated corpus rows")
+      assert(served() === layoutBefore)
+      // SERVING: per query batch, neighbors come from the current layout,
+      // read through a directory-pruned scan of the batch's own buckets
+      val qids = Seq(1L, 5L, 9L, 2000001L)
+      val qvecs = spark.read.parquet(corpusPath)
+        .filter(col("vec_id").isin(qids: _*))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      assert(qvecs.size === qids.size)
+      val sresults = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Int, Long, Long)]
+      val splans = scala.collection.mutable.ArrayBuffer.empty[String]
+      val qinput = MemoryStream[(Long, Seq[Float])]
+      val sq = graft.stream.GraphServing.serveWith(spark, graph,
+        qinput.toDS().toDF("query_id", "embedding"),
+        (df, _, v) => {
+          splans.synchronized {
+            splans += df.queryExecution.executedPlan.toString }
+          sresults.synchronized {
+            sresults ++= df.collect().map(r => (r.getLong(0), r.getLong(1),
+              r.getInt(2), r.getLong(3), v)) }
+        })
+      qinput.addData(qvecs: _*)
+      sq.processAllAvailable()
+      sq.stop()
+      val expectedNbrs = graph.edges(spark)
+        .filter(col("src_id").isin(qids: _*)).collect()
+        .map(r => (r.getAs[Long]("src_id"), r.getAs[Long]("dst_id"),
+          r.getAs[Int]("rank"), r.getAs[Long]("mutual"))).toSet
+      assert(sresults.synchronized(sresults.toSeq)
+        .map(t => (t._1, t._2, t._3, t._4)).toSet === expectedNbrs)
+      assert(sresults.synchronized(sresults.toSeq)
+        .forall(_._5 === graph.version),
+        "serving must observe the current graph version")
+      val splan = splans.synchronized(splans.mkString)
+      assert(splan.contains("PartitionFilters") && splan.contains("bucket"),
+        s"no bucket partition filter in:\n$splan")
     }
-    input.addData(novel: _*)
-    q.processAllAvailable()
-    q.stop()
-    assert(graph.nCorpus > 512L, s"corpus stuck at ${graph.nCorpus}")
-    assert(graph.version === 1L,
-      s"width drift must bump the version, got ${graph.version}")
-    val bits1 = graph.snapshot.bits
-    assert(bits1 === bits0 + 1,
-      s"width must drift $bits0 → ${bits0 + 1}, got $bits1")
-    assert(new java.io.File(graph.layoutPath).isDirectory)
-    assert(served() === rebuilt(bits1))
-    // the version bump emitted its health row ON the loop (the
-    // reference's evaluator pattern): same numbers as the batch
-    // graphHealthOver on the served layout + landed corpus
-    val hb = healths.synchronized(healths.toSeq)
-    assert(hb.map(_._1) === Seq(1L),
-      s"exactly the drift bump must emit health, got ${hb.map(_._1)}")
-    val batchHealth = graft.exts.Similarity.graphHealthOver(
-      graph.edges(spark),
-      spark.read.parquet(corpusPath).select(col("vec_id")))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    assert(hb.head._2 === batchHealth)
-    // every graph consumer runs against the served frame unchanged
-    assert(graft.exts.Similarity
-      .knnComponentsFromEdges(graph.edges(spark)).count() > 0L)
-    // restart durability: meta round-trips, the reloaded handle serves
-    // the same layout with zero graph work
-    graft.stream.GraphIndexLoop.saveMeta(spark, graph, s"$tmpRoot/meta")
-    val reloaded = graft.stream.GraphIndexLoop.loadMeta(spark, graphPath,
-      s"$tmpRoot/meta")
-    assert(reloaded.snapshot === graph.snapshot)
-    assert(reloaded.edges(spark).count() === graph.edges(spark).count())
-    // the loop SELF-persists state per acted batch: reattach needs no
-    // export and must agree with the live handle
-    val reattached = graft.stream.GraphIndexLoop.reattach(spark, graphPath)
-    assert(reattached.snapshot === graph.snapshot)
-    // a stale export naming a layout that is not on disk fails LOUDLY
-    Seq((9L, 30, 999L, 1L, 5L))
-      .toDF("version", "bits", "epoch", "n_corpus", "last_batch_id")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$tmpRoot/meta_stale")
-    val staleErr = intercept[IllegalArgumentException] {
-      graft.stream.GraphIndexLoop.loadMeta(spark, graphPath,
-        s"$tmpRoot/meta_stale")
-    }
-    assert(staleErr.getMessage.contains("does not exist"))
-    // REPLAY IDEMPOTENCY: re-applying the last committed batchId is a
-    // strict no-op — state restored from the marker, corpus and layout
-    // untouched (foreachBatch replays after failure land here)
-    val lastBatch = cycles.synchronized(cycles.map(_._1).max)
-    val corpusBefore = spark.read.parquet(corpusPath).count()
-    val layoutBefore = served()
-    val stateBefore = graph.snapshot
-    val replay = graft.stream.GraphIndexLoop.applyBatch(spark, graph,
-      corpusPath, novel.toDF("vec_id", "embedding"), lastBatch,
-      0.999, 4L, (_, _) => fail("replay must not re-emit health"))
-    assert(replay._2 === stateBefore.version)
-    assert(graph.snapshot === stateBefore)
-    assert(spark.read.parquet(corpusPath).count() === corpusBefore,
-      "replay duplicated corpus rows")
-    assert(served() === layoutBefore)
-    // SERVING: per query batch, neighbors come from the current layout,
-    // read through a directory-pruned scan of the batch's own buckets
-    val qids = Seq(1L, 5L, 9L, 2000001L)
-    val qvecs = spark.read.parquet(corpusPath)
-      .filter(col("vec_id").isin(qids: _*))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    assert(qvecs.size === qids.size)
-    val sresults = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Long, Long)]
-    val splans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val qinput = MemoryStream[(Long, Seq[Float])]
-    val sq = graft.stream.GraphServing.serveWith(spark, graph,
-      qinput.toDS().toDF("query_id", "embedding"),
-      (df, _, v) => {
-        splans.synchronized {
-          splans += df.queryExecution.executedPlan.toString }
-        sresults.synchronized {
-          sresults ++= df.collect().map(r => (r.getLong(0), r.getLong(1),
-            r.getInt(2), r.getLong(3), v)) }
-      })
-    qinput.addData(qvecs: _*)
-    sq.processAllAvailable()
-    sq.stop()
-    val expectedNbrs = graph.edges(spark)
-      .filter(col("src_id").isin(qids: _*)).collect()
-      .map(r => (r.getAs[Long]("src_id"), r.getAs[Long]("dst_id"),
-        r.getAs[Int]("rank"), r.getAs[Long]("mutual"))).toSet
-    assert(sresults.synchronized(sresults.toSeq)
-      .map(t => (t._1, t._2, t._3, t._4)).toSet === expectedNbrs)
-    assert(sresults.synchronized(sresults.toSeq)
-      .forall(_._5 === graph.version),
-      "serving must observe the current graph version")
-    val splan = splans.synchronized(splans.mkString)
-    assert(splan.contains("PartitionFilters") && splan.contains("bucket"),
-      s"no bucket partition filter in:\n$splan")
   }
 
   test("ANN serving restart: cold path loads the codebook artifact, not a retrain") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("ann-cold").toString
-    graft.exts.PqIndex.saveCodebook(spark, dir, s"$tmp/cb.parquet")
-    // serving restart: every session memo gone — start() must install
-    // the artifact (tiny parquet read) as the codebook cold path
-    graft.exts.PqIndex.clear()
-    val qvecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(org.apache.spark.sql.functions.col("vec_id") < 8)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val results = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Long)]
-    val q = graft.stream.AnnServing.start(spark, dir,
-      input.toDS().toDF("query_id", "embedding"),
-      (df, _) => results.synchronized {
-        results ++= df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      }, codebookPath = Some(s"$tmp/cb.parquet"))
-    input.addData(qvecs.toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    val expected = graft.exts.PqIndex.ivfPqSearch(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .toSet
-    assert(results.toSet === expected)
+    withTempDir("ann-cold") { tmp =>
+      graft.exts.PqIndex.saveCodebook(spark, dir, s"$tmp/cb.parquet")
+      // serving restart: every session memo gone — start() must install
+      // the artifact (tiny parquet read) as the codebook cold path
+      graft.exts.PqIndex.clear()
+      val qvecs = spark.read.parquet(s"$dir/embeddings.parquet")
+        .filter(org.apache.spark.sql.functions.col("vec_id") < 8)
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      val input = MemoryStream[(Long, Seq[Float])]
+      val results = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Int, Long)]
+      val q = graft.stream.AnnServing.start(spark, dir,
+        input.toDS().toDF("query_id", "embedding"),
+        (df, _) => results.synchronized {
+          results ++= df.collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+        }, codebookPath = Some(s"$tmp/cb.parquet"))
+      input.addData(qvecs.toSeq: _*)
+      q.processAllAvailable()
+      q.stop()
+      val expected = graft.exts.PqIndex.ivfPqSearch(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+        .toSet
+      assert(results.toSet === expected)
+    }
   }
 
   test("streaming heavy hitters emit exactly once, at the crossing batch") {
@@ -1664,226 +1756,226 @@ class StreamSpec extends AnyFunSuite {
     // source: the contamination fixture (documents ∪ planted near-copies
     // of the eval partition), minus the eval docs themselves — the
     // held-out set guards the stream, it doesn't flow through it
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-decon-src").toString
-    val full = graft.exts.Dedup.corpusWithLeaks(spark, dir)
-    full.filter(col("doc_id") % 97 =!= 0)
-      .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    val evalSet = graft.exts.TextAnalysis.evalSpanHashes(
-      full.filter(col("doc_id") % 97 === 0))
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-decon-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-decon-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
-      evalSpans = Some(evalSet))
-    q.awaitTermination()
-    val landed = spark.read.parquet(outDir)
-      .select(col("doc_id"), md5(col("text")).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(landed.nonEmpty)
-    // every landed text equals the batch scrub of the quality-kept
-    // input — the stream's stateless probe is digest-identical
-    val expected = graft.exts.TextAnalysis.scrubAgainstSet(
-        graft.exts.TextAnalysis.qualitySignals(
-            spark.read.parquet(srcDir)).filter(col("keep"))
-          .select(col("doc_id"), col("text")),
-        evalSet)
-      .select(col("doc_id"), md5(col("text")).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    landed.foreach { case (id, m) =>
-      assert(expected.get(id).contains(m), s"doc $id landed unscrubbed")
+    withTempDir("decon-src") { srcDir =>
+      val full = graft.exts.Dedup.corpusWithLeaks(spark, dir)
+      full.filter(col("doc_id") % 97 =!= 0)
+        .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      val evalSet = graft.exts.TextAnalysis.evalSpanHashes(
+        full.filter(col("doc_id") % 97 === 0))
+      withTempDir("decon-out") { outDir =>
+        withTempDir("decon-ckpt") { ckpt =>
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
+            evalSpans = Some(evalSet))
+          q.awaitTermination()
+          val landed = spark.read.parquet(outDir)
+            .select(col("doc_id"), md5(col("text")).as("m"))
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          assert(landed.nonEmpty)
+          // every landed text equals the batch scrub of the quality-kept
+          // input — the stream's stateless probe is digest-identical
+          val expected = graft.exts.TextAnalysis.scrubAgainstSet(
+              graft.exts.TextAnalysis.qualitySignals(
+                  spark.read.parquet(srcDir)).filter(col("keep"))
+                .select(col("doc_id"), col("text")),
+              evalSet)
+            .select(col("doc_id"), md5(col("text")).as("m"))
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          landed.foreach { case (id, m) =>
+            assert(expected.get(id).contains(m), s"doc $id landed unscrubbed")
+          }
+          // and no landed document carries ANY eval span anymore
+          val residual = graft.exts.TextAnalysis.evalSpanHashes(
+            spark.read.parquet(outDir).select(col("doc_id"), col("text")))
+          assert(residual.toSet.intersect(evalSet.toSet).isEmpty,
+            "landed corpus must share no span with the eval set")
+        }
+      }
     }
-    // and no landed document carries ANY eval span anymore
-    val residual = graft.exts.TextAnalysis.evalSpanHashes(
-      spark.read.parquet(outDir).select(col("doc_id"), col("text")))
-    assert(residual.toSet.intersect(evalSet.toSet).isEmpty,
-      "landed corpus must share no span with the eval set")
   }
 
   test("streaming curation with boilerplate boundary: headers never land") {
     import org.apache.spark.sql.functions._
     import graft.exts.TextAnalysis
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-boiler-src").toString
-    val planted = TextAnalysis.corpusWithBoilerplate(spark, dir)
-      .select(col("doc_id"), col("text"))
-    planted.withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    // nightly detector over the landed corpus → literal window set
-    val windows = TextAnalysis.boilerWindows(
-      TextAnalysis.corpusWithBoilerplate(spark, dir))
-    assert(windows.contains(TextAnalysis.PlantedBoiler))
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-boiler-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-boiler-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
-      boilerWindows = Some(windows.toSeq))
-    q.awaitTermination()
-    val landed = spark.read.parquet(outDir)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(landed.nonEmpty)
-    // every landed text equals the batch strip-then-quality path
-    val expected = TextAnalysis.qualitySignals(
-        TextAnalysis.stripBoilerAgainst(
-          spark.read.parquet(srcDir).select(col("doc_id"), col("text")),
-          windows.toSeq))
-      .filter(col("keep")).select(col("doc_id"), col("text"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    landed.foreach { case (id, t) =>
-      assert(expected.get(id).contains(t), s"doc $id landed unstripped")
-    }
-    // and no landed document still opens with a boilerplate window
-    landed.values.foreach { t =>
-      val lead = t.trim.split("\\s+").take(TextAnalysis.BoilerW)
-        .mkString(" ")
-      assert(!windows.contains(lead))
+    withTempDir("boiler-src") { srcDir =>
+      val planted = TextAnalysis.corpusWithBoilerplate(spark, dir)
+        .select(col("doc_id"), col("text"))
+      planted.withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      // nightly detector over the landed corpus → literal window set
+      val windows = TextAnalysis.boilerWindows(
+        TextAnalysis.corpusWithBoilerplate(spark, dir))
+      assert(windows.contains(TextAnalysis.PlantedBoiler))
+      withTempDir("boiler-out") { outDir =>
+        withTempDir("boiler-ckpt") { ckpt =>
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
+            boilerWindows = Some(windows.toSeq))
+          q.awaitTermination()
+          val landed = spark.read.parquet(outDir)
+            .select(col("doc_id"), col("text"))
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          assert(landed.nonEmpty)
+          // every landed text equals the batch strip-then-quality path
+          val expected = TextAnalysis.qualitySignals(
+              TextAnalysis.stripBoilerAgainst(
+                spark.read.parquet(srcDir).select(col("doc_id"), col("text")),
+                windows.toSeq))
+            .filter(col("keep")).select(col("doc_id"), col("text"))
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          landed.foreach { case (id, t) =>
+            assert(expected.get(id).contains(t), s"doc $id landed unstripped")
+          }
+          // and no landed document still opens with a boilerplate window
+          landed.values.foreach { t =>
+            val lead = t.trim.split("\\s+").take(TextAnalysis.BoilerW)
+              .mkString(" ")
+            assert(!windows.contains(lead))
+          }
+        }
+      }
     }
   }
 
   test("streaming curation with gopher floor: landed set is the stack intersection") {
     import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-gopher-src").toString
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-gopher-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-gopher-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
-      gopherFloor = true)
-    q.awaitTermination()
-    val landedIds = spark.read.parquet(outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // batch expectation: BOTH stacks pass, then one copy per text
-    val src = spark.read.parquet(srcDir)
-    val c4 = graft.exts.TextAnalysis.qualitySignals(src)
-      .filter(col("keep")).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val gopher = graft.exts.TextAnalysis
-      .gopherRules(src.select(col("doc_id"), col("text")), minStopHits = 1)
-      .filter(col("keep")).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val both = c4.intersect(gopher)
-    assert(landedIds.subsetOf(both))
-    // the corpus has no exact text dups, so nothing else drops
-    assert(landedIds === both,
-      s"missing=${both.diff(landedIds).take(5)} extra=${landedIds.diff(both).take(5)}")
-    // and the floor actually bites on this corpus
-    assert(both.size < c4.size)
+    withTempDir("gopher-src") { srcDir =>
+      Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      withTempDir("gopher-out") { outDir =>
+        withTempDir("gopher-ckpt") { ckpt =>
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
+            gopherFloor = true)
+          q.awaitTermination()
+          val landedIds = spark.read.parquet(outDir)
+            .select("doc_id").collect().map(_.getLong(0)).toSet
+          // batch expectation: BOTH stacks pass, then one copy per text
+          val src = spark.read.parquet(srcDir)
+          val c4 = graft.exts.TextAnalysis.qualitySignals(src)
+            .filter(col("keep")).select("doc_id")
+            .collect().map(_.getLong(0)).toSet
+          val gopher = graft.exts.TextAnalysis
+            .gopherRules(src.select(col("doc_id"), col("text")), minStopHits = 1)
+            .filter(col("keep")).select("doc_id")
+            .collect().map(_.getLong(0)).toSet
+          val both = c4.intersect(gopher)
+          assert(landedIds.subsetOf(both))
+          // the corpus has no exact text dups, so nothing else drops
+          assert(landedIds === both,
+            s"missing=${both.diff(landedIds).take(5)} extra=${landedIds.diff(both).take(5)}")
+          // and the floor actually bites on this corpus
+          assert(both.size < c4.size)
+        }
+      }
+    }
   }
 
   test("streaming curation with dsir floor: landed set = quality ∩ importance") {
     import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-dsir-src").toString
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-dsir-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-dsir-ckpt").toString
-    // the trained model: nightly job = dsirHead over the same corpus
-    val scores = graft.exts.TextAnalysis
-      .dsirHead(Tables.load(spark, dir, "documents")).collect()
-      .map(r => r.getAs[String]("term") -> r.getAs[Long]("s")).toMap
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
-      dsirScores = Some(scores))
-    q.awaitTermination()
-    val landedIds = spark.read.parquet(outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // batch expectation: quality keep ∧ dsir keep (no exact dups here)
-    val src = spark.read.parquet(srcDir)
-    val c4 = graft.exts.TextAnalysis.qualitySignals(src)
-      .filter(col("keep")).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val dsir = graft.exts.TextAnalysis
-      .dsirScored(scores, src.select(col("doc_id"), col("text")))
-      .filter(col("dsir_keep")).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val both = c4.intersect(dsir)
-    assert(landedIds === both,
-      s"missing=${both.diff(landedIds).take(5)} extra=${landedIds.diff(both).take(5)}")
-    // the importance floor actually bites on this corpus
-    assert(both.size < c4.size)
+    withTempDir("dsir-src") { srcDir =>
+      Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      withTempDir("dsir-out") { outDir =>
+        withTempDir("dsir-ckpt") { ckpt =>
+          // the trained model: nightly job = dsirHead over the same corpus
+          val scores = graft.exts.TextAnalysis
+            .dsirHead(Tables.load(spark, dir, "documents")).collect()
+            .map(r => r.getAs[String]("term") -> r.getAs[Long]("s")).toMap
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt,
+            dsirScores = Some(scores))
+          q.awaitTermination()
+          val landedIds = spark.read.parquet(outDir)
+            .select("doc_id").collect().map(_.getLong(0)).toSet
+          // batch expectation: quality keep ∧ dsir keep (no exact dups here)
+          val src = spark.read.parquet(srcDir)
+          val c4 = graft.exts.TextAnalysis.qualitySignals(src)
+            .filter(col("keep")).select("doc_id")
+            .collect().map(_.getLong(0)).toSet
+          val dsir = graft.exts.TextAnalysis
+            .dsirScored(scores, src.select(col("doc_id"), col("text")))
+            .filter(col("dsir_keep")).select("doc_id")
+            .collect().map(_.getLong(0)).toSet
+          val both = c4.intersect(dsir)
+          assert(landedIds === both,
+            s"missing=${both.diff(landedIds).take(5)} extra=${landedIds.diff(both).take(5)}")
+          // the importance floor actually bites on this corpus
+          assert(both.size < c4.size)
+        }
+      }
+    }
   }
 
   test("streaming curation: filter + dedup + sharded sink lands a clean corpus") {
     import org.apache.spark.sql.functions._
     // source corpus on disk: documents ∪ planted exact copies, with a
     // synthetic monotone ingest time
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-curate-src").toString
-    val base = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    base.unionByName(
-        base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-curate-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-curate-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt)
-    q.awaitTermination()
-    val landed = spark.read.parquet(outDir)
-    // batch expectation: quality keepers, one copy per distinct text
-    val keepers = graft.exts.TextAnalysis.qualitySignals(
-        spark.read.parquet(srcDir))
-      .filter(col("keep"))
-    val expectedTexts = keepers.select(md5(col("text"))).distinct().count()
-    assert(landed.count() === expectedTexts)
-    assert(landed.select(md5(col("text"))).distinct().count() === expectedTexts)
-    // everything landed passes the filter (no dropped doc leaked through)
-    val keeperIds = keepers.select("doc_id").collect().map(_.getLong(0)).toSet
-    landed.select("doc_id").collect().map(_.getLong(0))
-      .foreach(id => assert(keeperIds.contains(id)))
-    // shards are the stable id hash
-    landed.select(col("doc_id"), col("shard").cast("long")).collect()
-      .foreach(r => assert(r.getLong(1) === (r.getLong(0) * 2654435761L) % 16))
+    withTempDir("curate-src") { srcDir =>
+      val base = Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      base.unionByName(
+          base.filter(col("doc_id") % 10 === 0)
+            .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
+        .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      withTempDir("curate-out") { outDir =>
+        withTempDir("curate-ckpt") { ckpt =>
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val q = graft.stream.CurationPipeline.run(stream, outDir, ckpt)
+          q.awaitTermination()
+          val landed = spark.read.parquet(outDir)
+          // batch expectation: quality keepers, one copy per distinct text
+          val keepers = graft.exts.TextAnalysis.qualitySignals(
+              spark.read.parquet(srcDir))
+            .filter(col("keep"))
+          val expectedTexts = keepers.select(md5(col("text"))).distinct().count()
+          assert(landed.count() === expectedTexts)
+          assert(landed.select(md5(col("text"))).distinct().count() === expectedTexts)
+          // everything landed passes the filter (no dropped doc leaked through)
+          val keeperIds = keepers.select("doc_id").collect().map(_.getLong(0)).toSet
+          landed.select("doc_id").collect().map(_.getLong(0))
+            .foreach(id => assert(keeperIds.contains(id)))
+          // shards are the stable id hash
+          landed.select(col("doc_id"), col("shard").cast("long")).collect()
+            .foreach(r => assert(r.getLong(1) === (r.getLong(0) * 2654435761L) % 16))
 
-    // the observe()-channel funnel equals the batch curationFunnel on the
-    // same corpus: per-stage doc/token totals summed across micro-batches
-    val observedTotals = q.recentProgress.toSeq
-      .flatMap(_.observedMetrics.asScala)
-      .groupBy(_._1)
-      .map { case (stage, rows) =>
-        stage -> ((rows.map(_._2.getAs[Long]("n_docs")).sum,
-          rows.map(_._2.getAs[Long]("n_tokens")).sum))
+          // the observe()-channel funnel equals the batch curationFunnel on the
+          // same corpus: per-stage doc/token totals summed across micro-batches
+          val observedTotals = q.recentProgress.toSeq
+            .flatMap(_.observedMetrics.asScala)
+            .groupBy(_._1)
+            .map { case (stage, rows) =>
+              stage -> ((rows.map(_._2.getAs[Long]("n_docs")).sum,
+                rows.map(_._2.getAs[Long]("n_tokens")).sum))
+            }
+          val batchFunnel = graft.exts.TextAnalysis
+            .curationFunnel(spark.read.parquet(srcDir)).collect()
+            .map(r => r.getAs[String]("stage") ->
+              ((r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))))
+            .toMap
+          assert(observedTotals("funnel_1_raw") === batchFunnel("1_raw"))
+          assert(observedTotals("funnel_2_quality_kept") ===
+            batchFunnel("2_quality_kept"))
+          assert(observedTotals("funnel_3_deduped") === batchFunnel("3_deduped"))
+        }
       }
-    val batchFunnel = graft.exts.TextAnalysis
-      .curationFunnel(spark.read.parquet(srcDir)).collect()
-      .map(r => r.getAs[String]("stage") ->
-        ((r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))))
-      .toMap
-    assert(observedTotals("funnel_1_raw") === batchFunnel("1_raw"))
-    assert(observedTotals("funnel_2_quality_kept") ===
-      batchFunnel("2_quality_kept"))
-    assert(observedTotals("funnel_3_deduped") === batchFunnel("3_deduped"))
+    }
   }
 
   test("streaming curation vs known corpus: history never re-lands") {
@@ -1893,35 +1985,35 @@ class StreamSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     // incoming stream: verbatim re-ingests of every 5th landed doc plus
     // genuinely new perturbed docs — the incremental-dedup fixture
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-known-src").toString
-    graft.exts.Dedup.incomingBatch(spark, dir)
-      .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
-      .write.mode("overwrite").parquet(srcDir)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-known-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-known-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
-      .parquet(srcDir)
-    val kc = graft.stream.CurationPipeline.KnownCorpus(
-      graft.exts.BloomIndex.build(corpus),
-      corpus.select(md5(col("text")).as("k")).distinct())
-    val q = graft.stream.CurationPipeline.run(
-      stream, outDir, ckpt, known = Some(kc))
-    q.awaitTermination()
-    val landed = spark.read.parquet(outDir)
-    // nothing already in the corpus landed again
-    assert(landed.join(corpus.select(col("text")), Seq("text"), "left_semi")
-      .count() === 0L)
-    // batch expectation: quality-kept ∧ not-in-corpus, one per distinct text
-    val expected = graft.exts.TextAnalysis.qualitySignals(
-        spark.read.parquet(srcDir))
-      .filter(col("keep"))
-      .join(corpus.select(col("text")), Seq("text"), "left_anti")
-      .select(md5(col("text"))).distinct().count()
-    assert(landed.count() === expected && expected > 0L)
+    withTempDir("known-src") { srcDir =>
+      graft.exts.Dedup.incomingBatch(spark, dir)
+        .withColumn("ingest_ts_ms", col("doc_id") * 1000L)
+        .write.mode("overwrite").parquet(srcDir)
+      withTempDir("known-out") { outDir =>
+        withTempDir("known-ckpt") { ckpt =>
+          val stream = spark.readStream
+            .schema("doc_id LONG, text STRING, ingest_ts_ms LONG")
+            .parquet(srcDir)
+          val kc = graft.stream.CurationPipeline.KnownCorpus(
+            graft.exts.BloomIndex.build(corpus),
+            corpus.select(md5(col("text")).as("k")).distinct())
+          val q = graft.stream.CurationPipeline.run(
+            stream, outDir, ckpt, known = Some(kc))
+          q.awaitTermination()
+          val landed = spark.read.parquet(outDir)
+          // nothing already in the corpus landed again
+          assert(landed.join(corpus.select(col("text")), Seq("text"), "left_semi")
+            .count() === 0L)
+          // batch expectation: quality-kept ∧ not-in-corpus, one per distinct text
+          val expected = graft.exts.TextAnalysis.qualitySignals(
+              spark.read.parquet(srcDir))
+            .filter(col("keep"))
+            .join(corpus.select(col("text")), Seq("text"), "left_anti")
+            .select(md5(col("text"))).distinct().count()
+          assert(landed.count() === expected && expected > 0L)
+        }
+      }
+    }
   }
 
   test("windowed metrics: batch/stream-shared aggregation is consistent") {

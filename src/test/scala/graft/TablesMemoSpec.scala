@@ -43,4 +43,21 @@ class TablesMemoSpec extends AnyFunSuite {
     assert(widened.columns.toSet === Set("doc_id", "text", "extra"))
     assert(widened.agg(sum(col("extra"))).head.getLong(0) === 9L)
   }
+
+  test("a rewrite under a file: URI changes the version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tblmemo-uri")
+    val uri = s"file:$dir"
+    try {
+      Seq((1L, "a")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val v1 = Tables.version(uri, "t")
+      assert(v1 !== 0L)
+      assert(v1 === Tables.version(dir.toString, "t"))
+      Thread.sleep(5)
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(Tables.version(uri, "t") !== v1)
+      assert(Tables.load(spark, uri, "t").count() === 3)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }
