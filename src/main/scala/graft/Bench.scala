@@ -3,46 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; one pass-major
-      // sweep compiles ~148 plans' stages, so with the default EVERY
-      // execution of every query recompiles its codegen (the warm sweeps
-      // were paying ~20-30% janino cost that query-major's back-to-back
-      // passes hid). Size it to hold the whole suite's stages.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // SORT-BASED shuffle writer even at low reduce counts (r19). With
-      // R ≤ 200 (here R = cores) Spark defaults to the bypass-merge
-      // writer: every map task opens, writes and merges R separate
-      // spill files — measured as a 40-120 ms CPU floor PER TASK on
-      // this suite's small exchanges (TaskFloor probe: a 32-task
-      // hash-agg stage over 3,200 rows cost 2.6 s of task CPU; with the
-      // sort writer 0.5 s; an exchange-fed pair-count stage fell
-      // 7.1 → 0.8 s run). At lake scale R is in the thousands, where
-      // Spark ALWAYS takes the sort-writer path — this pins the bench
-      // to the at-scale code path instead of a local-small-R special
-      // case. Parameterised so the driver's contract stays tunable.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // AQE coalescing stays at the parallelism-first DEFAULT. The r18
-      // A/B (SCALE.md r18) measured size-first coalescing
-      // (coalescePartitions.parallelismFirst=false) at 64 MB and 4 MB
-      // advisory sizes against the same-session baseline: the
-      // overhead-bound metadata tail moved within host noise
-      // (graph_triangles 0.82× in one run, 1.19× in the next) while
-      // the shingle inverted-index family regressed consistently in
-      // BOTH runs (rho_select 1.43-1.49×, source_overlap 1.33-1.45×,
-      // dedup_ngram_jaccard_capped 1.26-1.27× — size-first coalescing
-      // serializes CPU-bound small-data joins Spark sizes by bytes,
-      // not compute). Net: median 0.96-1.04× per key, total −1% to
-      // +7% — no free win at this granularity; the tail is
-      // host-dispatch-bound, not plan-bound.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     import org.apache.spark.sql.functions.col
     // Warm the session (codegen, shuffle machinery, parquet footers) so the
     // first timed query doesn't absorb JVM/session startup.

@@ -1,73 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-inspection tool: prints the formatted physical plan of selected
-  * driver-contract queries and flags the properties that matter at scale
-  * (filter pushdown, broadcast selection, exchange count, codegen). */
+/** Plan-inspection tool: prints the formatted physical plan of the named
+  * driver-contract queries (every registered key when none is named) and
+  * a summary line of the properties that matter at scale (exchange count,
+  * join selection, filter pushdown).
+  *
+  * Usage: runMain graft.Explain [query ...]
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val dir = "/root/testdata/sf0.01"
-    val names = if (args.nonEmpty) args.toSeq else Seq(
-      "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-      "should_optimize", "commit_event_filter", "filegroup_planning",
-      "sim_topk", "dedup_ngram_jaccard", "dedup_minhash_lsh", "window_topk",
-      "join_asof", "join_range_count", "pack_sequences", "text_tfidf",
-      "dedup_exact", "dedup_ngram_jaccard_capped", "sim_ivf_probe2",
-      "sample_docs", "pivot_status", "price_percentiles",
-      "decontaminate", "join_salted", "q18_large_orders",
-      "text_heavy_hitters", "join_outer", "window_range_frame",
-      "stratified_sample", "quality_filter", "text_pii_redact",
-      "mix_sources", "zone_map_prune", "dedup_semantic", "shard_manifest",
-      "text_rarity", "corpus_curate", "dedup_keep_list", "text_dup_spans",
-      "ivf_cells", "corpus_curate_semantic", "maintenance_budget",
-      "dedup_containment", "dedup_incremental", "text_lm_score",
-      "weighted_sample", "chunk_docs", "source_quality_report",
-      "dedup_chunks", "dedup_groups_ensemble", "mm_audio",
-      "lm_score_batch", "event_funnel", "event_cohorts", "curation_funnel",
-      "ann_recall", "token_budget_select", "training_order", "skew_report",
-      "bpe_train", "source_divergence", "quality_calibrate",
-      "snapshot_diff", "pack_efficiency", "bpe_encode", "emb_outliers",
-      "dedup_report", "source_overlap", "curriculum_order",
-      "mm_video_decode", "mm_audio_decode", "minhash_band_pairs",
-      "topk_agg", "pq_search", "ivf_pq_search", "ivf_pq_refine",
-      "simhash_band_pairs", "dedup_keep_best", "ivf_maintenance",
-      "text_scrub_spans", "decontaminate_scrub", "curation_audit",
-      "ccnet_buckets", "gopher_rules", "cluster_balance",
-      "bitext_mine_lsh", "cluster_topics", "filter_agreement",
-      "ccnet_sample", "corpus_stats", "ann_mrr",
-      "bm25_retrieve", "knn_graph", "emb_project", "lsh_tune",
-      "mix_epochs", "epoch_expand", "knn_components", "dup_weights",
-      "project_recall", "bm25_batch", "quality_winsorize", "bm25_update",
-      "q7_volume_shipping", "q10_returned_items", "graph_pagerank",
-      "q4_order_priority", "q12_ship_priority", "q14_promo_revenue",
-      "q16_supplier_cnt", "q19_bracket_revenue", "q15_top_supplier",
-      "q21_waiting_supplier", "q22_idle_customers", "graph_walks",
-      "walk_skipgrams", "graph_triangles", "d4_prune", "mix_doremi",
-      "unimax_alloc", "text_diversity", "cluster_purity",
-      "q2_min_cost_supplier", "q8_market_share", "q9_product_profit",
-      "q11_important_stock", "q13_customer_distribution",
-      "q20_part_promotion", "graph_lpa", "text_hash_embed",
-      "kcenter_coreset", "rho_select", "hybrid_search",
-      "boilerplate_strip", "mmr_select", "mm_phash", "mm_audio_fp",
-      "mm_video_fp", "mm_dup_groups", "mm_video_dups", "mm_audio_dups",
-      "knn_incremental", "mm_resize_px", "graph_health",
-      "mm_vid_incremental", "mm_aud_incremental", "media_audit",
-      "emb_drift")
+    val names =
+      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n======== $n ========")
       val df = SparkEntry.queries(n)(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode))
+        org.apache.spark.sql.execution.FormattedMode))
       val exchanges = "Exchange".r.findAllIn(plan).size
       val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
       val smj = "SortMergeJoin".r.findAllIn(plan).size

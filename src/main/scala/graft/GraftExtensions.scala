@@ -13,10 +13,9 @@ import graft.functions.{CosineSim, MinHashSig, MinHashSigPoly, RepetitionStats, 
   * Catalyst expressions:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * spark.sql.extensions=graft.GraftExtensions
   * }}}
+  * ([[GraftSession.build]] sets it for every graft session).
   *
   * The per-function `register(spark)` helpers remain for sessions the
   * caller doesn't construct.

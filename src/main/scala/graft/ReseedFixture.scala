@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Anti-overfitting harness: regenerate an sf0.01-SHAPED fixture under a
@@ -36,14 +36,8 @@ object ReseedFixture {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/graft_reseed"
     val seed = if (args.length > 2) args(2).toLong else 1337L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def h(cols: Column*): Column = xxhash64((lit(seed) +: cols): _*)
     // uniform [0, 1) with 1e6 resolution from a hash

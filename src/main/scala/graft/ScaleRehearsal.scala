@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * offsets stay below the +100000/+500000 planted-id conventions in
   * graft.exts.Dedup.
   *
-  * Usage: runMain graft.ScaleRehearsal [srcDir] [outDir]
+  * Usage: runMain graft.ScaleRehearsal [srcDir] [outDir] [buildonly]
+  * (local cores from `SPARK_GRAFT_CPUS`, see [[GraftSession]]; the
+  * SCALE.md figures ran at 32).
   */
 object ScaleRehearsal {
 
@@ -29,17 +31,11 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     build(spark, src, out)
     // "buildonly": stop after materializing the sf1 corpus (the r19
-    // CoreSweep scaling probe times its own query set on it)
+    // core-scaling sweep timed its own query set on it; OPTIMIZATION_r19.md
+    // "Core-scaling evidence at sf1")
     if (args.length > 2 && args(2) == "buildonly") { spark.stop(); return }
     // dedup_semantic's within-cell pair search is quadratic in cell size,
     // so its centroid count scales with the corpus (k ∝ n keeps cells the

@@ -16,8 +16,8 @@ object Tables {
     * dominant small-query constant; manifest-backed formats avoid it
     * altogether). `spark.read.parquet` re-lists the directory, re-reads a
     * footer and re-infers the schema on EVERY call — measured 50-200 ms
-    * per table on this corpus (MetaProbe r18), paid by every query before
-    * any data moves. The memo keys on (session, dir, table,
+    * per table on this corpus (OPTIMIZATION_r18.md §1), paid by every
+    * query before any data moves. The memo keys on (session, dir, table,
     * [[version]]): the version fold is the same listing-derived snapshot
     * id the artifact memos use, so a table REWRITE under the same path
     * resolves fresh metadata instead of serving a stale plan — and the

@@ -293,11 +293,11 @@ object ArtifactStore {
 
   /** Session-scoped reader memo for COMMITTED artifact parquet (r18).
     * `spark.read.parquet` re-lists and re-reads footers on every call —
-    * 50-200 ms per frame (MetaProbe) that artifact-backed queries paid
-    * on each invocation (bm25_batch alone reads three frames). An
-    * entry's payload is write-once (atomic publish; a corpus rewrite
-    * mints a NEW version-keyed path), so the resolved plan is reusable
-    * with no version walk; [[evict]]/[[sweep]]/[[clear]] drop matching
+    * 50-200 ms per frame (OPTIMIZATION_r18.md §1-2) that artifact-backed
+    * queries paid on each invocation (bm25_batch alone reads three frames).
+    * An entry's payload is write-once (atomic publish; a corpus rewrite mints
+    * a NEW version-keyed path), so the resolved plan is reusable with no
+    * version walk; [[evict]]/[[sweep]]/[[clear]] drop matching
     * entries so a deleted-and-rebuilt path resolves fresh. WRITE-ONCE
     * is a requirement on callers of the public load() entry points
     * (Bm25Index/LmIndex/…): an in-place parquet overwrite at the same

@@ -577,12 +577,12 @@ object Multimodal {
   def mmCaptionPairsNear(spark: SparkSession, dir: String): DataFrame = {
     // MEASURED AND REJECTED (r19): overlapping the decode checkpoint
     // with the caption near tier on a pool thread (guide §2.6 — the two
-    // eager chains are independent). AbProbe interleaved vs the frozen
-    // sequential shape (mm_near_seq): IDENTICAL rows, wall a wash
-    // (1.75-2.84 vs 1.79-3.12 s) — the 32-partition decode checkpoint
-    // finishes too fast to hide behind the component loop at this
-    // scale, and a construction-time thread is complexity with no
-    // measured return. Sequential construction stays.
+    // eager chains are independent). Interleaved A/B vs the sequential
+    // shape (OPTIMIZATION_r19.md, "Measured and rejected"): IDENTICAL
+    // rows, wall a wash (1.75-2.84 vs 1.79-3.12 s) — the 32-partition
+    // decode checkpoint finishes too fast to hide behind the component
+    // loop at this scale, and a construction-time thread is complexity
+    // with no measured return. Sequential construction stays.
     val sig = Ckpt.eager(ahashStats(pngAssetsWithDups(spark, dir)).toDF())
     val keys = Seq("width", "height", "gray_sum", "ahash")
     val igrp = sig.join(

@@ -547,11 +547,11 @@ object Similarity {
     * EXPENSIVE edge frame must be materialized by the caller (the
     * corpus overload eagerly checkpoints its fresh knnGraph), while the
     * artifact/serving-layout callers re-scan their parquet three
-    * times — the r17 TriangleProbe measured the former blanket
-    * localCheckpoint(false) here at +47% wall on the registered key
-    * (materialize + 32-partition local-RDD rescan of a 6,000-row frame
-    * costs more than two extra columnar scans; at lake scale three
-    * column-pruned parquet scans of a 2-column artifact stay cheaper
+    * times — the r17 graph_triangles decomposition (SCALE.md r17) measured
+    * the former blanket localCheckpoint(false) here at +47% wall on the
+    * registered key (materialize + 32-partition local-RDD rescan of a
+    * 6,000-row frame costs more than two extra columnar scans; at lake scale
+    * three column-pruned parquet scans of a 2-column artifact stay cheaper
     * than one serialized local checkpoint round-trip). */
   def graphTriangles(corpus0: DataFrame, k: Int = KnnGraphK): DataFrame =
     graphTrianglesFromEdges(Ckpt.eager(knnGraph(corpus0, k)))
@@ -865,7 +865,7 @@ object Similarity {
     * rounds of broadcast+join+two-aggregates over that same ≤80-row
     * frame — pure driver-latency (~8 jobs); the collected greedy is one
     * job plus arithmetic on the driver, measured 2.2-2.7 s → 0.7 s at
-    * sf0.1 with bit-identical output at every SF (AbProbe diff:
+    * sf0.1 with bit-identical output at every SF (OPTIMIZATION_r18.md §5:
     * onlyA=0 onlyB=0 at sf0.001/0.01/0.1). */
   def mmrSelect(corpus0: DataFrame, maxQueryId: Long = 8): DataFrame = {
     def quant(c: Column): Column =

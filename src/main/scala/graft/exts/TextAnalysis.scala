@@ -1120,7 +1120,7 @@ object TextAnalysis {
     * algorithm); `localCheckpoint` truncates the lineage each round so
     * round r costs one corpus pass, not 2^r.
     *
-    * r19 restructure (values identical, AbProbe diff + oracle): the
+    * r19 restructure (values identical, OPTIMIZATION_r19.md §7): the
     * winning rule used to be a lazy-checkpointed 1-row frame consumed
     * via crossJoin(broadcast(...)) — at 6 rounds that is 6 broadcast
     * builds plus their AQE stage barriers of pure dispatch latency, and

@@ -449,7 +449,7 @@ object RelationalQueries {
         // suppliers with a late line, late_supp/n_late_items fold the
         // same way) with plain map-side-combined hash aggregates:
         // measured shuffle 8.6→3.9 MB, task time −50%, output
-        // bit-identical (AbProbe diff).
+        // bit-identical (OPTIMIZATION_r18.md §8).
         val perSupp = li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("l_orderkey"), col("l_suppkey"))
           .agg(max(when(late, 1L).otherwise(0L)).as("has_late"),

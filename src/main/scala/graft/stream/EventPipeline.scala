@@ -56,11 +56,6 @@ object EventPipeline {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Snapshot-log derivation from a (batch or micro-batch) events frame —
-    * shared with the batch path (single source of the FIXTURES.md §3 rule). */
-  def snapshotLogFrom(events: DataFrame): DataFrame =
-    graft.ops.EventOps.snapshotLogFrom(events)
-
   /** Open the events parquet as a file stream (the file-stream source needs
     * a directory, so glob-filter the events file inside the sf dir). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
@@ -145,7 +140,7 @@ object EventPipeline {
       cfg: EngineConfig): Dataset[TableDecision] = {
     val spark = events.sparkSession
     import spark.implicits._
-    snapshotLogFrom(events)
+    graft.ops.EventOps.snapshotLogFrom(events)
       .select(
         col("table_id").as("tableId"),
         col("snapshot_id").as("snapshotId"),

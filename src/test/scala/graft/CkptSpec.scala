@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withTempDir
 import graft.exts.{Ckpt, Dedup}
 
 /** The materialization-policy seam (r18 verdict #7): reliable
@@ -19,23 +20,19 @@ class CkptSpec extends AnyFunSuite {
     val overlapBase = Dedup.sourceOverlap(
         Tables.load(spark, dir, "documents").select(col("source"), col("text")))
       .collect().map(_.toString).toSet
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
-    spark.conf.set(Ckpt.ReliableConf, "true")
-    try {
-      val rel = Dedup.ngramJaccardPairs(Dedup.corpusWithNearDups(spark, dir))
-        .collect().map(_.toString).toSet
-      assert(rel === base)
-      val overlapRel = Dedup.sourceOverlap(
-          Tables.load(spark, dir, "documents")
-            .select(col("source"), col("text")))
-        .collect().map(_.toString).toSet
-      assert(overlapRel === overlapBase)
-    } finally {
-      spark.conf.unset(Ckpt.ReliableConf)
-      // best-effort cleanup of the reliable-checkpoint files
-      scala.reflect.io.Path(new java.io.File(ckptDir)).deleteRecursively()
+    withTempDir("ckpt") { ckptDir =>
+      spark.sparkContext.setCheckpointDir(ckptDir)
+      spark.conf.set(Ckpt.ReliableConf, "true")
+      try {
+        val rel = Dedup.ngramJaccardPairs(Dedup.corpusWithNearDups(spark, dir))
+          .collect().map(_.toString).toSet
+        assert(rel === base)
+        val overlapRel = Dedup.sourceOverlap(
+            Tables.load(spark, dir, "documents")
+              .select(col("source"), col("text")))
+          .collect().map(_.toString).toSet
+        assert(overlapRel === overlapBase)
+      } finally spark.conf.unset(Ckpt.ReliableConf)
     }
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withTempDir
 import graft.engine.Compact
 import graft.model.FileMeta
 
@@ -26,40 +25,40 @@ class CompactSpec extends AnyFunSuite {
       .collect()(0).get(0).toString
   }
 
-  private def fragment(nFiles: Int): String = {
-    val dir = Files.createTempDirectory("graft-frag").toString
+  /** Write the fixture table into `dir` as `nFiles` small files. */
+  private def fragment(dir: String, nFiles: Int): Unit =
     spark.read.parquet(src).repartition(nFiles).write
       .mode("overwrite").parquet(dir)
-    dir
-  }
 
   test("binpack reduces file count and preserves content") {
-    val in = fragment(40)
-    val out = Files.createTempDirectory("graft-out").toString
-    val hBefore = contentHash(in)
-    val nBefore = Compact.listFiles(in).size
-    assert(nBefore >= 40)
-    val (_, nAfter) = Compact.binpack(spark, in, out)
-    assert(nAfter < nBefore)
-    assert(nAfter === 1) // ~200 kB total well under the 512 MB target
-    assert(contentHash(out) === hBefore)
+    withTempDir("frag") { in => withTempDir("out") { out =>
+      fragment(in, 40)
+      val hBefore = contentHash(in)
+      val nBefore = Compact.listFiles(in).size
+      assert(nBefore >= 40)
+      val (_, nAfter) = Compact.binpack(spark, in, out)
+      assert(nAfter < nBefore)
+      assert(nAfter === 1) // ~200 kB total well under the 512 MB target
+      assert(contentHash(out) === hBefore)
+    }}
   }
 
   test("sort rewrite clusters by sort column and preserves content") {
-    val in = fragment(16)
-    val out = Files.createTempDirectory("graft-out").toString
-    val hBefore = contentHash(in)
-    Compact.sortRewrite(spark, in, out, Seq("l_orderkey", "l_linenumber"))
-    assert(contentHash(out) === hBefore)
-    // sortedness within each output file
-    import spark.implicits._
-    val files = Compact.listFiles(out).map(_.path)
-    files.foreach { f =>
-      val keys = spark.read.parquet(f)
-        .select(col("l_orderkey"), col("l_linenumber"))
-        .as[(Long, Int)].collect().toSeq
-      assert(keys === keys.sorted, s"unsorted file $f")
-    }
+    withTempDir("frag") { in => withTempDir("out") { out =>
+      fragment(in, 16)
+      val hBefore = contentHash(in)
+      Compact.sortRewrite(spark, in, out, Seq("l_orderkey", "l_linenumber"))
+      assert(contentHash(out) === hBefore)
+      // sortedness within each output file
+      import spark.implicits._
+      val files = Compact.listFiles(out).map(_.path)
+      files.foreach { f =>
+        val keys = spark.read.parquet(f)
+          .select(col("l_orderkey"), col("l_linenumber"))
+          .as[(Long, Int)].collect().toSeq
+        assert(keys === keys.sorted, s"unsorted file $f")
+      }
+    }}
   }
 
   test("planGroups respects cap, preserves order, isolates oversized files") {
@@ -80,148 +79,162 @@ class CompactSpec extends AnyFunSuite {
     // quadrant; a plain sort on `a` leaves `b` spanning the full domain.
     val grid = for (a <- 0 until 32; b <- 0 until 32)
       yield (a, b, s"payload_${a}_$b" * 8)
-    val in = Files.createTempDirectory("graft-zin").toString
-    grid.toDF("a", "b", "payload").repartition(8).write
-      .mode("overwrite").parquet(in)
-    val hBefore = contentHash(in)
-    def spans(dir: String): Seq[(Long, Long)] =
-      Compact.listFiles(dir).map(_.path).map { f =>
-        val r = spark.read.parquet(f)
-          .agg(max(col("a")) - min(col("a")), max(col("b")) - min(col("b")))
-          .collect()(0)
-        (r.getInt(0).toLong, r.getInt(1).toLong)
+    withTempDir("zin") { in =>
+      grid.toDF("a", "b", "payload").repartition(8).write
+        .mode("overwrite").parquet(in)
+      val hBefore = contentHash(in)
+      def spans(dir: String): Seq[(Long, Long)] =
+        Compact.listFiles(dir).map(_.path).map { f =>
+          val r = spark.read.parquet(f)
+            .agg(max(col("a")) - min(col("a")), max(col("b")) - min(col("b")))
+            .collect()(0)
+          (r.getInt(0).toLong, r.getInt(1).toLong)
+        }
+      withTempDir("zout") { zOut =>
+        val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
+        Compact.zorderRewrite(spark, in, zOut, "a", "b",
+          targetBytes = totalBytes / 8 + 1) // force ~8 output files
+        assert(contentHash(zOut) === hBefore)
+        val zSpans = spans(zOut)
+        assert(zSpans.size >= 4)
+        // every z-ordered file is tight in BOTH dims (quadrant, not a slice)
+        zSpans.foreach { case (sa, sb) =>
+          assert(sa < 31 && sb < 31, s"z-file spans ($sa,$sb) not clustered")
+        }
+        // contrast: plain sort by `a` leaves b spanning the whole domain
+        withTempDir("sout") { sOut =>
+          Compact.sortRewrite(spark, in, sOut, Seq("a"),
+            targetBytes = totalBytes / 8 + 1)
+          assert(spans(sOut).forall(_._2 === 31L))
+        }
       }
-    val zOut = Files.createTempDirectory("graft-zout").toString
-    val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
-    Compact.zorderRewrite(spark, in, zOut, "a", "b",
-      targetBytes = totalBytes / 8 + 1) // force ~8 output files
-    assert(contentHash(zOut) === hBefore)
-    val zSpans = spans(zOut)
-    assert(zSpans.size >= 4)
-    // every z-ordered file is tight in BOTH dims (quadrant, not a slice)
-    zSpans.foreach { case (sa, sb) =>
-      assert(sa < 31 && sb < 31, s"z-file spans ($sa,$sb) not clustered")
     }
-    // contrast: plain sort by `a` leaves b spanning the whole domain
-    val sOut = Files.createTempDirectory("graft-sout").toString
-    Compact.sortRewrite(spark, in, sOut, Seq("a"),
-      targetBytes = totalBytes / 8 + 1)
-    assert(spans(sOut).forall(_._2 === 31L))
   }
 
   test("zorder rewrite falls back to plain sort when stats are absent") {
     // all-null cluster column: no min/max stats → lexicographic sort
     // fallback, not an NPE
-    val in = Files.createTempDirectory("graft-znull").toString
-    spark.range(100)
-      .select(lit(null).cast("int").as("a"), col("id").cast("int").as("b"))
-      .repartition(4).write.mode("overwrite").parquet(in)
-    val out = Files.createTempDirectory("graft-zout").toString
-    val (_, after) = Compact.zorderRewrite(spark, in, out, "a", "b")
-    assert(after >= 1)
-    assert(spark.read.parquet(out).count() === 100L)
-    // empty input: zero rows, still no NPE
-    val emptyIn = Files.createTempDirectory("graft-zempty").toString
-    spark.range(0)
-      .select(col("id").cast("int").as("a"), col("id").cast("int").as("b"))
-      .write.mode("overwrite").parquet(emptyIn)
-    val emptyOut = Files.createTempDirectory("graft-zeout").toString
-    Compact.zorderRewrite(spark, emptyIn, emptyOut, "a", "b")
-    assert(spark.read.parquet(emptyOut).count() === 0L)
+    withTempDir("znull") { in =>
+      spark.range(100)
+        .select(lit(null).cast("int").as("a"), col("id").cast("int").as("b"))
+        .repartition(4).write.mode("overwrite").parquet(in)
+      withTempDir("zout") { out =>
+        val (_, after) = Compact.zorderRewrite(spark, in, out, "a", "b")
+        assert(after >= 1)
+        assert(spark.read.parquet(out).count() === 100L)
+        // empty input: zero rows, still no NPE
+        withTempDir("zempty") { emptyIn =>
+          spark.range(0)
+            .select(col("id").cast("int").as("a"),
+              col("id").cast("int").as("b"))
+            .write.mode("overwrite").parquet(emptyIn)
+          withTempDir("zeout") { emptyOut =>
+            Compact.zorderRewrite(spark, emptyIn, emptyOut, "a", "b")
+            assert(spark.read.parquet(emptyOut).count() === 0L)
+          }
+        }
+      }
+    }
   }
 
   test("partial progress emits one replace commit per group, content intact") {
-    val in = fragment(12)
-    val out = Files.createTempDirectory("graft-out").toString
-    val hBefore = contentHash(in)
-    val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
-    val cap = totalBytes / 3 // force ~4 groups
-    val commits = Compact.partialProgress(spark, in, out,
-      tableId = 7L, capBytes = cap, nowMs = 1000L)
-    assert(commits.size >= 3)
-    assert(commits.forall(_.operation === "replace"))
-    assert(commits.forall(_.tableId === 7L))
-    assert(commits.map(_.snapshotId) === commits.indices.map(_.toLong))
-    assert(contentHash(out) === hBefore)
+    withTempDir("frag") { in => withTempDir("out") { out =>
+      fragment(in, 12)
+      val hBefore = contentHash(in)
+      val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
+      val cap = totalBytes / 3 // force ~4 groups
+      val commits = Compact.partialProgress(spark, in, out,
+        tableId = 7L, capBytes = cap, nowMs = 1000L)
+      assert(commits.size >= 3)
+      assert(commits.forall(_.operation === "replace"))
+      assert(commits.forall(_.tableId === 7L))
+      assert(commits.map(_.snapshotId) === commits.indices.map(_.toLong))
+      assert(contentHash(out) === hBefore)
+    }}
   }
 
   test("partial progress survives a mid-run kill: exactly groups < i committed") {
-    val in = fragment(12)
-    val out = Files.createTempDirectory("graft-kill").toString
-    val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
-    val cap = totalBytes / 3 // ~4 groups
-    val nGroups = Compact.planGroups(Compact.listFiles(in), cap).size
-    assert(nGroups >= 3)
-    val killAt = 2
-    val committed = Seq.newBuilder[graft.model.SnapshotMeta]
-    val boom = intercept[RuntimeException] {
-      Compact.partialProgress(spark, in, out, tableId = 9L, capBytes = cap,
-        nowMs = 5000L,
-        onCommit = committed += _,
-        beforeGroup = i => if (i == killAt) throw new RuntimeException("kill"))
-    }
-    assert(boom.getMessage === "kill")
-    // exactly the groups before the kill are committed...
-    val commits = committed.result()
-    assert(commits.map(_.snapshotId) === (0 until killAt).map(_.toLong))
-    assert(commits.forall(_.operation === "replace"))
-    // ...and exactly their output is visible on disk; the killed group and
-    // everything after left no partial output behind
-    val visible = Compact.listFiles(out).map(_.path)
-      .flatMap(p => "group=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toInt))
-      .distinct.sorted
-    assert(visible === (0 until killAt))
-    // committed groups' data is complete: re-reading them matches the
-    // planned groups' source rows exactly
-    val plannedGroups = Compact.planGroups(Compact.listFiles(in), cap)
-    val expectRows = plannedGroups.take(killAt).flatten.map(_.path)
-    val expected = spark.read.parquet(expectRows: _*).count()
-    assert(spark.read.parquet(Compact.listFiles(out).map(_.path): _*)
-      .count() === expected)
+    withTempDir("frag") { in => withTempDir("kill") { out =>
+      fragment(in, 12)
+      val totalBytes = Compact.listFiles(in).map(_.sizeBytes).sum
+      val cap = totalBytes / 3 // ~4 groups
+      val nGroups = Compact.planGroups(Compact.listFiles(in), cap).size
+      assert(nGroups >= 3)
+      val killAt = 2
+      val committed = Seq.newBuilder[graft.model.SnapshotMeta]
+      val boom = intercept[RuntimeException] {
+        Compact.partialProgress(spark, in, out, tableId = 9L, capBytes = cap,
+          nowMs = 5000L,
+          onCommit = committed += _,
+          beforeGroup = i =>
+            if (i == killAt) throw new RuntimeException("kill"))
+      }
+      assert(boom.getMessage === "kill")
+      // exactly the groups before the kill are committed...
+      val commits = committed.result()
+      assert(commits.map(_.snapshotId) === (0 until killAt).map(_.toLong))
+      assert(commits.forall(_.operation === "replace"))
+      // ...and exactly their output is visible on disk; the killed group and
+      // everything after left no partial output behind
+      val visible = Compact.listFiles(out).map(_.path)
+        .flatMap(p =>
+          "group=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toInt))
+        .distinct.sorted
+      assert(visible === (0 until killAt))
+      // committed groups' data is complete: re-reading them matches the
+      // planned groups' source rows exactly
+      val plannedGroups = Compact.planGroups(Compact.listFiles(in), cap)
+      val expectRows = plannedGroups.take(killAt).flatten.map(_.path)
+      val expected = spark.read.parquet(expectRows: _*).count()
+      assert(spark.read.parquet(Compact.listFiles(out).map(_.path): _*)
+        .count() === expected)
+    }}
   }
 
   test("orphan sweep: dry-run lists, real run deletes exactly the aged orphans") {
-    val dir = fragment(4)
-    val rowsBefore = spark.read.parquet(dir).count()
-    val junk1 = java.nio.file.Paths.get(dir, "stray-upload.bin")
-    val junk2 = java.nio.file.Paths.get(dir, "abandoned.orphan")
-    java.nio.file.Files.write(junk1, Array[Byte](1, 2, 3))
-    java.nio.file.Files.write(junk2, Array[Byte](4, 5))
-    // a file inside a hidden staging dir is never a candidate, even
-    // though its own leaf name is unhidden
-    val staging = java.nio.file.Paths.get(dir, ".staging")
-    java.nio.file.Files.createDirectory(staging)
-    val inflight = staging.resolve("part-inflight.parquet")
-    java.nio.file.Files.write(inflight, Array[Byte](9))
-    val referenced = Compact.listFiles(dir).map(_.path)
-      .filterNot(_.contains(".staging")).toSet
-    assert(referenced.size === 4)
-    // dry-run: both orphans reported, NOTHING deleted (markers excluded)
-    val dry = Compact.removeOrphans(dir, referenced, Long.MaxValue)
-    assert(dry.map(_._1).toSet ===
-      Set(junk1.toString, junk2.toString))
-    assert(dry.forall(!_._3))
-    assert(java.nio.file.Files.exists(junk1) &&
-      java.nio.file.Files.exists(junk2))
-    // older_than guard: a cutoff before the files' mtimes deletes nothing
-    val guarded = Compact.removeOrphans(dir, referenced, 0L,
-      dryRun = false)
-    assert(guarded.isEmpty && java.nio.file.Files.exists(junk1))
-    // real run: exactly the orphans go; the table survives intact
-    val swept = Compact.removeOrphans(dir, referenced, Long.MaxValue,
-      dryRun = false)
-    assert(swept.map(t => (t._1, t._3)).toSet ===
-      Set((junk1.toString, true), (junk2.toString, true)))
-    assert(!java.nio.file.Files.exists(junk1) &&
-      !java.nio.file.Files.exists(junk2))
-    assert(java.nio.file.Files.exists(inflight),
-      "hidden-dir contents must survive every sweep")
-    assert(Compact.listFiles(dir).map(_.path)
-      .filterNot(_.contains(".staging")).toSet === referenced)
-    assert(spark.read.parquet(dir).count() === rowsBefore)
-    // idempotent: nothing left to sweep
-    assert(Compact.removeOrphans(dir, referenced, Long.MaxValue,
-      dryRun = false).isEmpty)
+    withTempDir("frag") { dir =>
+      fragment(dir, 4)
+      val rowsBefore = spark.read.parquet(dir).count()
+      val junk1 = java.nio.file.Paths.get(dir, "stray-upload.bin")
+      val junk2 = java.nio.file.Paths.get(dir, "abandoned.orphan")
+      java.nio.file.Files.write(junk1, Array[Byte](1, 2, 3))
+      java.nio.file.Files.write(junk2, Array[Byte](4, 5))
+      // a file inside a hidden staging dir is never a candidate, even
+      // though its own leaf name is unhidden
+      val staging = java.nio.file.Paths.get(dir, ".staging")
+      java.nio.file.Files.createDirectory(staging)
+      val inflight = staging.resolve("part-inflight.parquet")
+      java.nio.file.Files.write(inflight, Array[Byte](9))
+      val referenced = Compact.listFiles(dir).map(_.path)
+        .filterNot(_.contains(".staging")).toSet
+      assert(referenced.size === 4)
+      // dry-run: both orphans reported, NOTHING deleted (markers excluded)
+      val dry = Compact.removeOrphans(dir, referenced, Long.MaxValue)
+      assert(dry.map(_._1).toSet ===
+        Set(junk1.toString, junk2.toString))
+      assert(dry.forall(!_._3))
+      assert(java.nio.file.Files.exists(junk1) &&
+        java.nio.file.Files.exists(junk2))
+      // older_than guard: a cutoff before the files' mtimes deletes nothing
+      val guarded = Compact.removeOrphans(dir, referenced, 0L,
+        dryRun = false)
+      assert(guarded.isEmpty && java.nio.file.Files.exists(junk1))
+      // real run: exactly the orphans go; the table survives intact
+      val swept = Compact.removeOrphans(dir, referenced, Long.MaxValue,
+        dryRun = false)
+      assert(swept.map(t => (t._1, t._3)).toSet ===
+        Set((junk1.toString, true), (junk2.toString, true)))
+      assert(!java.nio.file.Files.exists(junk1) &&
+        !java.nio.file.Files.exists(junk2))
+      assert(java.nio.file.Files.exists(inflight),
+        "hidden-dir contents must survive every sweep")
+      assert(Compact.listFiles(dir).map(_.path)
+        .filterNot(_.contains(".staging")).toSet === referenced)
+      assert(spark.read.parquet(dir).count() === rowsBefore)
+      // idempotent: nothing left to sweep
+      assert(Compact.removeOrphans(dir, referenced, Long.MaxValue,
+        dryRun = false).isEmpty)
+    }
   }
 
   test("CompactionSpec dispatch: sort strategy requires sort order") {
@@ -255,23 +268,25 @@ class CompactSpec extends AnyFunSuite {
     val rows = Seq[(Option[Int], Option[Int])](
       (Some(1), Some(10)), (Some(1), Some(20)), (None, Some(5)),
       (Some(2), Some(30)), (Some(2), None), (Some(1), None), (Some(3), Some(1)))
-    val in = Files.createTempDirectory("graft-mixin").toString
-    rows.toDF("a", "b").repartition(4).write.mode("overwrite").parquet(in)
-    val out = Files.createTempDirectory("graft-mixout").toString
-    Compact.run(spark,
-      graft.model.CompactionSpec("t", "sort", Map.empty,
-        Some("a DESC NULLS LAST, b ASC NULLS LAST")),
-      in, out)
-    // single output file (tiny input): its row order IS the sort order
-    val got = spark.read.parquet(Compact.listFiles(out).map(_.path): _*)
-      .collect().map(r =>
-        (Option(r.get(0)).map(_.asInstanceOf[Int]),
-         Option(r.get(1)).map(_.asInstanceOf[Int]))).toSeq
-    val expected = Seq(
-      (Some(3), Some(1)),
-      (Some(2), Some(30)), (Some(2), None),
-      (Some(1), Some(10)), (Some(1), Some(20)), (Some(1), None),
-      (None, Some(5)))
-    assert(got === expected)
+    withTempDir("mixin") { in =>
+      rows.toDF("a", "b").repartition(4).write.mode("overwrite").parquet(in)
+      withTempDir("mixout") { out =>
+        Compact.run(spark,
+          graft.model.CompactionSpec("t", "sort", Map.empty,
+            Some("a DESC NULLS LAST, b ASC NULLS LAST")),
+          in, out)
+        // single output file (tiny input): its row order IS the sort order
+        val got = spark.read.parquet(Compact.listFiles(out).map(_.path): _*)
+          .collect().map(r =>
+            (Option(r.get(0)).map(_.asInstanceOf[Int]),
+             Option(r.get(1)).map(_.asInstanceOf[Int]))).toSeq
+        val expected = Seq(
+          (Some(3), Some(1)),
+          (Some(2), Some(30)), (Some(2), None),
+          (Some(1), Some(10)), (Some(1), Some(20)), (Some(1), None),
+          (None, Some(5)))
+        assert(got === expected)
+      }
+    }
   }
 }

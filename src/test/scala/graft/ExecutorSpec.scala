@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withTempDir
 import graft.engine.{Compact, DryRunExecutor, Executors, JobStateLog, LocalSparkExecutor}
 import graft.model.JobRun
 
@@ -13,41 +12,40 @@ import graft.model.JobRun
 class ExecutorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fragmented(): String = {
-    val dir = Files.createTempDirectory("graft-exec-in").toString
+  private def fragmented(dir: String): Unit =
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .repartition(8).write.mode("overwrite").parquet(dir)
-    dir
-  }
 
   test("synchronous local executor runs compaction to SUCCEEDED") {
     val log = new JobStateLog
-    val in = fragmented()
-    val out = Files.createTempDirectory("graft-exec-out").toString
-    val ex = new LocalSparkExecutor(spark, log)
-    ex.initialize("db.t", Map(
-      "optimize-data.synchronous-enabled" -> "true",
-      "optimize-data.sleep-wait-ms" -> "50",
-      "local.input-dir" -> in,
-      "local.output-dir" -> out))
-    val jobId = ex.execute()
-    assert(log.currentState(jobId) === Some("SUCCEEDED"))
-    assert(Compact.listFiles(out).nonEmpty)
-    assert(spark.read.parquet(out).count() ===
-      spark.read.parquet(in).count())
+    withTempDir("exec-in") { in => withTempDir("exec-out") { out =>
+      fragmented(in)
+      val ex = new LocalSparkExecutor(spark, log)
+      ex.initialize("db.t", Map(
+        "optimize-data.synchronous-enabled" -> "true",
+        "optimize-data.sleep-wait-ms" -> "50",
+        "local.input-dir" -> in,
+        "local.output-dir" -> out))
+      val jobId = ex.execute()
+      assert(log.currentState(jobId) === Some("SUCCEEDED"))
+      assert(Compact.listFiles(out).nonEmpty)
+      assert(spark.read.parquet(out).count() ===
+        spark.read.parquet(in).count())
+    }}
   }
 
   test("async local executor returns immediately; poll reaches terminal") {
     val log = new JobStateLog
-    val in = fragmented()
-    val out = Files.createTempDirectory("graft-exec-out").toString
-    val ex = new LocalSparkExecutor(spark, log)
-    ex.initialize("db.t2", Map(
-      "local.input-dir" -> in, "local.output-dir" -> out))
-    val jobId = ex.execute()
-    // fire-and-forget default (synchronous-enabled=false): poll explicitly
-    val state = Executors.waitForCompletion(log, jobId, sleepWaitMs = 20)
-    assert(state === "SUCCEEDED")
+    withTempDir("exec-in") { in => withTempDir("exec-out") { out =>
+      fragmented(in)
+      val ex = new LocalSparkExecutor(spark, log)
+      ex.initialize("db.t2", Map(
+        "local.input-dir" -> in, "local.output-dir" -> out))
+      val jobId = ex.execute()
+      // fire-and-forget default (synchronous-enabled=false): poll explicitly
+      val state = Executors.waitForCompletion(log, jobId, sleepWaitMs = 20)
+      assert(state === "SUCCEEDED")
+    }}
   }
 
   test("poll loop times out if a job never reaches a terminal state") {

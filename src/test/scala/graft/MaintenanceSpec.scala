@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withTempDir
 import graft.engine.{Compact, Maintenance}
 import graft.model.{EngineConfig, SnapshotMeta}
 import graft.ops.Decide
@@ -16,12 +15,9 @@ class MaintenanceSpec extends AnyFunSuite {
   private val now = Decide.NowMs
   private val hour = 3600000L
 
-  private def fragmented(n: Int): String = {
-    val dir = Files.createTempDirectory("graft-maint").toString
+  private def fragmented(dir: String, n: Int): Unit =
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .repartition(n).write.mode("overwrite").parquet(dir)
-    dir
-  }
 
   test("maintenance budget: selection is a prefix of the benefit order") {
     import graft.ops.FilePlan
@@ -50,37 +46,39 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("triggered table compacts, commits replace, and quiesces next cycle") {
-    val in1 = fragmented(20)
-    val out1 = Files.createTempDirectory("graft-maint-out").toString
-    val tables = Map(
-      1L -> Maintenance.TableDirs(in1, out1),
-      2L -> Maintenance.TableDirs(in1, out1)) // t2 never triggers; unused
-    // t1: 12 stale appends (both thresholds crossed); t2: 2 fresh appends
-    val log =
-      (1 to 12).map(i => SnapshotMeta(1L, i.toLong, now - 5 * hour + i, "append")) ++
-        Seq(SnapshotMeta(2L, 100L, now - 60000, "append"),
-          SnapshotMeta(2L, 101L, now - 30000, "append"))
+    withTempDir("maint") { in1 => withTempDir("maint-out") { out1 =>
+      fragmented(in1, 20)
+      val tables = Map(
+        1L -> Maintenance.TableDirs(in1, out1),
+        2L -> Maintenance.TableDirs(in1, out1)) // t2 never triggers; unused
+      // t1: 12 stale appends (both thresholds crossed); t2: 2 fresh appends
+      val log =
+        (1 to 12).map(i =>
+          SnapshotMeta(1L, i.toLong, now - 5 * hour + i, "append")) ++
+          Seq(SnapshotMeta(2L, 100L, now - 60000, "append"),
+            SnapshotMeta(2L, 101L, now - 30000, "append"))
 
-    val c1 = Maintenance.cycle(spark, log, tables, cfg)
-    assert(c1.triggered === Seq(1L))
-    assert(c1.jobIds.size === 1)
-    // compaction shrank the fragmented table, content preserved
-    assert(Compact.listFiles(out1).size < 20)
-    assert(spark.read.parquet(out1).count() ===
-      spark.read.parquet(in1).count())
-    // the log gained exactly one replace commit for t1
-    val replaces = c1.log.filter(_.operation == "replace")
-    assert(replaces.map(_.tableId) === Seq(1L))
+      val c1 = Maintenance.cycle(spark, log, tables, cfg)
+      assert(c1.triggered === Seq(1L))
+      assert(c1.jobIds.size === 1)
+      // compaction shrank the fragmented table, content preserved
+      assert(Compact.listFiles(out1).size < 20)
+      assert(spark.read.parquet(out1).count() ===
+        spark.read.parquet(in1).count())
+      // the log gained exactly one replace commit for t1
+      val replaces = c1.log.filter(_.operation == "replace")
+      assert(replaces.map(_.tableId) === Seq(1L))
 
-    // next cycle: nothing newer than the replace for t1, t2 still quiet
-    val c2 = Maintenance.cycle(spark, c1.log, tables, cfg)
-    assert(c2.triggered.isEmpty)
-    assert(c2.log === c1.log)
+      // next cycle: nothing newer than the replace for t1, t2 still quiet
+      val c2 = Maintenance.cycle(spark, c1.log, tables, cfg)
+      assert(c2.triggered.isEmpty)
+      assert(c2.log === c1.log)
 
-    // new stale activity after the replace re-triggers t1 (by count)
-    val moreCommits = (1 to 10).map(i =>
-      SnapshotMeta(1L, 200L + i, now + i, "append"))
-    val c3 = Maintenance.cycle(spark, c1.log ++ moreCommits, tables, cfg)
-    assert(c3.triggered === Seq(1L))
+      // new stale activity after the replace re-triggers t1 (by count)
+      val moreCommits = (1 to 10).map(i =>
+        SnapshotMeta(1L, 200L + i, now + i, "append"))
+      val c3 = Maintenance.cycle(spark, c1.log ++ moreCommits, tables, cfg)
+      assert(c3.triggered === Seq(1L))
+    }}
   }
 }

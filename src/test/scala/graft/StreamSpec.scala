@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.commons.io.FileUtils
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.Row
@@ -13,6 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withTempDir
 import graft.engine.{DryRunExecutor, JobStateLog}
 import graft.model.{EngineConfig, Fixture}
 import graft.ops.{Decide, EventOps}
@@ -24,12 +24,6 @@ class StreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
   private val cfg = EngineConfig()
-
-  /** A fresh `graft-<prefix>*` temp dir for `body`, removed afterwards. */
-  private def withTempDir[A](prefix: String)(body: String => A): A = {
-    val d = Files.createTempDirectory(s"graft-$prefix")
-    try body(d.toString) finally FileUtils.deleteDirectory(d.toFile)
-  }
 
   /** One event row in `EventPipeline.eventSchema` order. */
   private type Ev = (Long, Long, Long, String, Double, String)
@@ -64,7 +58,7 @@ class StreamSpec extends AnyFunSuite {
     * DuckDB-gated `should_optimize` key) over every event in `events`. */
   private def rescan(events: Seq[Ev]) = {
     import spark.implicits._
-    tuples(Decide.shouldOptimize(EventPipeline.snapshotLogFrom(
+    tuples(Decide.shouldOptimize(EventOps.snapshotLogFrom(
       events.toDF(eventCols: _*)), cfg).collect())
   }
 

@@ -1,19 +1,17 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  lazy val spark: SparkSession = GraftSession.build(4)
+
+  /** A fresh `graft-<prefix>*` temp dir for `body`, removed afterwards. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val d = Files.createTempDirectory(s"graft-$prefix")
+    try body(d.toString) finally FileUtils.deleteDirectory(d.toFile)
   }
 }
