@@ -1,8 +1,8 @@
 package graft.engine
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeoutException}
 import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration.{Duration, MILLISECONDS}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -14,8 +14,9 @@ import graft.ops.Codegen
   * local implementations instead of AWS service calls: submit returns a job
   * id immediately, states accumulate in a [[JobStateLog]], and the
   * synchronous gate (AwsManageProperties.java:20-22) decides whether the
-  * caller blocks on the poll loop (SURVEY.md §2.1 job_poll_state,
-  * sync_async_gate).
+  * caller blocks until the job is terminal (SURVEY.md §2.1 job_poll_state,
+  * sync_async_gate). A remote engine can only be polled; the local
+  * executor awaits its own job's Future instead.
   */
 trait Executor {
   def initialize(table: String, properties: Map[String, String]): Unit
@@ -24,29 +25,42 @@ trait Executor {
 }
 
 /** Append-only job-state log: the local analog of the four remote state
-  * APIs the reference polls (GetQueryExecution / DescribeStep / ...). */
+  * APIs the reference polls (GetQueryExecution / DescribeStep / ...).
+  * Besides the full history it keeps each job's latest run, so a poll is
+  * one map lookup however long the log grows. */
 final class JobStateLog {
   private val log = new ConcurrentLinkedQueue[JobRun]()
+  private val latest = new ConcurrentHashMap[String, JobRun]()
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
-  def append(run: JobRun): Unit = log.add(run)
+  /** The latest `tsMillis` wins; on a tie, the run appended last. */
+  def append(run: JobRun): Unit = {
+    log.add(run)
+    latest.merge(run.jobId, run,
+      (old, cur) => if (cur.tsMillis >= old.tsMillis) cur else old)
+  }
   def all: Seq[JobRun] = log.iterator().asScala.toSeq
   /** Unique job sequence number (atomic — executors may share a log). */
   def nextJobSeq(): Long = seq.getAndIncrement()
   /** Latest observed state for a job, if any. */
   def currentState(jobId: String): Option[String] =
-    all.filter(_.jobId == jobId).sortBy(_.tsMillis).lastOption.map(_.state)
+    Option(latest.get(jobId)).map(_.state)
 }
 
 object Executors {
+  /** How long a synchronous caller waits for a job before giving up. */
+  val DefaultMaxWaitMs: Long = 600000L
+
   /** job_poll_state: block until the job leaves the engine's non-terminal
     * set, checking every sleepWaitMs — the loop shape of
     * AthenaOptimizeDataExecutor.java:122-155 and its three EMR siblings.
     * The per-engine machine (which states spin, which raise) comes from
     * the [[PollPolicy]]; the default is the local composite, which keeps
     * the union non-terminal set and the Athena-style raise on
-    * FAILED/CANCELLED. */
+    * FAILED/CANCELLED. [[LocalSparkExecutor]] calls it only once its job's
+    * Future is done, so for it the loop reads one terminal state and never
+    * sleeps. */
   def waitForCompletion(log: JobStateLog, jobId: String,
-      sleepWaitMs: Long, maxWaitMs: Long = 600000L,
+      sleepWaitMs: Long, maxWaitMs: Long = DefaultMaxWaitMs,
       policy: PollPolicy = PollPolicy.Local): String = {
     val deadline = System.nanoTime() + maxWaitMs * 1000000L
     def cur(): String = log.currentState(jobId).getOrElse(policy.initial)
@@ -83,13 +97,16 @@ object Executors {
 
 /** Runs the compaction as an in-process Spark action on a Future — the
   * local analog of submitting to a remote engine. `input`/`output` dirs are
-  * carried in properties (`local.input-dir` / `local.output-dir`). */
+  * carried in properties (`local.input-dir` / `local.output-dir`). A
+  * synchronous execute blocks on that Future, not on a sleep-poll, and
+  * then reads the terminal state once through the poll machine, so a
+  * FAILED job still raises. `sleep-wait-ms` paces only the remote-style
+  * poll loop. */
 final class LocalSparkExecutor(spark: SparkSession, log: JobStateLog)
     extends Executor {
   private var table: String = _
   private var cfg: EngineConfig = EngineConfig()
   private var props: Map[String, String] = Map.empty
-  @volatile private[engine] var lastJob: Option[Future[Unit]] = None
 
   override def initialize(table: String, properties: Map[String, String]): Unit = {
     this.table = table
@@ -115,15 +132,21 @@ final class LocalSparkExecutor(spark: SparkSession, log: JobStateLog)
       log.append(JobRun(jobId, "FAILED", System.currentTimeMillis()))
       throw e
     }
-    lastJob = Some(job)
-    if (cfg.synchronousEnabled)
-      Executors.waitForCompletion(log, jobId, cfg.sleepWaitMs)
+    if (cfg.synchronousEnabled) await(jobId, job)
     jobId
   }
 
-  /** Test/shutdown hook: block on the in-flight job if any. */
-  private[graft] def awaitLast(): Unit =
-    lastJob.foreach(f => Await.ready(f, Duration.Inf))
+  /** Block until the job is terminal and return its state; raises
+    * `IllegalStateException` if it FAILED or outlived
+    * `Executors.DefaultMaxWaitMs`. */
+  private def await(jobId: String, job: Future[Unit]): String = {
+    try Await.ready(job, Duration(Executors.DefaultMaxWaitMs, MILLISECONDS))
+    catch { case _: TimeoutException =>
+      throw new IllegalStateException(s"job $jobId timed out in " +
+        log.currentState(jobId).getOrElse("SUBMITTED"))
+    }
+    Executors.waitForCompletion(log, jobId, cfg.sleepWaitMs)
+  }
 }
 
 /** Athena-path analog of [[DryRunExecutor]]: emits the full

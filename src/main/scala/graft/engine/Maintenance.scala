@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.model.{EngineConfig, SnapshotMeta}
 import graft.ops.Decide
+import graft.stream.DecideAggregator
 
 /** The full maintenance loop closed end-to-end (SURVEY.md §3.1 + §4.1):
   * evaluate the decision over the snapshot log, compact triggered tables,
@@ -14,6 +15,11 @@ import graft.ops.Decide
   * AwsTableManagementMetricsEvaluator.java:93-99) holds here structurally:
   * compaction emits `replace` commits, and replace commits are cutoffs,
   * never triggers.
+  *
+  * Only the compactions touch Spark. The decision is the driver fold
+  * `DecideAggregator.decideLog` over the driver-held log (the rule the
+  * decision stream applies), and each triggered table's synchronous job
+  * is awaited on its Future, not on a sleep-poll.
   */
 object Maintenance {
 
@@ -25,15 +31,15 @@ object Maintenance {
       jobIds: Seq[String],
       log: Seq[SnapshotMeta])
 
-  /** One decision+compaction cycle over an explicit snapshot log. */
+  /** One decision+compaction cycle over an explicit snapshot log. Tables
+    * trigger, and compact one after another, in ascending `table_id`
+    * order; a failed compaction raises at once. */
   def cycle(spark: SparkSession, log: Seq[SnapshotMeta],
       tables: Map[Long, TableDirs], cfg: EngineConfig,
       nowMs: Long = Decide.NowMs): CycleResult = {
-    import spark.implicits._
-    val logDf = log.toDF("table_id", "snapshot_id", "ts_ms", "operation")
-    val decisions = Decide.shouldOptimize(logDf, cfg).collect()
-    val triggered = decisions.filter(_.getBoolean(4)).map(_.getLong(0)).toSeq
-      .filter(tables.contains)
+    val triggered = DecideAggregator.decideLog(log, cfg).collect {
+      case (t, d) if d.should_optimize && tables.contains(t) => t
+    }.toSeq.sorted
     val stateLog = new JobStateLog
     var nextSnapshotId = log.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (jobIds, newCommits) = triggered.map { tableId =>
@@ -41,7 +47,6 @@ object Maintenance {
       val ex = new LocalSparkExecutor(spark, stateLog)
       ex.initialize(s"db.tbl_$tableId", Map(
         "optimize-data.synchronous-enabled" -> "true",
-        "optimize-data.sleep-wait-ms" -> "20",
         "local.input-dir" -> dirs.inputDir,
         "local.output-dir" -> dirs.outputDir))
       val jobId = ex.execute()

@@ -60,6 +60,15 @@ object DecideAggregator {
       should_optimize = n >= cfg.commitThreshold || stale)
   }
 
+  /** The decision for every table in a driver-held log, with no Spark
+    * job: each table's rows folded through the stream's own
+    * `reduceBuf`/`finishBuf`, so the batch cycle and the decision stream
+    * apply one rule. */
+  def decideLog(log: Seq[SnapshotMeta], cfg: EngineConfig): Map[Long, Decision] =
+    log.groupBy(_.tableId).map { case (t, rows) =>
+      t -> finishBuf(rows.foldLeft(zeroBuf)(reduceBuf), cfg)
+    }
+
   def apply(cfg: EngineConfig): Aggregator[SnapshotMeta, DecideBuf, Decision] =
     new Aggregator[SnapshotMeta, DecideBuf, Decision] {
       override def zero: DecideBuf = zeroBuf

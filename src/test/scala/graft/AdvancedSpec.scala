@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +8,7 @@ import graft.sources.PartitionedStore
 
 /** Approximate-sketch accuracy, salted-join equivalence, and partitioned
   * layout pruning. */
-class AdvancedSpec extends AnyFunSuite {
+class AdvancedSpec extends AnyFunSuite with TestTempDirs {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -102,7 +100,7 @@ class AdvancedSpec extends AnyFunSuite {
   }
 
   test("partitioned write lays out key=value dirs and prunes on read") {
-    val out = Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part")
     PartitionedStore.writeEventsByDay(spark, dir, out)
     val days = new java.io.File(out).listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("event_date="))

@@ -8,7 +8,7 @@ import graft.exts.{ArtifactStore, KnnIndex, Similarity}
   * identity, atomic publish, scoped eviction) and the kNN-graph artifact
   * built on it (artifact == inline rebuild; consumers provably READ the
   * artifact rather than silently rebuilding). */
-class ArtifactStoreSpec extends AnyFunSuite {
+class ArtifactStoreSpec extends AnyFunSuite with TestTempDirs {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -129,8 +129,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl",
       classOf[graft.stream.GraftTestFs].getName)
     val conf = ArtifactStore.RootConf
-    val base = java.nio.file.Files
-      .createTempDirectory("store-graftfs").toString
+    val base = tempDir("store-graftfs")
     try {
       spark.conf.set(conf, s"graftfs://$base/indexes")
       var builds = 0
@@ -174,8 +173,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     GraftHostileFs.failDstSuffix = None
     GraftHostileFs.failMode = "between"
     val conf = ArtifactStore.RootConf
-    val base = java.nio.file.Files
-      .createTempDirectory("store-hostile").toString
+    val base = tempDir("store-hostile")
     try {
       spark.conf.set(conf, s"hostilefs://$base/indexes")
       spark.conf.set(ArtifactStore.PublishWaitConf, "400")
@@ -229,8 +227,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     GraftHostileFs.failDstSuffix = None
     GraftHostileFs.failMode = "between"
     val conf = ArtifactStore.RootConf
-    val base = java.nio.file.Files
-      .createTempDirectory("store-race").toString
+    val base = tempDir("store-race")
     try {
       spark.conf.set(conf, s"hostilefs://$base/indexes")
       spark.conf.set(ArtifactStore.PublishWaitConf, "20000")
@@ -295,8 +292,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
   /** Swap a doctored frame into a committed artifact's sub-parquet. */
   private def swapIn(df: org.apache.spark.sql.DataFrame,
       artifactDir: String, sub: String): Unit = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("store-doctor").toString
+    val tmp = tempDir("store-doctor")
     df.write.parquet(s"$tmp/$sub")
     val fs = java.nio.file.Paths.get(artifactDir, sub)
     import scala.jdk.CollectionConverters._
@@ -472,8 +468,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       .withColumn("cluster_size",
         when(col("component") === someComp,
           col("cluster_size") + 1000L).otherwise(col("cluster_size")))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("knn-comp-doctored").toString
+    val tmp = tempDir("knn-comp-doctored")
     doctored.write.parquet(s"$tmp/components")
     val fs = java.nio.file.Paths.get(path, "components")
     import scala.jdk.CollectionConverters._
@@ -534,8 +529,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.when(
           col("src_id") === untouchedSrc, col("rank") + 100)
           .otherwise(col("rank")))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("knn-inc-doctored").toString
+    val tmp = tempDir("knn-inc-doctored")
     doctored.write.parquet(s"$tmp/edges")
     val fs = java.nio.file.Paths.get(path, "edges")
     import scala.jdk.CollectionConverters._
@@ -565,8 +559,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val path = KnnIndex.path(spark, dir)
     val doctored = KnnIndex.load(spark, path)
       .withColumn("mutual", org.apache.spark.sql.functions.lit(0L))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("knn-doctored").toString
+    val tmp = tempDir("knn-doctored")
     doctored.write.mode("overwrite").parquet(s"$tmp/edges")
     // swap the doctored edges INTO the committed artifact
     val fs = java.nio.file.Paths.get(path, "edges")
@@ -616,8 +609,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val path = MediaIndex.path(spark, dir)
     val doctored = MediaIndex.load(spark, path)
       .filter(col("modality") =!= "img")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("media-doctored").toString
+    val tmp = tempDir("media-doctored")
     doctored.write.parquet(s"$tmp/pairs")
     val fs = java.nio.file.Paths.get(path, "pairs")
     import scala.jdk.CollectionConverters._

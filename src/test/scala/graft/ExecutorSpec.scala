@@ -34,6 +34,38 @@ class ExecutorSpec extends AnyFunSuite {
     }}
   }
 
+  test("synchronous local executor returns on its job's Future, not a sleep tick") {
+    val log = new JobStateLog
+    withTempDir("exec-in") { in => withTempDir("exec-out") { out =>
+      fragmented(in)
+      val ex = new LocalSparkExecutor(spark, log)
+      ex.initialize("db.t", Map(
+        "optimize-data.synchronous-enabled" -> "true",
+        "optimize-data.sleep-wait-ms" -> "120000",
+        "local.input-dir" -> in,
+        "local.output-dir" -> out))
+      val t0 = System.nanoTime()
+      val jobId = ex.execute()
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 60000, s"synchronous execute took $ms ms")
+      assert(log.currentState(jobId) === Some("SUCCEEDED"))
+    }}
+  }
+
+  test("synchronous job on a missing input dir raises and logs FAILED") {
+    val log = new JobStateLog
+    withTempDir("exec-out") { out =>
+      val ex = new LocalSparkExecutor(spark, log)
+      ex.initialize("db.t", Map(
+        "optimize-data.synchronous-enabled" -> "true",
+        "local.input-dir" -> s"$out/missing",
+        "local.output-dir" -> s"$out/rewritten"))
+      intercept[IllegalStateException] { ex.execute() }
+      val jobId = log.all.head.jobId
+      assert(log.currentState(jobId) === Some("FAILED"))
+    }
+  }
+
   test("async local executor returns immediately; poll reaches terminal") {
     val log = new JobStateLog
     withTempDir("exec-in") { in => withTempDir("exec-out") { out =>
@@ -66,6 +98,22 @@ class ExecutorSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Executors.waitForCompletion(log, "j1", sleepWaitMs = 1)
     }
+  }
+
+  test("latest-state index equals filter + sort on out-of-order and tied appends") {
+    val rnd = new scala.util.Random(11)
+    val states = Seq("SUBMITTED", "RUNNING", "SUCCEEDED", "FAILED")
+    val log = new JobStateLog
+    (1 to 400).foreach { _ =>
+      log.append(JobRun(s"j${rnd.nextInt(8)}", states(rnd.nextInt(4)),
+        rnd.nextInt(20).toLong))
+    }
+    (0 until 8).map(i => s"j$i").foreach { id =>
+      val oracle = log.all.filter(_.jobId == id).sortBy(_.tsMillis)
+        .lastOption.map(_.state)
+      assert(log.currentState(id) === oracle, id)
+    }
+    assert(log.currentState("absent") === None)
   }
 
   test("missing mandatory dirs rejected (required_prop_check)") {

@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Formats
 
 /** CSV / JSON-lines round-trips with explicit schemas. */
-class FormatsSpec extends AnyFunSuite {
+class FormatsSpec extends AnyFunSuite with TestTempDirs {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -18,7 +16,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("CSV round-trip preserves schema and content") {
     val src = Tables.load(spark, dir, "lineitem")
-    val out = Files.createTempDirectory("graft-csv").toString
+    val out = tempDir("graft-csv")
     Formats.writeCsv(src, out)
     val back = Formats.readCsv(spark, out, src.schema)
     assert(back.schema === src.schema)
@@ -28,7 +26,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("ORC round-trip preserves schema and content") {
     val src = Tables.load(spark, dir, "orders")
-    val out = Files.createTempDirectory("graft-orc").toString
+    val out = tempDir("graft-orc")
     Formats.writeOrc(src, out)
     val back = Formats.readOrc(spark, out, src.schema)
     assert(back.schema === src.schema)
@@ -37,7 +35,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("JSON-lines round-trip preserves schema and content") {
     val src = Tables.load(spark, dir, "orders")
-    val out = Files.createTempDirectory("graft-json").toString
+    val out = tempDir("graft-json")
     Formats.writeJsonLines(src, out)
     val back = Formats.readJsonLines(spark, out, src.schema)
     assert(back.schema === src.schema)

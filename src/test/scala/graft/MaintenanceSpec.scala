@@ -15,9 +15,10 @@ class MaintenanceSpec extends AnyFunSuite {
   private val now = Decide.NowMs
   private val hour = 3600000L
 
-  private def fragmented(dir: String, n: Int): Unit =
+  /** `n` parquet files holding the first `rows` lineitem rows. */
+  private def fragmented(dir: String, n: Int, rows: Int = Int.MaxValue): Unit =
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .repartition(n).write.mode("overwrite").parquet(dir)
+      .limit(rows).repartition(n).write.mode("overwrite").parquet(dir)
 
   test("maintenance budget: selection is a prefix of the benefit order") {
     import graft.ops.FilePlan
@@ -80,5 +81,54 @@ class MaintenanceSpec extends AnyFunSuite {
       val c3 = Maintenance.cycle(spark, c1.log ++ moreCommits, tables, cfg)
       assert(c3.triggered === Seq(1L))
     }}
+  }
+
+  test("cycle triggers exactly the tables the windowed decision marks") {
+    import spark.implicits._
+    withTempDir("maint-prop") { root =>
+      val in = s"$root/in"
+      fragmented(in, 2, rows = 50)
+      (1 to 3).foreach { seed =>
+        val log = RandomLogs(seed)
+        // a third of the log's tables and one absent table are managed
+        val managed = (log.map(_.tableId).distinct.filter(_ % 3 != 2) :+ 99L)
+          .map(t => t -> Maintenance.TableDirs(in, s"$root/out-$seed/t$t"))
+          .toMap
+        val oracle = Decide.shouldOptimize(
+            log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
+          .collect().filter(_.getBoolean(4)).map(_.getLong(0)).toSet
+        val c = Maintenance.cycle(spark, log, managed, cfg)
+        assert(c.triggered.toSet === oracle.intersect(managed.keySet),
+          s"seed $seed")
+        assert(c.triggered === c.triggered.sorted)
+        assert(c.triggered.nonEmpty && managed.size > c.triggered.size + 1,
+          s"seed $seed should both trigger and not trigger")
+        assert(c.log.drop(log.size).map(_.tableId) === c.triggered)
+      }
+    }
+  }
+
+  test("three triggered tables all compact; ids follow table_id order") {
+    withTempDir("maint-three") { root =>
+      val rows = Map(7L -> 300, 3L -> 100, 5L -> 200)
+      val tables = rows.map { case (t, n) =>
+        fragmented(s"$root/in$t", 6, rows = n)
+        t -> Maintenance.TableDirs(s"$root/in$t", s"$root/out$t")
+      }
+      // 12 stale appends per table, interleaved, newest table first
+      val log = (1 to 12).flatMap(i => Seq(7L, 3L, 5L).map(t =>
+        SnapshotMeta(t, t * 100 + i, now - 5 * hour + i, "append")))
+      val c = Maintenance.cycle(spark, log, tables, cfg)
+      assert(c.triggered === Seq(3L, 5L, 7L))
+      assert(c.jobIds === Seq("local-db.tbl_3-0", "local-db.tbl_5-1",
+        "local-db.tbl_7-2"))
+      val maxId = log.map(_.snapshotId).max
+      assert(c.log.drop(log.size) === Seq(3L, 5L, 7L).zipWithIndex.map {
+        case (t, i) => SnapshotMeta(t, maxId + 1 + i, now, "replace") })
+      rows.foreach { case (t, n) =>
+        assert(Compact.listFiles(s"$root/out$t").size < 6)
+        assert(spark.read.parquet(s"$root/out$t").count() === n)
+      }
+    }
   }
 }

@@ -8,7 +8,7 @@ import graft.functions.RollingHash
 /** Tests for the non-oracle pipeline extensions: MinHash-LSH recall vs the
   * exact Jaccard ground truth, SimHash behavior, rolling-hash fingerprints,
   * and the multimodal plumbing. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TestTempDirs {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -145,7 +145,7 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toSet
     assert(memod === fresh)
     // persist → load → search must reproduce the memoized-index results
-    val tmp = java.nio.file.Files.createTempDirectory("ivf-index").toString
+    val tmp = tempDir("ivf-index")
     graft.exts.IvfIndex.save(
       graft.exts.IvfIndex.centroids(spark, dir), s"$tmp/centroids.parquet")
     val loaded = graft.exts.IvfIndex.load(spark, s"$tmp/centroids.parquet")
@@ -159,7 +159,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("PQ codebook artifact: save → install round-trips, serves the artifact, rejects stale") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("pq-cb").toString
+    val tmp = tempDir("pq-cb")
     graft.exts.PqIndex.clear()
     val trained = graft.exts.PqIndex.codebook(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toList))
@@ -483,8 +483,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val cent = graft.exts.IvfIndex.centroids(spark, dir)
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf-clustered").toString + "/emb_by_cell"
+    val path = tempDir("ivf-clustered") + "/emb_by_cell"
     graft.exts.IvfIndex.writeClustered(emb, cent, path)
     val got = graft.exts.IvfIndex.searchClustered(spark, path, cent,
       emb.filter(col("vec_id") < 8))
@@ -608,7 +607,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("artifact memos key on the corpus version: a rewrite invalidates") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft-ver").toString
+    val tmp = tempDir("graft-ver")
     Files.copy(Paths.get(s"$dir/documents.parquet"),
       Paths.get(s"$tmp/documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -700,8 +699,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("ivf_pq: clustered codes layout — partition-pruned ADC = in-memory") {
     import graft.exts.PqIndex
-    val path = java.nio.file.Files
-      .createTempDirectory("ivfpq").toString + "/codes_by_cell"
+    val path = tempDir("ivfpq") + "/codes_by_cell"
     PqIndex.writeClusteredCodes(spark, dir, path)
     val got = PqIndex.searchClusteredCodes(spark, dir, path)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -1126,8 +1124,7 @@ class PipelineSpec extends AnyFunSuite {
     // write one .gif object per asset (the real lake layout), read back
     // through Spark's binaryFile source, and decode — stats must equal
     // the direct in-memory path exactly
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-media-lake").toString
+    val outDir = tempDir("graft-media-lake")
     val assets = Multimodal.gifAssets(spark, dir).filter(_.doc_id < 50)
     Multimodal.writeMediaFiles(assets, outDir)
     // a non-matching file must be pruned by the glob at listing time
@@ -1308,8 +1305,7 @@ class PipelineSpec extends AnyFunSuite {
     val corpus = graft.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val fresh = BloomIndex.build(corpus)
-    val path = java.nio.file.Files.createTempDirectory("graft-bloom")
-      .toString + "/corpus.bloom"
+    val path = tempDir("graft-bloom") + "/corpus.bloom"
     BloomIndex.save(fresh, path)
     val loaded = BloomIndex.load(path)
     // identical probe behavior over inserted AND novel keys
@@ -1700,8 +1696,7 @@ class PipelineSpec extends AnyFunSuite {
   test("shard export: partitioned write round-trips and matches manifest") {
     import org.apache.spark.sql.functions._
     val docs = Tables.load(spark, dir, "documents")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards")
     graft.exts.Sampling.writeShards(docs, out)
     val back = spark.read.parquet(out)
     // nothing lost, nothing duplicated
@@ -1974,8 +1969,7 @@ class PipelineSpec extends AnyFunSuite {
     val memo2 = graft.exts.BpeIndex.rules(spark, dir).collect()
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Int].toLong)
     assert(memo2.toSeq === memo1.toSeq)
-    val path = java.nio.file.Files
-      .createTempDirectory("bpeidx").toString + "/rules"
+    val path = tempDir("bpeidx") + "/rules"
     graft.exts.BpeIndex.save(graft.exts.BpeIndex.rules(spark, dir), path)
     val loaded = graft.exts.BpeIndex.load(spark, path).collect()
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Int].toLong)
@@ -4220,8 +4214,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => r.getAs[String]("term") -> r.getAs[Long]("s")).toMap
     assert(fresh === headRows)
     // explicit save → load round-trip
-    val p = java.nio.file.Files
-      .createTempDirectory("dsir-artifact-spec").toString
+    val p = tempDir("dsir-artifact-spec")
     graft.exts.DsirIndex.save(head, p)
     val loaded = graft.exts.DsirIndex.load(spark, p).collect()
       .map(r => r.getAs[String]("term") -> r.getAs[Long]("s")).toMap

@@ -8,7 +8,7 @@ import graft.engine.QueryFiles
 import graft.model.CompactionSpec
 
 /** query_file_write: golden script text + file round-trips. */
-class QueryFilesSpec extends AnyFunSuite {
+class QueryFilesSpec extends AnyFunSuite with TestTempDirs {
 
   test("pyspark wrapper script matches the reference template shape") {
     assert(QueryFiles.pySparkScript("SELECT 1") ===
@@ -18,7 +18,7 @@ class QueryFilesSpec extends AnyFunSuite {
   }
 
   test("sql entrypoint file round-trips the generated command") {
-    val dir = Files.createTempDirectory("graft-qf").toString
+    val dir = tempDir("graft-qf")
     val p = QueryFiles.writeSqlEntrypoint(dir, "j1",
       CompactionSpec("db.t", options = Map("k" -> "v")))
     assert(p.getFileName.toString === "query-j1.sql")
@@ -28,7 +28,7 @@ class QueryFilesSpec extends AnyFunSuite {
   }
 
   test("pyspark job file embeds the command") {
-    val dir = Files.createTempDirectory("graft-qf").toString
+    val dir = tempDir("graft-qf")
     val p = QueryFiles.writePySparkJob(dir, "j2", CompactionSpec("db.t2"))
     val content = Files.readString(p)
     assert(p.getFileName.toString === "job-j2.py")
@@ -84,7 +84,7 @@ class QueryFilesSpec extends AnyFunSuite {
   }
 
   test("createFile overwrites existing content") {
-    val dir = Files.createTempDirectory("graft-qf").toString
+    val dir = tempDir("graft-qf")
     QueryFiles.createFile(dir, "a.sql", "one")
     val p = QueryFiles.createFile(dir, "a.sql", "two")
     assert(Files.readString(p) === "two")

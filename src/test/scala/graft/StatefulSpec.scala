@@ -82,6 +82,25 @@ class StatefulSpec extends AnyFunSuite {
     assert(viaAgg === viaWindow)
   }
 
+  test("driver decideLog equals the windowed decision row for row") {
+    import spark.implicits._
+    (1 to 5).foreach { seed =>
+      val log = RandomLogs(seed)
+      val viaFold = DecideAggregator.decideLog(log, cfg).map { case (t, d) =>
+        t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
+          d.time_triggered, d.should_optimize))
+      }
+      val viaWindow = Decide.shouldOptimize(
+          log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4))))
+        .toMap
+      assert(viaFold === viaWindow, s"seed $seed")
+      assert(viaFold.values.exists(_._4) && viaFold.values.exists(!_._4),
+        s"seed $seed should both trigger and not trigger")
+    }
+  }
+
   test("job tracker emits exactly one terminal event per job via streaming") {
     import spark.implicits._
     implicit val sql = spark.sqlContext

@@ -78,18 +78,15 @@ class GraftHostileFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   * index-maintenance loops: marker escaping, marker retention, the
   * fresh-query-on-a-resumed-root guard, and the loops running end to
   * end against a non-default FileSystem scheme. */
-class LoopCoreSpec extends AnyFunSuite {
+class LoopCoreSpec extends AnyFunSuite with graft.TestTempDirs {
   lazy val spark = graft.TestSpark.spark
 
   private def registerGraftFs(): Unit =
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("marker string fields round-trip hostile content (quotes, backslashes, control chars)") {
-    val root = tmp("loopcore-esc")
+    val root = tempDir("loopcore-esc")
     val store = new LoopCore.MetaStore[String](root, "b",
       s => s"""{"ord":1,"v":${LoopCore.jsonStr(s)}}""",
       j => LoopCore.jsonString(j, "v"))
@@ -104,7 +101,7 @@ class LoopCoreSpec extends AnyFunSuite {
   }
 
   test("marker retention: a long-running store keeps only the newest RetainMarkers states") {
-    val root = tmp("loopcore-gc")
+    val root = tempDir("loopcore-gc")
     val store = new LoopCore.MetaStore[Long](root, "b",
       n => s"""{"n":$n}""", j => LoopCore.jsonLong(j, "n"))
     (0L until 20L).foreach(i => store.write(i, i * 10))
@@ -120,7 +117,7 @@ class LoopCoreSpec extends AnyFunSuite {
 
   test("a new query without the original checkpoint is refused on a root with committed batches") {
     import spark.implicits._
-    val root = tmp("loopcore-fresh")
+    val root = tempDir("loopcore-fresh")
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
         "documents").select(col("doc_id"), col("text")).limit(20)
     val index = LexIndexLoop.buildIndex(spark, docs, root)
@@ -136,21 +133,21 @@ class LoopCoreSpec extends AnyFunSuite {
     val err = intercept[IllegalStateException] {
       LexIndexLoop.start(spark, index, root,
         spark.readStream.schema("doc_id LONG, text STRING")
-          .parquet(tmp("loopcore-in")))
+          .parquet(tempDir("loopcore-in")))
     }
     assert(err.getMessage.contains("checkpoint"))
     // the durable form — same root, a checkpoint — is accepted
     val q = LexIndexLoop.start(spark, index, root,
       spark.readStream.schema("doc_id LONG, text STRING")
-        .parquet(tmp("loopcore-in2")),
-      checkpoint = Some(tmp("loopcore-cp")))
+        .parquet(tempDir("loopcore-in2")),
+      checkpoint = Some(tempDir("loopcore-cp")))
     q.stop()
   }
 
   test("lex loop end to end on a non-default FileSystem scheme (graftfs://): segments, markers, compaction, retention, reattach") {
     import spark.implicits._
     registerGraftFs()
-    val root = s"graftfs://${tmp("loopcore-lexfs")}/lex"
+    val root = s"graftfs://${tempDir("loopcore-lexfs")}/lex"
     val corpus = graft.Tables.load(spark, "/root/testdata/sf0.001",
         "documents").select(col("doc_id"), col("text")).limit(20)
       .localCheckpoint(true)
@@ -203,7 +200,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("graph loop on graftfs://: epoch publish via the copy branch (no hard links), served layout equals a rebuild") {
     import spark.implicits._
     registerGraftFs()
-    val base = s"graftfs://${tmp("loopcore-graphfs")}"
+    val base = s"graftfs://${tempDir("loopcore-graphfs")}"
     val corpusPath = s"$base/corpus"
     val graphPath = s"$base/graph"
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -246,7 +243,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("media loop: rejected-modality residue gets an explicit verdict row; within-batch chains resolve to a landed canonical") {
     import spark.implicits._
     import graft.exts.Multimodal
-    val root = tmp("loopcore-media")
+    val root = tempDir("loopcore-media")
     // corpus: ONE image asset, id 100 — the canonical every chain must
     // terminate at; vid/aud start empty
     val corpusPng = Multimodal.encodeNearPng(4000004L)
@@ -295,7 +292,7 @@ class LoopCoreSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     // MEDIA — the planted needy family: rebuildAfter 4, two admitted
     // pending assets → 500‰ of its own threshold
-    val mediaRoot = tmp("fleet-media")
+    val mediaRoot = tempDir("fleet-media")
     val corpusPng = Multimodal.encodeNearPng(4100004L)
     val serving = MediaIndexLoop.build(spark,
       Multimodal.canonicalSignatures(Seq((100L, corpusPng))
@@ -312,7 +309,7 @@ class LoopCoreSpec extends AnyFunSuite {
     assert(serving.snapshot.nPending === 2L)
     // LEX — one pending doc over a 20-doc index → 250‰ of the 200‰
     // compaction threshold
-    val lexRoot = tmp("fleet-lex")
+    val lexRoot = tempDir("fleet-lex")
     val docs = graft.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).limit(20)
     val lex = LexIndexLoop.buildIndex(spark, docs, lexRoot)
@@ -322,7 +319,7 @@ class LoopCoreSpec extends AnyFunSuite {
     assert(lex.snapshot.nPending === 1L)
     // IVF + GRAPH — built over the fixture embeddings, no ingest: low
     // pressure by construction
-    val base = tmp("fleet-vec")
+    val base = tempDir("fleet-vec")
     spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 100L).write.parquet(s"$base/corpus")
@@ -358,7 +355,7 @@ class LoopCoreSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     // MEDIA — the planted needy family (two pending admitted assets at
     // rebuildAfter 4 → 500‰); the other three low by construction
-    val mediaRoot = tmp("tick-media")
+    val mediaRoot = tempDir("tick-media")
     val corpusPng = Multimodal.encodeNearPng(4400004L)
     val serving = MediaIndexLoop.build(spark,
       Multimodal.canonicalSignatures(Seq((100L, corpusPng))
@@ -373,11 +370,11 @@ class LoopCoreSpec extends AnyFunSuite {
         (20L, "img", Multimodal.encodeNearPng(4600004L)))
         .toDF("doc_id", "modality", "media"), 0L, 100L, (_, _) => ())
     assert(serving.snapshot.nPending === 2L)
-    val lexRoot = tmp("tick-lex")
+    val lexRoot = tempDir("tick-lex")
     val docs = graft.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).limit(20)
     val lex = LexIndexLoop.buildIndex(spark, docs, lexRoot)
-    val base = tmp("tick-vec")
+    val base = tempDir("tick-vec")
     spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 100L).write.parquet(s"$base/corpus")
@@ -438,7 +435,7 @@ class LoopCoreSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
     import graft.exts.Multimodal
-    val root = tmp("live-tick-media")
+    val root = tempDir("live-tick-media")
     val corpusPng = Multimodal.encodeNearPng(4700004L)
     val serving = MediaIndexLoop.build(spark,
       Multimodal.canonicalSignatures(Seq((100L, corpusPng))
@@ -493,7 +490,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("fleet ivf dispatch: the handle's declared codes wiring is resolved — v<new> is rewritten before the version flips; an undeclared handle is refused") {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
-    val base = tmp("ivf-codes")
+    val base = tempDir("ivf-codes")
     val corpus = s"$base/corpus"
     val codes = s"$base/codes"
     spark.read.parquet(s"$dir/embeddings.parquet")
@@ -591,7 +588,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("hostile FS: lex loop end to end when EVERY rename is non-atomic copy+delete") {
     import spark.implicits._
     registerHostileFs()
-    val root = s"hostilefs://${tmp("hostile-lex")}/lex"
+    val root = s"hostilefs://${tempDir("hostile-lex")}/lex"
     val corpus = graft.Tables.load(spark, "/root/testdata/sf0.001",
         "documents").select(col("doc_id"), col("text")).limit(20)
       .localCheckpoint(true)
@@ -624,7 +621,7 @@ class LoopCoreSpec extends AnyFunSuite {
 
   test("hostile FS: a marker rename that dies between copy and delete still commits (complete dst is the winner)") {
     registerHostileFs()
-    val root = s"hostilefs://${tmp("hostile-marker")}"
+    val root = s"hostilefs://${tempDir("hostile-marker")}"
     val store = new LoopCore.MetaStore[Long](root, "h",
       n => s"""{"n":$n}""", j => LoopCore.jsonLong(j, "n"))
     GraftHostileFs.failMode = "between"
@@ -638,7 +635,7 @@ class LoopCoreSpec extends AnyFunSuite {
 
   test("hostile FS: a marker rename that dies before any byte moves fails LOUDLY, never silently") {
     registerHostileFs()
-    val root = s"hostilefs://${tmp("hostile-marker2")}"
+    val root = s"hostilefs://${tempDir("hostile-marker2")}"
     val store = new LoopCore.MetaStore[Long](root, "h",
       n => s"""{"n":$n}""", j => LoopCore.jsonLong(j, "n"))
     GraftHostileFs.failMode = "before"
@@ -652,7 +649,7 @@ class LoopCoreSpec extends AnyFunSuite {
 
   test("graph rebuild markers are kind-tagged: a replayed batch's recorded survivor count never reads a rebuild's zero") {
     import spark.implicits._
-    val base = tmp("graph-kind")
+    val base = tempDir("graph-kind")
     val corpusPath = s"$base/corpus"
     val graphPath = s"$base/graph"
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -695,7 +692,7 @@ class LoopCoreSpec extends AnyFunSuite {
     // LEX: build + one batch, then strip commitSeq from every marker
     // (the pre-r17 format) — reattach must decode, and the next commit
     // must sort strictly newest
-    val root = tmp("lex-compat")
+    val root = tempDir("lex-compat")
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
         "documents").select(col("doc_id"), col("text")).limit(20)
     val index = LexIndexLoop.buildIndex(spark, docs, root)
@@ -730,7 +727,7 @@ class LoopCoreSpec extends AnyFunSuite {
     assert(LexIndexLoop.reattach(spark, root).snapshot === re.snapshot,
       "the post-upgrade commit must be the newest marker")
     // MEDIA: same seam on the media decode
-    val mroot = tmp("media-compat")
+    val mroot = tempDir("media-compat")
     val serving = MediaIndexLoop.build(spark,
       Multimodal.canonicalSignatures(
         Seq((100L, Multimodal.encodeNearPng(5300004L)))
@@ -749,7 +746,7 @@ class LoopCoreSpec extends AnyFunSuite {
 
   test("hostile FS: a marker-rename collision accepts an identical winner and fails LOUDLY on divergent content") {
     registerHostileFs()
-    val root = s"hostilefs://${tmp("hostile-collide")}"
+    val root = s"hostilefs://${tempDir("hostile-collide")}"
     val store = new LoopCore.MetaStore[Long](root, "h",
       n => s"""{"n":$n}""", j => LoopCore.jsonLong(j, "n"))
     store.write(3L, 30L)
@@ -774,7 +771,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("indexLoop: disk-keyed resume guard — a stale handle over a committed corpus root is refused; buildIndex is the explicit fresh-lineage path") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val base = tmp("ivf-guard")
+    val base = tempDir("ivf-guard")
     val corpus = s"$base/corpus"
     spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -785,7 +782,7 @@ class LoopCoreSpec extends AnyFunSuite {
     IndexLoop.saveIndex(spark, index, s"$base/saved0")
     def stream() = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .parquet(tmp("ivf-guard-in"))
+      .parquet(tempDir("ivf-guard-in"))
     // fresh lineage: checkpoint-less start allowed
     IndexLoop.start(spark, index, corpus, stream()).stop()
     // commit batch 0 → the on-disk marker chain records lastBatchId 0
@@ -812,7 +809,7 @@ class LoopCoreSpec extends AnyFunSuite {
     assert(restored.snapshot.commitSeq === index.snapshot.commitSeq,
       "the commit ordinal must survive the artifact round-trip")
     IndexLoop.start(spark, restored, corpus, stream(),
-      checkpoint = Some(tmp("ivf-guard-cp"))).stop()
+      checkpoint = Some(tempDir("ivf-guard-cp"))).stop()
     // the explicit rebuild: buildIndex resets the marker lineage and
     // the fresh handle starts checkpoint-less again (re-ingest stays
     // idempotent through the near-dup gate)
@@ -824,7 +821,7 @@ class LoopCoreSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.exts.Multimodal
     registerHostileFs()
-    val root = s"hostilefs://${tmp("hostile-media")}/media"
+    val root = s"hostilefs://${tempDir("hostile-media")}/media"
     val corpusPng = Multimodal.encodeNearPng(5100004L)
     val serving = MediaIndexLoop.build(spark,
       Multimodal.canonicalSignatures(Seq((100L, corpusPng))
@@ -882,7 +879,7 @@ class LoopCoreSpec extends AnyFunSuite {
     import spark.implicits._
     registerHostileFs()
     val dir = "/root/testdata/sf0.001"
-    val base = s"hostilefs://${tmp("hostile-vec")}"
+    val base = s"hostilefs://${tempDir("hostile-vec")}"
     val corpus = s"$base/corpus"
     val codes = s"$base/codes"
     val gate = s"$base/gate"
@@ -938,7 +935,7 @@ class LoopCoreSpec extends AnyFunSuite {
       .select(col("neighbor_id")).distinct().count() === 101L)
     val served = spark.read.parquet(s"$codes/v1").collect()
       .map(_.toString).toSet
-    val localTmp = tmp("hostile-vec-rebuild")
+    val localTmp = tempDir("hostile-vec-rebuild")
     graft.exts.PqIndex.writeClusteredCodesWith(
       spark.read.parquet(corpus)
         .select(col("vec_id"), col("embedding")),
@@ -952,7 +949,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("hostile FS: a half-published artifact payload is never taken for committed; the retry self-heals") {
     registerHostileFs()
     import graft.exts.ArtifactStore
-    val root = s"hostilefs://${tmp("hostile-store")}"
+    val root = s"hostilefs://${tempDir("hostile-store")}"
     val prior = spark.conf.getOption(ArtifactStore.RootConf)
     spark.conf.set(ArtifactStore.RootConf, root)
     spark.conf.set(ArtifactStore.PublishWaitConf, "400")
@@ -1005,7 +1002,7 @@ class LoopCoreSpec extends AnyFunSuite {
   test("hostile FS: a failed corpus-file landing aborts the graph batch BEFORE the marker; the replay re-applies identically") {
     import spark.implicits._
     registerHostileFs()
-    val base = s"hostilefs://${tmp("hostile-graph")}"
+    val base = s"hostilefs://${tempDir("hostile-graph")}"
     val corpusPath = s"$base/corpus"
     val graphPath = s"$base/graph"
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
