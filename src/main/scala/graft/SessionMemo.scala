@@ -77,13 +77,6 @@ private[graft] final class SessionMemo[V](maxPerSession: Int) {
   /** Test seam / full reset. */
   def clear(): Unit = bySession.clear()
 
-  /** Total entries across sessions (leak-check instrumentation). */
-  private[graft] def totalEntries: Int = {
-    var n = 0
-    bySession.values.forEach(m => n += m.size)
-    n
-  }
-
   /** Live session-map count (leak-check instrumentation). */
   private[graft] def sessionCount: Int = bySession.size
 }

@@ -1,9 +1,9 @@
 package graft.engine
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeoutException}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.{Duration, MILLISECONDS}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.concurrent.{ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -11,12 +11,16 @@ import graft.model.{CompactionSpec, EngineConfig, JobRun, PollPolicy}
 import graft.ops.Codegen
 
 /** Executor SPI — the engine-binding abstraction (Executor.java:9-23) with
-  * local implementations instead of AWS service calls: submit returns a job
-  * id immediately, states accumulate in a [[JobStateLog]], and the
-  * synchronous gate (AwsManageProperties.java:20-22) decides whether the
-  * caller blocks until the job is terminal (SURVEY.md §2.1 job_poll_state,
+  * local implementations instead of AWS service calls. The decider
+  * initializes an executor with the properties of the config that decided
+  * (`EngineConfig.toProperties`, as the reference's evaluator passes its
+  * catalog properties, AwsTableManagementMetricsEvaluator.java:75-82), so
+  * the job runs under that config's strategy, sort order and options.
+  * States accumulate in a [[JobStateLog]], and the synchronous gate
+  * (AwsManageProperties.java:20-22) decides whether `execute` returns
+  * before the job is terminal (SURVEY.md §2.1 job_poll_state,
   * sync_async_gate). A remote engine can only be polled; the local
-  * executor awaits its own job's Future instead.
+  * executor runs a synchronous job on the caller's thread instead.
   */
 trait Executor {
   def initialize(table: String, properties: Map[String, String]): Unit
@@ -47,7 +51,7 @@ final class JobStateLog {
 }
 
 object Executors {
-  /** How long a synchronous caller waits for a job before giving up. */
+  /** How long the poll loop waits for a job before giving up. */
   val DefaultMaxWaitMs: Long = 600000L
 
   /** job_poll_state: block until the job leaves the engine's non-terminal
@@ -56,9 +60,8 @@ object Executors {
     * The per-engine machine (which states spin, which raise) comes from
     * the [[PollPolicy]]; the default is the local composite, which keeps
     * the union non-terminal set and the Athena-style raise on
-    * FAILED/CANCELLED. [[LocalSparkExecutor]] calls it only once its job's
-    * Future is done, so for it the loop reads one terminal state and never
-    * sleeps. */
+    * FAILED/CANCELLED. A caller of an asynchronous [[LocalSparkExecutor]]
+    * polls its job through here. */
   def waitForCompletion(log: JobStateLog, jobId: String,
       sleepWaitMs: Long, maxWaitMs: Long = DefaultMaxWaitMs,
       policy: PollPolicy = PollPolicy.Local): String = {
@@ -95,13 +98,14 @@ object Executors {
     }
 }
 
-/** Runs the compaction as an in-process Spark action on a Future — the
-  * local analog of submitting to a remote engine. `input`/`output` dirs are
-  * carried in properties (`local.input-dir` / `local.output-dir`). A
-  * synchronous execute blocks on that Future, not on a sleep-poll, and
-  * then reads the terminal state once through the poll machine, so a
-  * FAILED job still raises. `sleep-wait-ms` paces only the remote-style
-  * poll loop. */
+/** Runs the compaction as an in-process Spark action, the local analog of
+  * submitting to a remote engine. The strategy, sort order and options
+  * come from the properties the decider passed (`EngineConfig.toProperties`);
+  * the `input`/`output` dirs ride along as `local.input-dir` /
+  * `local.output-dir`. A synchronous job runs inline on the caller's
+  * thread: `execute` returns once it SUCCEEDED, or raises once it is
+  * logged FAILED. An asynchronous one runs on a Future and the caller
+  * polls the log (`Executors.waitForCompletion`). */
 final class LocalSparkExecutor(spark: SparkSession, log: JobStateLog)
     extends Executor {
   private var table: String = _
@@ -121,31 +125,22 @@ final class LocalSparkExecutor(spark: SparkSession, log: JobStateLog)
     val output = props.getOrElse("local.output-dir",
       throw new IllegalArgumentException("local.output-dir is required"))
     val spec = CompactionSpec(table, cfg.strategy, cfg.options, cfg.sortOrder)
-    val t0 = System.currentTimeMillis()
-    log.append(JobRun(jobId, "SUBMITTED", t0))
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val job = Future {
-      log.append(JobRun(jobId, "RUNNING", System.currentTimeMillis()))
-      Compact.run(spark, spec, input, output)
-      log.append(JobRun(jobId, "SUCCEEDED", System.currentTimeMillis()))
-    }.recover { case e =>
-      log.append(JobRun(jobId, "FAILED", System.currentTimeMillis()))
-      throw e
-    }
-    if (cfg.synchronousEnabled) await(jobId, job)
+    log.append(JobRun(jobId, "SUBMITTED", System.currentTimeMillis()))
+    def run(): Unit =
+      try {
+        log.append(JobRun(jobId, "RUNNING", System.currentTimeMillis()))
+        Compact.run(spark, spec, input, output)
+        log.append(JobRun(jobId, "SUCCEEDED", System.currentTimeMillis()))
+      } catch { case NonFatal(e) =>
+        log.append(JobRun(jobId, "FAILED", System.currentTimeMillis()))
+        throw e
+      }
+    if (cfg.synchronousEnabled)
+      try run() catch { case NonFatal(e) =>
+        throw new IllegalStateException(s"job $jobId terminated: FAILED", e)
+      }
+    else Future(run())(ExecutionContext.global)
     jobId
-  }
-
-  /** Block until the job is terminal and return its state; raises
-    * `IllegalStateException` if it FAILED or outlived
-    * `Executors.DefaultMaxWaitMs`. */
-  private def await(jobId: String, job: Future[Unit]): String = {
-    try Await.ready(job, Duration(Executors.DefaultMaxWaitMs, MILLISECONDS))
-    catch { case _: TimeoutException =>
-      throw new IllegalStateException(s"job $jobId timed out in " +
-        log.currentState(jobId).getOrElse("SUBMITTED"))
-    }
-    Executors.waitForCompletion(log, jobId, cfg.sleepWaitMs)
   }
 }
 

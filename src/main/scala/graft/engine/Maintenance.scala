@@ -18,8 +18,10 @@ import graft.stream.DecideAggregator
   *
   * Only the compactions touch Spark. The decision is the driver fold
   * `DecideAggregator.decideLog` over the driver-held log (the rule the
-  * decision stream applies), and each triggered table's synchronous job
-  * is awaited on its Future, not on a sleep-poll.
+  * decision stream applies). Each triggered table's executor receives the
+  * deciding config (`cfg.toProperties`, plus the synchronous flag and the
+  * table's dirs), so it compacts with `cfg`'s strategy, sort order and
+  * options, and its job runs inline on the cycle's thread.
   */
 object Maintenance {
 
@@ -41,12 +43,13 @@ object Maintenance {
       case (t, d) if d.should_optimize && tables.contains(t) => t
     }.toSeq.sorted
     val stateLog = new JobStateLog
+    val props = cfg.toProperties
     var nextSnapshotId = log.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (jobIds, newCommits) = triggered.map { tableId =>
       val dirs = tables(tableId)
       val ex = new LocalSparkExecutor(spark, stateLog)
-      ex.initialize(s"db.tbl_$tableId", Map(
-        "optimize-data.synchronous-enabled" -> "true",
+      ex.initialize(s"db.tbl_$tableId", props ++ Seq(
+        EngineConfig.SynchronousKey -> "true",
         "local.input-dir" -> dirs.inputDir,
         "local.output-dir" -> dirs.outputDir))
       val jobId = ex.execute()

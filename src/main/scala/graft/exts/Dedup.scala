@@ -181,11 +181,6 @@ object Dedup {
       .filter(col("n_copies") > 1)
       .select(col("keep_id"), col("n_copies"))
 
-  /** Exact dedup, kept rows: distinct content hashes keeping min doc_id. */
-  def exactDedup(corpus: DataFrame): DataFrame =
-    corpus.groupBy(md5(col("text"))).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-
   /** Canonical text normalization — lowercase, non-alphanumerics to
     * spaces, whitespace collapsed, trimmed. The projection every
     * normalization-keyed dedup runs before hashing, so case and

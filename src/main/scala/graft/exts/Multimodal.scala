@@ -934,10 +934,6 @@ object Multimodal {
     }
   }
 
-  /** Encode one real animated GIF (standalone convenience; the Spark
-    * path amortizes one [[GifEncoder]] per partition in [[gifAssets]]). */
-  def encodeGif(id: Long): Array[Byte] = new GifEncoder().encode(id)
-
   /** One real-GIF asset per document; ONE encoder per partition. */
   def gifAssets(spark: SparkSession, dir: String): Dataset[GifAsset] = {
     import spark.implicits._

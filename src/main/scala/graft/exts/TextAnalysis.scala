@@ -441,24 +441,12 @@ object TextAnalysis {
     * [[lmHead]] is the KenLM-style pruning that keeps a shipped model
     * broadcast-sized. Docs with fewer than two tokens have no bigrams
     * and are excluded on both engines. */
-  /** Per-doc bigram term frequencies, reference HOF form (kept for the
-    * FunctionsSpec identity pin; production uses [[bigramTf]]). */
-  private[graft] def bigramTf0(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "zip_with(slice(w, 1, size(w) - 1), slice(w, 2, size(w) - 1)," +
-          " (x, y) -> named_struct('w1', x, 'w2', y))")).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** [[bigramTf0]] with the interpreted HOF pair explode replaced by the
-    * compiled [[graft.functions.BigramPairs]] pass (r19, guide §4:
-    * zip_with/transform lambdas are CodegenFallback and were the entire
-    * map-side CPU of this family) — pairs, groups and tf identical
-    * (FunctionsSpec pins the expression to the HOF form; the oracle pins
+  /** Per-doc bigram term frequencies through the compiled
+    * [[graft.functions.BigramPairs]] pass, which replaced an interpreted
+    * `zip_with`/`slice` pair explode (r19, guide §4: zip_with/transform
+    * lambdas are CodegenFallback and were the entire map-side CPU of this
+    * family) — pairs, groups and tf identical (BigramPairsSpec keeps that
+    * HOF form as `bigramTf0` and pins this one to it; the oracle pins
     * every consumer). */
   private[graft] def bigramTf(docs: DataFrame): DataFrame =
     docs

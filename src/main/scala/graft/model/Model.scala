@@ -1,5 +1,7 @@
 package graft.model
 
+import scala.collection.immutable.VectorMap
+
 /** Typed data model for the engine.
   *
   * Mirrors the reference's abstractions (SURVEY.md §1.1):
@@ -167,6 +169,28 @@ final case class EngineConfig(
   def requireAthenaOutputBucket(): String =
     athenaOutputBucket.getOrElse(
       throw new IllegalArgumentException("Invalid output bucket: null"))
+
+  /** The flat property map this config parses from, the inverse of
+    * [[EngineConfig.fromProperties]]: what a decider hands to
+    * `Executor.initialize` (AwsTableManagementMetricsEvaluator.java:75-82).
+    * Insertion-ordered, so `options` and `sparkConfigs` keep their order
+    * through the round trip and the rendered options literal does not
+    * change. An empty `options` or `sparkConfigs` is written as no keys and
+    * reads back as the default, as in the reference. */
+  def toProperties: VectorMap[String, String] = {
+    import EngineConfig._
+    VectorMap(
+      CommitThresholdKey -> commitThreshold.toString,
+      TimeThresholdKey -> timeThresholdMs.toString,
+      SynchronousKey -> synchronousEnabled.toString,
+      SleepWaitKey -> sleepWaitMs.toString,
+      StrategyKey -> strategy,
+      AthenaDataCatalogKey -> athenaDataCatalog) ++
+      sortOrder.map(SortOrderKey -> _) ++
+      athenaOutputBucket.map(AthenaOutputBucketKey -> _) ++
+      options.iterator.map { case (k, v) => (OptionsPrefix + k) -> v } ++
+      sparkConfigs.iterator.map { case (k, v) => (SparkConfigsPrefix + k) -> v }
+  }
 }
 
 object EngineConfig {
@@ -224,12 +248,10 @@ object EngineConfig {
   /** Parse a flat properties map (the reference's config surface) into a
     * typed config, applying defaults for absent keys. */
   def fromProperties(props: Map[String, String]): EngineConfig = {
-    def prefixed(prefix: String): Map[String, String] = {
-      val m = props.collect {
+    def prefixed(prefix: String): Map[String, String] =
+      VectorMap.from(props.iterator.collect {
         case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
-      }
-      m
-    }
+      })
     val opts = prefixed(OptionsPrefix)
     val confs = prefixed(SparkConfigsPrefix)
     EngineConfig(

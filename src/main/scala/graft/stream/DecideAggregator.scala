@@ -1,20 +1,19 @@
 package graft.stream
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 import graft.model.{EngineConfig, SnapshotMeta}
 
-/** Incremental form of the optimize decision (SURVEY.md §7.3): a typed
-  * `Aggregator` usable in batch `groupByKey.agg`, partial aggregation, and
-  * incremental per-table state maintenance in streaming.
+/** The optimize decision (SURVEY.md §7.3) as one driver-side fold: the
+  * decision stream folds each micro-batch's rows into per-table state
+  * (EventPipeline.decideGroup) and `Maintenance.cycle` folds a driver-held
+  * log ([[decideLog]]), both through `reduceBuf`/`finishBuf`, so there is
+  * one rule.
   *
   * The buffer is (last REPLACE ts, pending commit timestamps newer than
-  * it). Keeping the actual pending timestamps — not just (count, oldest) —
-  * makes `merge` exact under arbitrary input splits: a replace discovered
-  * in another partial buffer retroactively prunes exactly the commits it
-  * supersedes. The buffer size is the number of commits since the last
-  * compaction — the very quantity this system exists to keep small (the
+  * it). Keeping the actual pending timestamps, not just (count, oldest),
+  * makes the fold independent of arrival order: a REPLACE that arrives in
+  * a later micro-batch than the commits it supersedes prunes exactly
+  * those commits. The buffer size is the number of commits since the last
+  * compaction, the very quantity this system exists to keep small (the
   * decision fires at `commitThreshold`), so state per table stays O(10).
   */
 object DecideAggregator {
@@ -28,10 +27,8 @@ object DecideAggregator {
       time_triggered: Boolean,
       should_optimize: Boolean)
 
-  /** The four aggregation primitives, standalone so the streaming pipeline
-    * can fold micro-batches into long-lived per-table state
-    * (EventPipeline.decideGroup) with exactly the semantics the batch
-    * aggregate has. */
+  /** The fold's zero; `reduceBuf` adds one commit and `finishBuf` reads
+    * the decision off a buffer. */
   val zeroBuf: DecideBuf = DecideBuf(Long.MinValue, Nil)
 
   def reduceBuf(b: DecideBuf, s: SnapshotMeta): DecideBuf =
@@ -42,11 +39,6 @@ object DecideAggregator {
     } else if (s.tsMillis > b.lastReplaceTs) {
       b.copy(pending = b.pending :+ s.tsMillis)
     } else b
-
-  def mergeBuf(x: DecideBuf, y: DecideBuf): DecideBuf = {
-    val lr = math.max(x.lastReplaceTs, y.lastReplaceTs)
-    DecideBuf(lr, (x.pending ++ y.pending).filter(_ > lr))
-  }
 
   def finishBuf(b: DecideBuf, cfg: EngineConfig): Decision = {
     val n = b.pending.size.toLong
@@ -67,17 +59,5 @@ object DecideAggregator {
   def decideLog(log: Seq[SnapshotMeta], cfg: EngineConfig): Map[Long, Decision] =
     log.groupBy(_.tableId).map { case (t, rows) =>
       t -> finishBuf(rows.foldLeft(zeroBuf)(reduceBuf), cfg)
-    }
-
-  def apply(cfg: EngineConfig): Aggregator[SnapshotMeta, DecideBuf, Decision] =
-    new Aggregator[SnapshotMeta, DecideBuf, Decision] {
-      override def zero: DecideBuf = zeroBuf
-      override def reduce(b: DecideBuf, s: SnapshotMeta): DecideBuf =
-        reduceBuf(b, s)
-      override def merge(x: DecideBuf, y: DecideBuf): DecideBuf =
-        mergeBuf(x, y)
-      override def finish(b: DecideBuf): Decision = finishBuf(b, cfg)
-      override def bufferEncoder: Encoder[DecideBuf] = Encoders.product
-      override def outputEncoder: Encoder[Decision] = Encoders.product
     }
 }

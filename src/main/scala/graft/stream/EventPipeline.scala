@@ -154,10 +154,12 @@ object EventPipeline {
 
   /** Run the pipeline over a streaming events frame: each micro-batch
     * folds into the per-table state ([[statefulDecisions]]) and
-    * `foreachBatch` submits one maintenance job per `newly_triggered` row.
-    * The driver keeps only a LAST-VALUE VIEW of emitted decisions for
-    * reporting, bounded by table count and not load-bearing for
-    * correctness.
+    * `foreachBatch` submits one maintenance job per `newly_triggered` row,
+    * initializing each executor with `cfg.toProperties` (the reference's
+    * hand-off of the deciding properties to `executor.initialize`), so the
+    * job compacts under the config that decided. The driver keeps only a
+    * LAST-VALUE VIEW of emitted decisions for reporting, bounded by table
+    * count and not load-bearing for correctness.
     *
     * Restart: pass the SAME `checkpointDir`. Spark replays only the
     * uncommitted batches from the replayable source against the last
@@ -175,6 +177,7 @@ object EventPipeline {
     val decisions = scala.collection.mutable.ArrayBuffer.empty[Row]
     val byTable = scala.collection.mutable.Map.empty[Long, TableDecision]
     val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val props = cfg.toProperties
     val w = statefulDecisions(events, cfg).writeStream
       .trigger(trigger)
       .outputMode("update")
@@ -190,7 +193,7 @@ object EventPipeline {
           tableId =>
             val table = s"db.tbl_$tableId"
             val ex = executorFor(table)
-            ex.initialize(table, Map.empty)
+            ex.initialize(table, props)
             submitted += ex.execute()
         }
         ()

@@ -108,6 +108,31 @@ class MaintenanceSpec extends AnyFunSuite {
     }
   }
 
+  test("cycle compacts with its config's strategy: sort by l_orderkey") {
+    import spark.implicits._
+    withTempDir("maint-sort") { root =>
+      val (in, out) = (s"$root/in", s"$root/out")
+      fragmented(in, 8)
+      val sortCfg = cfg.copy(strategy = "sort", sortOrder = Some("l_orderkey"))
+      val log = (1 to 12).map(i =>
+        SnapshotMeta(1L, i.toLong, now - 5 * hour + i, "append"))
+      val c = Maintenance.cycle(spark, log,
+        Map(1L -> Maintenance.TableDirs(in, out)), sortCfg)
+      assert(c.triggered === Seq(1L))
+      // per output file, its l_orderkey values in file order
+      val keys = Compact.listFiles(out).map(f =>
+        spark.read.parquet(f.path).select("l_orderkey").as[Long].collect().toSeq)
+      assert(keys.map(_.size).sum === spark.read.parquet(in).count())
+      keys.foreach(k => assert(k === k.sorted, "sorted within each file"))
+      val ranges = keys.filter(_.nonEmpty).map(k => (k.head, k.last))
+        .sortBy(_._1)
+      ranges.sliding(2).foreach {
+        case Seq((_, hi), (lo, _)) => assert(hi < lo, "ranges overlap")
+        case _ =>
+      }
+    }
+  }
+
   test("three triggered tables all compact; ids follow table_id order") {
     withTempDir("maint-three") { root =>
       val rows = Map(7L -> 300, 3L -> 100, 5L -> 200)

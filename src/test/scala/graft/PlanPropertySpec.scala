@@ -5,8 +5,8 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Compact
-import graft.model.FileMeta
-import graft.ops.EventOps
+import graft.model.{CompactionSpec, EngineConfig, FileMeta}
+import graft.ops.{Codegen, EventOps}
 
 /** Property-style tests (SURVEY.md §5.2(3)) over seeded random inputs:
   * filegroup-planning invariants and identifier round-trips. */
@@ -49,6 +49,34 @@ class PlanPropertySpec extends AnyFunSuite {
       val (a, b, c) = (seg, seg, seg)
       assert(EventOps.parseIdent(s"$a.$b.$c") === s"$b.$c")
     }
+  }
+
+  test("EngineConfig round-trips through toProperties; rendered SQL equal") {
+    val rnd = new Random(17)
+    def word = rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString
+    def entries = List.fill(1 + rnd.nextInt(7))(s"$word.$word" -> word).toMap
+    def sql(c: EngineConfig) = Codegen.rewriteDataFilesSql(
+      CompactionSpec("db.t", c.strategy, c.options, c.sortOrder))
+    for (_ <- 1 to 200) {
+      val sort = rnd.nextBoolean()
+      val cfg = EngineConfig(
+        commitThreshold = 1 + rnd.nextInt(100),
+        timeThresholdMs = 1L + rnd.nextInt(Int.MaxValue),
+        synchronousEnabled = rnd.nextBoolean(),
+        sleepWaitMs = rnd.nextInt(5000).toLong,
+        strategy = if (sort) "sort" else "binpack",
+        options = entries,
+        sortOrder = if (sort) Some(s"c${rnd.nextInt(9)} DESC") else None,
+        sparkConfigs = entries,
+        athenaDataCatalog = word,
+        athenaOutputBucket = Option.when(rnd.nextBoolean())(s"s3://$word/"))
+      val back = EngineConfig.fromProperties(cfg.toProperties)
+      assert(back === cfg)
+      assert(sql(back) === sql(cfg))
+    }
+    // the default config renders as an executor given no properties does
+    assert(sql(EngineConfig.fromProperties(EngineConfig().toProperties)) ===
+      sql(EngineConfig.fromProperties(Map.empty)))
   }
 
   test("packEfficiency: n_seqs within [lb, n_docs], consistent with packing") {

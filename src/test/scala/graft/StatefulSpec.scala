@@ -7,89 +7,80 @@ import graft.model.{EngineConfig, JobRun, SnapshotMeta}
 import graft.ops.{Decide, EventOps}
 import graft.stream.{DecideAggregator, JobTracker}
 
-/** Incremental decision aggregator (batch equivalence + merge semantics)
-  * and the stateful streaming job tracker. */
+/** The driver decision fold (batch equivalence, arrival-order
+  * independence) and the stateful streaming job tracker. */
 class StatefulSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
   private val cfg = EngineConfig()
 
-  test("typed aggregator equals the windowed batch decision on real data") {
+  private def decisionTuples(decisions: Map[Long, DecideAggregator.Decision]) =
+    decisions.map { case (t, d) =>
+      t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
+        d.time_triggered, d.should_optimize))
+    }
+
+  test("driver decideLog equals the windowed batch decision on real data") {
     import spark.implicits._
     val log = EventOps.snapshotLog(spark, dir).as[(Long, Long, Long, String)]
+      .collect().toSeq
       .map { case (t, s, ts, op) => SnapshotMeta(t, s, ts, op) }
-    val agg = DecideAggregator(cfg)
-    val viaAgg = log.groupByKey(_.tableId)
-      .agg(agg.toColumn.name("d"))
-      .collect()
-      .map { case (t, d) =>
-        t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
-          d.time_triggered, d.should_optimize))
-      }.toMap
+    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
     val viaWindow = Decide.shouldOptimize(
         EventOps.snapshotLog(spark, dir), cfg)
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4))))
       .toMap
-    assert(viaAgg === viaWindow)
+    assert(viaFold === viaWindow)
   }
 
-  test("aggregator merge prunes retroactively across split buffers") {
-    val agg = DecideAggregator(cfg)
+  test("fold order: a late REPLACE prunes exactly the commits it supersedes") {
+    import DecideAggregator.{finishBuf, reduceBuf, zeroBuf}
     val now = Decide.NowMs
-    // buffer X saw commits at now-1h and now-10min (no replace)
-    val x = Seq(
+    // one micro-batch saw commits at now-1h and now-10min (no replace) ...
+    val appends = Seq(
       SnapshotMeta(1, 1, now - 3600000, "append"),
       SnapshotMeta(1, 2, now - 600000, "append"))
-      .foldLeft(agg.zero)(agg.reduce)
-    // buffer Y saw a replace at now-30min
-    val y = agg.reduce(agg.zero, SnapshotMeta(1, 3, now - 1800000, "replace"))
-    val d = agg.finish(agg.merge(x, y))
+    // ... and a later one brings the replace at now-30min
+    val replace = SnapshotMeta(1, 3, now - 1800000, "replace")
+    val late = finishBuf(
+      reduceBuf(appends.foldLeft(zeroBuf)(reduceBuf), replace), cfg)
+    val sorted = finishBuf(
+      (appends :+ replace).sortBy(_.tsMillis).foldLeft(zeroBuf)(reduceBuf),
+      cfg)
+    assert(late === sorted)
     // only the commit after the replace survives
-    assert(d.n_commits_since_replace === 1L)
-    assert(d.oldest_pending_ts_ms === now - 600000)
-    assert(!d.should_optimize)
-    // merge is symmetric
-    val d2 = agg.finish(agg.merge(y, x))
-    assert(d2 === d)
+    assert(late.n_commits_since_replace === 1L)
+    assert(late.oldest_pending_ts_ms === now - 600000)
+    assert(!late.should_optimize)
   }
 
   test("aggregator equals windowed decision on seeded random logs") {
     import spark.implicits._
+    // a uniform log: 50 tables, 1 row in 8 a REPLACE
     val rnd = new scala.util.Random(7)
-    val now = Decide.NowMs
     val log = (1 to 2000).map { i =>
       SnapshotMeta(
         tableId = rnd.nextInt(50).toLong,
         snapshotId = i.toLong,
-        tsMillis = now - rnd.nextInt(6 * 3600000),
+        tsMillis = Decide.NowMs - rnd.nextInt(6 * 3600000),
         operation = if (rnd.nextInt(8) == 0) "replace" else "append")
     }
-    val ds = log.toDS()
-    val agg = DecideAggregator(cfg)
-    val viaAgg = ds.groupByKey(_.tableId).agg(agg.toColumn.name("d"))
-      .collect().map { case (t, d) =>
-        t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
-          d.time_triggered, d.should_optimize))
-      }.toMap
+    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
     val viaWindow = Decide.shouldOptimize(
-        ds.toDF("tableId", "snapshotId", "tsMillis", "operation")
-          .toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
+        log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4))))
       .toMap
-    assert(viaAgg === viaWindow)
+    assert(viaFold === viaWindow)
   }
 
   test("driver decideLog equals the windowed decision row for row") {
     import spark.implicits._
     (1 to 5).foreach { seed =>
       val log = RandomLogs(seed)
-      val viaFold = DecideAggregator.decideLog(log, cfg).map { case (t, d) =>
-        t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
-          d.time_triggered, d.should_optimize))
-      }
+      val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
       val viaWindow = Decide.shouldOptimize(
           log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
         .collect().map(r => r.getLong(0) ->

@@ -86,6 +86,30 @@ class StreamSpec extends AnyFunSuite {
     }
   }
 
+  test("dispatch hands the deciding config to the executor (sort strategy)") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val sortCfg = cfg.copy(strategy = "sort", sortOrder = Some("l_orderkey"))
+    val input = MemoryStream[Ev]
+    val executors = scala.collection.mutable.ArrayBuffer.empty[DryRunExecutor]
+    withTempDir("ckpt") { ckpt =>
+      val (q, result) = EventPipeline.runStatefulStreaming(
+        input.toDS().toDF(eventCols: _*), sortCfg,
+        _ => { val ex = new DryRunExecutor(new JobStateLog); executors += ex; ex },
+        ckpt, Trigger.ProcessingTime(0))
+      try {
+        input.addData((1L to 12L).map(commit(9L, _)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(result.submittedJobs.size === 1)
+      assert(executors.flatMap(_.generatedSql) === Seq(
+        "CALL aws_ebtm.system.rewrite_data_files(table => 'db.tbl_9', " +
+          "options => map('partial-progress.enabled','true'," +
+          "'max-file-group-size-bytes','10737418240'), " +
+          "strategy => 'sort', sort_order => 'l_orderkey')"))
+    }
+  }
+
   test("decisions hold across micro-batch boundaries (accumulated log)") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -1701,23 +1725,20 @@ class StreamSpec extends AnyFunSuite {
     assert(snapshot() === Set(("c", 4L), ("a", 2L)))
   }
 
-  test("metrics listener captures per-batch commit metrics as a table") {
-    val listener = new graft.stream.CommitMetricsListener
-    spark.streams.addListener(listener)
-    try {
-      EventPipeline.runStatefulOnce(spark, dir, cfg,
-        _ => new DryRunExecutor(new JobStateLog))
-      // listener callbacks are async; wait briefly for delivery
-      val deadline = System.nanoTime() + 10000000000L
-      while (listener.all.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      val rows = listener.all
+  test("query progress captures per-batch commit metrics as a table") {
+    import spark.implicits._
+    withTempDir("progress-ckpt") { ckpt =>
+      val (q, _) = EventPipeline.runStatefulStreaming(
+        EventPipeline.readEventStream(spark, dir), cfg,
+        _ => new DryRunExecutor(new JobStateLog), ckpt)
+      q.awaitTermination()
+      val rows = q.recentProgress.toSeq
       assert(rows.nonEmpty)
       assert(rows.map(_.numInputRows).sum === 1000L) // all sf0.001 events
-      val df = listener.asDataFrame(spark)
+      val df = spark.read.json(rows.map(_.json).toDS())
       assert(df.columns.toSet.contains("numInputRows"))
       assert(df.count() === rows.size)
-    } finally spark.streams.removeListener(listener)
+    }
   }
 
   test("streaming quality filter equals the batch filter (stateless pass)") {

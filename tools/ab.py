@@ -1,0 +1,119 @@
+#!/usr/bin/env python3
+"""Paired A/B of the benchmark: a base revision against the working tree.
+
+    python3 tools/ab.py --base REV --workload W --pairs N --seed0 S
+
+Run from the repository root. REV is exported with `git archive` into a
+temporary directory (under --workdir), so the repository's .git gains no
+worktree entry; the directory is removed on exit. Pair i runs
+`perfbench/run.py --workload W --seed S+i --trace 0` (the command and
+`run_seconds` from BENCHMARK.json) once in the base tree and once in the
+working tree, alternating which side runs first. Each run's last stdout
+line is its JSON record.
+
+For every end-to-end metric in BENCHMARK.json it prints both medians, the
+base's quartiles, the ratio head/base and how many pairs the head won. A
+metric is flagged "unresolved" when the medians are closer than the base's
+interquartile range: the pairs cannot tell the trees apart.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+RUN_TIMEOUT_S = 900
+
+
+def export(rev, workdir):
+    """Write the tree of `rev` into a fresh directory and return its path."""
+    d = tempfile.mkdtemp(prefix="ab-base-", dir=workdir)
+    archive = subprocess.run(["git", "-C", ROOT, "archive", rev],
+                             check=True, capture_output=True).stdout
+    subprocess.run(["tar", "-x", "-C", d], input=archive, check=True)
+    return d
+
+
+def run(tree, cmd, workload, seed, seconds):
+    """One benchmark run in `tree`; its last stdout line as a dict."""
+    p = subprocess.run(cmd + ["--workload", workload, "--seed", str(seed),
+                              "--seconds", str(seconds), "--trace", "0"],
+                       cwd=tree, capture_output=True, text=True,
+                       timeout=RUN_TIMEOUT_S)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        sys.exit(f"ab: run failed in {tree} (seed {seed}, exit "
+                 f"{p.returncode}):\n{p.stderr[-2000:]}")
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def report(spec, base, head):
+    n = len(base)
+    for side, runs in (("base", base), ("head", head)):
+        bad = sum(not r["correct"] for r in runs)
+        failed = sum(r["failed"] for r in runs)
+        attempted = sum(r["attempted"] for r in runs)
+        print(f"{side}: {n - bad}/{n} runs correct, "
+              f"{failed}/{attempted} operations failed")
+    print(f"{'metric':<24}{'base p50':>11}{'head p50':>11}"
+          f"{'base q1..q3':>22}{'ratio':>8}{'wins':>7}")
+    for m in spec["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        b = [r["metrics"][name]["value"] for r in base]
+        h = [r["metrics"][name]["value"] for r in head]
+        bm, hm = statistics.median(b), statistics.median(h)
+        q1, q3 = quartiles(b)
+        wins = sum((y < x) if lower else (y > x) for x, y in zip(b, h))
+        ratio = hm / bm if bm else float("nan")
+        flag = "  unresolved" if abs(hm - bm) < q3 - q1 else ""
+        print(f"{name:<24}{bm:>11.2f}{hm:>11.2f}"
+              f"{f'{q1:.2f}..{q3:.2f}':>22}{ratio:>8.3f}"
+              f"{f'{wins}/{n}':>7}{flag}")
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--base", required=True, help="git revision to compare")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--seed0", type=int, default=101)
+    ap.add_argument("--workdir", default=tempfile.gettempdir(),
+                    help="where the base tree is exported (default: TMPDIR)")
+    a = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    cmd, seconds = spec["command"], spec["run_seconds"]
+    tree = export(a.base, a.workdir)
+    base, head = [], []
+    try:
+        for i in range(a.pairs):
+            seed = a.seed0 + i
+            order = [("base", tree), ("head", ROOT)]
+            if i % 2:
+                order.reverse()
+            for side, path in order:
+                r = run(path, cmd, a.workload, seed, seconds)
+                (base if side == "base" else head).append(r)
+                p50 = r["metrics"]["latency_p50_ms"]["value"]
+                print(f"pair {i + 1} seed {seed} {side}: p50 {p50:.1f} ms, "
+                      f"correct {r['correct']}", file=sys.stderr, flush=True)
+    finally:
+        shutil.rmtree(tree, ignore_errors=True)
+    print(f"{a.workload}: base {a.base} vs working tree, {a.pairs} pairs, "
+          f"seeds {a.seed0}..{a.seed0 + a.pairs - 1}")
+    report(spec, base, head)
+
+
+if __name__ == "__main__":
+    main()
