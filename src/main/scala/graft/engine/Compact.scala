@@ -1,13 +1,12 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{CompactionSpec, FileMeta, SnapshotMeta, SortTerm}
-import graft.ops.FilePlan
 
 /** Native compaction — the data-processing work the reference delegates to
   * `rewrite_data_files` / Athena OPTIMIZE (SURVEY.md §2.2).
@@ -24,10 +23,12 @@ import graft.ops.FilePlan
   * modeled in a metadata snapshot log (returned to the caller / appended by
   * [[Maintenance]]), not in the filesystem — SURVEY.md §7.4.
   *
-  * Scale: the rewrite itself is `read → repartition(n) → write`, embarrassingly
+  * Every rewrite — binpack, sort, z-order and each partial-progress group —
+  * runs one private skeleton, `read → layout(n) → overwrite`, embarrassingly
   * parallel, with n sized from real byte counts so output files hit the
-  * target size at any input scale. Per-group rewrites read only that group's
-  * files, bounding each job to ≤cap bytes regardless of table size.
+  * target size at any input scale; only the layout differs. Per-group
+  * rewrites read only that group's files, bounding each job to ≤cap bytes
+  * regardless of table size.
   */
 object Compact {
 
@@ -124,20 +125,34 @@ object Compact {
   def outputFileCount(totalBytes: Long, targetBytes: Long): Int =
     math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
 
+  /** The one rewrite skeleton every compaction runs: size `n` output files
+    * from the listed `inputs`, lay out the read of `paths` with `layout`,
+    * overwrite `outputDir`. Returns (filesBefore, filesAfter). */
+  private def rewrite(spark: SparkSession, inputs: Seq[FileMeta],
+      paths: Seq[String], outputDir: String, targetBytes: Long)(
+      layout: (DataFrame, Int) => DataFrame): (Int, Int) = {
+    val n = outputFileCount(inputs.map(_.sizeBytes).sum, targetBytes)
+    layout(spark.read.parquet(paths: _*), n)
+      .write.mode(SaveMode.Overwrite).parquet(outputDir)
+    (inputs.size, listFiles(outputDir).size)
+  }
+
+  /** The clustered layout of sort, z-order and the z-order fallback:
+    * range partitioning keeps a global order across output files, so
+    * downstream range predicates prune whole files; one range exchange,
+    * a local sort, no global sort. */
+  private def rangeSorted(cols: Seq[Column])(df: DataFrame, n: Int): DataFrame =
+    df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
+
   /** binpack_compaction: rewrite a whole table directory into ~target-size
     * files. Returns (filesBefore, filesAfter). */
   def binpack(spark: SparkSession, inputDir: String, outputDir: String,
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) = {
-    val before = listFiles(inputDir)
-    val n = outputFileCount(before.map(_.sizeBytes).sum, targetBytes)
-    spark.read.parquet(inputDir)
-      .repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(outputDir)
-    (before.size, listFiles(outputDir).size)
-  }
+      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+    rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
+      targetBytes)(_.repartition(_))
 
   /** A parsed sort term as a Spark ordering Column. */
-  def termColumn(t: SortTerm): org.apache.spark.sql.Column =
+  def termColumn(t: SortTerm): Column =
     (t.ascending, t.nullsFirst) match {
       case (true, true)   => col(t.column).asc_nulls_first
       case (true, false)  => col(t.column).asc_nulls_last
@@ -145,38 +160,20 @@ object Compact {
       case (false, false) => col(t.column).desc_nulls_last
     }
 
-  /** sort_compaction: rewrite clustered by the sort order — range
-    * partitioning keeps a global order across output files, so downstream
-    * range predicates prune whole files. Plain-ASC convenience form. */
-  def sortRewrite(spark: SparkSession, inputDir: String, outputDir: String,
-      sortCols: Seq[String],
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
-    sortRewriteOrdered(spark, inputDir, outputDir,
-      sortCols.map(SortTerm(_, ascending = true, nullsFirst = true)),
-      targetBytes)
-
   /** sort_compaction with full per-column direction + null placement —
     * the grammar the reference's `sort_order` string carries
-    * (EMRSparkUtil.java:118-124). */
+    * (EMRSparkUtil.java:118-124) — in the [[rangeSorted]] layout. */
   def sortRewriteOrdered(spark: SparkSession, inputDir: String,
       outputDir: String, terms: Seq[SortTerm],
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) = {
-    val before = listFiles(inputDir)
-    val n = outputFileCount(before.map(_.sizeBytes).sum, targetBytes)
-    val df = spark.read.parquet(inputDir)
-    val cols = terms.map(termColumn)
-    df.repartitionByRange(n, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode(SaveMode.Overwrite).parquet(outputDir)
-    (before.size, listFiles(outputDir).size)
-  }
+      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+    rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
+      targetBytes)(rangeSorted(terms.map(termColumn)))
 
   /** zorder_compaction: rewrite clustered along the Morton curve of two
-    * columns — range-partition + sort on the interleaved-bit z-value, so
-    * every output file covers a compact region in BOTH dimensions and
+    * columns — the [[rangeSorted]] layout on the interleaved-bit z-value,
+    * so every output file covers a compact region in BOTH dimensions and
     * min/max file stats prune on either column's predicate (a plain sort
-    * only prunes on its leading column). Same plan shape as
-    * [[sortRewrite]]: one range exchange, local sort, no global sort.
+    * only prunes on its leading column).
     *
     * Each dimension is min-max normalized to 16 bits before interleaving
     * (one tiny stats agg up front): raw interleaving of columns with
@@ -185,35 +182,27 @@ object Compact {
     * split both dimensions evenly regardless of their value ranges. */
   def zorderRewrite(spark: SparkSession, inputDir: String, outputDir: String,
       colA: String, colB: String,
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) = {
-    val before = listFiles(inputDir)
-    val n = outputFileCount(before.map(_.sizeBytes).sum, targetBytes)
-    val df = spark.read.parquet(inputDir)
-    val s = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double")))
-      .collect()(0)
-    if (s.isNullAt(0) || s.isNullAt(2)) {
-      // empty input or an all-null cluster column: the z-value is
-      // undefined — fall back to a plain lexicographic sort rewrite.
-      df.repartitionByRange(n, col(colA), col(colB))
-        .sortWithinPartitions(col(colA), col(colB))
-        .write.mode(SaveMode.Overwrite).parquet(outputDir)
-      return (before.size, listFiles(outputDir).size)
+      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+    rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
+        targetBytes) { (df, n) =>
+      val s = df.agg(
+        min(col(colA).cast("double")), max(col(colA).cast("double")),
+        min(col(colB).cast("double")), max(col(colB).cast("double")))
+        .collect()(0)
+      if (s.isNullAt(0) || s.isNullAt(2)) {
+        // empty input or an all-null cluster column: the z-value is
+        // undefined — fall back to a plain lexicographic sort rewrite.
+        rangeSorted(Seq(col(colA), col(colB)))(df, n)
+      } else {
+        def norm(c: String, lo: Double, hi: Double) =
+          if (hi <= lo) lit(0)
+          else ((col(c).cast("double") - lo) / (hi - lo) * 65535.0).cast("int")
+        val z = graft.functions.ZOrder2.z_order2(
+          norm(colA, s.getDouble(0), s.getDouble(1)),
+          norm(colB, s.getDouble(2), s.getDouble(3)))
+        rangeSorted(Seq(col("__z")))(df.withColumn("__z", z), n).drop("__z")
+      }
     }
-    def norm(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0)
-      else ((col(c).cast("double") - lo) / (hi - lo) * 65535.0).cast("int")
-    val z = graft.functions.ZOrder2.z_order2(
-      norm(colA, s.getDouble(0), s.getDouble(1)),
-      norm(colB, s.getDouble(2), s.getDouble(3)))
-    df.withColumn("__z", z)
-      .repartitionByRange(n, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(outputDir)
-    (before.size, listFiles(outputDir).size)
-  }
 
   /** Partial-progress compaction: plan groups under the cap, rewrite one
     * group at a time, emit one REPLACE snapshot per completed group
@@ -235,10 +224,8 @@ object Compact {
     val groups = planGroups(listFiles(inputDir), capBytes)
     groups.zipWithIndex.map { case (group, i) =>
       beforeGroup(i)
-      val n = outputFileCount(group.map(_.sizeBytes).sum, targetBytes)
-      spark.read.parquet(group.map(_.path): _*)
-        .repartition(n)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outputDir/group=$i")
+      rewrite(spark, group, group.map(_.path), s"$outputDir/group=$i",
+        targetBytes)(_.repartition(_))
       val snap = SnapshotMeta(tableId = tableId, snapshotId = i.toLong,
         tsMillis = nowMs + i, operation = "replace")
       onCommit(snap)
@@ -247,14 +234,10 @@ object Compact {
   }
 
   /** Dispatch a CompactionSpec (the typed form of the generated SQL) against
-    * local table directories. */
+    * local table directories: a sort spec carries its parsed terms, a
+    * binpack spec none. */
   def run(spark: SparkSession, spec: CompactionSpec, inputDir: String,
       outputDir: String): (Int, Int) =
-    spec.strategy match {
-      case "sort" =>
-        val terms = SortTerm.parseOrder(spec.sortOrder.getOrElse(""))
-        require(terms.nonEmpty, "sort strategy requires sort_order columns")
-        sortRewriteOrdered(spark, inputDir, outputDir, terms)
-      case _ => binpack(spark, inputDir, outputDir)
-    }
+    if (spec.sortTerms.isEmpty) binpack(spark, inputDir, outputDir)
+    else sortRewriteOrdered(spark, inputDir, outputDir, spec.sortTerms)
 }

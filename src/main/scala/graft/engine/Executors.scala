@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.model.{CompactionSpec, EngineConfig, JobRun, PollPolicy}
+import graft.model.{EngineConfig, JobRun, PollPolicy}
 import graft.ops.Codegen
 
 /** Executor SPI — the engine-binding abstraction (Executor.java:9-23) with
@@ -99,32 +99,34 @@ object Executors {
 }
 
 /** Runs the compaction as an in-process Spark action, the local analog of
-  * submitting to a remote engine. The strategy, sort order and options
-  * come from the properties the decider passed (`EngineConfig.toProperties`);
-  * the `input`/`output` dirs ride along as `local.input-dir` /
-  * `local.output-dir`. A synchronous job runs inline on the caller's
-  * thread: `execute` returns once it SUCCEEDED, or raises once it is
-  * logged FAILED. An asynchronous one runs on a Future and the caller
-  * polls the log (`Executors.waitForCompletion`). */
+  * submitting to a remote engine. The compaction is `cfg.spec(table)` of
+  * the config parsed from the properties the decider passed
+  * (`EngineConfig.toProperties`), so a config that cannot compact was
+  * already refused when it was built. The `input`/`output` dirs ride along
+  * as `local.input-dir` / `local.output-dir`; `initialize` refuses a
+  * missing one, before any job is submitted. A synchronous job runs inline
+  * on the caller's thread: `execute` returns once it SUCCEEDED, or raises
+  * once it is logged FAILED. An asynchronous one runs on a Future and the
+  * caller polls the log (`Executors.waitForCompletion`). */
 final class LocalSparkExecutor(spark: SparkSession, log: JobStateLog)
     extends Executor {
   private var table: String = _
   private var cfg: EngineConfig = EngineConfig()
-  private var props: Map[String, String] = Map.empty
+  private var input: String = _
+  private var output: String = _
 
   override def initialize(table: String, properties: Map[String, String]): Unit = {
+    def dir(key: String): String = properties.getOrElse(key,
+      throw new IllegalArgumentException(s"$key is required"))
     this.table = table
-    this.props = properties
     this.cfg = EngineConfig.fromProperties(properties)
+    this.input = dir("local.input-dir")
+    this.output = dir("local.output-dir")
   }
 
   override def execute(): String = {
     val jobId = s"local-$table-${log.nextJobSeq()}"
-    val input = props.getOrElse("local.input-dir",
-      throw new IllegalArgumentException("local.input-dir is required"))
-    val output = props.getOrElse("local.output-dir",
-      throw new IllegalArgumentException("local.output-dir is required"))
-    val spec = CompactionSpec(table, cfg.strategy, cfg.options, cfg.sortOrder)
+    val spec = cfg.spec(table)
     log.append(JobRun(jobId, "SUBMITTED", System.currentTimeMillis()))
     def run(): Unit =
       try {
@@ -188,8 +190,7 @@ final class DryRunExecutor(log: JobStateLog) extends Executor {
 
   override def execute(): String = {
     val jobId = s"dry-$table-${log.nextJobSeq()}"
-    val spec = CompactionSpec(table, cfg.strategy, cfg.options, cfg.sortOrder)
-    generatedSql = Some(Codegen.rewriteDataFilesSql(spec))
+    generatedSql = Some(Codegen.rewriteDataFilesSql(cfg.spec(table)))
     val now = System.currentTimeMillis()
     log.append(JobRun(jobId, "SUBMITTED", now))
     log.append(JobRun(jobId, "SUCCEEDED", now))

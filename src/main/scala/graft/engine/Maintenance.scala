@@ -33,13 +33,14 @@ object Maintenance {
       jobIds: Seq[String],
       log: Seq[SnapshotMeta])
 
-  /** One decision+compaction cycle over an explicit snapshot log. Tables
-    * trigger, and compact one after another, in ascending `table_id`
-    * order; a failed compaction raises at once. */
+  /** One decision+compaction cycle over an explicit snapshot log, on one
+    * clock: it decides at `nowMs` and stamps its REPLACE commits with it.
+    * Tables trigger, and compact one after another, in ascending
+    * `table_id` order; a failed compaction raises at once. */
   def cycle(spark: SparkSession, log: Seq[SnapshotMeta],
       tables: Map[Long, TableDirs], cfg: EngineConfig,
       nowMs: Long = Decide.NowMs): CycleResult = {
-    val triggered = DecideAggregator.decideLog(log, cfg).collect {
+    val triggered = DecideAggregator.decideLog(log, cfg, nowMs).collect {
       case (t, d) if d.should_optimize && tables.contains(t) => t
     }.toSeq.sorted
     val stateLog = new JobStateLog

@@ -50,11 +50,6 @@ object QueryFiles {
   val EksLogGroup = "/aws/emr-containers"
   val EksLogPrefix = "iceberg"
 
-  /** Engine extension: prop-driven toggle for the monitoring block. The
-    * reference attaches it unconditionally (:105-120); the default
-    * preserves that, `false` drops the ConfigurationOverrides entirely. */
-  val MonitoringEnabledKey = "optimize-data.emr.monitoring-enabled"
-
   /** Required-prop check, reference message preserved verbatim — including
     * its "be be" typo (EmrOnEksOptimizeDataExecutor.java:56-69,
     * BaseEmrOptimizeDataExecutor.java:56-60). */
@@ -85,29 +80,24 @@ object QueryFiles {
     * (EmrOnEksOptimizeDataExecutor.java:89-121): job name, cluster/role/
     * release identity (each a required prop, :56-69), the SparkSql job
     * driver pointing at the uploaded `.sql` entrypoint, and the
-    * monitoring configuration — persistent app UI, CloudWatch log
-    * group/stream-prefix, and the S3 log-upload path under the upload
-    * bucket (:105-120, constants :35-39). */
+    * monitoring configuration the reference always attaches — persistent
+    * app UI, CloudWatch log group/stream-prefix, and the S3 log-upload
+    * path under the upload bucket (:105-120, constants :35-39). */
   def eksStartJobRunParams(tableName: String, queryFilePath: String,
       props: Map[String, String]): String = {
     val clusterId = required(props, EngineConfig.EmrClusterIdKey)
     val roleArn = required(props, EngineConfig.IamExecutionRoleArnKey)
     val release = required(props, EngineConfig.EmrReleaseLabelKey)
     val bucket = required(props, EngineConfig.EmrUploadBucketKey)
-    val monitoringOn = props.get(MonitoringEnabledKey)
-      .forall(java.lang.Boolean.parseBoolean)
-    val monitoring =
-      if (!monitoringOn) ""
-      else ", ConfigurationOverrides(MonitoringConfiguration(" +
-        s"PersistentAppUI='$PersistentAppUi', " +
-        s"CloudWatchMonitoringConfiguration(LogGroupName='$EksLogGroup', " +
-        s"LogStreamNamePrefix='$EksLogPrefix'), " +
-        s"S3MonitoringConfiguration(LogUri='$bucket/logs/')))"
     s"StartJobRun(Name='OptimizeJob-$tableName', " +
       s"VirtualClusterId='$clusterId', ExecutionRoleArn='$roleArn', " +
       s"ReleaseLabel='$release', " +
       s"JobDriver(SparkSqlJobDriver(EntryPoint='$queryFilePath', " +
-      s"SparkSqlParameters='${eksSparkSqlParameters(props)}'))" +
-      monitoring + ")"
+      s"SparkSqlParameters='${eksSparkSqlParameters(props)}')), " +
+      "ConfigurationOverrides(MonitoringConfiguration(" +
+      s"PersistentAppUI='$PersistentAppUi', " +
+      s"CloudWatchMonitoringConfiguration(LogGroupName='$EksLogGroup', " +
+      s"LogStreamNamePrefix='$EksLogPrefix'), " +
+      s"S3MonitoringConfiguration(LogUri='$bucket/logs/'))))"
   }
 }

@@ -417,30 +417,6 @@ object TextAnalysis {
         expr("df_mass div n_tokens").as("mean_token_df"),
         expr("rare_occ * 1000 div n_tokens").as("rare_frac_x1000"))
 
-  /** Bigram language-model quality score (the CCNet-style perplexity
-    * filter, integer surrogate): train a bigram LM on the corpus itself —
-    * c(w₁,w₂) and context totals c(w₁) — and score each document by its
-    * mean bigram probability in parts-per-million,
-    * `lm_score_ppm = Σ tf·(c(w₁,w₂)·10⁶ div c(w₁)) div n_bigrams`.
-    * Fluent text built from common transitions scores high; gibberish and
-    * shuffled text score near zero. `novel_frac_x1000` is the fraction of
-    * bigram occurrences unique to the document (c = tf) — the
-    * memorization/templating tail. All integer arithmetic, oracle-exact.
-    * The MLE is deliberately unsmoothed (smoothing constants are
-    * float-laden and engine-specific): a context seen only inside one doc
-    * scores a full 10⁶ ppm for its own transition, so rank `lm_score_ppm`
-    * TOGETHER with `novel_frac_x1000` — high novelty is exactly the
-    * signature of those self-supporting contexts.
-    *
-    * Plan shape: one explode + per-doc bigram tf aggregate; the bigram
-    * count and context tables re-aggregate FROM tf (the [[termStats]]
-    * two-subtree note applies) and join back onto it with NO pinned
-    * broadcast hint — the bigram vocabulary outgrows a broadcast at web
-    * scale, so AQE picks broadcast vs shuffle from the real runtime
-    * sizes (tf, the big side, is never re-shuffled either way), and
-    * [[lmHead]] is the KenLM-style pruning that keeps a shipped model
-    * broadcast-sized. Docs with fewer than two tokens have no bigrams
-    * and are excluded on both engines. */
   /** Per-doc bigram term frequencies through the compiled
     * [[graft.functions.BigramPairs]] pass, which replaced an interpreted
     * `zip_with`/`slice` pair explode (r19, guide §4: zip_with/transform
@@ -516,6 +492,30 @@ object TextAnalysis {
         expr("ppm_mass div n_bigrams").as("lm_score_ppm"),
         expr("novel_occ * 1000 div n_bigrams").as("novel_frac_x1000"))
 
+  /** Bigram language-model quality score (the CCNet-style perplexity
+    * filter, integer surrogate): train a bigram LM on the corpus itself —
+    * c(w₁,w₂) and context totals c(w₁) — and score each document by its
+    * mean bigram probability in parts-per-million,
+    * `lm_score_ppm = Σ tf·(c(w₁,w₂)·10⁶ div c(w₁)) div n_bigrams`.
+    * Fluent text built from common transitions scores high; gibberish and
+    * shuffled text score near zero. `novel_frac_x1000` is the fraction of
+    * bigram occurrences unique to the document (c = tf) — the
+    * memorization/templating tail. All integer arithmetic, oracle-exact.
+    * The MLE is deliberately unsmoothed (smoothing constants are
+    * float-laden and engine-specific): a context seen only inside one doc
+    * scores a full 10⁶ ppm for its own transition, so rank `lm_score_ppm`
+    * TOGETHER with `novel_frac_x1000` — high novelty is exactly the
+    * signature of those self-supporting contexts.
+    *
+    * Plan shape: one explode + per-doc bigram tf aggregate; the bigram
+    * count and context tables re-aggregate FROM tf (the [[termStats]]
+    * two-subtree note applies) and join back onto it with NO pinned
+    * broadcast hint — the bigram vocabulary outgrows a broadcast at web
+    * scale, so AQE picks broadcast vs shuffle from the real runtime
+    * sizes (tf, the big side, is never re-shuffled either way), and
+    * [[lmHead]] is the KenLM-style pruning that keeps a shipped model
+    * broadcast-sized. Docs with fewer than two tokens have no bigrams
+    * and are excluded on both engines. */
   def lmScores(docs: DataFrame): DataFrame = {
     val tf = bigramTf(docs)
     // r18 A/B NOTES (both alternatives measured and REVERTED):

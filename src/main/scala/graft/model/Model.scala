@@ -7,22 +7,12 @@ import scala.collection.immutable.VectorMap
   * Mirrors the reference's abstractions (SURVEY.md §1.1):
   *  - snapshot/commit log entries (Iceberg `Snapshot` analog,
   *    reference: AwsTableManagementMetricsEvaluator.java:74,108-140)
-  *  - commit events (Iceberg `CommitReport` analog, :64-85)
   *  - data-file metadata (the compaction unit, AwsManageProperties.java:48-50)
   *  - job runs (submit/poll lifecycle, AthenaOptimizeDataExecutor.java:122-155)
   *
   * Pure Scala — no Spark imports — so these stay usable as Dataset element
   * types (Encoders.product) and in plain unit tests.
   */
-
-/** A commit event pushed on every table write (CommitReport analog). */
-final case class CommitEvent(
-    eventId: Long,
-    tsMillis: Long,
-    tableId: Long,
-    operation: String,
-    bytesWritten: Double,
-    propsJson: String)
 
 /** One entry of a table's snapshot/commit log (Snapshot analog). */
 final case class SnapshotMeta(
@@ -87,10 +77,6 @@ object PollPolicy {
     * raise — the strictest composite, so local runs never mask failures. */
   val Local: PollPolicy = PollPolicy("local",
     JobState.NonTerminal, Set("FAILED", "CANCELLED"), "SUBMITTED")
-
-  val byEngine: Map[String, PollPolicy] =
-    Seq(Athena, EmrEc2, EmrEks, EmrServerless, Local)
-      .map(p => p.engine -> p).toMap
 }
 
 /** One parsed sort-order term: column + direction + null placement.
@@ -130,7 +116,11 @@ object SortTerm {
 }
 
 /** What to do when a table triggers: the typed form of the SQL text the
-  * reference generates (EMRSparkUtil.java:101-128). */
+  * reference generates (EMRSparkUtil.java:101-128). These `require`s are
+  * the compaction rules; [[EngineConfig]] runs them when it is built, so a
+  * config that cannot compact never reaches a decision. The sort order is
+  * parsed once, when the spec is built, and `Compact.run` dispatches on
+  * the kept terms. */
 final case class CompactionSpec(
     table: String,
     strategy: String = EngineConfig.DefaultStrategy,
@@ -140,13 +130,22 @@ final case class CompactionSpec(
     s"unknown strategy: $strategy")
   require(strategy == "sort" || sortOrder.isEmpty,
     "sort_order requires strategy=sort")
-  // reject malformed sort-order strings at spec construction, not mid-rewrite
-  sortOrder.foreach(SortTerm.parseOrder)
+  /** The parsed sort order; empty exactly when the strategy is binpack. */
+  val sortTerms: Seq[SortTerm] =
+    sortOrder.fold(Seq.empty[SortTerm])(SortTerm.parseOrder)
+  require(strategy != "sort" || sortTerms.nonEmpty,
+    "sort strategy requires sort_order columns")
 }
 
 /** Typed mirror of the reference's property namespace with its defaults
   * (AwsManageProperties.java:11-66) and mandatory-property checks
-  * (SURVEY.md §2.1 required_prop_check). */
+  * (SURVEY.md §2.1 required_prop_check). Construction is the one
+  * validation point: the thresholds are checked here, and the compaction
+  * fields (strategy, sort order, options) by building the
+  * [[CompactionSpec]] template that [[spec]] hands to every executor. An
+  * unknown strategy, a sort without an order, a binpack with one or a
+  * malformed order throws `IllegalArgumentException` before any decision,
+  * stream start or rewrite. */
 final case class EngineConfig(
     commitThreshold: Int = EngineConfig.DefaultCommitThreshold,
     timeThresholdMs: Long = EngineConfig.DefaultTimeThresholdMs,
@@ -161,6 +160,10 @@ final case class EngineConfig(
   require(commitThreshold > 0, "commit-threshold must be positive")
   require(timeThresholdMs > 0, "time-threshold-ms must be positive")
   require(sleepWaitMs >= 0, "sleep-wait-ms must be non-negative")
+  private val specTemplate = CompactionSpec("", strategy, options, sortOrder)
+
+  /** The compaction this config runs on `table`. */
+  def spec(table: String): CompactionSpec = specTemplate.copy(table = table)
 
   /** The Athena path's required-prop check: the reference refuses to
     * initialize without a result-output bucket
@@ -277,12 +280,6 @@ object EngineConfig {
 /** Fixture constants shared by the Spark queries and the DuckDB oracle SQL
   * (FIXTURES.md §3 determinism contract). */
 object Fixture {
-  /** Injected "now" (the reference uses wall-clock at
-    * AwsTableManagementMetricsEvaluator.java:119 — non-deterministic, so the
-    * engine parameterizes it). Chosen just past the testdata's max ts. */
-  val NowUtc = "2024-01-31 00:00:00"
-  /** now − timeThreshold (3 h): the staleness cutoff as an absolute instant. */
-  val StaleCutoffUtc = "2024-01-30 21:00:00"
   /** event_type values that count as table-write commits (CommitReport
     * analog); 'error' models non-commit MetricsReports that the filter at
     * AwsTableManagementMetricsEvaluator.java:68 drops. */

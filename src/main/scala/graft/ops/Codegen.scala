@@ -24,8 +24,9 @@ object Codegen {
   def optionsLiteral(options: Map[String, String]): String =
     options.map { case (k, v) => s"'$k','$v'" }.mkString("map(", ",", ")")
 
-  /** Full compaction command with conditional options / strategy /
-    * sort_order clauses (EMRSparkUtil.java:101-128). */
+  /** Full compaction command with conditional options / sort_order
+    * clauses (EMRSparkUtil.java:101-128); a valid spec always has a
+    * strategy, and a sort order exactly when it sorts. */
   def rewriteDataFilesSql(spec: CompactionSpec): String = {
     val sb = new StringBuilder
     sb.append(s"CALL $SparkCatalogName.system.rewrite_data_files")
@@ -33,10 +34,8 @@ object Codegen {
     sb.append(s"table => '${spec.table}'")
     if (spec.options.nonEmpty)
       sb.append(s", options => ${optionsLiteral(spec.options)}")
-    if (spec.strategy.nonEmpty)
-      sb.append(s", strategy => '${spec.strategy}'")
-    spec.sortOrder.filter(_.nonEmpty).foreach(o =>
-      sb.append(s", sort_order => '$o'"))
+    sb.append(s", strategy => '${spec.strategy}'")
+    spec.sortOrder.foreach(o => sb.append(s", sort_order => '$o'"))
     sb.append(")")
     sb.toString
   }

@@ -40,11 +40,12 @@ object DecideAggregator {
       b.copy(pending = b.pending :+ s.tsMillis)
     } else b
 
-  def finishBuf(b: DecideBuf, cfg: EngineConfig): Decision = {
+  /** The decision at instant `nowMs`: stale when the oldest pending
+    * commit is at least `timeThresholdMs` older than `nowMs`. */
+  def finishBuf(b: DecideBuf, cfg: EngineConfig, nowMs: Long): Decision = {
     val n = b.pending.size.toLong
     val oldest = if (n == 0) -1L else b.pending.min
-    val stale = n > 0 &&
-      oldest <= graft.ops.Decide.NowMs - cfg.timeThresholdMs
+    val stale = n > 0 && oldest <= nowMs - cfg.timeThresholdMs
     Decision(
       n_commits_since_replace = n,
       oldest_pending_ts_ms = oldest,
@@ -52,12 +53,13 @@ object DecideAggregator {
       should_optimize = n >= cfg.commitThreshold || stale)
   }
 
-  /** The decision for every table in a driver-held log, with no Spark
-    * job: each table's rows folded through the stream's own
+  /** The decision at `nowMs` for every table in a driver-held log, with
+    * no Spark job: each table's rows folded through the stream's own
     * `reduceBuf`/`finishBuf`, so the batch cycle and the decision stream
     * apply one rule. */
-  def decideLog(log: Seq[SnapshotMeta], cfg: EngineConfig): Map[Long, Decision] =
+  def decideLog(log: Seq[SnapshotMeta], cfg: EngineConfig,
+      nowMs: Long): Map[Long, Decision] =
     log.groupBy(_.tableId).map { case (t, rows) =>
-      t -> finishBuf(rows.foldLeft(zeroBuf)(reduceBuf), cfg)
+      t -> finishBuf(rows.foldLeft(zeroBuf)(reduceBuf), cfg, nowMs)
     }
 }

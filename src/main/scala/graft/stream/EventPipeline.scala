@@ -125,7 +125,7 @@ object EventPipeline {
     val prev = state.getOption
       .getOrElse(TableState(DecideAggregator.zeroBuf, dispatched = false))
     val buf = rows.foldLeft(prev.buf)(DecideAggregator.reduceBuf)
-    val d = DecideAggregator.finishBuf(buf, cfg)
+    val d = DecideAggregator.finishBuf(buf, cfg, graft.ops.Decide.NowMs)
     state.update(TableState(buf, dispatched = d.should_optimize))
     Iterator.single(TableDecision(tableId, d.n_commits_since_replace,
       d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize,

@@ -85,6 +85,22 @@ class CodegenSpec extends AnyFunSuite {
     }
   }
 
+  test("EngineConfig refuses a config that cannot compact when it is built") {
+    import EngineConfig.{SortOrderKey, StrategyKey}
+    val bad: Seq[() => EngineConfig] = Seq(
+      () => EngineConfig(strategy = "zorder"),
+      () => EngineConfig(strategy = "sort"),
+      () => EngineConfig(sortOrder = Some("c1")),
+      () => EngineConfig(strategy = "sort", sortOrder = Some("c1 SIDEWAYS")),
+      () => EngineConfig(strategy = "sort", sortOrder = Some(" , ")),
+      () => EngineConfig.fromProperties(Map(StrategyKey -> "sort")),
+      () => EngineConfig.fromProperties(Map(SortOrderKey -> "c1")),
+      () => EngineConfig().copy(strategy = "sort"))
+    bad.zipWithIndex.foreach { case (build, i) =>
+      intercept[IllegalArgumentException](build(), s"case $i")
+    }
+  }
+
   test("table ident parse drops catalog level") {
     assert(EventOps.parseIdent("glue.db.t") === "db.t")
     assert(EventOps.parseIdent("db.t") === "t")

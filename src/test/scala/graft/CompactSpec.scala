@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark.withTempDir
 import graft.engine.Compact
-import graft.model.FileMeta
+import graft.model.{CompactionSpec, FileMeta, SortTerm}
 
 /** End-to-end compaction effect tests (SURVEY.md §5.2(4)): fragment a real
   * table into many small files, compact, assert file count drops and
@@ -47,7 +47,8 @@ class CompactSpec extends AnyFunSuite {
     withTempDir("frag") { in => withTempDir("out") { out =>
       fragment(in, 16)
       val hBefore = contentHash(in)
-      Compact.sortRewrite(spark, in, out, Seq("l_orderkey", "l_linenumber"))
+      Compact.run(spark, CompactionSpec("t", "sort", Map.empty,
+        Some("l_orderkey, l_linenumber")), in, out)
       assert(contentHash(out) === hBefore)
       // sortedness within each output file
       import spark.implicits._
@@ -103,8 +104,8 @@ class CompactSpec extends AnyFunSuite {
         }
         // contrast: plain sort by `a` leaves b spanning the whole domain
         withTempDir("sout") { sOut =>
-          Compact.sortRewrite(spark, in, sOut, Seq("a"),
-            targetBytes = totalBytes / 8 + 1)
+          Compact.sortRewriteOrdered(spark, in, sOut,
+            SortTerm.parseOrder("a"), targetBytes = totalBytes / 8 + 1)
           assert(spans(sOut).forall(_._2 === 31L))
         }
       }
@@ -238,14 +239,14 @@ class CompactSpec extends AnyFunSuite {
   }
 
   test("CompactionSpec dispatch: sort strategy requires sort order") {
+    // refused when the spec is built, before Compact.run can start
     intercept[IllegalArgumentException] {
-      Compact.run(spark, graft.model.CompactionSpec("t", "sort",
+      Compact.run(spark, CompactionSpec("t", "sort",
         Map.empty, None), "/tmp/none", "/tmp/none2")
     }
   }
 
   test("sort-order grammar: directions, nulls placement, defaults, rejects") {
-    import graft.model.SortTerm
     assert(SortTerm.parseOrder("c1") ===
       Seq(SortTerm("c1", ascending = true, nullsFirst = true)))
     assert(SortTerm.parseOrder("c1 DESC, c2 asc nulls last, c3 NULLS LAST") ===
@@ -259,7 +260,7 @@ class CompactSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { SortTerm.parseOrder("c1 ASC NULLS") }
     // malformed order string rejected at spec construction
     intercept[IllegalArgumentException] {
-      graft.model.CompactionSpec("t", "sort", Map.empty, Some("c1 DESCENDING"))
+      CompactionSpec("t", "sort", Map.empty, Some("c1 DESCENDING"))
     }
   }
 
@@ -272,7 +273,7 @@ class CompactSpec extends AnyFunSuite {
       rows.toDF("a", "b").repartition(4).write.mode("overwrite").parquet(in)
       withTempDir("mixout") { out =>
         Compact.run(spark,
-          graft.model.CompactionSpec("t", "sort", Map.empty,
+          CompactionSpec("t", "sort", Map.empty,
             Some("a DESC NULLS LAST, b ASC NULLS LAST")),
           in, out)
         // single output file (tiny input): its row order IS the sort order

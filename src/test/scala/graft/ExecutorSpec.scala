@@ -117,9 +117,17 @@ class ExecutorSpec extends AnyFunSuite {
   }
 
   test("missing mandatory dirs rejected (required_prop_check)") {
-    val ex = new LocalSparkExecutor(spark, new JobStateLog)
-    ex.initialize("db.t", Map.empty)
-    intercept[IllegalArgumentException] { ex.execute() }
+    // refused at initialize, before any job is submitted
+    val log = new JobStateLog
+    Seq("local.input-dir", "local.output-dir").foreach { key =>
+      val ex = new LocalSparkExecutor(spark, log)
+      val e = intercept[IllegalArgumentException] {
+        ex.initialize("db.t", Map("local.input-dir" -> "/in",
+          "local.output-dir" -> "/out") - key)
+      }
+      assert(e.getMessage === s"$key is required")
+    }
+    assert(log.all.isEmpty)
   }
 
   test("dry-run executor emits the generated SQL") {

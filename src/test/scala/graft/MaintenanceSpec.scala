@@ -83,6 +83,23 @@ class MaintenanceSpec extends AnyFunSuite {
     }}
   }
 
+  test("cycle decides at the nowMs it stamps: few old commits trigger by age") {
+    withTempDir("maint-clock") { root =>
+      val (in, out) = (s"$root/in", s"$root/out")
+      fragmented(in, 2, rows = 50)
+      // 3 commits (< commitThreshold), fresh against Decide.NowMs but
+      // 4 h old against the cycle's own clock
+      val cycleNow = now + 5 * hour
+      val log = (1 to 3).map(i =>
+        SnapshotMeta(1L, i.toLong, now - hour + i, "append"))
+      val c = Maintenance.cycle(spark, log,
+        Map(1L -> Maintenance.TableDirs(in, out)), cfg, cycleNow)
+      assert(c.triggered === Seq(1L))
+      assert(c.log.drop(log.size) === Seq(SnapshotMeta(1L, 4L, cycleNow,
+        "replace")))
+    }
+  }
+
   test("cycle triggers exactly the tables the windowed decision marks") {
     import spark.implicits._
     withTempDir("maint-prop") { root =>

@@ -5,7 +5,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Compact
-import graft.model.{CompactionSpec, EngineConfig, FileMeta}
+import graft.model.{EngineConfig, FileMeta}
 import graft.ops.{Codegen, EventOps}
 
 /** Property-style tests (SURVEY.md §5.2(3)) over seeded random inputs:
@@ -55,8 +55,7 @@ class PlanPropertySpec extends AnyFunSuite {
     val rnd = new Random(17)
     def word = rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString
     def entries = List.fill(1 + rnd.nextInt(7))(s"$word.$word" -> word).toMap
-    def sql(c: EngineConfig) = Codegen.rewriteDataFilesSql(
-      CompactionSpec("db.t", c.strategy, c.options, c.sortOrder))
+    def sql(c: EngineConfig) = Codegen.rewriteDataFilesSql(c.spec("db.t"))
     for (_ <- 1 to 200) {
       val sort = rnd.nextBoolean()
       val cfg = EngineConfig(

@@ -63,13 +63,6 @@ class QueryFilesSpec extends AnyFunSuite with TestTempDirs {
         "S3MonitoringConfiguration(LogUri='s3://uploads/logs/'))))")
   }
 
-  test("EKS monitoring block is prop-driven off") {
-    val got = QueryFiles.eksStartJobRunParams("db.t", "s3://u/q.sql",
-      eksProps + (QueryFiles.MonitoringEnabledKey -> "false"))
-    assert(!got.contains("MonitoringConfiguration"))
-    assert(got.contains("SparkSqlJobDriver"))
-  }
-
   test("EKS StartJobRun rejects each missing required prop") {
     Seq("optimize-data.emr.cluster-id",
       "optimize-data.iam.execution-role-arn",

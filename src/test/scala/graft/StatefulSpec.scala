@@ -25,7 +25,7 @@ class StatefulSpec extends AnyFunSuite {
     val log = EventOps.snapshotLog(spark, dir).as[(Long, Long, Long, String)]
       .collect().toSeq
       .map { case (t, s, ts, op) => SnapshotMeta(t, s, ts, op) }
-    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
+    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg, Decide.NowMs))
     val viaWindow = Decide.shouldOptimize(
         EventOps.snapshotLog(spark, dir), cfg)
       .collect()
@@ -45,10 +45,10 @@ class StatefulSpec extends AnyFunSuite {
     // ... and a later one brings the replace at now-30min
     val replace = SnapshotMeta(1, 3, now - 1800000, "replace")
     val late = finishBuf(
-      reduceBuf(appends.foldLeft(zeroBuf)(reduceBuf), replace), cfg)
+      reduceBuf(appends.foldLeft(zeroBuf)(reduceBuf), replace), cfg, now)
     val sorted = finishBuf(
       (appends :+ replace).sortBy(_.tsMillis).foldLeft(zeroBuf)(reduceBuf),
-      cfg)
+      cfg, now)
     assert(late === sorted)
     // only the commit after the replace survives
     assert(late.n_commits_since_replace === 1L)
@@ -67,7 +67,7 @@ class StatefulSpec extends AnyFunSuite {
         tsMillis = Decide.NowMs - rnd.nextInt(6 * 3600000),
         operation = if (rnd.nextInt(8) == 0) "replace" else "append")
     }
-    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
+    val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg, Decide.NowMs))
     val viaWindow = Decide.shouldOptimize(
         log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
       .collect().map(r => r.getLong(0) ->
@@ -80,7 +80,7 @@ class StatefulSpec extends AnyFunSuite {
     import spark.implicits._
     (1 to 5).foreach { seed =>
       val log = RandomLogs(seed)
-      val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg))
+      val viaFold = decisionTuples(DecideAggregator.decideLog(log, cfg, Decide.NowMs))
       val viaWindow = Decide.shouldOptimize(
           log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
         .collect().map(r => r.getLong(0) ->

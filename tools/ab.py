@@ -14,11 +14,16 @@ line is its JSON record.
 For every end-to-end metric in BENCHMARK.json it prints both medians, the
 base's quartiles, the ratio head/base and how many pairs the head won. A
 metric is flagged "unresolved" when the medians are closer than the base's
-interquartile range: the pairs cannot tell the trees apart.
+interquartile range: the pairs cannot tell the trees apart. Beside the
+ratio it prints a 95% percentile-bootstrap interval `lo..hi` of that ratio:
+the pairs are resampled with replacement (2,000 resamples, fixed seed, so
+one set of runs always prints one interval) and the ratio of medians taken
+on each resample.
 """
 import argparse
 import json
 import os
+import random
 import shutil
 import statistics
 import subprocess
@@ -27,6 +32,8 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_TIMEOUT_S = 900
+BOOT_RESAMPLES = 2000
+BOOT_SEED = 8
 
 
 def export(rev, workdir):
@@ -58,6 +65,30 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def bootstrap_ratio(base, head, resamples=BOOT_RESAMPLES, seed=BOOT_SEED,
+                    level=0.95):
+    """Percentile-bootstrap interval of median(head) / median(base).
+
+    `base[i]` and `head[i]` are pair i; each resample draws len(base) pairs
+    with replacement. Resamples whose base median is 0 are skipped; with
+    none left the interval is (nan, nan)."""
+    rnd = random.Random(seed)
+    n = len(base)
+    ratios = []
+    for _ in range(resamples):
+        idx = [rnd.randrange(n) for _ in range(n)]
+        bm = statistics.median(base[i] for i in idx)
+        if bm:
+            ratios.append(statistics.median(head[i] for i in idx) / bm)
+    if not ratios:
+        return float("nan"), float("nan")
+    ratios.sort()
+    tail = (1 - level) / 2
+    lo = ratios[int(tail * len(ratios))]
+    hi = ratios[min(len(ratios) - 1, int((1 - tail) * len(ratios)))]
+    return lo, hi
+
+
 def report(spec, base, head):
     n = len(base)
     for side, runs in (("base", base), ("head", head)):
@@ -67,7 +98,7 @@ def report(spec, base, head):
         print(f"{side}: {n - bad}/{n} runs correct, "
               f"{failed}/{attempted} operations failed")
     print(f"{'metric':<24}{'base p50':>11}{'head p50':>11}"
-          f"{'base q1..q3':>22}{'ratio':>8}{'wins':>7}")
+          f"{'base q1..q3':>22}{'ratio':>8}{'95% boot':>14}{'wins':>7}")
     for m in spec["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         b = [r["metrics"][name]["value"] for r in base]
@@ -76,10 +107,11 @@ def report(spec, base, head):
         q1, q3 = quartiles(b)
         wins = sum((y < x) if lower else (y > x) for x, y in zip(b, h))
         ratio = hm / bm if bm else float("nan")
+        lo, hi = bootstrap_ratio(b, h)
         flag = "  unresolved" if abs(hm - bm) < q3 - q1 else ""
         print(f"{name:<24}{bm:>11.2f}{hm:>11.2f}"
               f"{f'{q1:.2f}..{q3:.2f}':>22}{ratio:>8.3f}"
-              f"{f'{wins}/{n}':>7}{flag}")
+              f"{f'{lo:.3f}..{hi:.3f}':>14}{f'{wins}/{n}':>7}{flag}")
 
 
 def main():
