@@ -127,17 +127,16 @@ object CurationPipeline {
           .drop("k")
         fresh.unionByName(confirmed).drop("might")
     }
-    val w = Sampling.shardPlan(
-        observed(
-          Dedup.streamingDedup(
-            observed(kept, "funnel_2_quality_kept"), watermarkDelay),
-          "funnel_3_deduped"))
-      .writeStream
+    val sharded = Sampling.shardPlan(
+      observed(
+        Dedup.streamingDedup(
+          observed(kept, "funnel_2_quality_kept"), watermarkDelay),
+        "funnel_3_deduped"))
+    LocalCheckpointFileManager.start(sharded, Some(checkpointDir))(_.writeStream
       .format("parquet")
       .option("path", outDir)
       .partitionBy("shard")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    LocalCheckpointFileManager.start(docs.sparkSession, w, Some(checkpointDir))
+      .trigger(Trigger.AvailableNow()))
   }
 }

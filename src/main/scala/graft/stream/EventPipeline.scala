@@ -30,16 +30,18 @@ import graft.model.{EngineConfig, SnapshotMeta}
   * pending list grows past O(threshold).
   *
   * Checkpoint I/O: each trigger makes its epoch durable before it
-  * dispatches — an offsets WAL entry, one state-store delta per state
-  * partition and a commit-log entry, each an atomic temp-file write plus
-  * rename. On a local checkpoint, Spark's default `FileContext` manager
-  * and Hadoop's local FS (without its native library) fork a `readlink`
-  * per renamed path and a `chmod` per created file, dozens of processes
-  * per micro-batch, which made the state commit the largest phase of a
-  * trigger. [[runStatefulStreaming]] therefore starts its query through
-  * [[LocalCheckpointFileManager.start]], which writes those files with
-  * `java.nio`, without a process; a manager class the caller has set is
-  * kept.
+  * dispatches — a file source's metadata-log entry (`sources/0`, the
+  * files the batch reads), an offsets WAL entry, one state-store delta per
+  * state partition and a commit-log entry, each an atomic temp-file write
+  * plus rename. On a local checkpoint, Spark's default `FileContext`
+  * manager and Hadoop's local FS (without its native library) fork a
+  * `readlink` per renamed path and a `chmod` per created file, dozens of
+  * processes per micro-batch, which made the state commit the largest
+  * phase of a trigger. [[runStatefulStreaming]] therefore starts its query
+  * through [[LocalCheckpointFileManager.start]], which routes every one of
+  * those logs, the source log included (its file source is rebound to a
+  * session clone that carries the manager), to `java.nio` writes without a
+  * process; a manager class the caller has set is kept for all of them.
   */
 object EventPipeline {
 
@@ -100,10 +102,35 @@ object EventPipeline {
       should_optimize: Boolean,
       newly_triggered: Boolean)
 
-  /** Group state of one table: its decision buffer plus the dispatch mark
-    * (a job was submitted for the current trigger). */
-  final case class TableState(buf: DecideAggregator.DecideBuf,
-      dispatched: Boolean)
+  /** Group state of one table: its decision buffer (`lastReplaceTs` and
+    * the pending commit timestamps) plus the dispatch mark (a job was
+    * submitted for the current trigger).
+    *
+    * The row holds no array: the pending timestamps are packed as 8-byte
+    * big-endian longs in one binary field, and [[buf]] / [[TableState.of]]
+    * convert to and from `DecideBuf` inside [[decideGroup]]. A `Seq` or
+    * `Array` field's state (de)serializer goes through `MapObjects`, whose
+    * lambda variable takes a fresh id each time Spark builds it, once per
+    * micro-batch; the generated projection's source then differs from
+    * batch to batch, misses the codegen cache and is compiled again on
+    * every trigger (~20 ms on the decision stream's critical path). A
+    * binary field generates the same code every batch. */
+  final case class TableState(lastReplaceTs: Long, pending: Array[Byte],
+      dispatched: Boolean) {
+    def buf: DecideAggregator.DecideBuf = {
+      val b = java.nio.ByteBuffer.wrap(pending)
+      DecideAggregator.DecideBuf(lastReplaceTs,
+        Vector.fill(pending.length / 8)(b.getLong()))
+    }
+  }
+
+  object TableState {
+    def of(buf: DecideAggregator.DecideBuf, dispatched: Boolean): TableState = {
+      val b = java.nio.ByteBuffer.allocate(8 * buf.pending.size)
+      buf.pending.foreach(b.putLong)
+      TableState(buf.lastReplaceTs, b.array, dispatched)
+    }
+  }
 
   /** The `flatMapGroupsWithState` transition function (the JobTracker
     * pattern): fold the micro-batch's snapshot rows for one table into its
@@ -123,10 +150,10 @@ object EventPipeline {
       rows: Iterator[SnapshotMeta],
       state: GroupState[TableState]): Iterator[TableDecision] = {
     val prev = state.getOption
-      .getOrElse(TableState(DecideAggregator.zeroBuf, dispatched = false))
+      .getOrElse(TableState.of(DecideAggregator.zeroBuf, dispatched = false))
     val buf = rows.foldLeft(prev.buf)(DecideAggregator.reduceBuf)
     val d = DecideAggregator.finishBuf(buf, cfg, graft.ops.Decide.NowMs)
-    state.update(TableState(buf, dispatched = d.should_optimize))
+    state.update(TableState.of(buf, dispatched = d.should_optimize))
     Iterator.single(TableDecision(tableId, d.n_commits_since_replace,
       d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize,
       newly_triggered = d.should_optimize && !prev.dispatched))
@@ -178,17 +205,13 @@ object EventPipeline {
     val byTable = scala.collection.mutable.Map.empty[Long, TableDecision]
     val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
     val props = cfg.toProperties
-    val w = statefulDecisions(events, cfg).writeStream
+    val q = LocalCheckpointFileManager.start(statefulDecisions(events, cfg),
+        Some(checkpointDir))(_.writeStream
       .trigger(trigger)
       .outputMode("update")
       .foreachBatch { (batch: Dataset[TableDecision], _: Long) =>
         val rows = batch.collect()
-        rows.foreach(d => byTable(d.table_id) = d)
-        decisions.clear()
-        decisions ++= byTable.toSeq.sortBy(_._1).map { case (_, d) =>
-          Row(d.table_id, d.n_commits_since_replace,
-            d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize)
-        }
+        // dispatch first: the report view below is off the latency path
         rows.filter(_.newly_triggered).map(_.table_id).sorted.foreach {
           tableId =>
             val table = s"db.tbl_$tableId"
@@ -196,10 +219,14 @@ object EventPipeline {
             ex.initialize(table, props)
             submitted += ex.execute()
         }
+        rows.foreach(d => byTable(d.table_id) = d)
+        decisions.clear()
+        decisions ++= byTable.toSeq.sortBy(_._1).map { case (_, d) =>
+          Row(d.table_id, d.n_commits_since_replace,
+            d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize)
+        }
         ()
-      }
-    val q = LocalCheckpointFileManager.start(events.sparkSession, w,
-      Some(checkpointDir))
+      })
     (q, RunResult(decisions, submitted))
   }
 

@@ -468,17 +468,16 @@ object GraphIndexLoop {
     LoopCore.requireCheckpointIfResuming("graphIndexLoop",
       meta(graph.graphPath).newest.map(_._1.lastBatchId).getOrElse(-1L),
       checkpoint)
-    val w = vectors.writeStream
+    // durable restart: reattach() + the same checkpoint resumes at the
+    // first unprocessed batch with monotone ids; the commit markers
+    // make any re-delivered tail batch a strict no-op (the
+    // MediaIndexLoop durable-restart spec exercises the pattern)
+    LocalCheckpointFileManager.start(vectors, checkpoint)(_.writeStream
       .outputMode("append")
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val (nNew, version) = applyBatch(spark, graph, corpusPath,
           batch0, batchId, threshold, target, onHealth)
         onCycle(batchId, nNew, version)
-      }
-    // durable restart: reattach() + the same checkpoint resumes at the
-    // first unprocessed batch with monotone ids; the commit markers
-    // make any re-delivered tail batch a strict no-op (the
-    // MediaIndexLoop durable-restart spec exercises the pattern)
-    LocalCheckpointFileManager.start(spark, w, checkpoint)
+      })
   }
 }

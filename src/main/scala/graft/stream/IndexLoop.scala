@@ -288,16 +288,15 @@ object IndexLoop {
       math.max(index.state.lastBatchId,
         meta(corpusPath).newest.map(_.lastBatchId).getOrElse(-1L)),
       checkpoint)
-    val w = vectors.writeStream
+    // durable restart: loadIndex() (which carries the lastBatchId
+    // replay guard) + the same checkpoint (the MediaIndexLoop
+    // durable-restart spec exercises the pattern)
+    LocalCheckpointFileManager.start(vectors, checkpoint)(_.writeStream
       .outputMode("append")
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         applyBatch(spark, index, corpusPath, batch0, batchId, threshold,
           maxPasses, codesPath, codebook, gatePath, gateTarget, onCycle)
-      }
-    // durable restart: loadIndex() (which carries the lastBatchId
-    // replay guard) + the same checkpoint (the MediaIndexLoop
-    // durable-restart spec exercises the pattern)
-    LocalCheckpointFileManager.start(spark, w, checkpoint)
+      })
   }
 
   /** Apply one ingest batch (the [[start]] body, callable directly for

@@ -323,13 +323,12 @@ object LexIndexLoop {
     LoopCore.requireCheckpointIfResuming("lexIndexLoop",
       math.max(index.snapshot.lastBatchId,
         meta(root).newest.map(_.lastBatchId).getOrElse(-1L)), checkpoint)
-    val w = docs.writeStream
+    // durable restart: reattach() + the same checkpoint (the
+    // MediaIndexLoop durable-restart spec exercises the pattern)
+    LocalCheckpointFileManager.start(docs, checkpoint)(_.writeStream
       .outputMode("append")
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         applyBatch(spark, index, root, batch0, batchId, onCycle)
-      }
-    // durable restart: reattach() + the same checkpoint (the
-    // MediaIndexLoop durable-restart spec exercises the pattern)
-    LocalCheckpointFileManager.start(spark, w, checkpoint)
+      })
   }
 }

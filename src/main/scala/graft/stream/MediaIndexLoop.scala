@@ -488,14 +488,13 @@ object MediaIndexLoop {
       math.max(serving.snapshot.lastBatchId,
         meta(serving.root).newest.map(_.lastBatchId).getOrElse(-1L)),
       checkpoint)
-    val w = assets.writeStream
+    LocalCheckpointFileManager.start(assets, checkpoint)(_.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           sink(applyBatch(spark, serving, batch, batchId, rebuildAfter,
             onHealth), batchId)
         }
-      }
-    LocalCheckpointFileManager.start(spark, w, checkpoint)
+      })
   }
 }

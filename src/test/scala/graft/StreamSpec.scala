@@ -7,6 +7,7 @@ import java.nio.file.{Files, Paths}
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -274,40 +275,119 @@ class StreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Run `runStatefulStreaming` over the file source `openWaves` as one
+    * query (under `root`: `src/` watched, `ckpt/` its checkpoint), one
+    * micro-batch per wave. Every wave is written before the query starts
+    * and moved into `src/` only when its turn comes, by an atomic rename:
+    * no Spark job runs between batches and the source never lists a
+    * half-written file. `before(i)` runs just before wave `i` moves. */
+  private def runFileWaves(root: String, waves: Seq[Seq[Ev]])(
+      before: Int => Unit = _ => ()): EventPipeline.RunResult = {
+    val staged = Files.createDirectories(Paths.get(root, "staged"))
+    val src = Files.createDirectories(Paths.get(root, "src"))
+    waves.zipWithIndex.foreach { case (rows, i) =>
+      addWave(staged.toString, s"w$i.parquet", rows) }
+    val (q, r) = EventPipeline.runStatefulStreaming(openWaves(src.toString),
+      cfg, _ => new DryRunExecutor(new JobStateLog), s"$root/ckpt",
+      Trigger.ProcessingTime(0))
+    try waves.indices.foreach { i =>
+      before(i)
+      Files.move(staged.resolve(s"w$i.parquet"), src.resolve(s"w$i.parquet"))
+      q.processAllAvailable()
+    } finally q.stop()
+    r
+  }
+
+  /** Commands of the processes started from a checkpoint manager's or a
+    * metadata log's frames while `body` runs (a JFR recording kept in
+    * `tmp`). */
+  private def checkpointForks(tmp: String)(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val dump = Files.createTempFile(Paths.get(tmp), "rec", ".jfr")
+    rec.dump(dump)
+    rec.close()
+    RecordingFile.readAllEvents(dump).asScala.filter { e =>
+      Option(e.getStackTrace).exists(_.getFrames.asScala.exists { f =>
+        val t = f.getMethod.getType.getName
+        t.contains("CheckpointFileManager") || t.contains("HDFSMetadataLog")
+      })
+    }.map(_.getString("command")).toSeq
+  }
+
   test("checkpoint writes of the decision stream start no process") {
     withTempDir("jfr") { tmp =>
-      val rec = new Recording()
-      rec.enable("jdk.ProcessStart").withStackTrace()
-      rec.start()
-      try runMemoryBatches(s"$tmp/ckpt",
-        (1L to 3L).map(b => (1L to 6L).map(i => commit(b, b * 10 + i))))
-      finally rec.stop()
-      val dump = Paths.get(tmp, "rec.jfr")
-      rec.dump(dump)
-      rec.close()
-      // every process started from a checkpoint manager's frames
-      val forks = RecordingFile.readAllEvents(dump).asScala.filter { e =>
-        Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
-          _.getMethod.getType.getName.contains("CheckpointFileManager")))
-      }.map(_.getString("command"))
-      assert(forks.isEmpty, forks.take(5).mkString("; "))
+      val memory = checkpointForks(tmp)(runMemoryBatches(s"$tmp/ckpt",
+        (1L to 3L).map(b => (1L to 6L).map(i => commit(b, b * 10 + i)))))
+      assert(memory.isEmpty, memory.take(5).mkString("; "))
+      // a file source adds its metadata log (sources/0), one entry a batch
+      val file = checkpointForks(tmp)(runFileWaves(s"$tmp/file",
+        (1L to 3L).map(b => (1L to 6L).map(i => commit(b, b * 10 + i))))())
+      assert(file.isEmpty, file.take(5).mkString("; "))
     }
   }
 
-  test("the checkpoint manager class is scoped to the query; a caller's class is kept") {
-    // offsets/ entries of one micro-batch on a fresh checkpoint
-    def offsets(): Set[String] = withTempDir("scoped") { tmp =>
-      runMemoryBatches(s"$tmp/ckpt", Seq(Seq(commit(1L, 1L))))
-      new java.io.File(s"$tmp/ckpt/offsets").list().toSet
+  test("the decision stream compiles nothing after warm-up") {
+    // five waves over the same three tables: two warm the stream, the
+    // next three must reuse every generated class; the third wave
+    // crosses the commit threshold, so a measured batch dispatches
+    val waves = (0L until 5L).map(w =>
+      (1L to 3L).flatMap(t => (1L to 4L).map(i => commit(t, w * 100 + t * 10 + i))))
+    var warm = 0L
+    val result = withTempDir("compile") { tmp =>
+      runFileWaves(tmp, waves) { i =>
+        if (i == 2) warm = CodeGenerator.compileTime }
     }
-    assert(spark.conf.getOption(managerClassKey).isEmpty)
-    val graftOffsets = offsets()
-    assert(graftOffsets.contains("0"))
-    assert(!graftOffsets.exists(_.endsWith(".crc"))) // no Hadoop checksum
-    assert(spark.conf.getOption(managerClassKey).isEmpty)
+    val compiledNs = CodeGenerator.compileTime - warm
+    assert(compiledNs === 0L,
+      s"${compiledNs / 1e6} ms compiled in three warm micro-batches")
+    assert(result.submittedJobs.size === 3)
+  }
+
+  test("TableState round-trips the decision buffer without an array") {
+    import spark.implicits._
+    import EventPipeline.TableState
+    import graft.stream.DecideAggregator.DecideBuf
+    val pendings = Seq(Nil, Seq(42L),
+      Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue) ++ (100L to 120L))
+    for (pending <- pendings; last <- Seq(Long.MinValue, 7L);
+         dispatched <- Seq(false, true)) {
+      val buf = DecideBuf(last, pending)
+      val st = TableState.of(buf, dispatched)
+      assert(st.pending.length === 8 * pending.size)
+      // through Spark's state encoder and back
+      val back = Seq(st).toDS().collect().head
+      assert(back.buf === buf)
+      assert(back.dispatched === dispatched)
+    }
+    assert(!implicitly[org.apache.spark.sql.Encoder[TableState]].schema
+      .fields.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]))
+  }
+
+  test("the checkpoint manager class is scoped to the query; a caller's class is kept") {
+    // offsets/ of one micro-batch over a memory source and sources/0/ of
+    // one over a file source, each on a fresh checkpoint
+    def logs(): (Set[String], Set[String]) = withTempDir("scoped") { tmp =>
+      runMemoryBatches(s"$tmp/ckpt", Seq(Seq(commit(1L, 1L))))
+      runFileWaves(s"$tmp/file", Seq(Seq(commit(1L, 1L))))()
+      (new java.io.File(s"$tmp/ckpt/offsets").list().toSet,
+        new java.io.File(s"$tmp/file/ckpt/sources/0").list().toSet)
+    }
+    val conf0 = spark.conf.getAll
+    assert(!conf0.contains(managerClassKey))
+    val (graftOffsets, graftSource) = logs()
+    assert(graftOffsets.contains("0") && graftSource.contains("0"))
+    // no Hadoop checksum: graft's manager wrote both logs
+    assert(!(graftOffsets ++ graftSource).exists(_.endsWith(".crc")))
+    // no manager key left behind, and the conf otherwise unchanged
+    assert(spark.conf.getAll === conf0)
     spark.conf.set(managerClassKey, fileContextManager)
     try {
-      assert(offsets().contains(".0.crc")) // the caller's manager wrote it
+      val (offsets, source) = logs()
+      // the caller's manager wrote both, the source log included
+      assert(offsets.contains(".0.crc") && source.contains(".0.crc"))
       assert(spark.conf.get(managerClassKey) === fileContextManager)
     } finally spark.conf.unset(managerClassKey)
   }

@@ -19,6 +19,12 @@ ratio it prints a 95% percentile-bootstrap interval `lo..hi` of that ratio:
 the pairs are resampled with replacement (2,000 resamples, fixed seed, so
 one set of runs always prints one interval) and the ratio of medians taken
 on each resample.
+
+Before each run it times a fixed single-thread CPU loop (the calibration)
+and keeps the time with the run. It prints each side's median calibration
+and flags a pair "noisy" when its two calibrations differ by more than 10%:
+the host ran at a different speed for the two sides of that pair, so the
+pair's difference is partly the host's. Flagged pairs are still counted.
 """
 import argparse
 import json
@@ -29,11 +35,14 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_TIMEOUT_S = 900
 BOOT_RESAMPLES = 2000
 BOOT_SEED = 8
+CALIB_N = 2_000_000
+NOISY = 0.10
 
 
 def export(rev, workdir):
@@ -56,6 +65,22 @@ def run(tree, cmd, workload, seed, seconds):
         sys.exit(f"ab: run failed in {tree} (seed {seed}, exit "
                  f"{p.returncode}):\n{p.stderr[-2000:]}")
     return json.loads(lines[-1])
+
+
+def calibrate(n=CALIB_N):
+    """Seconds this process takes for a fixed single-thread integer loop."""
+    t0 = time.perf_counter()
+    x = 0
+    for i in range(n):
+        x = (x * 31 + i) & 0xFFFFFFFF
+    return time.perf_counter() - t0
+
+
+def noisy(calib_a, calib_b, tolerance=NOISY):
+    """True when two calibrations differ by more than `tolerance` of the
+    faster one."""
+    lo, hi = sorted((calib_a, calib_b))
+    return hi > lo * (1 + tolerance)
 
 
 def quartiles(xs):
@@ -95,8 +120,14 @@ def report(spec, base, head):
         bad = sum(not r["correct"] for r in runs)
         failed = sum(r["failed"] for r in runs)
         attempted = sum(r["attempted"] for r in runs)
+        calib = statistics.median(r["calib_s"] for r in runs)
         print(f"{side}: {n - bad}/{n} runs correct, "
-              f"{failed}/{attempted} operations failed")
+              f"{failed}/{attempted} operations failed, "
+              f"median calibration {calib:.3f} s")
+    flagged = [i + 1 for i, (b, h) in enumerate(zip(base, head))
+               if noisy(b["calib_s"], h["calib_s"])]
+    print(f"noisy pairs (calibrations >{NOISY:.0%} apart): {len(flagged)}/{n}"
+          + (f" (pair {', '.join(map(str, flagged))})" if flagged else ""))
     print(f"{'metric':<24}{'base p50':>11}{'head p50':>11}"
           f"{'base q1..q3':>22}{'ratio':>8}{'95% boot':>14}{'wins':>7}")
     for m in spec["end_to_end"]:
@@ -135,11 +166,14 @@ def main():
             if i % 2:
                 order.reverse()
             for side, path in order:
+                calib = calibrate()
                 r = run(path, cmd, a.workload, seed, seconds)
+                r["calib_s"] = calib
                 (base if side == "base" else head).append(r)
                 p50 = r["metrics"]["latency_p50_ms"]["value"]
                 print(f"pair {i + 1} seed {seed} {side}: p50 {p50:.1f} ms, "
-                      f"correct {r['correct']}", file=sys.stderr, flush=True)
+                      f"calibration {calib:.3f} s, correct {r['correct']}",
+                      file=sys.stderr, flush=True)
     finally:
         shutil.rmtree(tree, ignore_errors=True)
     print(f"{a.workload}: base {a.base} vs working tree, {a.pairs} pairs, "

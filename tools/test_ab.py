@@ -1,4 +1,4 @@
-"""Pins tools/ab.py's bootstrap interval on fixed inputs.
+"""Pins tools/ab.py's bootstrap interval and noisy-pair flag on fixed inputs.
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -42,6 +42,22 @@ class BootstrapRatioTest(unittest.TestCase):
         lo, hi = ab.bootstrap_ratio([0.0, 0.0], [1.0, 2.0])
         self.assertNotEqual(lo, lo)
         self.assertNotEqual(hi, hi)
+
+
+class NoisyPairTest(unittest.TestCase):
+
+    def test_calibrations_within_ten_percent_are_not_noisy(self):
+        self.assertFalse(ab.noisy(0.200, 0.200))
+        self.assertFalse(ab.noisy(0.200, 0.219))
+        self.assertFalse(ab.noisy(0.219, 0.200))
+
+    def test_calibrations_more_than_ten_percent_apart_are_noisy(self):
+        self.assertTrue(ab.noisy(0.200, 0.221))
+        self.assertTrue(ab.noisy(0.221, 0.200))
+        self.assertTrue(ab.noisy(0.2, 0.4))
+
+    def test_calibration_times_a_loop(self):
+        self.assertGreater(ab.calibrate(1000), 0.0)
 
 
 if __name__ == "__main__":
