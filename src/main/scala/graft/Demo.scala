@@ -33,11 +33,11 @@ object Demo {
     val log = (1 to 12).map(i =>
       SnapshotMeta(1L, i.toLong, now - 5 * 3600000 + i, "append"))
     val c1 = Maintenance.cycle(spark, log,
-      Map(1L -> Maintenance.TableDirs(in, out)), cfg)
+      Map(1L -> Maintenance.TableDirs(in, out)), cfg, now)
     println(s"   cycle 1: triggered=${c1.triggered} jobs=${c1.jobIds} " +
       s"files ${Compact.listFiles(in).size} -> ${Compact.listFiles(out).size}")
     val c2 = Maintenance.cycle(spark, c1.log,
-      Map(1L -> Maintenance.TableDirs(in, out)), cfg)
+      Map(1L -> Maintenance.TableDirs(in, out)), cfg, now)
     println(s"   cycle 2: triggered=${c2.triggered} (replace commit quiesced)")
 
     println("== 3. Pipeline extensions on the documents/embeddings corpus")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{CompactionSpec, FileMeta, SnapshotMeta, SortTerm}
+import graft.ops.FilePlan.TargetFileBytes
 
 /** Native compaction — the data-processing work the reference delegates to
   * `rewrite_data_files` / Athena OPTIMIZE (SURVEY.md §2.2).
@@ -31,10 +32,6 @@ import graft.model.{CompactionSpec, FileMeta, SnapshotMeta, SortTerm}
   * regardless of table size.
   */
 object Compact {
-
-  /** Default rewrite target file size (Iceberg's write.target-file-size
-    * default, 512 MB — the implied output size of binpack). */
-  val DefaultTargetFileSizeBytes: Long = 536870912L
 
   /** List a parquet table directory's data files as FileMeta. */
   def listFiles(dir: String): Seq[FileMeta] = {
@@ -147,7 +144,7 @@ object Compact {
   /** binpack_compaction: rewrite a whole table directory into ~target-size
     * files. Returns (filesBefore, filesAfter). */
   def binpack(spark: SparkSession, inputDir: String, outputDir: String,
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+      targetBytes: Long = TargetFileBytes): (Int, Int) =
     rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
       targetBytes)(_.repartition(_))
 
@@ -165,7 +162,7 @@ object Compact {
     * (EMRSparkUtil.java:118-124) — in the [[rangeSorted]] layout. */
   def sortRewriteOrdered(spark: SparkSession, inputDir: String,
       outputDir: String, terms: Seq[SortTerm],
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+      targetBytes: Long = TargetFileBytes): (Int, Int) =
     rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
       targetBytes)(rangeSorted(terms.map(termColumn)))
 
@@ -182,7 +179,7 @@ object Compact {
     * split both dimensions evenly regardless of their value ranges. */
   def zorderRewrite(spark: SparkSession, inputDir: String, outputDir: String,
       colA: String, colB: String,
-      targetBytes: Long = DefaultTargetFileSizeBytes): (Int, Int) =
+      targetBytes: Long = TargetFileBytes): (Int, Int) =
     rewrite(spark, listFiles(inputDir), Seq(inputDir), outputDir,
         targetBytes) { (df, n) =>
       val s = df.agg(
@@ -218,7 +215,7 @@ object Compact {
     */
   def partialProgress(spark: SparkSession, inputDir: String, outputDir: String,
       tableId: Long, capBytes: Long, nowMs: Long,
-      targetBytes: Long = DefaultTargetFileSizeBytes,
+      targetBytes: Long = TargetFileBytes,
       onCommit: SnapshotMeta => Unit = _ => (),
       beforeGroup: Int => Unit = _ => ()): Seq[SnapshotMeta] = {
     val groups = planGroups(listFiles(inputDir), capBytes)

@@ -2,8 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-import graft.model.{EngineConfig, SnapshotMeta}
-import graft.ops.Decide
+import graft.model.{EngineConfig, Fixture, SnapshotMeta}
 import graft.stream.DecideAggregator
 
 /** The full maintenance loop closed end-to-end (SURVEY.md §3.1 + §4.1):
@@ -39,17 +38,17 @@ object Maintenance {
     * `table_id` order; a failed compaction raises at once. */
   def cycle(spark: SparkSession, log: Seq[SnapshotMeta],
       tables: Map[Long, TableDirs], cfg: EngineConfig,
-      nowMs: Long = Decide.NowMs): CycleResult = {
+      nowMs: Long): CycleResult = {
     val triggered = DecideAggregator.decideLog(log, cfg, nowMs).collect {
-      case (t, d) if d.should_optimize && tables.contains(t) => t
-    }.toSeq.sorted
+      case d if d.should_optimize && tables.contains(d.table_id) => d.table_id
+    }
     val stateLog = new JobStateLog
     val props = cfg.toProperties
     var nextSnapshotId = log.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (jobIds, newCommits) = triggered.map { tableId =>
       val dirs = tables(tableId)
       val ex = new LocalSparkExecutor(spark, stateLog)
-      ex.initialize(s"db.tbl_$tableId", props ++ Seq(
+      ex.initialize(Fixture.tableName(tableId), props ++ Seq(
         EngineConfig.SynchronousKey -> "true",
         "local.input-dir" -> dirs.inputDir,
         "local.output-dir" -> dirs.outputDir))

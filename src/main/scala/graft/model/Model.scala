@@ -205,10 +205,11 @@ object EngineConfig {
   val DefaultSleepWaitMs = 2000L
   // AwsManageProperties.java:52-54
   val DefaultStrategy = "binpack"
-  // AwsManageProperties.java:48-50
+  // AwsManageProperties.java:48-50: the rewrite group cap, 10 GiB
+  val DefaultGroupCapBytes: Long = 10737418240L
   val DefaultOptions: Map[String, String] = Map(
     "partial-progress.enabled" -> "true",
-    "max-file-group-size-bytes" -> "10737418240")
+    "max-file-group-size-bytes" -> DefaultGroupCapBytes.toString)
   // AwsManageProperties.java:60-66
   val DefaultSparkConfigs: Map[String, String] = Map(
     "spark.driver.cores" -> "4",
@@ -287,4 +288,7 @@ object Fixture {
   /** event_type standing in for the REPLACE (compaction) operation —
     * the optimize_cutoff marker (FIXTURES.md §3). */
   val ReplaceOp = "purchase"
+  /** Catalog name prefix of a fixture table: table `id` is `db.tbl_<id>`. */
+  val TablePrefix = "db.tbl_"
+  def tableName(tableId: Long): String = TablePrefix + tableId
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{CompactionSpec, EngineConfig}
+import graft.model.{CompactionSpec, EngineConfig, Fixture}
 
 /** Maintenance-command generation (SURVEY.md §2.1 sql_options_literal,
   * rewrite_sql_codegen, athena_sql_codegen, spark_conf_flags).
@@ -66,9 +66,9 @@ object Codegen {
 
   // ---- per-table DataFrame forms over the snapshot log fixture ----
 
-  /** Fixture table name for a table id column: `db.tbl_<id>`. */
+  /** Fixture table name for a table id column (`Fixture.tableName`). */
   private def tblName(id: Column): Column =
-    concat(lit("db.tbl_"), id)
+    concat(lit(Fixture.TablePrefix), id)
 
   /** Per-table options literal with one data-driven option (commit count)
     * ahead of the reference defaults — the literal template derives from

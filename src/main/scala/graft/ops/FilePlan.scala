@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.model.EngineConfig
 
 /** File-level compaction planning (SURVEY.md §2.2 filegroup_planning,
   * small_file_metrics): the metadata queries behind the reference's
@@ -22,12 +23,11 @@ import graft.Tables
   */
 object FilePlan {
 
-  /** Reference default group cap: 10 GiB (AwsManageProperties.java:48-50). */
-  val DefaultGroupCapBytes: Long = 10737418240L
   /** "Small file" cutoff for metrics: files under 100 MB want compaction. */
   val SmallFileBytes: Long = 100000000L
-  /** Target rewritten-file size for benefit estimation (the common table
-    * format default of 512 MiB). */
+  /** Target rewritten-file size (Iceberg's write.target-file-size
+    * default, 512 MiB): the implied output size of a binpack rewrite and
+    * the unit of benefit estimation. */
   val TargetFileBytes: Long = 536870912L
   /** Default per-window rewrite budget: 1 TB of bytes rewritten. */
   val DefaultBudgetBytes: Long = 1000000000000L
@@ -69,7 +69,7 @@ object FilePlan {
     * state that resets on each key change — no window cum-sum approximation
     * (floor(cumsum/cap) can overfill a group up to ~2×cap). */
   def filegroupPlanning(files: DataFrame,
-      capBytes: Long = DefaultGroupCapBytes): DataFrame = {
+      capBytes: Long = EngineConfig.DefaultGroupCapBytes): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
     files.select(

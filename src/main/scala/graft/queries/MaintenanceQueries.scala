@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryPack
+import graft.model.EngineConfig
 import graft.ops.{Codegen, EventOps, FilePlan, Props}
 
 /** Driver-contract queries for property-map ops, maintenance-command
@@ -41,7 +42,7 @@ object MaintenanceQueries {
       |         CAST(floor(o_totalprice) AS BIGINT) * 1000 AS size_bytes
       |  FROM orders)""".stripMargin
 
-  private val cap = FilePlan.DefaultGroupCapBytes
+  private val cap = EngineConfig.DefaultGroupCapBytes
 
   /** now − timeThreshold in epoch ms (shared with DecisionQueries). */
   private val Decide_staleMs =

@@ -6,7 +6,8 @@ import graft.model.{EngineConfig, SnapshotMeta}
   * decision stream folds each micro-batch's rows into per-table state
   * (EventPipeline.decideGroup) and `Maintenance.cycle` folds a driver-held
   * log ([[decideLog]]), both through `reduceBuf`/`finishBuf`, so there is
-  * one rule.
+  * one rule, and both yield the one decision row, [[Decision]] (also the
+  * stream's report view and the schema of `decisionsViaStream`).
   *
   * The buffer is (last REPLACE ts, pending commit timestamps newer than
   * it). Keeping the actual pending timestamps, not just (count, oldest),
@@ -21,7 +22,9 @@ object DecideAggregator {
   /** lastReplaceTs = Long.MinValue when no replace has been seen. */
   final case class DecideBuf(lastReplaceTs: Long, pending: Seq[Long])
 
+  /** One table's decision, in the columns of `Decide.shouldOptimize`. */
   final case class Decision(
+      table_id: Long,
       n_commits_since_replace: Long,
       oldest_pending_ts_ms: Long,
       time_triggered: Boolean,
@@ -40,26 +43,28 @@ object DecideAggregator {
       b.copy(pending = b.pending :+ s.tsMillis)
     } else b
 
-  /** The decision at instant `nowMs`: stale when the oldest pending
-    * commit is at least `timeThresholdMs` older than `nowMs`. */
-  def finishBuf(b: DecideBuf, cfg: EngineConfig, nowMs: Long): Decision = {
+  /** Table `tableId`'s decision at instant `nowMs`: stale when the oldest
+    * pending commit is at least `timeThresholdMs` older than `nowMs`. */
+  def finishBuf(tableId: Long, b: DecideBuf, cfg: EngineConfig,
+      nowMs: Long): Decision = {
     val n = b.pending.size.toLong
     val oldest = if (n == 0) -1L else b.pending.min
     val stale = n > 0 && oldest <= nowMs - cfg.timeThresholdMs
     Decision(
+      table_id = tableId,
       n_commits_since_replace = n,
       oldest_pending_ts_ms = oldest,
       time_triggered = stale,
       should_optimize = n >= cfg.commitThreshold || stale)
   }
 
-  /** The decision at `nowMs` for every table in a driver-held log, with
-    * no Spark job: each table's rows folded through the stream's own
-    * `reduceBuf`/`finishBuf`, so the batch cycle and the decision stream
-    * apply one rule. */
+  /** The decision at `nowMs` for every table in a driver-held log, in
+    * `table_id` order, with no Spark job: each table's rows folded through
+    * the stream's own `reduceBuf`/`finishBuf`, so the batch cycle and the
+    * decision stream apply one rule. */
   def decideLog(log: Seq[SnapshotMeta], cfg: EngineConfig,
-      nowMs: Long): Map[Long, Decision] =
-    log.groupBy(_.tableId).map { case (t, rows) =>
-      t -> finishBuf(rows.foldLeft(zeroBuf)(reduceBuf), cfg, nowMs)
+      nowMs: Long): Seq[Decision] =
+    log.groupBy(_.tableId).toSeq.sortBy(_._1).map { case (t, rows) =>
+      finishBuf(t, rows.foldLeft(zeroBuf)(reduceBuf), cfg, nowMs)
     }
 }

@@ -1,5 +1,9 @@
 package graft.stream
 
+import java.util.concurrent.ConcurrentSkipListMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -7,7 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.engine.Executor
-import graft.model.{EngineConfig, SnapshotMeta}
+import graft.model.{EngineConfig, Fixture, SnapshotMeta}
+import graft.stream.DecideAggregator.Decision
 
 /** The event-driven maintenance pipeline (SURVEY.md §3.1), Spark-native:
   * the reference's push-based `MetricsReporter.report()` entry point
@@ -22,6 +27,9 @@ import graft.model.{EngineConfig, SnapshotMeta}
   * dispatch mark — lives in Spark's checkpointed state store, so per-batch
   * work is O(batch rows), never O(accumulated history), and a restart on
   * the same checkpoint resumes both the decision and the dispatch mark.
+  * It emits the one decision row, `DecideAggregator.Decision`, with a
+  * dispatch flag; the driver keeps each table's latest row in a view keyed
+  * by `table_id` (an Update-mode result table), updated after dispatch.
   * The reference instead rescans `currentAncestors` on every event
   * (AwsTableManagementMetricsEvaluator.java:74); that rescan survives only
   * as the test oracle (`Decide.shouldOptimize` over all events so far).
@@ -81,26 +89,19 @@ object EventPipeline {
         .parquet(dir)
   }
 
-  /** Result of one pipeline run: the last-value decision view (5-column
-    * rows, one per table seen) and the submitted job ids.
-    * (collection.Seq: runStatefulStreaming returns live buffers that fill
-    * as micro-batches complete; runStatefulOnce snapshots them after
-    * termination.) */
-  final case class RunResult(
-      decisions: scala.collection.Seq[Row],
-      submittedJobs: scala.collection.Seq[String])
+  /** Result of one pipeline run, live while its query runs: the
+    * last-value decision view and the submitted job ids. The view holds
+    * each table's latest [[Decision]] keyed by `table_id`; the stream
+    * thread replaces a table's entry in place, so a reader at any moment
+    * sees every table seen so far. */
+  final class RunResult private[stream] (
+      private[stream] val latest: ConcurrentSkipListMap[Long, Decision],
+      val submittedJobs: scala.collection.Seq[String]) {
 
-  /** Per-table decision row emitted each time a micro-batch touches the
-    * table. `newly_triggered` is true only in the batch where
-    * `should_optimize` turned true while the table was not yet dispatched:
-    * exactly the rows that get a maintenance job. */
-  final case class TableDecision(
-      table_id: Long,
-      n_commits_since_replace: Long,
-      oldest_pending_ts_ms: Long,
-      time_triggered: Boolean,
-      should_optimize: Boolean,
-      newly_triggered: Boolean)
+    /** The view as rows of `Decision`'s columns in `table_id` order. */
+    def decisions: Seq[Row] =
+      latest.values.asScala.iterator.map(Row.fromTuple).toSeq
+  }
 
   /** Group state of one table: its decision buffer (`lastReplaceTs` and
     * the pending commit timestamps) plus the dispatch mark (a job was
@@ -135,36 +136,39 @@ object EventPipeline {
   /** The `flatMapGroupsWithState` transition function (the JobTracker
     * pattern): fold the micro-batch's snapshot rows for one table into its
     * `TableState` — which lives in Spark's CHECKPOINTED STATE STORE, not in
-    * driver memory — and emit the refreshed decision. `reduceBuf` is
-    * order-insensitive at the fixpoint (a replace prunes exactly the
-    * commits it supersedes regardless of arrival order), so no per-group
-    * sort is needed. The dispatch mark follows the decision: set while
-    * the table stays triggered, cleared by a `false` decision (its
-    * compaction's replace commit landed), so a later re-trigger dispatches
-    * again — matching the reference, which re-evaluates on every commit
-    * event (AwsTableManagementMetricsEvaluator.java:60-80). State per table
-    * is O(commitThreshold) pending timestamps; with the state store the
+    * driver memory — and emit the refreshed decision with its dispatch
+    * flag, true only in the batch where `should_optimize` turned true
+    * while the table was not yet dispatched (exactly the rows that get a
+    * job). `reduceBuf` is order-insensitive at the fixpoint (a replace
+    * prunes exactly the commits it supersedes regardless of arrival
+    * order), so no per-group sort is needed. The dispatch mark follows
+    * the decision: set while the table stays triggered, cleared by a
+    * `false` decision (its compaction's replace commit landed), so a later
+    * re-trigger dispatches again — matching the reference, which
+    * re-evaluates on every commit event
+    * (AwsTableManagementMetricsEvaluator.java:60-80). State per table is
+    * O(commitThreshold) pending timestamps; with the state store the
     * table-cardinality ceiling is the cluster's disk, not the driver heap
     * — 10⁹ tables is just a bigger state store. */
   def decideGroup(cfg: EngineConfig)(tableId: Long,
       rows: Iterator[SnapshotMeta],
-      state: GroupState[TableState]): Iterator[TableDecision] = {
+      state: GroupState[TableState]): Iterator[(Decision, Boolean)] = {
     val prev = state.getOption
       .getOrElse(TableState.of(DecideAggregator.zeroBuf, dispatched = false))
     val buf = rows.foldLeft(prev.buf)(DecideAggregator.reduceBuf)
-    val d = DecideAggregator.finishBuf(buf, cfg, graft.ops.Decide.NowMs)
+    val d = DecideAggregator.finishBuf(tableId, buf, cfg,
+      graft.ops.Decide.NowMs)
     state.update(TableState.of(buf, dispatched = d.should_optimize))
-    Iterator.single(TableDecision(tableId, d.n_commits_since_replace,
-      d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize,
-      newly_triggered = d.should_optimize && !prev.dispatched))
+    Iterator.single((d, d.should_optimize && !prev.dispatched))
   }
 
   /** Streaming decision frame: events → snapshot-log rows → per-table
-    * stateful fold. Only tables touched by the current micro-batch emit
-    * (Update semantics) — an untouched table's decision cannot change, so
-    * consumers keep a last-value view keyed by table_id. */
+    * stateful fold, one (decision, dispatch flag) per touched table. Only
+    * tables touched by the current micro-batch emit (Update semantics) —
+    * an untouched table's decision cannot change, so consumers keep a
+    * last-value view keyed by table_id. */
   def statefulDecisions(events: DataFrame,
-      cfg: EngineConfig): Dataset[TableDecision] = {
+      cfg: EngineConfig): Dataset[(Decision, Boolean)] = {
     val spark = events.sparkSession
     import spark.implicits._
     graft.ops.EventOps.snapshotLogFrom(events)
@@ -181,12 +185,13 @@ object EventPipeline {
 
   /** Run the pipeline over a streaming events frame: each micro-batch
     * folds into the per-table state ([[statefulDecisions]]) and
-    * `foreachBatch` submits one maintenance job per `newly_triggered` row,
-    * initializing each executor with `cfg.toProperties` (the reference's
-    * hand-off of the deciding properties to `executor.initialize`), so the
-    * job compacts under the config that decided. The driver keeps only a
-    * LAST-VALUE VIEW of emitted decisions for reporting, bounded by table
-    * count and not load-bearing for correctness.
+    * `foreachBatch` submits one maintenance job per flagged row, in
+    * `table_id` order, initializing each executor with `cfg.toProperties`
+    * (the reference's hand-off of the deciding properties to
+    * `executor.initialize`), so the job compacts under the config that
+    * decided. Then it puts the batch's decisions into the LAST-VALUE VIEW
+    * (`RunResult`), one entry per table, bounded by table count and not
+    * load-bearing for correctness.
     *
     * Restart: pass the SAME `checkpointDir`. Spark replays only the
     * uncommitted batches from the replayable source against the last
@@ -201,33 +206,26 @@ object EventPipeline {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())
       : (org.apache.spark.sql.streaming.StreamingQuery, RunResult) = {
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val byTable = scala.collection.mutable.Map.empty[Long, TableDecision]
+    val latest = new ConcurrentSkipListMap[Long, Decision]
     val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
     val props = cfg.toProperties
     val q = LocalCheckpointFileManager.start(statefulDecisions(events, cfg),
         Some(checkpointDir))(_.writeStream
       .trigger(trigger)
       .outputMode("update")
-      .foreachBatch { (batch: Dataset[TableDecision], _: Long) =>
+      .foreachBatch { (batch: Dataset[(Decision, Boolean)], _: Long) =>
         val rows = batch.collect()
         // dispatch first: the report view below is off the latency path
-        rows.filter(_.newly_triggered).map(_.table_id).sorted.foreach {
+        rows.collect { case (d, true) => d.table_id }.sorted.foreach {
           tableId =>
-            val table = s"db.tbl_$tableId"
+            val table = Fixture.tableName(tableId)
             val ex = executorFor(table)
             ex.initialize(table, props)
             submitted += ex.execute()
         }
-        rows.foreach(d => byTable(d.table_id) = d)
-        decisions.clear()
-        decisions ++= byTable.toSeq.sortBy(_._1).map { case (_, d) =>
-          Row(d.table_id, d.n_commits_since_replace,
-            d.oldest_pending_ts_ms, d.time_triggered, d.should_optimize)
-        }
-        ()
+        rows.foreach { case (d, _) => latest.put(d.table_id, d) }
       })
-    (q, RunResult(decisions, submitted))
+    (q, new RunResult(latest, submitted))
   }
 
   /** Run the pipeline over all currently-available fixture events on a
@@ -240,7 +238,7 @@ object EventPipeline {
       val (q, result) = runStatefulStreaming(readEventStream(spark, dir),
         cfg, executorFor, ckpt)
       q.awaitTermination()
-      RunResult(result.decisions.toSeq, result.submittedJobs.toSeq)
+      result
     } finally LoopCore.deleteRecursively(ckpt)
   }
 
@@ -250,15 +248,7 @@ object EventPipeline {
   def decisionsViaStream(spark: SparkSession, dir: String,
       cfg: EngineConfig): DataFrame = {
     val result = runStatefulOnce(spark, dir, cfg, _ => NoopExecutor)
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(result.decisions).asJava),
-      StructType(Seq(
-        StructField("table_id", LongType),
-        StructField("n_commits_since_replace", LongType),
-        StructField("oldest_pending_ts_ms", LongType),
-        StructField("time_triggered", BooleanType),
-        StructField("should_optimize", BooleanType))))
+    spark.createDataFrame(result.latest.values.asScala.toSeq)
   }
 
   private object NoopExecutor extends Executor {

@@ -59,7 +59,7 @@ class MaintenanceSpec extends AnyFunSuite {
           Seq(SnapshotMeta(2L, 100L, now - 60000, "append"),
             SnapshotMeta(2L, 101L, now - 30000, "append"))
 
-      val c1 = Maintenance.cycle(spark, log, tables, cfg)
+      val c1 = Maintenance.cycle(spark, log, tables, cfg, now)
       assert(c1.triggered === Seq(1L))
       assert(c1.jobIds.size === 1)
       // compaction shrank the fragmented table, content preserved
@@ -71,14 +71,14 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(replaces.map(_.tableId) === Seq(1L))
 
       // next cycle: nothing newer than the replace for t1, t2 still quiet
-      val c2 = Maintenance.cycle(spark, c1.log, tables, cfg)
+      val c2 = Maintenance.cycle(spark, c1.log, tables, cfg, now)
       assert(c2.triggered.isEmpty)
       assert(c2.log === c1.log)
 
       // new stale activity after the replace re-triggers t1 (by count)
       val moreCommits = (1 to 10).map(i =>
         SnapshotMeta(1L, 200L + i, now + i, "append"))
-      val c3 = Maintenance.cycle(spark, c1.log ++ moreCommits, tables, cfg)
+      val c3 = Maintenance.cycle(spark, c1.log ++ moreCommits, tables, cfg, now)
       assert(c3.triggered === Seq(1L))
     }}
   }
@@ -114,7 +114,7 @@ class MaintenanceSpec extends AnyFunSuite {
         val oracle = Decide.shouldOptimize(
             log.toDF("table_id", "snapshot_id", "ts_ms", "operation"), cfg)
           .collect().filter(_.getBoolean(4)).map(_.getLong(0)).toSet
-        val c = Maintenance.cycle(spark, log, managed, cfg)
+        val c = Maintenance.cycle(spark, log, managed, cfg, now)
         assert(c.triggered.toSet === oracle.intersect(managed.keySet),
           s"seed $seed")
         assert(c.triggered === c.triggered.sorted)
@@ -134,7 +134,7 @@ class MaintenanceSpec extends AnyFunSuite {
       val log = (1 to 12).map(i =>
         SnapshotMeta(1L, i.toLong, now - 5 * hour + i, "append"))
       val c = Maintenance.cycle(spark, log,
-        Map(1L -> Maintenance.TableDirs(in, out)), sortCfg)
+        Map(1L -> Maintenance.TableDirs(in, out)), sortCfg, now)
       assert(c.triggered === Seq(1L))
       // per output file, its l_orderkey values in file order
       val keys = Compact.listFiles(out).map(f =>
@@ -160,7 +160,7 @@ class MaintenanceSpec extends AnyFunSuite {
       // 12 stale appends per table, interleaved, newest table first
       val log = (1 to 12).flatMap(i => Seq(7L, 3L, 5L).map(t =>
         SnapshotMeta(t, t * 100 + i, now - 5 * hour + i, "append")))
-      val c = Maintenance.cycle(spark, log, tables, cfg)
+      val c = Maintenance.cycle(spark, log, tables, cfg, now)
       assert(c.triggered === Seq(3L, 5L, 7L))
       assert(c.jobIds === Seq("local-db.tbl_3-0", "local-db.tbl_5-1",
         "local-db.tbl_7-2"))

@@ -14,11 +14,11 @@ class StatefulSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val cfg = EngineConfig()
 
-  private def decisionTuples(decisions: Map[Long, DecideAggregator.Decision]) =
-    decisions.map { case (t, d) =>
-      t -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
+  private def decisionTuples(decisions: Seq[DecideAggregator.Decision]) =
+    decisions.map { d =>
+      d.table_id -> ((d.n_commits_since_replace, d.oldest_pending_ts_ms,
         d.time_triggered, d.should_optimize))
-    }
+    }.toMap
 
   test("driver decideLog equals the windowed batch decision on real data") {
     import spark.implicits._
@@ -44,9 +44,9 @@ class StatefulSpec extends AnyFunSuite {
       SnapshotMeta(1, 2, now - 600000, "append"))
     // ... and a later one brings the replace at now-30min
     val replace = SnapshotMeta(1, 3, now - 1800000, "replace")
-    val late = finishBuf(
+    val late = finishBuf(1,
       reduceBuf(appends.foldLeft(zeroBuf)(reduceBuf), replace), cfg, now)
-    val sorted = finishBuf(
+    val sorted = finishBuf(1,
       (appends :+ replace).sortBy(_.tsMillis).foldLeft(zeroBuf)(reduceBuf),
       cfg, now)
     assert(late === sorted)

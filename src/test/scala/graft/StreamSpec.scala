@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -47,8 +48,27 @@ class StreamSpec extends AnyFunSuite {
       Files.copy(parts.head, Paths.get(srcDir, name))
     }
 
-  private def openWaves(srcDir: String) =
-    spark.readStream.schema(EventPipeline.eventSchema).parquet(srcDir)
+  private def openWaves(srcDir: String, session: SparkSession = spark) =
+    session.readStream.schema(EventPipeline.eventSchema).parquet(srcDir)
+
+  /** Hive's `file:` file system, which deployments with Spark's jar
+    * directory on the class path resolve to (its `rename` refuses an
+    * existing destination). */
+  private val proxyFs = "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem"
+
+  /** A session of the shared context whose `file:` is [[proxyFs]]; the
+    * shared session keeps Hadoop's `LocalFileSystem`. */
+  private lazy val proxySpark = {
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", proxyFs)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    s
+  }
+
+  /** Asserts that `dir` resolves to [[proxyFs]] under `proxySpark`. */
+  private def assertProxied(dir: String): Unit =
+    assert(new Path(dir).getFileSystem(proxySpark.sessionState.newHadoopConf())
+      .getClass.getName === proxyFs)
 
   /** Decision rows as comparable tuples, sorted by table. */
   private def tuples(rows: Iterable[Row]) = rows.map(r => (r.getLong(0),
@@ -162,16 +182,21 @@ class StreamSpec extends AnyFunSuite {
     }
   }
 
-  test("restart does not re-submit a still-triggered table (durable dispatch dedup)") {
+  /** The durable dispatch dedup through three restarts, streamed by
+    * `session`; `onCheckpoint` sees the checkpoint dir first. */
+  private def restartDedup(session: SparkSession,
+      onCheckpoint: String => Unit = _ => ()): Unit = {
     val jobLog = new JobStateLog
     withTempDir("dd-src") { src =>
       withTempDir("dd-ckpt") { ckpt =>
+        onCheckpoint(ckpt)
         // one run on the shared checkpoint per wave: (table 50 triggered,
         // jobs submitted by this run)
         def run(wave: String, rows: Seq[Ev]): (Boolean, Int) = {
           addWave(src, wave, rows)
-          val (q, r) = EventPipeline.runStatefulStreaming(openWaves(src),
-            cfg, _ => new DryRunExecutor(jobLog), ckpt)
+          val (q, r) = EventPipeline.runStatefulStreaming(
+            openWaves(src, session), cfg, _ => new DryRunExecutor(jobLog),
+            ckpt)
           q.awaitTermination()
           (r.decisions.find(_.getLong(0) === 50L).get.getBoolean(4),
             r.submittedJobs.size)
@@ -191,7 +216,18 @@ class StreamSpec extends AnyFunSuite {
     }
   }
 
-  test("stateful decision path equals the batch decision through restart") {
+  test("restart does not re-submit a still-triggered table (durable dispatch dedup)") {
+    restartDedup(spark)
+  }
+
+  test("restart does not re-submit a still-triggered table, under ProxyLocalFileSystem") {
+    restartDedup(proxySpark, assertProxied)
+  }
+
+  /** Stream/batch parity through one restart, streamed by `session`;
+    * `onCheckpoint` sees the checkpoint dir first. */
+  private def restartParity(session: SparkSession,
+      onCheckpoint: String => Unit = _ => ()): Unit = {
     val wave1 = (1L to 6L).map(commit(40L, _))
     val wave2 = (7L to 12L).map(commit(40L, _))
     val jobLog = new JobStateLog
@@ -199,15 +235,16 @@ class StreamSpec extends AnyFunSuite {
     // state store (no side log, no manual rebuild)
     withTempDir("sf-src") { src =>
       withTempDir("sf-ckpt") { ckpt =>
+        onCheckpoint(ckpt)
         addWave(src, "wave1.parquet", wave1)
-        val (q1, r1) = EventPipeline.runStatefulStreaming(openWaves(src),
-          cfg, _ => new DryRunExecutor(jobLog), ckpt)
+        val (q1, r1) = EventPipeline.runStatefulStreaming(
+          openWaves(src, session), cfg, _ => new DryRunExecutor(jobLog), ckpt)
         q1.awaitTermination()
         assert(r1.decisions.count(_.getBoolean(4)) === 0)
         assert(r1.submittedJobs.isEmpty)
         addWave(src, "wave2.parquet", wave2)
-        val (q2, r2) = EventPipeline.runStatefulStreaming(openWaves(src),
-          cfg, _ => new DryRunExecutor(jobLog), ckpt)
+        val (q2, r2) = EventPipeline.runStatefulStreaming(
+          openWaves(src, session), cfg, _ => new DryRunExecutor(jobLog), ckpt)
         q2.awaitTermination()
         val d40 = r2.decisions.find(_.getLong(0) === 40L).get
         assert(d40.getLong(1) === 12L) // pending commits survived the restart
@@ -221,6 +258,14 @@ class StreamSpec extends AnyFunSuite {
     }
   }
 
+  test("stateful decision path equals the batch decision through restart") {
+    restartParity(spark)
+  }
+
+  test("stateful decision path equals the batch decision through restart, under ProxyLocalFileSystem") {
+    restartParity(proxySpark, assertProxied)
+  }
+
   test("stateful decision path equals the batch decision on the fixture") {
     val batch = Decide.shouldOptimize(EventOps.snapshotLog(spark, dir), cfg)
       .collect().map(r => r.getLong(0) ->
@@ -231,6 +276,13 @@ class StreamSpec extends AnyFunSuite {
       ((r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))).toMap
     assert(got === batch)
     assert(stateful.submittedJobs.size === got.values.count(_._4))
+  }
+
+  test("decisionsViaStream has the batch decision's column names and types, in order") {
+    def columns(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(columns(EventPipeline.decisionsViaStream(spark, dir, cfg)) ===
+      columns(Decide.shouldOptimize(EventOps.snapshotLog(spark, dir), cfg)))
   }
 
   test("decisionsViaStream leaves no temporary checkpoint behind") {

@@ -1,4 +1,5 @@
-"""Pins tools/ab.py's bootstrap interval and noisy-pair flag on fixed inputs.
+"""Pins tools/ab.py's bootstrap interval, noisy-pair flag and calibration
+minimum on fixed inputs.
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -58,6 +59,12 @@ class NoisyPairTest(unittest.TestCase):
 
     def test_calibration_times_a_loop(self):
         self.assertGreater(ab.calibrate(1000), 0.0)
+
+    def test_calibration_keeps_the_fastest_timing(self):
+        # timer readings around three loops: 5 s, 1 s and 3 s
+        ticks = iter([0.0, 5.0, 10.0, 11.0, 20.0, 23.0])
+        self.assertEqual(ab.calibrate(10, reps=3, timer=lambda: next(ticks)),
+                         1.0)
 
 
 if __name__ == "__main__":
