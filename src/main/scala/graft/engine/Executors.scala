@@ -7,16 +7,18 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.model.{EngineConfig, JobRun, PollPolicy}
+import graft.model.{EngineConfig, Fixture, JobRun, PollPolicy}
 import graft.ops.Codegen
 
 /** Executor SPI — the engine-binding abstraction (Executor.java:9-23) with
   * local implementations instead of AWS service calls. The decider
   * initializes an executor with the properties of the config that decided
   * (`EngineConfig.toProperties`, as the reference's evaluator passes its
-  * catalog properties, AwsTableManagementMetricsEvaluator.java:75-82), so
-  * the job runs under that config's strategy, sort order and options.
-  * States accumulate in a [[JobStateLog]], and the synchronous gate
+  * catalog properties, AwsTableManagementMetricsEvaluator.java:75-82;
+  * [[Executors.dispatch]] is that hand-off). The generated SQL carries the
+  * config's strategy, sort order and options; the local rewrite honours
+  * its strategy and sort order only. States accumulate in a
+  * [[JobStateLog]], and the synchronous gate
   * (AwsManageProperties.java:20-22) decides whether `execute` returns
   * before the job is terminal (SURVEY.md §2.1 job_poll_state,
   * sync_async_gate). A remote engine can only be polled; the local
@@ -77,6 +79,24 @@ object Executors {
     if (policy.raiseOn.contains(state))
       throw new IllegalStateException(s"job $jobId terminated: $state")
     state
+  }
+
+  /** The one hand-off from decision to job: one job per table in
+    * `tableIds`, in ascending `table_id` order. Each table's executor
+    * (`executorFor` its `Fixture.tableName`) is initialized with the
+    * deciding config's properties plus `extra(t)`, then executes; a job
+    * that raises stops the dispatch. Returns the job ids in dispatch
+    * order. */
+  def dispatch(tableIds: Seq[Long], cfg: EngineConfig,
+      extra: Long => Map[String, String] = _ => Map.empty)(
+      executorFor: String => Executor): Seq[String] = {
+    val props = cfg.toProperties
+    tableIds.sorted.map { t =>
+      val table = Fixture.tableName(t)
+      val ex = executorFor(table)
+      ex.initialize(table, props ++ extra(t))
+      ex.execute()
+    }
   }
 
   /** executor_dynload (AwsTableManagementMetricsEvaluator.java:152-176):

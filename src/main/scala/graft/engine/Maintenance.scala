@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-import graft.model.{EngineConfig, Fixture, SnapshotMeta}
+import graft.model.{EngineConfig, SnapshotMeta}
 import graft.stream.DecideAggregator
 
 /** The full maintenance loop closed end-to-end (SURVEY.md §3.1 + §4.1):
@@ -17,10 +17,11 @@ import graft.stream.DecideAggregator
   *
   * Only the compactions touch Spark. The decision is the driver fold
   * `DecideAggregator.decideLog` over the driver-held log (the rule the
-  * decision stream applies). Each triggered table's executor receives the
-  * deciding config (`cfg.toProperties`, plus the synchronous flag and the
-  * table's dirs), so it compacts with `cfg`'s strategy, sort order and
-  * options, and its job runs inline on the cycle's thread.
+  * decision stream applies). The triggered tables go through
+  * [[Executors.dispatch]], each to a [[LocalSparkExecutor]] that receives
+  * the deciding config (`cfg.toProperties`, plus the synchronous flag and
+  * the table's dirs), so it compacts with `cfg`'s strategy and sort order,
+  * and its job runs inline on the cycle's thread.
   */
 object Maintenance {
 
@@ -43,20 +44,15 @@ object Maintenance {
       case d if d.should_optimize && tables.contains(d.table_id) => d.table_id
     }
     val stateLog = new JobStateLog
-    val props = cfg.toProperties
-    var nextSnapshotId = log.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (jobIds, newCommits) = triggered.map { tableId =>
-      val dirs = tables(tableId)
-      val ex = new LocalSparkExecutor(spark, stateLog)
-      ex.initialize(Fixture.tableName(tableId), props ++ Seq(
-        EngineConfig.SynchronousKey -> "true",
-        "local.input-dir" -> dirs.inputDir,
-        "local.output-dir" -> dirs.outputDir))
-      val jobId = ex.execute()
-      val commit = SnapshotMeta(tableId, nextSnapshotId, nowMs, "replace")
-      nextSnapshotId += 1
-      (jobId, commit)
-    }.unzip
+    val jobIds = Executors.dispatch(triggered, cfg, t => Map(
+      EngineConfig.SynchronousKey -> "true",
+      "local.input-dir" -> tables(t).inputDir,
+      "local.output-dir" -> tables(t).outputDir))(
+      _ => new LocalSparkExecutor(spark, stateLog))
+    val firstId = log.map(_.snapshotId).maxOption.getOrElse(0L) + 1
+    val newCommits = triggered.zipWithIndex.map { case (t, i) =>
+      SnapshotMeta(t, firstId + i, nowMs, "replace")
+    }
     CycleResult(triggered, jobIds, log ++ newCommits)
   }
 }

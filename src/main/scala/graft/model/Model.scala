@@ -38,7 +38,6 @@ object JobState {
   val NonTerminal: Set[String] =
     Set("SUBMITTED", "PENDING", "SCHEDULED", "RUNNING", "QUEUED")
   val Terminal: Set[String] = Set("SUCCEEDED", "FAILED", "CANCELLED")
-  def isTerminal(s: String): Boolean = Terminal.contains(s)
 }
 
 /** One engine's poll-state machine: which states keep the poll loop

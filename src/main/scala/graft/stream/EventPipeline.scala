@@ -1,6 +1,6 @@
 package graft.stream
 
-import java.util.concurrent.ConcurrentSkipListMap
+import java.util.concurrent.{ConcurrentLinkedQueue, ConcurrentSkipListMap}
 
 import scala.jdk.CollectionConverters._
 
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.engine.Executor
-import graft.model.{EngineConfig, Fixture, SnapshotMeta}
+import graft.engine.{Executor, Executors}
+import graft.model.{EngineConfig, SnapshotMeta}
 import graft.stream.DecideAggregator.Decision
 
 /** The event-driven maintenance pipeline (SURVEY.md §3.1), Spark-native:
@@ -93,14 +93,18 @@ object EventPipeline {
     * last-value decision view and the submitted job ids. The view holds
     * each table's latest [[Decision]] keyed by `table_id`; the stream
     * thread replaces a table's entry in place, so a reader at any moment
-    * sees every table seen so far. */
+    * sees every table seen so far. The job ids are appended in dispatch
+    * order, and a reader at any moment sees every job submitted so far. */
   final class RunResult private[stream] (
       private[stream] val latest: ConcurrentSkipListMap[Long, Decision],
-      val submittedJobs: scala.collection.Seq[String]) {
+      jobs: ConcurrentLinkedQueue[String]) {
 
     /** The view as rows of `Decision`'s columns in `table_id` order. */
     def decisions: Seq[Row] =
       latest.values.asScala.iterator.map(Row.fromTuple).toSeq
+
+    /** The submitted job ids in dispatch order. */
+    def submittedJobs: Seq[String] = jobs.asScala.toSeq
   }
 
   /** Group state of one table: its decision buffer (`lastReplaceTs` and
@@ -133,10 +137,10 @@ object EventPipeline {
     }
   }
 
-  /** The `flatMapGroupsWithState` transition function (the JobTracker
-    * pattern): fold the micro-batch's snapshot rows for one table into its
-    * `TableState` — which lives in Spark's CHECKPOINTED STATE STORE, not in
-    * driver memory — and emit the refreshed decision with its dispatch
+  /** The `flatMapGroupsWithState` transition function: fold the
+    * micro-batch's snapshot rows for one table into its `TableState` —
+    * which lives in Spark's CHECKPOINTED STATE STORE, not in driver
+    * memory — and emit the refreshed decision with its dispatch
     * flag, true only in the batch where `should_optimize` turned true
     * while the table was not yet dispatched (exactly the rows that get a
     * job). `reduceBuf` is order-insensitive at the fixpoint (a replace
@@ -185,13 +189,12 @@ object EventPipeline {
 
   /** Run the pipeline over a streaming events frame: each micro-batch
     * folds into the per-table state ([[statefulDecisions]]) and
-    * `foreachBatch` submits one maintenance job per flagged row, in
-    * `table_id` order, initializing each executor with `cfg.toProperties`
-    * (the reference's hand-off of the deciding properties to
-    * `executor.initialize`), so the job compacts under the config that
-    * decided. Then it puts the batch's decisions into the LAST-VALUE VIEW
-    * (`RunResult`), one entry per table, bounded by table count and not
-    * load-bearing for correctness.
+    * `foreachBatch` hands the flagged tables to [[Executors.dispatch]],
+    * which submits one maintenance job per table under the config that
+    * decided (the reference's hand-off of the deciding properties to
+    * `executor.initialize`). Then it puts the batch's decisions into the
+    * LAST-VALUE VIEW (`RunResult`), one entry per table, bounded by table
+    * count and not load-bearing for correctness.
     *
     * Restart: pass the SAME `checkpointDir`. Spark replays only the
     * uncommitted batches from the replayable source against the last
@@ -207,8 +210,7 @@ object EventPipeline {
       trigger: Trigger = Trigger.AvailableNow())
       : (org.apache.spark.sql.streaming.StreamingQuery, RunResult) = {
     val latest = new ConcurrentSkipListMap[Long, Decision]
-    val submitted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val props = cfg.toProperties
+    val jobs = new ConcurrentLinkedQueue[String]
     val q = LocalCheckpointFileManager.start(statefulDecisions(events, cfg),
         Some(checkpointDir))(_.writeStream
       .trigger(trigger)
@@ -216,16 +218,11 @@ object EventPipeline {
       .foreachBatch { (batch: Dataset[(Decision, Boolean)], _: Long) =>
         val rows = batch.collect()
         // dispatch first: the report view below is off the latency path
-        rows.collect { case (d, true) => d.table_id }.sorted.foreach {
-          tableId =>
-            val table = Fixture.tableName(tableId)
-            val ex = executorFor(table)
-            ex.initialize(table, props)
-            submitted += ex.execute()
-        }
+        Executors.dispatch(rows.collect { case (d, true) => d.table_id }.toSeq,
+          cfg)(executorFor).foreach(jobs.add)
         rows.foreach { case (d, _) => latest.put(d.table_id, d) }
       })
-    (q, new RunResult(latest, submitted))
+    (q, new RunResult(latest, jobs))
   }
 
   /** Run the pipeline over all currently-available fixture events on a

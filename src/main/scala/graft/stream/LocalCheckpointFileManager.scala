@@ -72,6 +72,7 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration)
 object LocalCheckpointFileManager {
   private val ManagerClassKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val ManagerClass = classOf[LocalCheckpointFileManager].getName
+  private val StartLock = new Object
 
   /** Start the query that `write` configures on `data`, checkpointed at
     * `checkpoint`: the one way graft starts a checkpointed query. A
@@ -89,7 +90,13 @@ object LocalCheckpointFileManager {
     * its `DataSource` holds; so each file source in the plan is rebound to
     * a clone of the caller's session that carries the class. The query
     * itself still starts from the caller's session, so listeners on its
-    * `streams` hear it. */
+    * `streams` hear it.
+    *
+    * One lock, held from the check for a caller's class until `start()`
+    * has returned (the query clones the session in its constructor), keeps
+    * concurrent starts apart: otherwise a second start can take the first
+    * start's class for the caller's and keep Spark's manager, or see it
+    * unset before its query cloned the session. */
   def start[T](data: Dataset[T], checkpoint: Option[String])(
       write: Dataset[T] => DataStreamWriter[T]): StreamingQuery =
     checkpoint match {
@@ -99,13 +106,15 @@ object LocalCheckpointFileManager {
         val local = new Path(dir)
           .getFileSystem(spark.sessionState.newHadoopConf())
           .getUri.getScheme == "file"
-        if (!local || spark.conf.getOption(ManagerClassKey).isDefined)
-          write(data).option("checkpointLocation", dir).start()
-        else {
-          val writer = write(withSourceManager(data))
-            .option("checkpointLocation", dir)
-          spark.conf.set(ManagerClassKey, ManagerClass)
-          try writer.start() finally spark.conf.unset(ManagerClassKey)
+        StartLock.synchronized {
+          if (!local || spark.conf.getOption(ManagerClassKey).isDefined)
+            write(data).option("checkpointLocation", dir).start()
+          else {
+            val writer = write(withSourceManager(data))
+              .option("checkpointLocation", dir)
+            spark.conf.set(ManagerClassKey, ManagerClass)
+            try writer.start() finally spark.conf.unset(ManagerClassKey)
+          }
         }
     }
 

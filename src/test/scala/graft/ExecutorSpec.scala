@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark.withTempDir
-import graft.engine.{Compact, DryRunExecutor, Executors, JobStateLog, LocalSparkExecutor}
-import graft.model.JobRun
+import graft.engine.{Compact, DryRunExecutor, Executor, Executors, JobStateLog, LocalSparkExecutor}
+import graft.model.{EngineConfig, Fixture, JobRun}
 
 /** Executor lifecycle: submit → state log → poll → terminal
   * (SURVEY.md §2.1 job_submit_*, job_poll_state, sync_async_gate,
@@ -219,6 +219,35 @@ class ExecutorSpec extends AnyFunSuite {
     q.append(JobRun("j", "QUEUED", 1L))
     assert(Executors.waitForCompletion(q, "j", sleepWaitMs = 1,
       policy = PollPolicy.EmrEc2) === "QUEUED")
+  }
+
+  test("dispatch: ascending table_id, deciding config plus extras, initialize before execute") {
+    val cfg = EngineConfig(strategy = "sort", sortOrder = Some("l_orderkey"))
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    val props = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, String]]
+    val recording: String => Executor = name => new Executor {
+      override def initialize(table: String, properties: Map[String, String]): Unit = {
+        assert(table === name)
+        calls += s"init $table"
+        props(table) = properties
+      }
+      override def execute(): String = {
+        calls += s"exec $name"
+        s"job-$name"
+      }
+    }
+    val extra = (t: Long) => Map("local.input-dir" -> s"/in/$t")
+    val ids = Executors.dispatch(Seq(30L, 4L, 17L, 9L), cfg, extra)(recording)
+    val order = Seq(4L, 9L, 17L, 30L).map(Fixture.tableName)
+    assert(calls.toSeq === order.flatMap(t => Seq(s"init $t", s"exec $t")))
+    assert(ids === order.map(t => s"job-$t"))
+    assert(props.keys.toSeq === order)
+    Seq(4L, 9L, 17L, 30L).foreach { t =>
+      assert(props(Fixture.tableName(t)) === cfg.toProperties ++ extra(t))
+    }
+    assert(props.values.forall(p => EngineConfig.fromProperties(p) === cfg))
+    // no table, no job
+    assert(Executors.dispatch(Nil, cfg)(recording).isEmpty)
   }
 
   test("executor_dynload: known names resolve, unknown class fails cleanly") {

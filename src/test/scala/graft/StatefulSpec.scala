@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{EngineConfig, JobRun, SnapshotMeta}
+import graft.model.{EngineConfig, SnapshotMeta}
 import graft.ops.{Decide, EventOps}
-import graft.stream.{DecideAggregator, JobTracker}
+import graft.stream.DecideAggregator
 
-/** The driver decision fold (batch equivalence, arrival-order
-  * independence) and the stateful streaming job tracker. */
+/** The driver decision fold: batch equivalence and arrival-order
+  * independence. */
 class StatefulSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -90,56 +89,5 @@ class StatefulSpec extends AnyFunSuite {
       assert(viaFold.values.exists(_._4) && viaFold.values.exists(!_._4),
         s"seed $seed should both trigger and not trigger")
     }
-  }
-
-  test("job tracker emits exactly one terminal event per job via streaming") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[JobRun]
-    val q = JobTracker.terminalEvents(input.toDS())
-      .writeStream.format("memory").queryName("tracker_out")
-      .outputMode("append").start()
-    input.addData(
-      JobRun("j1", "SUBMITTED", 1), JobRun("j1", "RUNNING", 2),
-      JobRun("j2", "SUBMITTED", 1))
-    q.processAllAvailable()
-    assert(spark.table("tracker_out").count() === 0) // nothing terminal yet
-    input.addData(
-      JobRun("j1", "SUCCEEDED", 3),
-      JobRun("j2", "RUNNING", 2), JobRun("j2", "FAILED", 4))
-    q.processAllAvailable()
-    val out = spark.table("tracker_out")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(3)))
-    assert(out.toSet === Set(("j1", "SUCCEEDED", true), ("j2", "FAILED", false)))
-    // late duplicates after terminal emission are ignored (state dropped)
-    input.addData(JobRun("j1", "SUCCEEDED", 5))
-    q.processAllAvailable()
-    assert(spark.table("tracker_out").count() === 2)
-    q.stop()
-  }
-
-  test("tombstone TTL: terminal emit arms a timeout; timeout reclaims state") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val ttl = 3600000L
-    // terminal transition: emits once and arms the processing-time timeout
-    val live = TestGroupState.create[JobTracker.TrackerState](
-      Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout,
-      1000L, Optional.empty[Long](), hasTimedOut = false)
-    val out = JobTracker.track(ttl)("j1",
-      Iterator(JobRun("j1", "RUNNING", 1), JobRun("j1", "SUCCEEDED", 2)),
-      live).toList
-    assert(out.map(e => (e.jobId, e.finalState)) === List(("j1", "SUCCEEDED")))
-    assert(live.isUpdated && live.get.emitted)
-    assert(live.getTimeoutTimestampMs.isPresent,
-      "terminal emit must arm the tombstone timeout")
-    // timeout callback: tombstone removed, nothing emitted
-    val timedOut = TestGroupState.create[JobTracker.TrackerState](
-      Optional.of(JobTracker.TrackerState("SUCCEEDED", 2, emitted = true)),
-      GroupStateTimeout.ProcessingTimeTimeout,
-      ttl + 2000L, Optional.empty[Long](), hasTimedOut = true)
-    val out2 = JobTracker.track(ttl)("j1", Iterator.empty, timedOut).toList
-    assert(out2.isEmpty)
-    assert(timedOut.isRemoved)
   }
 }

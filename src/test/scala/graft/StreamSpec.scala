@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
@@ -128,6 +129,40 @@ class StreamSpec extends AnyFunSuite {
           "options => map('partial-progress.enabled','true'," +
           "'max-file-group-size-bytes','10737418240'), " +
           "strategy => 'sort', sort_order => 'l_orderkey')"))
+    }
+  }
+
+  test("submittedJobs can be read from another thread while batches dispatch") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    // five micro-batches, each triggering 20 tables of its own
+    val batches = (0L until 5L).map(b => (1L to 20L).flatMap(t =>
+      (1L to 12L).map(i => commit(b * 100 + t, b * 1000 + t * 20 + i))))
+    val input = MemoryStream[Ev]
+    withTempDir("ckpt") { ckpt =>
+      val (q, result) = EventPipeline.runStatefulStreaming(
+        input.toDS().toDF(eventCols: _*), cfg,
+        _ => new DryRunExecutor(new JobStateLog), ckpt,
+        Trigger.ProcessingTime(0))
+      @volatile var done = false
+      val errors = new ConcurrentLinkedQueue[Throwable]
+      val sizes = new ConcurrentLinkedQueue[Int]
+      val reader = new Thread(() =>
+        try while (!done) {
+          val jobs = result.submittedJobs
+          assert(jobs.forall(_ != null))
+          sizes.add(jobs.size)
+        } catch { case e: Throwable => errors.add(e) })
+      reader.start()
+      try batches.foreach { b =>
+        input.addData(b: _*)
+        q.processAllAvailable()
+      } finally { q.stop(); done = true; reader.join() }
+      assert(errors.isEmpty, errors.asScala.headOption.map(_.toString))
+      val seen = sizes.asScala.toSeq
+      assert(seen.nonEmpty && seen === seen.sorted, "each read sees a prefix")
+      assert(result.submittedJobs.size === 100)
+      assert(result.submittedJobs.distinct.size === 100)
     }
   }
 
@@ -442,6 +477,42 @@ class StreamSpec extends AnyFunSuite {
       assert(offsets.contains(".0.crc") && source.contains(".0.crc"))
       assert(spark.conf.get(managerClassKey) === fileContextManager)
     } finally spark.conf.unset(managerClassKey)
+  }
+
+  test("concurrent starts on one session route every log through graft's manager") {
+    val conf0 = spark.conf.getAll
+    withTempDir("race") { tmp =>
+      (0 until 4).foreach { round =>
+        val roots = (0 until 2).map(i => s"$tmp/r$round-$i")
+        val streams = roots.map { root =>
+          val src = Files.createDirectories(Paths.get(root, "src")).toString
+          addWave(src, "w0.parquet", Seq(commit(1L, 1L)))
+          openWaves(src)
+        }
+        val barrier = new CyclicBarrier(roots.size)
+        val errors = new ConcurrentLinkedQueue[Throwable]
+        val threads = roots.zip(streams).map { case (root, events) =>
+          new Thread(() =>
+            try {
+              barrier.await()
+              val (q, _) = EventPipeline.runStatefulStreaming(events, cfg,
+                _ => new DryRunExecutor(new JobStateLog), s"$root/ckpt")
+              q.awaitTermination()
+            } catch { case e: Throwable => errors.add(e) })
+        }
+        threads.foreach(_.start())
+        threads.foreach(_.join())
+        assert(errors.isEmpty, errors.asScala.headOption.map(_.toString))
+        roots.foreach { root =>
+          val logs = Seq("offsets", "sources/0").flatMap(d =>
+            new java.io.File(s"$root/ckpt/$d").list().toSeq)
+          assert(logs.count(_ == "0") === 2, s"round $round: $logs")
+          assert(!logs.exists(_.endsWith(".crc")),
+            s"round $round: Spark's manager wrote $root: $logs")
+        }
+      }
+    }
+    assert(spark.conf.getAll === conf0)
   }
 
   test("a checkpoint begun by Spark's FileContext manager resumes under graft's") {
