@@ -31,6 +31,10 @@ object GraftSession {
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
+    // Fixture regenerations have written `events.ts` as parquet
+    // TIMESTAMP(NANOS), which the reader rejects unless it loads as a
+    // nanos Long (`EventOps.tsMillis` decodes either encoding).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false",
     // The generated-class cache defaults to 100 entries; one pass-major
     // bench sweep compiles ~148 plans' stages, so with the default EVERY
@@ -47,10 +51,8 @@ object GraftSession {
     // exchange-fed pair-count stage fell 7.1 → 0.8 s run). At lake scale
     // R is in the thousands, where Spark ALWAYS takes the sort-writer
     // path — this pins local runs to the at-scale code path instead of a
-    // local-small-R special case. Parameterised so the driver's contract
-    // stays tunable.
-    "spark.shuffle.sort.bypassMergeThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+    // local-small-R special case.
+    "spark.shuffle.sort.bypassMergeThreshold" -> "0")
 
   /** A `local[cpus]` session with [[conf]] applied and the log at WARN. */
   def build(cpus: Int = defaultCpus): SparkSession = {

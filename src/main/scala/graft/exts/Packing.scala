@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * accumulation is inherently sequential *within* a partition (every
   * boundary depends on all earlier docs), so the distributed form is one
   * hash shuffle on the partition key (`lang` here — the unit a curriculum
-  * schedules by), a sort within partitions, and a single streaming
-  * `mapPartitions` pass carrying (seq, acc) — parallel across languages,
+  * schedules by), a sort within partitions, and one streaming
+  * `mapPartitions` pass of the same greedy scan,
+  * [[graft.ops.FilePlan.greedyGroups]] — parallel across languages,
   * constant memory within one. An oversized document (> budget) sits
   * alone in its own sequence rather than being dropped.
   */
@@ -38,20 +39,9 @@ object Packing {
       .as[DocTok]
       .repartition(col("lang"))
       .sortWithinPartitions("lang", "doc_id")
-      .mapPartitions { it =>
-        var key: String = null
-        var acc = 0L
-        var inSeq = 0
-        var sid = 0L
-        it.map { d =>
-          if (d.lang != key) { key = d.lang; acc = 0L; inSeq = 0; sid = 0L }
-          if (inSeq > 0 && acc + d.n_tokens > tokenBudget) {
-            sid += 1; acc = 0L; inSeq = 0
-          }
-          acc += d.n_tokens; inSeq += 1
-          PackedDoc(d.lang, d.doc_id, d.n_tokens, sid)
-        }
-      }
+      .mapPartitions(graft.ops.FilePlan.greedyGroups(_, tokenBudget.toLong)(
+          _.lang, _.n_tokens.toLong)
+        .map { case (d, sid) => PackedDoc(d.lang, d.doc_id, d.n_tokens, sid) })
       .toDF()
   }
 

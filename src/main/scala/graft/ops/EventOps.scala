@@ -21,14 +21,20 @@ object EventOps {
 
   /** Epoch-millis expression for a `ts` column, branched on the dtype the
     * parquet reader actually produced — the fixture's physical encoding has
-    * changed across regenerations (TIMESTAMP(NANOS) read as nanos Long via
-    * `nanosAsLong`, later `timestamp[us]` read as TIMESTAMP_NTZ), and the
-    * engine must not assume one encoding (the schema-layer robustness an
-    * Iceberg catalog gives the reference for free,
-    * AwsTableManagementMetricsEvaluator.java:72). All entry points pin
-    * `spark.sql.session.timeZone=UTC`, so NTZ-as-UTC matches DuckDB's
-    * `epoch_ms` on naive timestamps; the nanos `div 1000000` truncation
-    * matches its ns→ms floor for post-epoch instants.
+    * changed across regenerations (TIMESTAMP(NANOS) read as nanos Long,
+    * later `timestamp[us]` read as TIMESTAMP_NTZ), and the engine must not
+    * assume one encoding (the schema-layer robustness an Iceberg catalog
+    * gives the reference for free, AwsTableManagementMetricsEvaluator.java:72).
+    * This is the one decoder of `ts`; every read of it goes through here.
+    *
+    * Graft sessions carry the setting that reads TIMESTAMP(NANOS) as a
+    * Long in `GraftSession.conf`. A session built elsewhere must set it
+    * itself to read such a file, because Spark's default is off
+    * (perfbench's inputs are `timestamp[us]`, which need no setting).
+    * All entry points pin `spark.sql.session.timeZone=UTC`, so NTZ-as-UTC
+    * matches DuckDB's `epoch_ms` on naive timestamps; the nanos
+    * `div 1000000` truncation matches its ns→ms floor for post-epoch
+    * instants.
     */
   def tsMillis(schema: StructType): Column = schema("ts").dataType match {
     case LongType         => expr("ts div 1000000")
@@ -39,11 +45,10 @@ object EventOps {
   }
 
   /** Raw events with `ts` normalized to epoch-millis (`ts_ms`), whichever
-    * physical timestamp encoding the fixture carries. */
+    * physical timestamp encoding the fixture carries. Reads under the
+    * caller's conf and writes none: a TIMESTAMP(NANOS) file needs the
+    * nanos setting that graft sessions carry (see [[tsMillis]]). */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Harmless for non-nanos files; lets TIMESTAMP(NANOS) fixtures (which
-    // the vectorized reader otherwise rejects) load as a nanos Long.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = Tables.events(spark, dir)
     raw.withColumn("ts_ms", tsMillis(raw.schema))
   }

@@ -80,23 +80,32 @@ object FilePlan {
       .as[FileRec]
       .repartition(col("part_key"))
       .sortWithinPartitions("part_key", "file_seq")
-      .mapPartitions { it =>
-        var key: String = null
-        var acc = 0L
-        var inGroup = 0
-        var gid = 0L
-        it.map { f =>
-          if (f.part_key != key) {
-            key = f.part_key; acc = 0L; inGroup = 0; gid = 0L
-          }
-          if (inGroup > 0 && acc + f.size_bytes > capBytes) {
-            gid += 1; acc = 0L; inGroup = 0
-          }
-          acc += f.size_bytes; inGroup += 1
-          PlannedFile(f.part_key, f.path, f.size_bytes, gid)
-        }
-      }
+      .mapPartitions(greedyGroups(_, capBytes)(_.part_key, _.size_bytes)
+        .map { case (f, gid) =>
+          PlannedFile(f.part_key, f.path, f.size_bytes, gid) })
       .toDF()
+  }
+
+  /** The greedy scan behind [[filegroupPlanning]] and
+    * `Packing.packSequences`, over items sorted by `key`: each item gets
+    * the id of its group, which restarts at 0 on every key change; a new
+    * group starts when the open group is non-empty and the item's `size`
+    * would push it past `cap`, so an oversized item (> cap) sits alone.
+    * One streaming pass carrying (group, acc) — constant memory. */
+  def greedyGroups[A](items: Iterator[A], cap: Long)(key: A => String,
+      size: A => Long): Iterator[(A, Long)] = {
+    var k: String = null
+    var acc = 0L
+    var inGroup = 0
+    var gid = 0L
+    items.map { a =>
+      if (key(a) != k) { k = key(a); acc = 0L; inGroup = 0; gid = 0L }
+      if (inGroup > 0 && acc + size(a) > cap) {
+        gid += 1; acc = 0L; inGroup = 0
+      }
+      acc += size(a); inGroup += 1
+      (a, gid)
+    }
   }
 
   /** Zone-map (min/max file-statistics) pruning plan — the metadata query

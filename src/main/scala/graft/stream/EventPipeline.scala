@@ -8,10 +8,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.engine.{Executor, Executors}
 import graft.model.{EngineConfig, SnapshotMeta}
+import graft.ops.EventOps
 import graft.stream.DecideAggregator.Decision
 
 /** The event-driven maintenance pipeline (SURVEY.md §3.1), Spark-native:
@@ -53,23 +53,9 @@ import graft.stream.DecideAggregator.Decision
   */
 object EventPipeline {
 
-  /** Streaming-source schema used by the synthetic test waves, which write
-    * `ts` as a nanos Long. Fixture parquet may instead carry a native
-    * timestamp type — `readEventStream` probes the file's actual schema,
-    * and the downstream `snapshotLogFrom`/`tsMillis` normalization branches
-    * on whichever dtype arrived. */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Open the events parquet as a file stream (the file-stream source needs
     * a directory, so glob-filter the events file inside the sf dir). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file stream needs an explicit schema; take it from the file
     // itself (one footer read) rather than assuming a physical ts encoding
     // — fixture regenerations have switched between TIMESTAMP(NANOS) and
@@ -175,7 +161,7 @@ object EventPipeline {
       cfg: EngineConfig): Dataset[(Decision, Boolean)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    graft.ops.EventOps.snapshotLogFrom(events)
+    EventOps.snapshotLogFrom(events)
       .select(
         col("table_id").as("tableId"),
         col("snapshot_id").as("snapshotId"),
@@ -253,20 +239,14 @@ object EventPipeline {
     override def execute(): String = "noop"
   }
 
-  /** Epoch-millis column for an events frame: the normalized `ts_ms` when
-    * the frame came through `EventOps.events`, else derived from the raw
-    * `ts` dtype (stream frames carry the source schema). */
-  private def tsMsCol(events: DataFrame): org.apache.spark.sql.Column =
-    if (events.columns.contains("ts_ms")) col("ts_ms")
-    else graft.ops.EventOps.tsMillis(events.schema)
-
   /** Session-window analysis (extension): per-user activity sessions with
     * a fixed inactivity gap. Event times are truncated to millis before
     * sessionization so the SQL gaps-and-islands oracle (which works in
     * epoch millis) sees identical instants. */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
-      .withColumn("event_time", timestamp_millis(tsMsCol(events)))
+      .withColumn("event_time",
+        timestamp_millis(EventOps.tsMillis(events.schema)))
       .groupBy(session_window(col("event_time"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(
@@ -293,12 +273,14 @@ object EventPipeline {
   def attributionJoin(views: DataFrame, purchases: DataFrame,
       horizon: String = "30 minutes"): DataFrame = {
     val v = views
-      .withColumn("view_time", timestamp_millis(tsMsCol(views)))
+      .withColumn("view_time",
+        timestamp_millis(EventOps.tsMillis(views.schema)))
       .select(col("user_id"), col("event_id").as("view_id"),
         col("view_time"))
       .withWatermark("view_time", horizon)
     val p = purchases
-      .withColumn("purchase_time", timestamp_millis(tsMsCol(purchases)))
+      .withColumn("purchase_time",
+        timestamp_millis(EventOps.tsMillis(purchases.schema)))
       .select(col("user_id").as("p_user"),
         col("event_id").as("purchase_id"), col("purchase_time"))
       .withWatermark("purchase_time", horizon)
@@ -325,7 +307,8 @@ object EventPipeline {
     * `event_time` and an append/complete sink. */
   def windowedMetrics(events: DataFrame, windowLength: String): DataFrame =
     events
-      .withColumn("event_time", timestamp_millis(tsMsCol(events)))
+      .withColumn("event_time",
+        timestamp_millis(EventOps.tsMillis(events.schema)))
       .groupBy(window(col("event_time"), windowLength), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),

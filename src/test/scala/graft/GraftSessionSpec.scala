@@ -26,19 +26,20 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(n > 0)
   }
 
+  private def scalaFiles(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$root not found from the build root")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
+
   test("only GraftSession.scala calls the session builder") {
     val builder = """SparkSession\s*\.\s*builder\b""".r
     // QueryFiles' generated PySpark script builds a PySpark session, not
     // a graft one; it (and its golden spec) may carry the text.
     val pySparkLine = QueryFiles.pySparkScript("").split("\n")(1)
     val templateFiles = Set("QueryFiles.scala", "QueryFilesSpec.scala")
-    def scalaFiles(root: String): Seq[Path] = {
-      val dir = Paths.get(root)
-      assert(Files.isDirectory(dir), s"$root not found from the build root")
-      val walk = Files.walk(dir)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally walk.close()
-    }
     val hits = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
       .flatMap { p =>
         val name = p.getFileName.toString
@@ -48,5 +49,19 @@ class GraftSessionSpec extends AnyFunSuite {
         if (builder.findFirstIn(scanned).isDefined) Some(name) else None
       }
     assert(hits === Seq("GraftSession.scala"))
+  }
+
+  test("no query path writes session conf") {
+    // The only writers: a set/unset scoped to one query start under a
+    // lock (LocalCheckpointFileManager), the session's memo id
+    // (SessionMemo) and a main that writes fixtures (ReseedFixture).
+    val allowed = Set("LocalCheckpointFileManager.scala",
+      "SessionMemo.scala", "ReseedFixture.scala")
+    val writes = """conf\.(set|unset)\(""".r
+    val hits = scalaFiles("src/main/scala").collect {
+      case p if writes.findFirstIn(Files.readString(p)).isDefined =>
+        p.getFileName.toString
+    }
+    assert(hits.filterNot(allowed).sorted === Seq.empty)
   }
 }

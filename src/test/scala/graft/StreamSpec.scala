@@ -28,9 +28,9 @@ class StreamSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val cfg = EngineConfig()
 
-  /** One event row in `EventPipeline.eventSchema` order. */
+  /** One event row in `TestSpark.eventSchema` order. */
   private type Ev = (Long, Long, Long, String, Double, String)
-  private val eventCols = EventPipeline.eventSchema.fieldNames.toSeq
+  private val eventCols = TestSpark.eventSchema.fieldNames.toSeq
 
   /** Commit `id` on `table`, `id` ms into the minute before `Decide.NowMs`
     * (fresh: only the commit-count threshold can trigger). */
@@ -50,7 +50,7 @@ class StreamSpec extends AnyFunSuite {
     }
 
   private def openWaves(srcDir: String, session: SparkSession = spark) =
-    session.readStream.schema(EventPipeline.eventSchema).parquet(srcDir)
+    session.readStream.schema(TestSpark.eventSchema).parquet(srcDir)
 
   /** Hive's `file:` file system, which deployments with Spark's jar
     * directory on the class path resolve to (its `rename` refuses an

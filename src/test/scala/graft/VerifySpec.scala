@@ -21,7 +21,7 @@ class VerifySpec extends AnyFunSuite {
       // a key that runs is not named
       import spark.implicits._
       Seq((1L, 1000000L, 7L, "click", 1.0, "{}"))
-        .toDF(graft.stream.EventPipeline.eventSchema.fieldNames.toSeq: _*)
+        .toDF(TestSpark.eventSchema.fieldNames.toSeq: _*)
         .write.parquet(s"$out/sf/events.parquet")
       assert(Verify.run(spark, s"$out/sf", out.toString,
         Set("should_optimize")).isEmpty)
